@@ -213,7 +213,7 @@ object Bench {
     // folded bucket carries [sum of medians, sum of mins]: a literal 0 min
     // would read as pure position noise under the median >> min heuristic
     // instead of "min unavailable".
-    def emitLine(ok: Seq[(String, Double, Double)], total: Double,
+    def emitLine(pass: String, ok: Seq[(String, Double, Double)], total: Double,
         extraJson: String): Unit = {
       def line(rs: Seq[(String, Double, Double)], folded: Int, foldedSec: Double,
           foldedMin: Double) = {
@@ -221,7 +221,7 @@ object Bench {
           (if (folded > 0)
             Seq("\"_other_" + folded + "q\":[" + r3(foldedSec) + "," + r2(foldedMin) + "]")
           else Nil)
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","reps":$reps,"order_seed":$orderSeed,"fmt":"[median,min]"$errJson$extraJson$contamJson,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
+        s"""{"metric":"total","pass":"$pass","value":${r3(total)},"unit":"sec","reps":$reps,"order_seed":$orderSeed,"fmt":"[median,min]"$errJson$extraJson$contamJson,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
       }
       val bySlowest = ok.sortBy(-_._2)
       var keep = bySlowest.length
@@ -251,7 +251,7 @@ object Bench {
     // harness reads the tail, so it supersedes the main-pass line); if the
     // harness kills a loaded run mid-rerun, the main-pass line already
     // carries the full measurement instead of losing the round's record.
-    emitLine(results.filter(_._2 >= 0), rawTotal, "")
+    emitLine("main", results.filter(_._2 >= 0), rawTotal, "")
 
     val rerunBudget = math.max(60.0, 0.25 * mainPassWall)
     val rerunT0 = System.nanoTime()
@@ -330,7 +330,7 @@ object Bench {
       else s""","reruns":${rerunsOk.map(r =>
         "\"" + r._1 + "\":[" + r2(r._2) + "," + r2(r._3) + "]")
         .mkString("{", ",", "}")},"raw_total":${r3(rawTotal)}""") + skippedJson
-    emitLine(ok, total, rerunJson)
+    emitLine("final", ok, total, rerunJson)
     spark.stop()
   }
 }

@@ -202,21 +202,20 @@ private[graft] object EntryDP {
     }),
     "dp_count_skew_sharded" -> ((s, dir) => {
       // skew-hardening end-to-end: one hot privacy unit contributes 1e5
-      // rows to ONE partition — the Linf fan-in hazard where the default
-      // bounding window sorts the whole cell in a single task.
-      // l0ShardingFactor=8 opts into the two-stage sharded bounding
-      // windows (selection provably identical to the global window;
-      // DPEngineSpec pins bit-equality on a fixed draw), so the hot cell
-      // ranks in 8 bounded shard tasks + one 800-row merge instead of one
-      // 1e5-row task. Zero noise + CONSTANT hot values keep Count AND Sum
-      // deterministic (any kept 100-subset of the hot cell sums to 100),
-      // so the skew path is oracle-exact despite randomized sampling.
+      // rows to ONE partition — the Linf fan-in hazard where one bounding
+      // window would sort the whole cell in a single task. The plain plan
+      // already bounds it: Spark's Partial WindowGroupLimit keeps at most
+      // 100 rows of the cell per map task before the Linf exchange (and
+      // at most 5 partitions per unit before the L0 one), so the final
+      // window sorts a few hundred rows. Zero noise + CONSTANT hot values
+      // keep Count AND Sum deterministic (any kept 100-subset of the hot
+      // cell sums to 100), so the skew path is oracle-exact despite
+      // randomized sampling.
       val skewed = events(s, dir)
         .select(col("user_id"), col("event_type"), col("value"))
         .unionByName(s.range(100000).select(lit(-1L).as("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value")))
-      val engine = new DPEngine(new NaiveBudgetAccountant(1e5, 0.999999),
-        NoiseSource.Zero, l0ShardingFactor = 8)
+      val engine = zeroEngine()
       val res = engine.aggregate(skewed,
         generous(Seq(Metric.Count, Metric.Sum), 0, 1000), eventRoles)
       engine.accountant.computeBudgets()

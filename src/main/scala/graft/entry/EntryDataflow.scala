@@ -56,7 +56,7 @@ private[graft] object EntryDataflow {
         .filter(col("o_orderpriority") === "1-URGENT").select("o_orderkey")
       Dataflow.filterByKeySharded(
         readParquet(s, s"$dir/lineitem.parquet").withColumnRenamed("l_orderkey", "o_orderkey"),
-        urgent, Seq("o_orderkey"), shards = 8)
+        urgent, Seq("o_orderkey"))
         .select(col("o_orderkey").as("l_orderkey"), col("l_linenumber"))
     }),
     "a_bloom_join" -> ((s, dir) => {

@@ -34,13 +34,18 @@ private[graft] object EntryHelpers {
     * queries. Caching the inferred StructType is catalog METADATA reuse
     * (the histogramCache precedent above), not result caching: the DATA
     * is listed and read from parquet on every execution, only the
-    * one-time schema job is skipped. Keyed by path; dataset files never
-    * change schema within a process (scratch dirs do — they keep plain
-    * s.read.parquet). */
-  val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * one-time schema job is skipped. Each entry holds the path's
+    * modification time next to its schema, and a changed time re-infers:
+    * a directory rewritten in-process (e.g. with a renamed column) would
+    * otherwise be read through the stale schema as silent NULL columns. */
+  val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, org.apache.spark.sql.types.StructType)]()
   def readParquet(s: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val mtime = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(hp).getModificationTime
+    val (_, sch) = schemaCache.compute(path, (p, old) =>
+      if (old != null && old._1 == mtime) old else (mtime, s.read.parquet(p).schema))
     s.read.schema(sch).parquet(path)
   }
 

@@ -43,6 +43,11 @@ final case class IGradBuf(g: Array[Long], loss: Long, n: Long, nCorrect: Long)
   * row contract, not just a spec. */
 object ModelTraining {
 
+  /** Source of per-call CV job-group ids: an identity hash can repeat
+    * across concurrent calls, and a colliding group would let one call's
+    * failing fold cancel another call's folds. */
+  private val cvCalls = new java.util.concurrent.atomic.AtomicLong()
+
   /** The feature extraction shared with scoring: hashed unigram+bigram
     * buckets (md5 leading-60-bit convention, mod `dim`), kept WITH
     * repetition — mean pooling divides by the count, exactly
@@ -333,7 +338,7 @@ object ModelTraining {
     // CANCEL its siblings' in-flight jobs (plain shutdown() would let
     // them run to completion in the background after the caller already
     // received the failure — wasted cluster work)
-    val jobGroup = s"graft-cv-${System.identityHashCode(feats)}"
+    val jobGroup = s"graft-cv-${cvCalls.incrementAndGet()}"
     val rows = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence((0 until folds).map { fold =>
         scala.concurrent.Future {

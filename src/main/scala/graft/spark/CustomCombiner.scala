@@ -77,11 +77,12 @@ final class SquareSumCombiner(
 object CustomAggregation {
   import DPEngine._
 
-  /** Runs a [[CustomCombiner]] through the engine's standard bounding +
-    * selection plan: Linf/L0 sampling, per-unit accumulators, per-partition
-    * merge, DP partition selection, then the combiner's metric columns.
-    * Public partitions are dropped via semi-join (missing keys are not
-    * added — custom accumulators have no generic empty value). */
+  /** Runs a [[CustomCombiner]] through the engine's bounded-aggregate core
+    * ([[DPEngine.boundedAggregate]]): Linf/L0 sampling, the combiner's
+    * per-unit accumulators and merge, DP partition selection, then the
+    * combiner's metric columns. Public partitions are dropped via semi-join
+    * (missing keys are not added — custom accumulators have no generic
+    * empty value). */
   def aggregate(
       engine: DPEngine,
       df: DataFrame,
@@ -90,17 +91,7 @@ object CustomAggregation {
       combiner: CustomCombiner,
       publicPartitions: Option[DataFrame] = None
   ): DPResult = {
-    // the DPEngine.assemble collision contract: combiner metric columns are
-    // emitted next to the pk columns by name
-    locally {
-      val badPk = columns.partitionKeys.map(_._1).filter(n =>
-        combiner.metricNames.contains(n) ||
-          n.startsWith("__graft_") || n.startsWith("__cc_"))
-      require(badPk.isEmpty,
-        s"partition key name(s) ${badPk.mkString(", ")} collide with the " +
-          s"combiner's metric columns (${combiner.metricNames.mkString(", ")}) " +
-          "or the engine's reserved namespaces; rename the key columns")
-    }
+    requireKeyNames(columns.partitionKeys.map(_._1), combiner.metricNames)
     val accountant = engine.accountant
     accountant.registerAggregation()
     combiner.requestBudget(accountant)
@@ -111,52 +102,23 @@ object CustomAggregation {
       else None
 
     new DPResult(() => {
-      val noise = engine.noise
-      val pkNames = columns.partitionKeys.map(_._1)
-      val pkCols = pkNames.map(col)
-      // the DPEngine.assemble noNull contract, extended to the custom
-      // path: a NULL value otherwise flows into user accumulators where
-      // least/greatest skip nulls (SquareSumCombiner would fabricate a
-      // full maxSquare contribution per NULL row) and an all-NULL
-      // partition would release an un-noised NULL metric
-      val guarded = columns.value.map(v =>
-        when(v.isNull, raise_error(lit(
-          "CustomAggregation: NULL value for a privacy unit — nulls have " +
-            "no clipping semantics and would corrupt or leak through the " +
-            "custom accumulators; filter or impute upstream")).cast("double"))
-          .otherwise(v.cast("double")))
-      var cur = df.select(
-        (columns.privacyUnit.as(PidCol) +:
-          columns.partitionKeys.map { case (n, c) => c.as(n) }) :+
-          guarded.getOrElse(lit(1.0).cast("double")).as(ValCol): _*)
-      publicPartitions.foreach { pub => cur = cur.join(pub, pkNames, "left_semi") }
-      params.maxContributionsPerPartition.foreach { c =>
-        cur = sampleRowsPerKey(cur, PidCol +: pkNames, c, engine.l0ShardingFactor)
+      val perUnit = combiner.createAccumulators(col(valueCol(0)))
+      val names = perUnit.indices.map(i => s"__graft_cc$i")
+      val merged = combiner.mergeAccumulators(names.map(col))
+      val selector = selectionHandle.map { h =>
+        PartitionSelection.create(params.partitionSelectionStrategy, h.spec.epsilon,
+          h.spec.delta, params.maxPartitionsContributed, params.preThreshold)
       }
-      val accs = combiner.createAccumulators(col(ValCol))
-      val accNames = accs.indices.map(i => s"__cc_$i")
-      val perPidPk = cur.groupBy((col(PidCol) +: pkCols): _*)
-        .agg(accs.head.as(accNames.head),
-          accs.tail.zip(accNames.tail).map { case (a, n) => a.as(n) }: _*)
-      val bounded = sampleRowsPerKey(perPidPk, Seq(PidCol),
-        params.maxPartitionsContributed, engine.l0ShardingFactor)
-      val merged = combiner.mergeAccumulators(accNames.map(col))
-      var agg = bounded.groupBy(pkCols: _*)
-        .agg(count(lit(1)).as(PidCntCol),
-          merged.zip(accNames).map { case (m, n) => m.as(n) }: _*)
-      selectionHandle.foreach { h =>
-        val spec = h.spec
-        val sel = PartitionSelection.create(params.partitionSelectionStrategy,
-          spec.epsilon, spec.delta, params.maxPartitionsContributed, params.preThreshold)
-        val keepUdf = udf((n: Long) => sel.shouldKeep(n, noise)).asNondeterministic()
-        agg = agg.filter(keepUdf(col(PidCntCol)))
-      }
-      val metrics = combiner.computeMetrics(accNames.map(col), noise)
+      val agg = boundedAggregate(df, columns.privacyUnit, columns.partitionKeys,
+        Seq("value" -> columns.value.fold(lit(1.0))(_.cast("double"))),
+        Bounds(params.maxContributionsPerPartition, Some(params.maxPartitionsContributed)),
+        names.indices.map(i => Acc(names(i), perUnit(i), merged(i), None)),
+        publicPartitions, selector, engine.noise)
+      val metrics = combiner.computeMetrics(names.map(col), engine.noise)
       require(metrics.length == combiner.metricNames.length,
         "computeMetrics must return one column per metric name")
-      agg.select(pkCols ++ metrics.zip(combiner.metricNames).map {
-        case (m, n) => m.as(n)
-      }: _*)
+      agg.select(columns.partitionKeys.map(p => col(p._1)) ++
+        metrics.zip(combiner.metricNames).map { case (m, n) => m.as(n) }: _*)
     }, () => {
       val lines = Seq.newBuilder[String]
       lines += s"Custom DP aggregation: ${combiner.name}"

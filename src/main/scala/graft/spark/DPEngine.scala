@@ -39,13 +39,14 @@ final class DPResult private[spark] (
 /** The DP aggregation engine, Spark-native.
   *
   * The reference's dataflow stages (reference: dp_engine.py:71-195) become one
-  * declarative DataFrame plan:
+  * declarative DataFrame plan, built by [[DPEngine.boundedAggregate]] for
+  * every DP aggregate:
   *
   * {{{
-  * select(pid, pk..., value)                        -- narrow, codegen
+  * select(pid, pk..., value...)                     -- narrow, codegen
   *   [left_semi join public partitions]             -- broadcast if small
   *   window rn over (pid, pk) order rand, rn <= c   -- shuffle 1 (Linf bound)
-  *   groupBy(pid, pk).agg(partial accumulators)     -- no extra shuffle (same keys)
+  *   groupBy(pid, pk).agg(per-unit accumulators)    -- no extra shuffle (same keys)
   *   window rn over (pid) order rand, rn <= L0      -- shuffle 2 (L0 bound)
   *   groupBy(pk).agg(merge accumulators)            -- shuffle 3, map-side combine
   *   [outer join empty public partitions]
@@ -61,21 +62,9 @@ final class DPResult private[spark] (
   */
 final class DPEngine(
     val accountant: BudgetAccountant,
-    val noise: NoiseSource = NoiseSource.Secure,
-    /** Shards per privacy unit for the L0/L1 bounding windows. The default
-      * (1) sorts each pid's full partition fan-out in one window task — fine
-      * until one pid contributes to millions of partitions, the fan-out
-      * hazard the reference documents but does not mitigate on this path
-      * (reference: dp_engine.py:270-271; its salting helper exists only for
-      * semi-joins, pipeline_functions.py:119-156). Setting > 1 switches the
-      * bounding sample to a two-stage window that is distribution-IDENTICAL
-      * (DPEngineSpec proves bit-equality on a fixed rand draw) but never
-      * sorts one pid's rows in a single task, at the price of one extra
-      * exchange. */
-    val l0ShardingFactor: Int = 1
+    val noise: NoiseSource = NoiseSource.Secure
 ) {
   import DPEngine._
-  require(l0ShardingFactor >= 1, "l0ShardingFactor must be >= 1")
 
   /** The main DP groupBy-aggregate (reference: dp_engine.py:71-195). */
   def aggregate(
@@ -83,121 +72,144 @@ final class DPEngine(
       params: AggregateParams,
       columns: DPColumns,
       publicPartitions: Option[DataFrame] = None
+  ): DPResult =
+    aggregateColumns(df, columns.privacyUnit, columns.partitionKeys,
+      Seq(("", columns.value, params)), publicPartitions,
+      (plans, selection) => report(params, plans.head, selection))
+
+  /** Requests the budgets of a metric release over value columns that share
+    * one contribution bounding — each column is `(output-name prefix,
+    * value, params)` — and returns the release, built once they resolve.
+    * [[aggregate]] is the one-column case; [[MultiValueSum]] and
+    * [[MultiValueAgg]] pass one column per value. */
+  private[spark] def aggregateColumns(
+      df: DataFrame,
+      pid: Column,
+      partitionKeys: Seq[(String, Column)],
+      cols: Seq[(String, Option[Column], AggregateParams)],
+      publicPartitions: Option[DataFrame],
+      report: (Seq[CompoundComputer.Plan], Option[BudgetHandle]) => String =
+        (_, _) => ""
   ): DPResult = {
     accountant.registerAggregation()
+    val params = cols.head._3
     require(!(params.postAggregationThresholding && publicPartitions.isDefined),
       "postAggregationThresholding requires private partitions")
-    val plan = CompoundComputer.plan(params, accountant)
-    // Post-aggregation thresholding is an ADDITIVE mechanism (noised count vs
-    // threshold), so it requests the matching thresholding mechanism type:
-    // under PLD accounting it participates in the noise-std search and
-    // receives its share of the 25% thresholding-delta reservation
-    // (reference: budget_accounting.py:700-747); under naive accounting the
-    // type resolves to plain (eps, delta) like any other request. The
-    // sensitivity of the privacy-unit count is L1 = l0 (Laplace) /
-    // L2 = sqrt(l0) (Gaussian).
-    val selectionSensitivity = params.noiseKind match {
-      case NoiseKind.Laplace  => effectiveL0(params).toDouble
-      case NoiseKind.Gaussian => math.sqrt(effectiveL0(params).toDouble)
-    }
+    val plans = cols.map(c => CompoundComputer.plan(c._3, accountant))
     val selectionHandle =
-      if (publicPartitions.isEmpty) {
-        val mtype =
-          if (params.postAggregationThresholding) params.noiseKind match {
-            case NoiseKind.Laplace  => MechanismType.LaplaceThresholding
-            case NoiseKind.Gaussian => MechanismType.GaussianThresholding
-          }
-          else MechanismType.PartitionSelection
-        // sensitivity stays 1.0 here: the PLD accountant resolves the
-        // NORMALIZED per-unit-sensitivity noiseStdDev, and
-        // buildPostAggSelection scales it by selectionSensitivity ONCE at
-        // build — requesting with sensitivity = S as well applied S twice
-        // (std = S^2 * base/w), over-noising the thresholded count and
-        // inflating the release threshold S-fold
-        Some(accountant.requestBudget(mtype, weight = params.budgetWeight,
-          name = "PartitionSelection"))
-      } else None
-
+      if (publicPartitions.isEmpty) Some(requestSelection(params, uses = 1)) else None
     new DPResult(() => {
-      val computer = plan.build(noise)
-      val thresholdingStrategy = params.noiseKind match {
-        case NoiseKind.Laplace  => PartitionSelectionStrategyKind.LaplaceThresholding
-        case NoiseKind.Gaussian => PartitionSelectionStrategyKind.GaussianThresholding
+      val (selector, postAgg) = selectionHandle
+        .map(h => buildSelection(params, h)).getOrElse((None, None))
+      releaseMetrics(df, pid, partitionKeys,
+        cols.zip(plans).map { case ((prefix, v, _), plan) => MetricColumn(prefix, v, plan) },
+        publicPartitions, selector, postAgg, noise)
+    }, () => report(plans, selectionHandle))
+  }
+
+  /** The partition-selection budget of a release over private partitions.
+    * Post-aggregation thresholding is an ADDITIVE mechanism (noised count vs
+    * threshold), so it requests the matching thresholding mechanism type:
+    * under PLD accounting it participates in the noise-std search and
+    * receives its share of the 25% thresholding-delta reservation
+    * (reference: budget_accounting.py:700-747); under naive accounting the
+    * type resolves to plain (eps, delta) like any other request. The
+    * sensitivity stays 1.0 here: the PLD accountant resolves the NORMALIZED
+    * per-unit-sensitivity noiseStdDev, and [[buildSelection]] scales it by
+    * the unit count's sensitivity ONCE — requesting with it as well
+    * applied it twice, over-noising the thresholded count. */
+  private def requestSelection(params: AggregateParams, uses: Int): BudgetHandle = {
+    val mtype =
+      if (params.postAggregationThresholding) params.noiseKind match {
+        case NoiseKind.Laplace  => MechanismType.LaplaceThresholding
+        case NoiseKind.Gaussian => MechanismType.GaussianThresholding
       }
-      if (params.postAggregationThresholding) {
-        val sel = buildPostAggSelection(selectionHandle.get.spec, thresholdingStrategy,
-          selectionSensitivity, params)
-        assemble(df, params, columns, publicPartitions, computer, None, noise,
-          plan.buildQuantile(), plan.buildVector(), postAggThresholding = Some(sel),
-          shards = l0ShardingFactor)
-      } else {
-        val selector = selectionHandle.map { h =>
-          val spec = h.spec
-          PartitionSelection.create(params.partitionSelectionStrategy, spec.epsilon,
-            spec.delta, effectiveL0(params), params.preThreshold)
-        }
-        assemble(df, params, columns, publicPartitions, computer, selector, noise,
-          plan.buildQuantile(), plan.buildVector(), shards = l0ShardingFactor)
+      else MechanismType.PartitionSelection
+    accountant.requestBudget(mtype, weight = params.budgetWeight, count = uses,
+      name = "PartitionSelection")
+  }
+
+  /** The resolved selection: a plain selector, or the post-aggregation
+    * thresholding whose noised unit count is also released. Under PLD
+    * accounting the thresholding noise scale comes from the composition
+    * search and the threshold spends the reserved thresholding delta
+    * (actual std = normalized std * sensitivity, the same convention as
+    * Mechanisms.createAdditive); under naive accounting the (eps, delta)
+    * split is built by the selection itself. The unit count's sensitivity
+    * is L1 = l0 (Laplace) / L2 = sqrt(l0) (Gaussian). */
+  private def buildSelection(params: AggregateParams, handle: BudgetHandle)
+      : (Option[PartitionSelection], Option[ThresholdingSelection]) = {
+    val spec = handle.spec
+    val l0 = effectiveL0(params)
+    if (!params.postAggregationThresholding)
+      (Some(PartitionSelection.create(params.partitionSelectionStrategy,
+        spec.epsilon, spec.delta, l0, params.preThreshold)), None)
+    else {
+      val (strategy, sensitivity) = params.noiseKind match {
+        case NoiseKind.Laplace  =>
+          (PartitionSelectionStrategyKind.LaplaceThresholding, l0.toDouble)
+        case NoiseKind.Gaussian =>
+          (PartitionSelectionStrategyKind.GaussianThresholding, math.sqrt(l0.toDouble))
       }
-    }, () => {
-      // Per-stage accumulated report, mirroring the reference's
-      // report_generator (reference: report_generator.py:46-116): every
-      // stage that ran states its resolved parameters; mechanisms print
-      // their final noise scales.
-      val lines = Seq.newBuilder[String]
-      lines += s"DPEngine.aggregate: metrics=[${params.metrics.map(_.name).mkString(", ")}]"
-      var stage = 0
-      def add(s: String): Unit = { stage += 1; lines += s"$stage. $s" }
-      if (publicPartitions.isDefined)
-        add("Public partition filtering: dropped rows of non-public partitions before any aggregation")
-      if (params.contributionBoundsAlreadyEnforced)
-        add("Contribution bounding: SKIPPED — caller vouched that bounds are already enforced")
-      else params.maxContributions match {
-        case Some(mc) =>
-          add(s"Contribution bounding (L1, total): randomly sampled <= $mc contributions per privacy unit")
-        case None =>
-          if (needsLinfSampling(params))
-            params.maxContributionsPerPartition.foreach { c =>
-              add(s"Contribution bounding (Linf, per-partition): randomly sampled <= $c " +
-                "contributions per (privacy unit, partition)")
-            }
-          add("Contribution bounding (L0, cross-partition): randomly sampled <= " +
-            s"${params.maxPartitionsContributed} partitions per privacy unit")
-      }
-      if (params.boundsPerContributionAreSet)
-        add(f"Per-contribution clipping: values clipped to [${params.minValue.get}%.6g, ${params.maxValue.get}%.6g]")
-      else if (params.boundsPerPartitionAreSet)
-        add(f"Per-partition sum clipping: per-partition sums clipped to " +
-          f"[${params.minSumPerPartition.get}%.6g, ${params.maxSumPerPartition.get}%.6g]")
-      if (publicPartitions.isDefined)
+      (None, Some(spec.noiseStdDev match {
+        case Some(nstd) => PartitionSelection.fromNoiseStd(strategy,
+          nstd * sensitivity, spec.thresholdingDelta.get, l0, params.preThreshold)
+        case None => PartitionSelection.create(strategy, spec.epsilon, spec.delta,
+          l0, params.preThreshold).asInstanceOf[ThresholdingSelection]
+      }))
+    }
+  }
+
+  /** Per-stage accumulated report, mirroring the reference's
+    * report_generator (reference: report_generator.py:46-116): every stage
+    * that ran states its resolved parameters; mechanisms print their final
+    * noise scales. */
+  private def report(params: AggregateParams, plan: CompoundComputer.Plan,
+      selectionHandle: Option[BudgetHandle]): String = {
+    val lines = Seq.newBuilder[String]
+    lines += s"DPEngine.aggregate: metrics=[${params.metrics.map(_.name).mkString(", ")}]"
+    var stage = 0
+    def add(s: String): Unit = { stage += 1; lines += s"$stage. $s" }
+    if (selectionHandle.isEmpty)
+      add("Public partition filtering: dropped rows of non-public partitions before any aggregation")
+    if (params.contributionBoundsAlreadyEnforced)
+      add("Contribution bounding: SKIPPED — caller vouched that bounds are already enforced")
+    else params.maxContributions match {
+      case Some(mc) =>
+        add(s"Contribution bounding (L1, total): randomly sampled <= $mc contributions per privacy unit")
+      case None =>
+        if (needsLinfSampling(params))
+          params.maxContributionsPerPartition.foreach { c =>
+            add(s"Contribution bounding (Linf, per-partition): randomly sampled <= $c " +
+              "contributions per (privacy unit, partition)")
+          }
+        add("Contribution bounding (L0, cross-partition): randomly sampled <= " +
+          s"${params.maxPartitionsContributed} partitions per privacy unit")
+    }
+    if (params.boundsPerContributionAreSet)
+      add(f"Per-contribution clipping: values clipped to [${params.minValue.get}%.6g, ${params.maxValue.get}%.6g]")
+    else if (params.boundsPerPartitionAreSet)
+      add(f"Per-partition sum clipping: per-partition sums clipped to " +
+        f"[${params.minSumPerPartition.get}%.6g, ${params.maxSumPerPartition.get}%.6g]")
+    selectionHandle match {
+      case None =>
         add("Partition selection: public partitions (missing public keys added as empty accumulators)")
-      else {
-        val spec = selectionHandle.get.spec
-        val thresholdingStrategy = params.noiseKind match {
-          case NoiseKind.Laplace  => PartitionSelectionStrategyKind.LaplaceThresholding
-          case NoiseKind.Gaussian => PartitionSelectionStrategyKind.GaussianThresholding
-        }
-        if (params.postAggregationThresholding) {
-          val sel = buildPostAggSelection(spec, thresholdingStrategy,
-            selectionSensitivity, params)
+      case Some(h) => buildSelection(params, h) match {
+        case (_, Some(sel)) =>
           add(s"Partition selection (post-aggregation thresholding): ${sel.describe}")
-        } else {
-          val sel = PartitionSelection.create(params.partitionSelectionStrategy,
-            spec.epsilon, spec.delta, effectiveL0(params), params.preThreshold)
-          add(s"Partition selection: ${sel.describe}")
-        }
+        case (sel, None) => add(s"Partition selection: ${sel.get.describe}")
       }
-      val parts = plan.build(noise).parts
-      val quantile = plan.buildQuantile()
-      val vector = plan.buildVector()
-      if (parts.nonEmpty || quantile.isDefined || vector.isDefined) {
-        add("Per-metric mechanisms:")
-        parts.foreach(p => lines += s"   - ${p.describe}")
-        quantile.foreach(q => lines += s"   - ${q.describe}")
-        vector.foreach(v => lines += s"   - ${v.describe}")
-      }
-      lines.result().mkString("\n")
-    })
+    }
+    val parts = plan.build(noise).parts
+    val quantile = plan.buildQuantile()
+    val vector = plan.buildVector()
+    if (parts.nonEmpty || quantile.isDefined || vector.isDefined) {
+      add("Per-metric mechanisms:")
+      parts.foreach(p => lines += s"   - ${p.describe}")
+      quantile.foreach(q => lines += s"   - ${q.describe}")
+      vector.foreach(v => lines += s"   - ${v.describe}")
+    }
+    lines.result().mkString("\n")
   }
 
   /** DP release of the same metric set at SEVERAL partition-key
@@ -243,46 +255,18 @@ final class DPEngine(
     }
     val n = groupingSets.size
     val plan = CompoundComputer.plan(params, accountant, uses = n)
-    val selectionSensitivity = params.noiseKind match {
-      case NoiseKind.Laplace  => effectiveL0(params).toDouble
-      case NoiseKind.Gaussian => math.sqrt(effectiveL0(params).toDouble)
-    }
-    val mtype =
-      if (params.postAggregationThresholding) params.noiseKind match {
-        case NoiseKind.Laplace  => MechanismType.LaplaceThresholding
-        case NoiseKind.Gaussian => MechanismType.GaussianThresholding
-      }
-      else MechanismType.PartitionSelection
-    val selectionHandle = accountant.requestBudget(mtype,
-      weight = params.budgetWeight, count = n, name = "PartitionSelection")
+    val selectionHandle = requestSelection(params, uses = n)
     new DPResult(() => {
-      val spec = selectionHandle.spec
-      val computer = plan.build(noise)
-      val quantile = plan.buildQuantile()
-      val vector = plan.buildVector()
-      val thresholdingStrategy = params.noiseKind match {
-        case NoiseKind.Laplace  => PartitionSelectionStrategyKind.LaplaceThresholding
-        case NoiseKind.Gaussian => PartitionSelectionStrategyKind.GaussianThresholding
-      }
-      val (selector, postAgg) =
-        if (params.postAggregationThresholding)
-          (None, Some(buildPostAggSelection(spec, thresholdingStrategy,
-            selectionSensitivity, params)))
-        else
-          (Some(PartitionSelection.create(params.partitionSelectionStrategy,
-            spec.epsilon, spec.delta, effectiveL0(params), params.preThreshold)),
-            None)
+      val (selector, postAgg) = buildSelection(params, selectionHandle)
       // key types from the projected frame's schema (driver-side analysis
       // only — no job): rolled-up columns must union as the SAME type
       val keyTypes = df.select(columns.partitionKeys.map {
         case (nm, c) => c.as(nm) }: _*).schema
         .fields.map(f => f.name -> f.dataType).toMap
       val frames = groupingSets.map { set =>
-        val colsI = columns.copy(
-          partitionKeys = columns.partitionKeys.filter(p => set.contains(p._1)))
-        val released = assemble(df, params, colsI, None, computer, selector,
-          noise, quantile, vector, postAggThresholding = postAgg,
-          shards = l0ShardingFactor)
+        val released = releaseMetrics(df, columns.privacyUnit,
+          columns.partitionKeys.filter(p => set.contains(p._1)),
+          Seq(MetricColumn("", columns.value, plan)), None, selector, postAgg, noise)
         val gid = allKeys.zipWithIndex.iterator.collect {
           case (nm, i) if !set.contains(nm) => 1L << (allKeys.size - 1 - i)
         }.sum
@@ -296,27 +280,6 @@ final class DPEngine(
       }
       frames.reduce(_.unionByName(_))
     })
-  }
-
-  /** Post-aggregation thresholding selection from the resolved spec: under
-    * PLD accounting the noise scale comes from the composition search and
-    * the threshold spends the reserved thresholding delta (actual std =
-    * normalized std * sensitivity, the same convention as
-    * Mechanisms.createAdditive); under naive accounting the (eps, delta)
-    * split is built by the selection itself. */
-  private def buildPostAggSelection(
-      spec: MechanismSpec,
-      strategy: PartitionSelectionStrategyKind,
-      sensitivity: Double,
-      params: AggregateParams
-  ): ThresholdingSelection = spec.noiseStdDev match {
-    case Some(nstd) =>
-      PartitionSelection.fromNoiseStd(strategy, nstd * sensitivity,
-        spec.thresholdingDelta.get, effectiveL0(params), params.preThreshold)
-    case None =>
-      PartitionSelection.create(strategy, spec.epsilon, spec.delta,
-        effectiveL0(params), params.preThreshold)
-        .asInstanceOf[ThresholdingSelection]
   }
 
   /** DP set of partition keys (reference: dp_engine.py:220-305). */
@@ -337,7 +300,7 @@ final class DPEngine(
       // distinct (pid, pk), bound partitions per pid
       val distinctPairs = projected.distinct()
       val bounded = sampleRowsPerKey(distinctPairs, Seq(PidCol),
-        params.maxPartitionsContributed, shards = l0ShardingFactor)
+        params.maxPartitionsContributed)
       val noiseSrc = noise
       params.strategy match {
         case PartitionSelectionStrategyKind.WeightedGaussianThresholding =>
@@ -538,7 +501,7 @@ final class DPEngine(
           columns.partitionKeys.map { case (n, c) => c.as(n) }: _*)
       val distinctPairs = projected.distinct()
       def countBounded(pairs: DataFrame): DataFrame =
-        sampleRowsPerKey(pairs, Seq(PidCol), l0, shards = l0ShardingFactor)
+        sampleRowsPerKey(pairs, Seq(PidCol), l0)
           .groupBy(pkCols: _*).agg(count(lit(1)).as(PidCntCol))
       val noiseSrc = noise
       val scored = publicPartitions match {
@@ -609,18 +572,18 @@ final class DPEngine(
 
 object DPEngine {
   private[spark] val PidCol = "__graft_pid"
-  private[spark] val ValCol = "__graft_v"
   private[spark] val CntCol = "__graft_cnt"
   private[spark] val SumCol = "__graft_sum"
   private[spark] val NSumCol = "__graft_nsum"
   private[spark] val NSqCol = "__graft_nsq"
   private[spark] val PidCntCol = "__graft_pidcnt"
   private[spark] val RnCol = "__graft_rn"
-  private[spark] val RndCol = "__graft_rnd"
-  private[spark] val ShardCol = "__graft_shard"
   private[spark] val MetricsCol = "__graft_metrics"
   private[spark] val TreeCol = "__graft_qtree"
   private[spark] val VecCol = "__graft_vec"
+
+  /** The core's projected name of its `i`-th value column. */
+  private[spark] def valueCol(i: Int): String = s"__graft_v$i"
 
   /** Uniform without-replacement sample of at most `n` rows per key:
     * `row_number() over (partition by keys order by rand())` — the window sort
@@ -628,31 +591,15 @@ object DPEngine {
     * permutation prefix), unlike the reference's Spark path which documents
     * non-uniformity (reference: spark_rdd_backend.py:121-124).
     *
-    * With `shards > 1` the selection runs as TWO windows: rows first rank
-    * within (key, shard) — shard derived from the same rand value, so no
-    * second draw — keeping each shard's n smallest; survivors (<= shards*n
-    * per key) then rank within the key. The n globally-smallest rand values
-    * are always contained in the union of the per-shard n smallest (an
-    * element outside its shard's top n has > n smaller within its shard
-    * alone), so the result SET is identical to the single-window form for
-    * the same rand draw — but no task ever sorts one key's full fan-out
-    * (the reference's documented per-pid hazard, dp_engine.py:270-271). */
-  private[graft] def sampleRowsPerKey(df: DataFrame, keys: Seq[String], n: Int,
-      shards: Int = 1, rnd: Column = rand()): DataFrame = {
-    if (shards <= 1) {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(rnd)
-      df.withColumn(RnCol, row_number().over(w)).filter(col(RnCol) <= n).drop(RnCol)
-    } else {
-      val keyCols = keys.map(col)
-      val withR = df.withColumn(RndCol, rnd)
-        .withColumn(ShardCol, floor(col(RndCol) * shards).cast("int"))
-      val w1 = Window.partitionBy(keyCols :+ col(ShardCol): _*).orderBy(col(RndCol))
-      val w2 = Window.partitionBy(keyCols: _*).orderBy(col(RndCol))
-      withR
-        .withColumn(RnCol, row_number().over(w1)).filter(col(RnCol) <= n)
-        .withColumn(RnCol, row_number().over(w2)).filter(col(RnCol) <= n)
-        .drop(RnCol, RndCol, ShardCol)
-    }
+    * A hot key (one unit's huge fan-out, or one huge (unit, partition)
+    * cell — the reference's documented hazard, dp_engine.py:270-271) never
+    * ships whole: for n below `spark.sql.optimizer.windowGroupLimitThreshold`
+    * (default 1000) Spark's InferWindowGroupLimit plants a Partial
+    * WindowGroupLimit before the exchange, so each map task sends at most n
+    * rows per key and the final window sorts at most n per upstream task. */
+  private[graft] def sampleRowsPerKey(df: DataFrame, keys: Seq[String], n: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(rand())
+    df.withColumn(RnCol, row_number().over(w)).filter(col(RnCol) <= n).drop(RnCol)
   }
 
   /** Partitions one unit can influence: in maxContributions (L1) mode the
@@ -674,236 +621,236 @@ object DPEngine {
       case Metric.PrivacyIdCount => false
     }
 
-  private[spark] def assemble(
-      df: DataFrame,
-      params: AggregateParams,
-      columns: DPColumns,
-      publicPartitions: Option[DataFrame],
-      computer: CompoundComputer,
-      selector: Option[PartitionSelection],
-      noise: NoiseSource,
-      quantile: Option[QuantileComputer] = None,
-      vector: Option[VectorOps.VectorNoiser] = None,
-      postAggThresholding: Option[ThresholdingSelection] = None,
-      shards: Int = 1
-  ): DataFrame = {
-    val pkNames = columns.partitionKeys.map(_._1)
-    val pkCols = pkNames.map(col)
-    val isVector = vector.isDefined
-    // fail loud on output-name collisions: the final select emits pk
-    // columns next to metric columns BY NAME, so a partition key named
-    // "count" (plausible) would silently produce a frame with duplicate
-    // column names — an AMBIGUOUS_REFERENCE ambush for the first
-    // downstream select, or silent duplicate fields in parquet
-    val emitted = computer.names ++ quantile.toSeq.flatMap(_.names) ++
-      vector.toSeq.map(_ => "vector_sum") ++
-      postAggThresholding.toSeq.map(_ => "privacy_id_count")
+  /** Fails loud on output-name collisions: a release selects the partition
+    * keys next to its emitted columns BY NAME, so a key named "count"
+    * (plausible) would silently produce a frame with duplicate column
+    * names — an AMBIGUOUS_REFERENCE ambush for the first downstream
+    * select, or silent duplicate fields in parquet. */
+  private[spark] def requireKeyNames(pkNames: Seq[String], emitted: Seq[String]): Unit = {
     val badPk = pkNames.filter(n => emitted.contains(n) || n.startsWith("__graft_"))
     require(badPk.isEmpty,
       s"partition key name(s) ${badPk.mkString(", ")} collide with DP output " +
         s"columns (${emitted.mkString(", ")}) or the engine's __graft_ " +
         "namespace; rename the key columns")
-    // fail loud on NULL values: sum(all-null group) is SQL NULL, which
-    // would ride through the merge, skip the primitive-typed metrics UDF
-    // (Spark nulls it out), and RELEASE null metrics with no noise — an
-    // exact "every value was null" disclosure. A null value has no
-    // clipping semantics either; the caller must filter or impute.
-    def noNull(v: Column, shape: String): Column =
-      when(v.isNull, raise_error(lit(
-        s"DPEngine: NULL $shape value for a privacy unit — nulls have no " +
-          "clipping semantics and would release un-noised null metrics; " +
-          "filter or impute upstream"))).otherwise(v)
-    val valueExpr =
-      if (isVector) noNull(columns.value.get, "vector").cast("array<double>")
-      else columns.value.map(v => noNull(v, "scalar").cast("double"))
-        .getOrElse(lit(1.0).cast("double"))
+  }
 
-    // stage 3: extract (pid, pk..., value) — Catalyst prunes everything else
-    var cur = df.select(
-      (columns.privacyUnit.as(PidCol) +:
-        columns.partitionKeys.map { case (n, c) => c.as(n) }) :+
-        valueExpr.as(ValCol): _*)
+  /** Sampling caps of [[boundedAggregate]], each None when not enforced:
+    * at most `rows` raw rows per (unit, partition) — per unit in total when
+    * `rowsPerUnit` (the L1 bound) — then at most `l0` partitions per unit. */
+  private[spark] final case class Bounds(rows: Option[Int], l0: Option[Int],
+      rowsPerUnit: Boolean = false)
 
-    // stage 4: drop non-public partitions early (semi-join; broadcast when small)
+  /** One accumulator of [[boundedAggregate]]: `perUnit` aggregates one
+    * (unit, partition) group of bounded rows into column `name`, `merge`
+    * aggregates that column per partition, and `empty` is its value for a
+    * public partition no unit contributed to (None: it has none). */
+  private[spark] final case class Acc(name: String, perUnit: Column, merge: Column,
+      empty: Option[Column])
+  private[spark] object Acc {
+    /** An accumulator merged by summing, empty at `zero`. */
+    def summed(name: String, perUnit: Column, zero: Any): Acc =
+      Acc(name, perUnit, sum(col(name)), Some(lit(zero)))
+  }
+
+  /** The bounded-aggregate core of every DP aggregate (reference:
+    * contribution_bounders.py, then CompoundCombiner's accumulators,
+    * combiners.py:748-847):
+    *
+    *  1. project (pid, pk..., value...), failing loud on a NULL value;
+    *  2. semi-join the public partitions (non-public rows drop before they
+    *     can spend a unit's contribution budget);
+    *  3. sample the Linf or L1 bound;
+    *  4. aggregate each (unit, partition) into the accumulators — the
+    *     groupBy reuses the Linf window's (pid, pk) exchange;
+    *  5. sample the L0 bound;
+    *  6. merge per partition and count its units ([[PidCntCol]]: one row
+    *     per (pid, pk) survives, so the count is exact);
+    *  7. add missing public partitions at the accumulators' empty values,
+    *     when every accumulator has one;
+    *  8. run partition selection on the unit count.
+    *
+    * Returns the partition keys, the merged accumulators and PidCntCol.
+    * A NULL value fails loud because it has no clipping semantics: Spark's
+    * least/greatest skip nulls (an unguarded NULL clips to the lower bound
+    * and enters the release as data), and sum(all-null group) is NULL,
+    * which skips a primitive-typed metric UDF and releases un-noised. */
+  private[spark] def boundedAggregate(
+      df: DataFrame,
+      pid: Column,
+      partitionKeys: Seq[(String, Column)],
+      values: Seq[(String, Column)],
+      bounds: Bounds,
+      accs: Seq[Acc],
+      publicPartitions: Option[DataFrame],
+      selector: Option[PartitionSelection],
+      noise: NoiseSource
+  ): DataFrame = {
+    val pkNames = partitionKeys.map(_._1)
+    val pkCols = pkNames.map(col)
+    val guarded = values.zipWithIndex.map { case ((label, v), i) =>
+      when(v.isNull, raise_error(lit(s"NULL $label for a privacy unit — nulls " +
+        "have no clipping semantics and would release un-noised or clip-bound " +
+        "data; filter or impute upstream"))).otherwise(v).as(valueCol(i))
+    }
+    var cur = df.select((pid.as(PidCol) +:
+      partitionKeys.map { case (n, c) => c.as(n) }) ++ guarded: _*)
     publicPartitions.foreach { pub => cur = cur.join(pub, pkNames, "left_semi") }
-
-    // stage 5a: contribution sampling. In maxContributions (total-L1) mode
-    // the sampling below IS the entire contribution bound — it must run
-    // for EVERY metric: needsLinfSampling only says per-partition (Linf)
-    // sampling is unnecessary (privacy_id_count, per-partition-bounded
-    // sum), but skipping the L1 sample would leave contributions fully
-    // unbounded while noise is calibrated to mc.
-    val doSampling = !params.contributionBoundsAlreadyEnforced
-    // COUNT-STYLE Linf fast path (r20): when every requested metric reads
-    // only the bounded row count (Count) or the distinct-unit count
-    // (PrivacyIdCount) — never a row's value — the Linf sample's one
-    // observable is the kept-row count min(n, c): a group's rows are
-    // interchangeable, so which c rows survive cannot reach the release.
-    // least(count, c) over the stage-5b aggregate is therefore EXACTLY the
-    // sampled result (bit-identical for every rand draw, not merely equal
-    // in distribution) with no rand, no sort and no raw-row exchange: the
-    // aggregate partial-combines map-side where the row_number window had
-    // to sort the whole fact table per release (guide §2.3/§2.4). The L1
-    // (maxContributions) sample is NOT reducible this way — it splits one
-    // unit's budget ACROSS partitions, so which rows survive decides the
-    // per-partition counts — and keeps the window.
-    val countOnlyLinfCap: Option[Long] =
-      if (doSampling && params.maxContributions.isEmpty &&
-          needsLinfSampling(params) && quantile.isEmpty && vector.isEmpty &&
-          params.metrics.nonEmpty && params.metrics.forall(m =>
-            m == Metric.Count || m == Metric.PrivacyIdCount))
-        params.maxContributionsPerPartition.map(_.toLong)
-      else None
-    if (doSampling && countOnlyLinfCap.isEmpty) {
-      params.maxContributions match {
-        case Some(mc) => // L1 bounding: <= mc rows per pid across all partitions
-          cur = sampleRowsPerKey(cur, Seq(PidCol), mc, shards)
-        case None if needsLinfSampling(params) =>
-          params.maxContributionsPerPartition.foreach { c =>
-            cur = sampleRowsPerKey(cur, PidCol +: pkNames, c, shards)
-          }
-        case None => // Linf sampling unnecessary for this metric set
-      }
+    bounds.rows.foreach { n =>
+      cur = sampleRowsPerKey(cur, if (bounds.rowsPerUnit) Seq(PidCol) else PidCol +: pkNames, n)
     }
-
-    // stage 5b: per-(pid, pk) partial accumulators — all native functions.
-    // Window partitioned the data by (pid, pk) already, so this groupBy
-    // reuses the exchange (no extra shuffle).
-    val clipped = columns.value match {
-      case Some(_) if !isVector && params.boundsPerContributionAreSet =>
-        least(greatest(col(ValCol), lit(params.minValue.get)), lit(params.maxValue.get))
-      case _ => col(ValCol)
-    }
-    val mid = if (params.boundsPerContributionAreSet) params.rangeMiddle else 0.0
-    val scalarAccs =
-      if (isVector)
-        Seq(lit(0.0).as(SumCol), lit(0.0).as(NSumCol), lit(0.0).as(NSqCol))
-      else {
-        // the centered-moment accumulators only feed Mean/Variance: a
-        // plain Count/Sum/PrivacyIdCount query otherwise pays two extra
-        // per-row multiply+sum aggregates through BOTH aggregation stages
-        // for columns the metrics UDF ignores (the vector branch's
-        // lit(0.0) trick, applied per metric set)
-        val needsMoments = params.metrics.exists(m =>
-          m == Metric.Mean || m == Metric.Variance)
-        // SumPart is the ONLY consumer of the sum accumulator — and it is
-        // only BUILT when Sum is requested without Mean/Variance (those
-        // subsume it from the centered moments) — so any other metric set
-        // pays the lit(0.0) trick here too (r20). The count-only fast path
-        // above RELIES on this: with sampling folded into least(count, c),
-        // a live sum would aggregate unsampled rows.
-        val needsSum = params.metrics.contains(Metric.Sum) && !needsMoments
-        Seq(
-          (if (!needsSum) lit(0.0)
-           else if (params.boundsPerPartitionAreSet)
-             least(greatest(sum(col(ValCol)), lit(params.minSumPerPartition.get)),
-               lit(params.maxSumPerPartition.get))
-           else sum(clipped)).as(SumCol),
-          (if (needsMoments) sum(clipped - lit(mid)) else lit(0.0)).as(NSumCol),
-          (if (needsMoments) sum((clipped - lit(mid)) * (clipped - lit(mid)))
-           else lit(0.0)).as(NSqCol))
-      }
-    val extraAccs =
-      quantile.map(q =>
-        QuantileAgg.buildTree(q.lower, q.upper)(clipped).as(TreeCol)).toSeq ++
-      // norm-clip AFTER the aggregation (semantically identical — the clip
-      // applies to the per-(pid, pk) sum either way): clipVector references
-      // its input twice (non-finite guard + value), and wrapping the
-      // aggregate ran the vector-sum Aggregator TWICE per group (two
-      // vectorsumaggregator calls visible in the plan)
-      vector.map(_ => VectorOps.vecSum(col(ValCol)).as(VecCol)).toSeq
-    // the count-only fast path folds the Linf bound into the aggregate:
-    // least(count, c) == the sampled row count for EVERY rand draw
-    val cntAcc = countOnlyLinfCap
-      .map(c => least(count(lit(1)), lit(c)))
-      .getOrElse(count(lit(1)))
-    val perPidPk0 = cur
-      .groupBy((col(PidCol) +: pkCols): _*)
-      .agg(cntAcc.as(CntCol), scalarAccs ++ extraAccs: _*)
-    val perPidPk = vector.map(v => perPidPk0.withColumn(VecCol,
-      VectorOps.clipVector(col(VecCol), v.normKind, v.maxNorm)))
-      .getOrElse(perPidPk0)
-
-    // stage 5c: L0 bounding — sample <= maxPartitionsContributed partitions per pid
-    val crossBounded =
-      if (doSampling && params.maxContributions.isEmpty)
-        sampleRowsPerKey(perPidPk, Seq(PidCol), params.maxPartitionsContributed, shards)
-      else perPidPk
-
-    // stages 6+8: drop pid, merge accumulators per pk (map-side combine free)
-    val mergeExtra =
-      quantile.map(q => QuantileAgg.mergeTrees(q.lower, q.upper)(col(TreeCol)).as(TreeCol)).toSeq ++
-      vector.map(_ => VectorOps.vecSum(col(VecCol)).as(VecCol)).toSeq
-    var agg = crossBounded
-      .groupBy(pkCols: _*)
-      .agg(
-        sum(col(CntCol)).as(CntCol),
-        Seq(
-          sum(col(SumCol)).as(SumCol),
-          sum(col(NSumCol)).as(NSumCol),
-          sum(col(NSqCol)).as(NSqCol),
-          count(lit(1)).as(PidCntCol) // one row per (pid, pk) => exact pid count
-        ) ++ mergeExtra: _*)
-
-    // stage 7: union empty accumulators for missing public partitions
-    publicPartitions.foreach { pub =>
-      val zeroExtra =
-        quantile.map(_ => col(TreeCol)).toSeq ++ // null tree = empty tree
-        vector.map(v => coalesce(col(VecCol),
-          array_repeat(lit(0.0), v.vectorSize)).as(VecCol)).toSeq
+    val grouped = cur.groupBy(col(PidCol) +: pkCols: _*)
+    val perUnit =
+      if (accs.isEmpty) grouped.agg(Map.empty[String, String])
+      else grouped.agg(accs.head.perUnit.as(accs.head.name),
+        accs.tail.map(a => a.perUnit.as(a.name)): _*)
+    val bounded = bounds.l0.fold(perUnit)(sampleRowsPerKey(perUnit, Seq(PidCol), _))
+    var agg = bounded.groupBy(pkCols: _*).agg(count(lit(1)).as(PidCntCol),
+      accs.map(a => a.merge.as(a.name)): _*)
+    if (accs.forall(_.empty.isDefined)) publicPartitions.foreach { pub =>
       agg = pub.select(pkCols: _*).distinct().join(agg, pkNames, "left_outer").select(
-        pkCols ++ Seq(
-          coalesce(col(CntCol), lit(0L)).as(CntCol),
-          coalesce(col(SumCol), lit(0.0)).as(SumCol),
-          coalesce(col(NSumCol), lit(0.0)).as(NSumCol),
-          coalesce(col(NSqCol), lit(0.0)).as(NSqCol),
-          coalesce(col(PidCntCol), lit(0L)).as(PidCntCol)) ++ zeroExtra: _*)
+        pkCols ++ (coalesce(col(PidCntCol), lit(0L)).as(PidCntCol) +:
+          accs.map(a => coalesce(col(a.name), a.empty.get).as(a.name))): _*)
     }
-
-    // stage 9: DP partition selection (private partitions only)
     selector.foreach { sel =>
-      val noiseSrc = noise
-      val keepUdf = udf((n: Long) => sel.shouldKeep(n, noiseSrc)).asNondeterministic()
+      val keepUdf = udf((n: Long) => sel.shouldKeep(n, noise)).asNondeterministic()
       agg = agg.filter(keepUdf(col(PidCntCol)))
     }
+    agg
+  }
 
-    // stage 10: compute DP metrics — one nondeterministic UDF emitting the
-    // full metric vector so a single logical noise draw is never split
-    // across column re-evaluations (SURVEY §7.4 hard-part 4)
-    val comp = computer
-    val metricsUdf = udf((cnt: Long, s: Double, ns: Double, nsq: Double, pc: Long) =>
-      comp.compute(cnt, s, ns, nsq, pc)).asNondeterministic()
-    val withMetrics = agg.withColumn(MetricsCol,
-      metricsUdf(col(CntCol), col(SumCol), col(NSumCol), col(NSqCol), col(PidCntCol)))
+  /** One value column of a metric release: its metric plan, and the prefix
+    * its output names carry ("" for [[DPEngine.aggregate]]'s one column). A
+    * missing value counts rows (value 1). */
+  private[spark] final case class MetricColumn(prefix: String, value: Option[Column],
+      plan: CompoundComputer.Plan)
 
-    val metricCols = comp.names.zipWithIndex.map { case (n, i) =>
-      col(MetricsCol).getItem(i).as(n)
+  /** The COUNT/SUM/MEAN/VARIANCE/PERCENTILE/VECTOR_SUM release over
+    * [[boundedAggregate]]: per value column, the accumulators its metrics
+    * read and one metric UDF per accumulator set. The columns share one
+    * contribution bounding (their params agree on it) and one row count.
+    *
+    * Accumulators no metric reads are not built: the centered moments feed
+    * only Mean/Variance, and the plain sum only Sum without them.
+    *
+    * COUNT-STYLE Linf fold: when no metric reads a row's value (only Count
+    * and PrivacyIdCount), the Linf sample's one observable is the kept-row
+    * count min(n, c) — a group's rows are interchangeable, so which c rows
+    * survive cannot reach the release. least(count, c) over the per-unit
+    * aggregate is therefore EXACTLY the sampled result (bit-identical for
+    * every rand draw) with no rand, no sort and no raw-row exchange. The L1
+    * (maxContributions) sample is NOT reducible this way — it splits one
+    * unit's budget ACROSS partitions — and keeps the window. */
+  private[spark] def releaseMetrics(
+      df: DataFrame,
+      pid: Column,
+      partitionKeys: Seq[(String, Column)],
+      cols: Seq[MetricColumn],
+      publicPartitions: Option[DataFrame],
+      selector: Option[PartitionSelection],
+      postAggThresholding: Option[ThresholdingSelection],
+      noise: NoiseSource
+  ): DataFrame = {
+    import Metric._
+    val built = cols.map(c =>
+      (c, c.plan.build(noise), c.plan.buildQuantile(), c.plan.buildVector()))
+    requireKeyNames(partitionKeys.map(_._1),
+      built.flatMap { case (c, comp, q, v) =>
+        (comp.names ++ q.toSeq.flatMap(_.names) ++ v.map(_ => "vector_sum"))
+          .map(c.prefix + _)
+      } ++ postAggThresholding.map(_ => "privacy_id_count"))
+
+    val ps = cols.map(_.plan.params)
+    val p0 = ps.head
+    val linf = p0.maxContributionsPerPartition.filter(_ => ps.exists(needsLinfSampling))
+    val countOnly = ps.forall(_.metrics.forall(m => m == Count || m == PrivacyIdCount))
+    val bounds =
+      if (p0.contributionBoundsAlreadyEnforced) Bounds(None, None)
+      else p0.maxContributions match {
+        case Some(mc) => Bounds(Some(mc), None, rowsPerUnit = true)
+        case None => Bounds(linf.filter(_ => !countOnly), Some(p0.maxPartitionsContributed))
+      }
+    // the Linf mode's cap, folded into the count when no row sample runs
+    val countCap = if (bounds.l0.isDefined) linf.filter(_ => countOnly) else None
+
+    val accs = Seq.newBuilder[Acc]
+    if (ps.exists(_.metrics.exists(m => m == Count || m == Mean || m == Variance)))
+      accs += Acc.summed(CntCol,
+        countCap.fold(count(lit(1)))(c => least(count(lit(1)), lit(c.toLong))), 0L)
+    built.zipWithIndex.foreach { case ((c, _, quantile, vector), i) =>
+      val p = c.plan.params
+      val v = col(valueCol(i))
+      val clipped =
+        if (c.value.isDefined && vector.isEmpty && p.boundsPerContributionAreSet)
+          least(greatest(v, lit(p.minValue.get)), lit(p.maxValue.get))
+        else v
+      val moments = p.metrics.exists(m => m == Mean || m == Variance)
+      if (p.metrics.contains(Sum) && !moments)
+        accs += Acc.summed(SumCol + i,
+          if (p.boundsPerPartitionAreSet)
+            least(greatest(sum(v), lit(p.minSumPerPartition.get)),
+              lit(p.maxSumPerPartition.get))
+          else sum(clipped), 0.0)
+      if (moments) {
+        val centered = clipped - lit(p.rangeMiddle)
+        accs += Acc.summed(NSumCol + i, sum(centered), 0.0)
+        accs += Acc.summed(NSqCol + i, sum(centered * centered), 0.0)
+      }
+      quantile.foreach { q =>
+        accs += Acc(TreeCol + i, QuantileAgg.buildTree(q.lower, q.upper)(clipped),
+          QuantileAgg.mergeTrees(q.lower, q.upper)(col(TreeCol + i)),
+          Some(lit(null).cast("binary"))) // a null tree reads as empty
+      }
+      // the norm clip applies per (unit, partition) as the merge's input:
+      // clipVector references its input twice (non-finite guard + value),
+      // and wrapping the per-unit aggregate ran the vector-sum Aggregator
+      // twice per group
+      vector.foreach { vn =>
+        accs += Acc(VecCol + i, VectorOps.vecSum(v),
+          VectorOps.vecSum(VectorOps.clipVector(col(VecCol + i), vn.normKind, vn.maxNorm)),
+          Some(array_repeat(lit(0.0), vn.vectorSize)))
+      }
     }
-    val quantileCols = quantile.toSeq.flatMap { q =>
-      val noiseSrc = noise
-      val qUdf = udf((bytes: Array[Byte]) => q.compute(bytes, noiseSrc)).asNondeterministic()
-      val qArr = qUdf(col(TreeCol))
-      q.names.zipWithIndex.map { case (n, i) => qArr.getItem(i).as(n) }
+    val accList = accs.result()
+    val values = cols.zip(built).map { case (c, (_, _, _, vector)) =>
+      (if (c.prefix.isEmpty) "value" else s"value in column '${c.prefix.init}'") ->
+        c.value.fold(lit(1.0))(_.cast(if (vector.isDefined) "array<double>" else "double"))
     }
-    val vectorCols = vector.toSeq.map { v =>
-      val noiseSrc = noise
-      val vUdf = udf((vec: Array[Double]) =>
-        v.addNoise(if (vec == null || vec.isEmpty) new Array[Double](v.vectorSize) else vec,
-          noiseSrc)).asNondeterministic()
-      vUdf(col(VecCol)).as("vector_sum")
+    var agg = boundedAggregate(df, pid, partitionKeys, values, bounds, accList,
+      publicPartitions, selector, noise)
+
+    // one nondeterministic UDF per column emits its full metric vector, as a
+    // named column before item extraction, so a single logical noise draw
+    // is never split across column re-evaluations (SURVEY §7.4 hard-part 4)
+    val present = accList.map(_.name).toSet
+    def acc(name: String, zero: Any): Column = if (present(name)) col(name) else lit(zero)
+    val metricCols = built.zipWithIndex.flatMap { case ((c, comp, quantile, vector), i) =>
+      val scalar = if (comp.names.isEmpty) Nil else {
+        val mUdf = udf((cnt: Long, s: Double, ns: Double, nsq: Double, pc: Long) =>
+          comp.compute(cnt, s, ns, nsq, pc)).asNondeterministic()
+        agg = agg.withColumn(MetricsCol + i, mUdf(acc(CntCol, 0L), acc(SumCol + i, 0.0),
+          acc(NSumCol + i, 0.0), acc(NSqCol + i, 0.0), col(PidCntCol)))
+        comp.names.zipWithIndex.map { case (n, j) => col(MetricsCol + i).getItem(j).as(c.prefix + n) }
+      }
+      val quantileCols = quantile.toSeq.flatMap { q =>
+        val qArr = udf((bytes: Array[Byte]) => q.compute(bytes, noise))
+          .asNondeterministic()(col(TreeCol + i))
+        q.names.zipWithIndex.map { case (n, j) => qArr.getItem(j).as(c.prefix + n) }
+      }
+      val vectorCols = vector.toSeq.map { vn =>
+        udf((vec: Array[Double]) => vn.addNoise(
+          if (vec == null || vec.isEmpty) new Array[Double](vn.vectorSize) else vec, noise))
+          .asNondeterministic()(col(VecCol + i)).as(c.prefix + "vector_sum")
+      }
+      scalar ++ quantileCols ++ vectorCols
     }
-    // stage 11: post-aggregation thresholding — the noised pid count IS the
-    // release decision; under-threshold partitions yield null and are dropped
+    // post-aggregation thresholding: the noised pid count IS the release
+    // decision; under-threshold partitions yield null and are dropped
     // (reference: combiners.py:360-416, dp_engine.py:572-577)
     val postAggCols = postAggThresholding.toSeq.map { sel =>
-      val noiseSrc = noise
-      val thrUdf = udf((n: Long) =>
-        sel.noisedValueIfShouldKeep(n, noiseSrc).map(Double.box).orNull)
-        .asNondeterministic()
-      thrUdf(col(PidCntCol)).as("privacy_id_count")
+      udf((n: Long) => sel.noisedValueIfShouldKeep(n, noise).map(Double.box).orNull)
+        .asNondeterministic()(col(PidCntCol)).as("privacy_id_count")
     }
-    val out = withMetrics.select(
-      pkCols ++ metricCols ++ quantileCols ++ vectorCols ++ postAggCols: _*)
+    val out = agg.select(partitionKeys.map(p => col(p._1)) ++ metricCols ++ postAggCols: _*)
     if (postAggThresholding.isDefined) out.filter(col("privacy_id_count").isNotNull) else out
   }
 }

@@ -19,26 +19,27 @@ object Dataflow {
   /** Skew-resilient filter_by_key (reference: the sharded variant of
     * pipeline_dp's filter_by_key; SURVEY §2.B): a plain left-semi join
     * funnels every row of a hot key through one task — here the probe side
-    * gets a uniform salt in [0, shards) and the key side is replicated
-    * across all shards, so each hot key spreads over `shards` tasks. The
+    * gets a uniform salt in [0, KeyShards) and the key side is replicated
+    * across all shards, so each hot key spreads over KeyShards tasks. The
     * output is identical to the unsalted semi-join (salting only changes the
-    * physical distribution), at the cost of a `shards`-times larger key-side
-    * shuffle — use for key lists that are small relative to the data but
-    * match a skewed fraction of it. For mild skew prefer plain left_semi +
-    * AQE skew handling. */
+    * physical distribution), at the cost of a KeyShards-times larger
+    * key-side shuffle — use for key lists that are small relative to the
+    * data but match a skewed fraction of it. For mild skew prefer plain
+    * left_semi + AQE skew handling. */
   def filterByKeySharded(
       df: DataFrame,
       keys: DataFrame,
-      keyCols: Seq[String],
-      shards: Int = 16
+      keyCols: Seq[String]
   ): DataFrame = {
-    require(shards >= 1, "shards must be >= 1")
-    val salted = df.withColumn("__graft_salt", (rand() * shards).cast("int"))
+    val salted = df.withColumn("__graft_salt", (rand() * KeyShards).cast("int"))
     val replicated = keys.select(keyCols.map(col): _*).distinct()
-      .withColumn("__graft_salt", explode(array((0 until shards).map(lit): _*)))
+      .withColumn("__graft_salt", explode(array((0 until KeyShards).map(lit): _*)))
     salted.join(replicated, keyCols :+ "__graft_salt", "left_semi")
       .drop("__graft_salt")
   }
+
+  /** Salt shards of [[filterByKeySharded]]: its one caller's value. */
+  private val KeyShards = 8
 
   /** Bloom-pre-filtered shuffle equi-join: build a PORTABLE Bloom filter
     * over the small side's join keys ([[graft.ops.Sketches.bloomPositions]]

@@ -2,7 +2,6 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 /** Roles for a multi-value aggregation: several value columns aggregated for
   * the same privacy unit / partition key in ONE pass (reference:
@@ -46,23 +45,10 @@ final case class MultiValueSumParams(
 
 /** N DP sums over N value columns in one pass — one shuffle chain, one noise
   * mechanism per column, each with its own sensitivity, all under one
-  * accountant. The plan is the single-value DP sum plan with the accumulator
-  * block widened to N native `sum(clip(...))` columns:
-  *
-  * {{{
-  * select(pid, pk..., v1..vk)            -- narrow projection, codegen
-  *   [left_semi join public partitions]
-  *   groupBy(pid, pk): clip(sum(v_i))    -- shuffle 1, map-side combine
-  *   window rn over pid, rn <= L0        -- shuffle 2 (L0 bounding)
-  *   groupBy(pk): sum each column        -- shuffle 3, map-side combine
-  *   [outer join empty public partitions]
-  *   [selection filter]                  -- per surviving partition key only
-  *   per-column noise                    -- k scalar UDF calls on final rows
-  * }}}
-  */
+  * accountant: the DP aggregate with one `Sum` column per value, each
+  * clipped per partition to its own bounds (no Linf sample; the L0 sample
+  * and partition selection are shared). Outputs `<value>_sum`. */
 object MultiValueSum {
-
-  import DPEngine._
 
   def aggregate(
       engine: DPEngine,
@@ -73,97 +59,19 @@ object MultiValueSum {
   ): DPResult = {
     require(params.columnBounds.map(_.name) == columns.values.map(_._1),
       "columnBounds and value columns must align by name")
-    // the DPEngine.assemble collision contract: output columns are
-    // "<value>_sum" next to the pk columns by name
-    locally {
-      val outs = params.columnBounds.map(c => s"${c.name}_sum")
-      val badPk = columns.partitionKeys.map(_._1).filter(n =>
-        outs.contains(n) || n.startsWith("__graft_") || n.startsWith("__mv_"))
-      require(badPk.isEmpty,
-        s"partition key name(s) ${badPk.mkString(", ")} collide with the " +
-          s"output sum columns (${outs.mkString(", ")}) or the engine's " +
-          "reserved namespaces; rename the key columns")
-    }
-    val accountant = engine.accountant
-    accountant.registerAggregation()
-    val handles = params.columnBounds.map { c =>
-      accountant.requestBudget(params.noiseKind.mechanismType,
-        weight = params.budgetWeight, name = s"sum_${c.name}")
-    }
-    val selectionHandle =
-      if (publicPartitions.isEmpty)
-        Some(accountant.requestBudget(MechanismType.PartitionSelection,
-          weight = params.budgetWeight, name = "PartitionSelection"))
-      else None
-
-    new DPResult(() => {
-      val noise = engine.noise
-      val pkNames = columns.partitionKeys.map(_._1)
-      val pkCols = pkNames.map(col)
-      // fail loud on NULL values — the DPEngine.assemble noNull contract:
-      // Spark's least/greatest SKIP nulls, so an unguarded NULL would
-      // silently clip to the LOWER BOUND and enter the released sum (and
-      // the count) as if the unit had reported minValue
-      val valAliases = columns.values.map { case (n, c) =>
-        when(c.isNull, raise_error(lit(
-          s"MultiValueSum: NULL value in column '$n' — nulls have no " +
-            "clipping semantics and would release the clip bound as data; " +
-            "filter or impute upstream")).cast("double"))
-          .otherwise(c.cast("double")).as(s"__mv_$n")
-      }
-
-      var cur = df.select(
-        (columns.privacyUnit.as(PidCol) +:
-          columns.partitionKeys.map { case (n, c) => c.as(n) }) ++ valAliases: _*)
-      publicPartitions.foreach { pub => cur = cur.join(pub, pkNames, "left_semi") }
-
-      // per-(pid, pk): sum each column, clip to its per-partition bounds.
-      // (No CntCol here — the pid count is re-derived downstream; carrying
-      // a dead accumulator through the shuffle and L0 window costs for
-      // nothing.)
-      val sumAggs = params.columnBounds.map { c =>
-        least(greatest(sum(col(s"__mv_${c.name}")), lit(c.minSumPerPartition)),
-          lit(c.maxSumPerPartition)).as(s"__mv_${c.name}")
-      }
-      val perPidPk = cur
-        .groupBy((col(PidCol) +: pkCols): _*)
-        .agg(sumAggs.head, sumAggs.tail: _*)
-
-      // L0 bounding: keep <= maxPartitionsContributed partitions per unit
-      val bounded = sampleRowsPerKey(perPidPk, Seq(PidCol),
-        params.maxPartitionsContributed, engine.l0ShardingFactor)
-
-      var agg = bounded
-        .groupBy(pkCols: _*)
-        .agg(count(lit(1)).as(PidCntCol),
-          params.columnBounds.map(c =>
-            sum(col(s"__mv_${c.name}")).as(s"__mv_${c.name}")): _*)
-
-      publicPartitions.foreach { pub =>
-        agg = pub.select(pkNames.map(col): _*).distinct()
-          .join(agg, pkNames, "left_outer").select(
-          pkCols ++ (coalesce(col(PidCntCol), lit(0L)).as(PidCntCol) +:
-            params.columnBounds.map(c =>
-              coalesce(col(s"__mv_${c.name}"), lit(0.0)).as(s"__mv_${c.name}"))): _*)
-      }
-
-      selectionHandle.foreach { h =>
-        val spec = h.spec
-        val sel = PartitionSelection.create(params.partitionSelectionStrategy,
-          spec.epsilon, spec.delta, params.maxPartitionsContributed, params.preThreshold)
-        val keepUdf = udf((n: Long) => sel.shouldKeep(n, noise)).asNondeterministic()
-        agg = agg.filter(keepUdf(col(PidCntCol)))
-      }
-
-      val noisedCols = params.columnBounds.zip(handles).map { case (c, h) =>
-        val linf = math.max(math.abs(c.minSumPerPartition), math.abs(c.maxSumPerPartition))
-        val sens = Sensitivities(l0 = Some(params.maxPartitionsContributed), linf = Some(linf))
-        val mech = Mechanisms.createAdditive(h.spec, sens)
-        val noiseUdf = udf((v: Double) => mech.addNoise(v, noise)).asNondeterministic()
-        noiseUdf(col(s"__mv_${c.name}")).as(s"${c.name}_sum")
-      }
-      agg.select(pkCols ++ noisedCols: _*)
-    })
+    DPEngine.requireKeyNames(columns.partitionKeys.map(_._1),
+      params.columnBounds.map(c => s"${c.name}_sum"))
+    engine.aggregateColumns(df, columns.privacyUnit, columns.partitionKeys,
+      params.columnBounds.zip(columns.values).map { case (c, (n, v)) =>
+        (s"${n}_", Some(v), AggregateParams(metrics = Seq(Metric.Sum),
+          noiseKind = params.noiseKind,
+          maxPartitionsContributed = params.maxPartitionsContributed,
+          minSumPerPartition = Some(c.minSumPerPartition),
+          maxSumPerPartition = Some(c.maxSumPerPartition),
+          budgetWeight = params.budgetWeight,
+          partitionSelectionStrategy = params.partitionSelectionStrategy,
+          preThreshold = params.preThreshold))
+      }, publicPartitions)
   }
 }
 
@@ -205,14 +113,11 @@ final case class MultiValueAggParams(
   * MultiValueDataExtractors composing ARBITRARY per-column combiners, not
   * just sums): every value column runs its own COUNT/SUM/MEAN/VARIANCE set
   * with its own clipping bounds and budget requests, in ONE pass over the
-  * shared (pid, pk) rows. The plan is exactly the single-value DP aggregate
-  * plan (3 shuffles, native accumulators, final-row UDFs) with the
-  * accumulator block widened to one (sum, nsum, nsq) triple per column —
-  * the row count and privacy-id count accumulators are shared, since every
-  * row contributes to every column. */
+  * shared (pid, pk) rows — the DP aggregate with one accumulator set per
+  * column. The row count and privacy-id count accumulators are shared,
+  * since every kept row contributes to every column. Outputs
+  * `<value>_<metric>`. */
 object MultiValueAgg {
-
-  import DPEngine._
 
   def aggregate(
       engine: DPEngine,
@@ -223,122 +128,16 @@ object MultiValueAgg {
   ): DPResult = {
     require(params.columns.map(_.name) == columns.values.map(_._1),
       "params.columns and value columns must align by name")
-    val accountant = engine.accountant
-    accountant.registerAggregation()
-    // one CompoundComputer plan per column — each requests its own budgets
-    val perColParams = params.columns.map { c =>
-      AggregateParams(metrics = c.metrics, noiseKind = params.noiseKind,
-        maxPartitionsContributed = params.maxPartitionsContributed,
-        maxContributionsPerPartition = Some(params.maxContributionsPerPartition),
-        minValue = Some(c.minValue), maxValue = Some(c.maxValue),
-        budgetWeight = params.budgetWeight)
-    }
-    val plans = perColParams.map(p => CompoundComputer.plan(p, accountant))
-    val selectionHandle =
-      if (publicPartitions.isEmpty)
-        Some(accountant.requestBudget(MechanismType.PartitionSelection,
-          weight = params.budgetWeight, name = "PartitionSelection"))
-      else None
-
-    new DPResult(() => {
-      val noise = engine.noise
-      val pkNames = columns.partitionKeys.map(_._1)
-      val pkCols = pkNames.map(col)
-      // fail loud on NULL values — the DPEngine.assemble noNull contract:
-      // Spark's least/greatest SKIP nulls, so an unguarded NULL would
-      // silently clip to the LOWER BOUND and enter the released sum (and
-      // the count) as if the unit had reported minValue
-      val valAliases = columns.values.map { case (n, c) =>
-        when(c.isNull, raise_error(lit(
-          s"MultiValueAgg: NULL value in column '$n' — nulls have no " +
-            "clipping semantics and would release the clip bound as data; " +
-            "filter or impute upstream")).cast("double"))
-          .otherwise(c.cast("double")).as(s"__mv_$n")
-      }
-
-      var cur = df.select(
-        (columns.privacyUnit.as(PidCol) +:
-          columns.partitionKeys.map { case (n, c) => c.as(n) }) ++ valAliases: _*)
-      publicPartitions.foreach { pub => cur = cur.join(pub, pkNames, "left_semi") }
-
-      // Linf bounding: one shared sample (each kept row feeds every column)
-      cur = sampleRowsPerKey(cur, PidCol +: pkNames,
-        params.maxContributionsPerPartition, engine.l0ShardingFactor)
-
-      // per-(pid, pk): shared count + per-column (sum, nsum, nsq) accumulators
-      val accs = params.columns.zip(perColParams).flatMap { case (c, p) =>
-        val clip = least(greatest(col(s"__mv_${c.name}"), lit(c.minValue)), lit(c.maxValue))
-        val mid = lit(p.rangeMiddle)
-        Seq(
-          sum(clip).as(s"__mv_${c.name}_sum"),
-          sum(clip - mid).as(s"__mv_${c.name}_nsum"),
-          sum((clip - mid) * (clip - mid)).as(s"__mv_${c.name}_nsq"))
-      }
-      val perPidPk = cur
-        .groupBy((col(PidCol) +: pkCols): _*)
-        .agg(count(lit(1)).as(CntCol), accs: _*)
-
-      // L0 bounding, then merge per pk (map-side combine free)
-      val bounded = sampleRowsPerKey(perPidPk, Seq(PidCol),
-        params.maxPartitionsContributed, engine.l0ShardingFactor)
-      var agg = bounded
-        .groupBy(pkCols: _*)
-        .agg(sum(col(CntCol)).as(CntCol),
-          params.columns.flatMap(c => Seq(
-            sum(col(s"__mv_${c.name}_sum")).as(s"__mv_${c.name}_sum"),
-            sum(col(s"__mv_${c.name}_nsum")).as(s"__mv_${c.name}_nsum"),
-            sum(col(s"__mv_${c.name}_nsq")).as(s"__mv_${c.name}_nsq"))) :+
-            count(lit(1)).as(PidCntCol): _*)
-
-      publicPartitions.foreach { pub =>
-        agg = pub.select(pkNames.map(col): _*).distinct()
-          .join(agg, pkNames, "left_outer").select(
-          pkCols ++ (Seq(
-            coalesce(col(CntCol), lit(0L)).as(CntCol),
-            coalesce(col(PidCntCol), lit(0L)).as(PidCntCol)) ++
-            params.columns.flatMap(c => Seq(s"__mv_${c.name}_sum",
-              s"__mv_${c.name}_nsum", s"__mv_${c.name}_nsq")
-              .map(n => coalesce(col(n), lit(0.0)).as(n)))): _*)
-      }
-
-      selectionHandle.foreach { h =>
-        val spec = h.spec
-        val sel = PartitionSelection.create(params.partitionSelectionStrategy,
-          spec.epsilon, spec.delta, params.maxPartitionsContributed, params.preThreshold)
-        val keepUdf = udf((n: Long) => sel.shouldKeep(n, noise)).asNondeterministic()
-        agg = agg.filter(keepUdf(col(PidCntCol)))
-      }
-
-      // per-column metric vectors — one nondeterministic UDF per column,
-      // materialized as a named array column BEFORE item extraction so a
-      // logical noise draw is never split across re-evaluations (the same
-      // discipline as the single-value engine's stage 10)
-      val computers = plans.map(_.build(noise))
-      params.columns.zip(computers).foreach { case (c, comp) =>
-        val mUdf = udf((cnt: Long, s: Double, ns: Double, nsq: Double, pc: Long) =>
-          comp.compute(cnt, s, ns, nsq, pc)).asNondeterministic()
-        agg = agg.withColumn(s"__mv_${c.name}_metrics",
-          mUdf(col(CntCol), col(s"__mv_${c.name}_sum"),
-            col(s"__mv_${c.name}_nsum"), col(s"__mv_${c.name}_nsq"), col(PidCntCol)))
-      }
-      val metricCols = params.columns.zip(computers).flatMap { case (c, comp) =>
-        comp.names.zipWithIndex.map { case (n, i) =>
-          col(s"__mv_${c.name}_metrics").getItem(i).as(s"${c.name}_$n")
-        }
-      }
-      // the DPEngine.assemble collision contract, checked against the
-      // ACTUAL emitted names (known only once the computers are built)
-      locally {
-        val outs = params.columns.zip(computers).flatMap { case (c, comp) =>
-          comp.names.map(n => s"${c.name}_$n") }
-        val badPk = pkNames.filter(n =>
-          outs.contains(n) || n.startsWith("__graft_") || n.startsWith("__mv_"))
-        require(badPk.isEmpty,
-          s"partition key name(s) ${badPk.mkString(", ")} collide with the " +
-            s"output metric columns (${outs.mkString(", ")}) or the engine's " +
-            "reserved namespaces; rename the key columns")
-      }
-      agg.select(pkCols ++ metricCols: _*)
-    })
+    engine.aggregateColumns(df, columns.privacyUnit, columns.partitionKeys,
+      params.columns.zip(columns.values).map { case (c, (n, v)) =>
+        (s"${n}_", Some(v), AggregateParams(metrics = c.metrics,
+          noiseKind = params.noiseKind,
+          maxPartitionsContributed = params.maxPartitionsContributed,
+          maxContributionsPerPartition = Some(params.maxContributionsPerPartition),
+          minValue = Some(c.minValue), maxValue = Some(c.maxValue),
+          budgetWeight = params.budgetWeight,
+          partitionSelectionStrategy = params.partitionSelectionStrategy,
+          preThreshold = params.preThreshold))
+      }, publicPartitions)
   }
 }

@@ -546,68 +546,56 @@ class DPEngineSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("sharded per-key sampling selects the EXACT same rows as one window") {
-    // the two-stage (key, shard)->key selection must be bit-identical to the
-    // single global window for the same rand draw: the n globally-smallest
-    // rand values are always inside the union of per-shard n-smallest. Pin
-    // the draw by injecting a deterministic pseudo-random column.
-    val rnd = new scala.util.Random(23)
-    val rows = for (k <- 1 to 7; i <- 1 to 50 * k) yield (s"k$k", i.toLong, rnd.nextDouble())
-    val df = rows.toDF("key", "id", "r").repartition(8)
-    def pick(shards: Int) =
-      DPEngine.sampleRowsPerKey(df, Seq("key"), n = 5, shards = shards, rnd = col("r"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val single = pick(1)
-    assert(single.size == 7 * 5)
-    assert(pick(4) == single)
-    assert(pick(32) == single) // more shards than rows-per-(key,shard) bucket
-  }
-
-  test("l0ShardingFactor engine produces the same zero-noise result end-to-end") {
-    // with non-binding bounds nothing is sampled away, so the sharded plan
-    // must produce the identical exact output while exercising the
-    // two-window path through the full aggregate
-    def run(shards: Int) = {
-      val engine = new DPEngine(new NaiveBudgetAccountant(1e5, 0.99),
-        NoiseSource.Zero, l0ShardingFactor = shards)
-      val res = engine.aggregate(fixture,
-        AggregateParams(metrics = Seq(Metric.Count, Metric.Sum),
-          maxPartitionsContributed = 2, maxContributionsPerPartition = Some(10),
-          minValue = Some(0.0), maxValue = Some(10.0)),
-        DPColumns("pid", "pk", "v"))
-      engine.accountant.computeBudgets()
-      res.dataframe.collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSet
+  test("partial WindowGroupLimit caps rows per key below each bounding exchange") {
+    // the skew guarantee is a PLAN property: one unit's 20k-row cell (and
+    // its fan-out) must never ship whole to one task. Spark plants a
+    // Partial WindowGroupLimit before each bounding window's exchange, so
+    // each map task sends at most c rows per (unit, partition) and l0 per
+    // unit. A refactor that loses it (e.g. a window that is no longer a
+    // rank-limit filter) passes every value test — catch it here.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
+    import org.apache.spark.sql.functions.lit
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
     }
-    val unsharded = run(1)
-    assert(unsharded.nonEmpty)
-    assert(run(8) == unsharded)
-  }
-
-  test("sharded bounding runs two-stage windows in the physical plan") {
-    // the scale guarantee is a PLAN property: with sharding on, every
-    // bounding sample ranks within (key, shard) first, so the executed plan
-    // must carry strictly more Window nodes than the single-window form —
-    // if a refactor silently collapses the two stages back into one global
-    // window, the hot-cell single-task sort returns without failing any
-    // value-equality test. Catch it here.
-    def windowCount(shards: Int): Int = {
-      val engine = new DPEngine(new NaiveBudgetAccountant(1e5, 0.99),
-        NoiseSource.Zero, l0ShardingFactor = shards)
-      val res = engine.aggregate(fixture,
-        AggregateParams(metrics = Seq(Metric.Count, Metric.Sum),
-          maxPartitionsContributed = 2, maxContributionsPerPartition = Some(10),
-          minValue = Some(0.0), maxValue = Some(10.0)),
-        DPColumns("pid", "pk", "v"))
-      engine.accountant.computeBudgets()
-      "Window".r.findAllIn(
-        res.dataframe.queryExecution.executedPlan.toString).length
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+    // nodes between p (exclusive) and the next exchange below it
+    def toExchange(p: SparkPlan): (Seq[SparkPlan], Option[ShuffleExchangeExec]) =
+      kids(p) match {
+        case Seq(e: ShuffleExchangeExec) => (Nil, Some(e))
+        case Seq(c) => val (ns, e) = toExchange(c); (c +: ns, e)
+        case _ => (Nil, None)
+      }
+    val hot = spark.range(20000)
+      .select(lit("hot").as("pid"), lit("pk1").as("pk"), lit(1.0).as("v"))
+      .unionByName(fixture)
+    val engine = zeroEngine()
+    val res = engine.aggregate(hot,
+      AggregateParams(metrics = Seq(Metric.Count, Metric.Sum),
+        maxPartitionsContributed = 2, maxContributionsPerPartition = Some(10),
+        minValue = Some(0.0), maxValue = Some(10.0)), roles)
+    engine.accountant.computeBudgets()
+    val out = res.dataframe
+    assert(out.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap ==
+      Map("pk1" -> 15.0, "pk2" -> 3.0)) // hot cell capped at c = 10
+    val plan = out.queryExecution.executedPlan
+    val windows = all(plan).collect { case w: WindowExec => w }
+    assert(windows.size == 2, s"expected the Linf and L0 windows:\n$plan")
+    windows.foreach { w =>
+      val exchange = toExchange(w)._2
+      assert(exchange.isDefined, s"no exchange below ${w.simpleString(200)}:\n$plan")
+      val mapSide = toExchange(exchange.get)._1
+      assert(mapSide.exists {
+        case g: WindowGroupLimitExec => g.mode == Partial
+        case _ => false
+      }, s"no Partial WindowGroupLimit below the exchange of " +
+        s"${w.simpleString(200)}:\n$plan")
     }
-    val single = windowCount(1)
-    val sharded = windowCount(8)
-    assert(sharded >= single + 2,
-      s"expected the sharded plan to add a per-(key, shard) window per " +
-        s"bounding stage, got $single windows unsharded vs $sharded sharded")
   }
 
   test("reading dataframe before computeBudgets throws") {

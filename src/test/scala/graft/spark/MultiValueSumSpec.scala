@@ -154,7 +154,7 @@ class DataflowSpec extends AnyFunSuite {
   test("sharded filter_by_key equals plain semi-join") {
     val df = (1 to 500).map(i => (i.toLong % 37, i.toLong)).toDF("k", "v")
     val keys = Seq(1L, 5L, 9L, 36L).toDF("k")
-    val got = Dataflow.filterByKeySharded(df, keys, Seq("k"), shards = 4)
+    val got = Dataflow.filterByKeySharded(df, keys, Seq("k"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = df.join(keys, Seq("k"), "left_semi")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
