@@ -146,9 +146,6 @@ object Dedup {
     out
   })
 
-  /** Profiling access to the shingle UDF (dev tooling only). */
-  private[graft] def wordShinglesForProfile(n: Int) = wordShinglesUdf(n)
-
   // ---------------- portable minhash (oracle-verifiable twin) ----------------
 
   /** Prime modulus for the portable linear-congruential permutations. */
@@ -242,7 +239,7 @@ object Dedup {
       // broadcast: every join against it is pinned shuffle_hash. Without
       // the hint AQE's runtime size estimate can elect to broadcast the
       // filtered stats side, and at the 100x rung that build OOMs the
-      // driver (measured: LadderEr capped run, 24M banded rows).
+      // driver (measured: capped 100x linkage run, 24M banded rows).
       val stats = banded.groupBy("band", "bucket")
         .agg(count(lit(1)).as("__bn"), min("id").as("__rep"))
       val small = stats.filter(col("__bn") <= maxBucket)

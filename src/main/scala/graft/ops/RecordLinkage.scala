@@ -395,7 +395,7 @@ object RecordLinkage {
     // the fields frames are CORPUS-SIZED — pin their joins shuffle_hash
     // (the lshTopK convention): without the hint AQE can elect to
     // broadcast one at the threshold boundary, and at the 100x rung that
-    // build OOMs the driver (measured, LadderEr)
+    // build OOMs the driver (measured on the 100x linkage run)
     val fa = proj.select(col("__er_id").as("id_a") +:
       fldNames.map(n => col(n).as(s"${n}_a")): _*)
     val fb = proj.select(col("__er_id").as("id_b") +:

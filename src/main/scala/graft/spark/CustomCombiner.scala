@@ -80,40 +80,36 @@ object CustomAggregation {
   /** Runs a [[CustomCombiner]] through the engine's bounded-aggregate core
     * ([[DPEngine.boundedAggregate]]): Linf/L0 sampling, the combiner's
     * per-unit accumulators and merge, DP partition selection, then the
-    * combiner's metric columns. Public partitions are dropped via semi-join
-    * (missing keys are not added — custom accumulators have no generic
-    * empty value). */
+    * combiner's metric columns. Partitions are always selected privately:
+    * custom accumulators have no generic empty value, so public partitions
+    * without data could not be released, and releasing only the non-empty
+    * ones would reveal which public keys are empty. */
   def aggregate(
       engine: DPEngine,
       df: DataFrame,
       params: CustomAggParams,
       columns: DPColumns,
-      combiner: CustomCombiner,
-      publicPartitions: Option[DataFrame] = None
+      combiner: CustomCombiner
   ): DPResult = {
     requireKeyNames(columns.partitionKeys.map(_._1), combiner.metricNames)
     val accountant = engine.accountant
     accountant.registerAggregation()
     combiner.requestBudget(accountant)
-    val selectionHandle =
-      if (publicPartitions.isEmpty)
-        Some(accountant.requestBudget(MechanismType.PartitionSelection,
-          weight = params.budgetWeight, name = s"${combiner.name}:PartitionSelection"))
-      else None
+    val selectionHandle = accountant.requestBudget(MechanismType.PartitionSelection,
+      weight = params.budgetWeight, name = s"${combiner.name}:PartitionSelection")
 
     new DPResult(() => {
       val perUnit = combiner.createAccumulators(col(valueCol(0)))
       val names = perUnit.indices.map(i => s"__graft_cc$i")
       val merged = combiner.mergeAccumulators(names.map(col))
-      val selector = selectionHandle.map { h =>
-        PartitionSelection.create(params.partitionSelectionStrategy, h.spec.epsilon,
-          h.spec.delta, params.maxPartitionsContributed, params.preThreshold)
-      }
+      val sel = selectionHandle.spec
+      val selector = PartitionSelection.create(params.partitionSelectionStrategy,
+        sel.epsilon, sel.delta, params.maxPartitionsContributed, params.preThreshold)
       val agg = boundedAggregate(df, columns.privacyUnit, columns.partitionKeys,
         Seq("value" -> columns.value.fold(lit(1.0))(_.cast("double"))),
         Bounds(params.maxContributionsPerPartition, Some(params.maxPartitionsContributed)),
         names.indices.map(i => Acc(names(i), perUnit(i), merged(i), None)),
-        publicPartitions, selector, engine.noise)
+        None, Some(selector), engine.noise)
       val metrics = combiner.computeMetrics(names.map(col), engine.noise)
       require(metrics.length == combiner.metricNames.length,
         "computeMetrics must return one column per metric name")
@@ -122,10 +118,8 @@ object CustomAggregation {
     }, () => {
       val lines = Seq.newBuilder[String]
       lines += s"Custom DP aggregation: ${combiner.name}"
-      selectionHandle.foreach { h =>
-        val s = h.spec
-        lines += f"- Partition selection: ${params.partitionSelectionStrategy} eps=${s.epsilon}%.4g delta=${s.delta}%.4g"
-      }
+      val s = selectionHandle.spec
+      lines += f"- Partition selection: ${params.partitionSelectionStrategy} eps=${s.epsilon}%.4g delta=${s.delta}%.4g"
       lines += s"- ${combiner.explainBudget}"
       lines.result().mkString("\n")
     })

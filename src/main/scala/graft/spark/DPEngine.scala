@@ -580,6 +580,7 @@ object DPEngine {
   private[spark] val RnCol = "__graft_rn"
   private[spark] val MetricsCol = "__graft_metrics"
   private[spark] val TreeCol = "__graft_qtree"
+  private[spark] val QuantilesCol = "__graft_quantiles"
   private[spark] val VecCol = "__graft_vec"
 
   /** The core's projected name of its `i`-th value column. */
@@ -832,9 +833,9 @@ object DPEngine {
         comp.names.zipWithIndex.map { case (n, j) => col(MetricsCol + i).getItem(j).as(c.prefix + n) }
       }
       val quantileCols = quantile.toSeq.flatMap { q =>
-        val qArr = udf((bytes: Array[Byte]) => q.compute(bytes, noise))
-          .asNondeterministic()(col(TreeCol + i))
-        q.names.zipWithIndex.map { case (n, j) => qArr.getItem(j).as(c.prefix + n) }
+        val qUdf = udf((bytes: Array[Byte]) => q.compute(bytes, noise)).asNondeterministic()
+        agg = agg.withColumn(QuantilesCol + i, qUdf(col(TreeCol + i)))
+        q.names.zipWithIndex.map { case (n, j) => col(QuantilesCol + i).getItem(j).as(c.prefix + n) }
       }
       val vectorCols = vector.toSeq.map { vn =>
         udf((vec: Array[Double]) => vn.addNoise(

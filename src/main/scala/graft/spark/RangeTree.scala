@@ -1112,7 +1112,7 @@ object RangeTree {
     * must fit comfortably on the driver, fail-loud enforced. */
   private[graft] val MaxDriverRows = 2000000L
 
-  /** Default shard-release concurrency for [[shardedByKeyRange]]: enough
+  /** Shard-release concurrency of [[shardedByKeyRange]]: enough
     * threads to hide per-shard job-scheduling + parquet-commit latency
     * (the serial loop's fleet-scale bottleneck), small enough that the
     * combined in-flight literal frames stay a driver footnote (the
@@ -1176,8 +1176,7 @@ object RangeTree {
       publicKeys: Option[DataFrame] = None,
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0,
-      maxKeysPerShard: Long = 0L,
-      concurrency: Int = ShardConcurrency
+      maxKeysPerShard: Long = 0L
   ): DataFrame = {
     require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
       s"bins must be a power of two in [2, 4096], got $bins")
@@ -1187,7 +1186,7 @@ object RangeTree {
     val scale = treeScale(noiseKind, epsilon, delta, maxPerUnit.toDouble,
       levels)
     shardedByKeyRange(store, keyCols, publicKeys, 2L * bins - 1,
-      maxKeysPerShard, outDir, concurrency) { (slice, shardKeys) =>
+      maxKeysPerShard, outDir) { (slice, shardKeys) =>
       releaseWithScale(slice, keyCols, bins, levels, scale, noise,
         noiseKind, publicKeys = Some(shardKeys))
     }
@@ -1222,10 +1221,10 @@ object RangeTree {
   /** The sharding orchestrator shared by the range-tree and continual
     * families: splits the key universe into deterministic key-RANGE
     * shards of at most min(`maxKeysPerShard`, MaxDriverRows / `nNodes`
-    * / `concurrency`) keys, partitions `store` by shard in ONE
+    * / [[ShardConcurrency]]) keys, partitions `store` by shard in ONE
     * distributed pass (written under `outDir/_store` — "_"-prefixed, so
     * the read-back never sees it), then releases shards CONCURRENTLY
-    * (`concurrency` bounded driver threads, r16 — shards are independent
+    * ([[ShardConcurrency]] bounded driver threads, r16 — shards are independent
     * by construction: disjoint key ranges, each its own literal noise
     * frame; at true fleet cardinality the serial loop's per-shard Spark
     * job-scheduling latency dominated) via `releaseShard(slice,
@@ -1243,7 +1242,7 @@ object RangeTree {
     * external consumers reading `outDir` from storage MUST check the
     * marker — its absence means a partial, unaccounted release. Nothing data-shaped ever collects: the universe is ranked
     * DISTRIBUTED (sort + zipWithIndex — indices follow the sort's range
-    * partitioning), and at most `concurrency` shards' keys + literal
+    * partitioning), and at most [[ShardConcurrency]] shards' keys + literal
     * frames (<= MaxDriverRows rows TOTAL — the per-shard cap divides by
     * the thread count, so concurrency never widens the driver footprint)
     * sit on the driver at a time. Draw-once survives concurrency: draws
@@ -1257,8 +1256,7 @@ object RangeTree {
       publicKeys: Option[DataFrame],
       nNodes: Long,
       maxKeysPerShard: Long,
-      outDir: String,
-      concurrency: Int = ShardConcurrency
+      outDir: String
   )(releaseShard: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(keyCols.nonEmpty,
       "sharded release needs keyCols — an unkeyed tree is one bounded " +
@@ -1267,14 +1265,13 @@ object RangeTree {
     // both consume it, and the callers hand in the RAW ingest plan — an
     // unpinned store would run the bounded-cap window twice (r15
     // self-review)
-    require(concurrency >= 1, s"concurrency must be >= 1, got $concurrency")
     val store = store0.localCheckpoint(false)
     val spark0 = store.sparkSession
     val keyCs = keyCols.map(col)
     // the driver-footprint invariant: concurrency shards in flight x cap
     // keys x nNodes rows each <= MaxDriverRows TOTAL, same bound as the
     // serial loop — concurrency narrows shards, it never widens the heap
-    val cap0 = math.max(1L, MaxDriverRows / nNodes / concurrency)
+    val cap0 = math.max(1L, MaxDriverRows / nNodes / ShardConcurrency)
     val cap = if (maxKeysPerShard > 0) math.min(maxKeysPerShard, cap0) else cap0
     // the shard universe: the PUBLIC key set (cast to the store's key
     // types — the releaseWithScale coercion contract) or the observed one
@@ -1332,7 +1329,7 @@ object RangeTree {
       releaseShard(slice, shardKeys).write.mode("overwrite")
         .parquet(s"$outDir/shard=$sh")
     }
-    val conc = math.min(concurrency, shardIds.length)
+    val conc = math.min(ShardConcurrency, shardIds.length)
     if (conc <= 1) shardIds.foreach(releaseOne)
     else {
       // bounded concurrent submission: shards are independent Spark jobs

@@ -2,19 +2,171 @@ package graft.tools
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 
-/** Dev utility (r19 optimization round): per-JOB wall-clock attribution for
-  * any named SparkEntry query. A query's bench seconds are the sum of every
-  * Spark job its construction + one action launch (guard counts, bounded
-  * collects, checkpoint materializations, the final toRdd count) plus pure
-  * driver time (planning, literal-frame noise draws) — this tool makes that
-  * split visible so optimization targets the right layer.
+/** Dev utility: where one driver query's time and work go, for any named
+  * `SparkEntry` query. The benchmark (perfbench) profiles a fixed workload;
+  * this profiles whatever query is named.
+  *
+  * Each query is called twice in the given session: once to warm codegen,
+  * then once profiled. The profiled call is split into CONSTRUCTION (the
+  * entry function: parquet footer reads and any eager driver work such as
+  * guard collects and eager pins), the Catalyst phases of the final frame
+  * (`QueryPlanningTracker`) and the ACTION (`toRdd.count`, the bench's
+  * action). Every Spark job is attributed to the phase that submitted it,
+  * with its stages, tasks, executor CPU, input and shuffle records and
+  * spill. Shuffle and input record counts are deterministic for a
+  * deterministic plan, so they attribute a change where wall clock cannot.
+  * With a plan directory, the formatted physical plan of each query is
+  * written to `<dir>/<query>.txt` (the plan-audit artifact).
   *
   * Usage: sbt "runMain graft.tools.ProfileQuery <query> [query...]"
-  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as the bench). Not part of the
-  * driver contract.
+  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as the bench;
+  * SPARK_GRAFT_EXPLAIN_OUT=<dir> writes the plans). Not part of the driver
+  * contract.
   */
 object ProfileQuery {
+
+  /** One Spark job of a profiled call. `phase` is "construct" or "act". */
+  final case class Job(
+      id: Int,
+      phase: String,
+      seconds: Double,
+      stages: Int,
+      tasks: Int,
+      executorCpuS: Double,
+      inputRecords: Long,
+      shuffleRecordsWritten: Long,
+      shuffleRecordsRead: Long,
+      spillBytes: Long,
+      description: String)
+
+  final case class QueryProfile(
+      query: String,
+      constructS: Double,
+      /** Catalyst phase name -> seconds, in the order the phases ran. */
+      catalystS: Seq[(String, Double)],
+      actS: Double,
+      jobs: Seq[Job],
+      /** RDDs the call left persisted (released after they are counted). */
+      pins: Int,
+      planFile: Option[String]) {
+    def jobsIn(phase: String): Seq[Job] = jobs.filter(_.phase == phase)
+  }
+
+  private val PhaseKey = "graft.profile.phase"
+  private val Drain = "drain"
+
+  /** Attributes jobs, by the phase local property Spark copies into every
+    * job the thread (or a thread it starts) submits; untagged jobs are
+    * ignored. */
+  private final class JobListener extends SparkListener {
+    private final class Rec(val id: Int, val phase: String, val start: Long,
+        val description: String) {
+      var end = start
+      var stages, tasks = 0
+      var cpuNs, input, shufW, shufR, spill = 0L
+    }
+    private val jobs = mutable.LinkedHashMap.empty[Int, Rec]
+    private val stageJob = mutable.Map.empty[Int, Int]
+    private var drained = false
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(PhaseKey))).foreach { ph =>
+        val desc = Option(e.properties.getProperty("spark.job.description"))
+          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)).getOrElse("")
+        jobs(e.jobId) = new Rec(e.jobId, ph, e.time, desc)
+        e.stageIds.foreach(stageJob(_) = e.jobId)
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach { j =>
+        j.end = e.time
+        if (j.phase == Drain) { drained = true; notifyAll() }
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      stageJob.get(e.stageInfo.stageId).flatMap(jobs.get).foreach { j =>
+        j.stages += 1
+        j.tasks += e.stageInfo.numTasks
+        Option(e.stageInfo.taskMetrics).foreach { m =>
+          j.cpuNs += m.executorCpuTime
+          j.input += m.inputMetrics.recordsRead
+          j.shufW += m.shuffleWriteMetrics.recordsWritten
+          j.shufR += m.shuffleReadMetrics.recordsRead
+          j.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        }
+      }
+    }
+
+    /** Blocks until the bus has delivered the drain job's end — events
+      * reach a listener in order, so every earlier job's are in — then
+      * returns and forgets the recorded jobs. */
+    def take(): Seq[Job] = synchronized {
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!drained && System.currentTimeMillis() < deadline) wait(100L)
+      require(drained, "ProfileQuery: the listener bus did not deliver the drain job")
+      val out = jobs.values.filter(_.phase != Drain).map { j =>
+        Job(j.id, j.phase, (j.end - j.start) / 1e3, j.stages, j.tasks, j.cpuNs / 1e9,
+          j.input, j.shufW, j.shufR, j.spill, j.description)
+      }.toList
+      jobs.clear()
+      stageJob.clear()
+      drained = false
+      out
+    }
+  }
+
+  /** Profiles each named query in `spark` over the tables in `dataDir`;
+    * with `planDir`, also writes each query's formatted physical plan there.
+    * Leaves the session running and releases only the pins the calls made. */
+  def profile(spark: SparkSession, dataDir: String, queries: Seq[String],
+      planDir: Option[String]): Seq[QueryProfile] = {
+    val sc = spark.sparkContext
+    val listener = new JobListener
+    sc.addSparkListener(listener)
+    planDir.foreach(d => new java.io.File(d).mkdirs())
+    def releasePins(before: collection.Set[Int]): Int = {
+      val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      added.values.foreach(_.unpersist(blocking = true))
+      added.size
+    }
+    try queries.map { name =>
+      val fn = graft.SparkEntry.queries(name)
+      val warmPins = sc.getPersistentRDDs.keySet
+      fn(spark, dataDir).queryExecution.toRdd.count()
+      releasePins(warmPins)
+
+      val pinsBefore = sc.getPersistentRDDs.keySet
+      try {
+        sc.setLocalProperty(PhaseKey, "construct")
+        val t0 = System.nanoTime()
+        val qe = fn(spark, dataDir).queryExecution
+        val t1 = System.nanoTime()
+        sc.setLocalProperty(PhaseKey, "act")
+        qe.toRdd.count()
+        val t2 = System.nanoTime()
+        sc.setLocalProperty(PhaseKey, Drain)
+        sc.parallelize(Seq(0), 1).count()
+        sc.setLocalProperty(PhaseKey, null)
+        val jobs = listener.take()
+        val catalyst = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
+          .map { case (p, s) => p -> s.durationMs / 1e3 }
+        val planFile = planDir.map { d =>
+          val f = new java.io.File(d, s"$name.txt")
+          val pw = new java.io.PrintWriter(f, "UTF-8")
+          try pw.println(qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+          finally pw.close()
+          f.getPath
+        }
+        QueryProfile(name, (t1 - t0) / 1e9, catalyst, (t2 - t1) / 1e9, jobs,
+          releasePins(pinsBefore), planFile)
+      } finally sc.setLocalProperty(PhaseKey, null)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -30,74 +182,25 @@ object ProfileQuery {
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => () }
 
-    final case class JobRec(id: Int, start: Long, var end: Long = -1L,
-      var stages: Int = 0, var tasks: Int = 0, desc: String)
-    val jobs = new scala.collection.mutable.ArrayBuffer[JobRec]
-    // load-robust per-rep totals: shuffle RECORD counts are deterministic
-    // for a deterministic plan (the A/B metric wall-clock can't be on a
-    // shared machine), executor CPU time is load-robust-ish
-    final case class Totals(var cpuNs: Long = 0L, var runMs: Long = 0L,
-      var shufR: Long = 0L, var shufW: Long = 0L, var inRec: Long = 0L,
-      var sortSpill: Long = 0L)
-    val tot = Totals()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          jobs += JobRec(e.jobId, e.time,
-            desc = Option(e.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse(""))
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized {
-          jobs.find(_.id == e.jobId).foreach(_.end = e.time)
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        jobs.synchronized {
-          jobs.lastOption.foreach { j =>
-            j.stages += 1
-            j.tasks += e.stageInfo.numTasks
-          }
-          val m = e.stageInfo.taskMetrics
-          if (m != null) {
-            tot.cpuNs += m.executorCpuTime
-            tot.runMs += m.executorRunTime
-            tot.shufR += m.shuffleReadMetrics.recordsRead
-            tot.shufW += m.shuffleWriteMetrics.recordsWritten
-            tot.inRec += m.inputMetrics.recordsRead
-            tot.sortSpill += m.memoryBytesSpilled
-          }
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    args.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      // rep 0 warms, reps 1-2 measure (the bench's median-of-3 shape)
-      (0 to 2).foreach { rep =>
-        jobs.synchronized(jobs.clear())
-        jobs.synchronized { tot.cpuNs = 0; tot.runMs = 0; tot.shufR = 0
-          tot.shufW = 0; tot.inRec = 0; tot.sortSpill = 0 }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        fn(spark, dir).queryExecution.toRdd.count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let the listener bus drain job-end events
-        val js = jobs.synchronized(jobs.toList)
-        val jobSum = js.filter(_.end > 0).map(j => (j.end - j.start) / 1e3).sum
-        println(f"===== $name rep$rep wall $wall%.2fs, ${js.size} jobs " +
-          f"summing $jobSum%.2fs (gap = driver/planning " +
-          f"${wall - jobSum}%.2fs) =====")
-        println(f"      cpu ${tot.cpuNs / 1e9}%.2fs run ${tot.runMs / 1e3}%.2fs " +
-          f"shufR ${tot.shufR} shufW ${tot.shufW} input ${tot.inRec} " +
-          f"spill ${tot.sortSpill}")
-        if (rep == 2) js.foreach { j =>
-          val dt = if (j.end > 0) (j.end - j.start) / 1e3 else -1.0
-          println(f"  job ${j.id}%3d ${dt}%6.2fs stages=${j.stages}%2d " +
-            f"tasks=${j.tasks}%4d ${j.desc.take(80)}")
-        }
+    profile(spark, dir, args.toSeq, sys.env.get("SPARK_GRAFT_EXPLAIN_OUT")).foreach { p =>
+      def line(label: String, js: Seq[Job]): String =
+        f"$label%-9s ${js.size}%3d jobs ${js.map(_.stages).sum}%4d stages " +
+          f"${js.map(_.tasks).sum}%5d tasks cpu ${js.map(_.executorCpuS).sum}%.2fs " +
+          f"input ${js.map(_.inputRecords).sum} shuffle written " +
+          f"${js.map(_.shuffleRecordsWritten).sum} read ${js.map(_.shuffleRecordsRead).sum} " +
+          f"spill ${js.map(_.spillBytes).sum}"
+      println(s"===== ${p.query} =====")
+      println(f"  construct ${p.constructS}%.2fs | " +
+        p.catalystS.map { case (ph, s) => f"$ph $s%.2fs" }.mkString(" ") +
+        f" | act ${p.actS}%.2fs | pins ${p.pins}")
+      println("  " + line("construct", p.jobsIn("construct")))
+      println("  " + line("act", p.jobsIn("act")))
+      println("  " + line("total", p.jobs))
+      p.jobs.foreach { j =>
+        println(f"    job ${j.id}%4d ${j.phase}%-9s ${j.seconds}%6.2fs stages ${j.stages}%2d " +
+          f"tasks ${j.tasks}%4d ${j.description.take(80)}")
       }
+      p.planFile.foreach(f => println(s"  plan: $f"))
     }
     spark.stop()
   }

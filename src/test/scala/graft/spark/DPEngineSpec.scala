@@ -526,6 +526,35 @@ class DPEngineSpec extends AnyFunSuite {
     assert(math.abs(qc.spec.epsilon - 0.5) < 1e-12)
   }
 
+  test("a multi-percentile release draws one quantile tree's noise per partition") {
+    // Percentile(10, 50, 90) share one noisy tree: the release must make the
+    // draws of ONE compute call, not one per output column
+    val rows = (1 to 40).map(i => (s"u$i", "pk1", (i % 10).toDouble))
+    val params = AggregateParams(
+      metrics = Seq(Metric.Percentile(10), Metric.Percentile(50), Metric.Percentile(90)),
+      maxPartitionsContributed = 1, maxContributionsPerPartition = Some(1),
+      minValue = Some(0.0), maxValue = Some(10.0))
+    val noise = new RecordingNoiseStore.RecordingNoise
+    val engine = new DPEngine(new NaiveBudgetAccountant(1.0, 1e-6), noise)
+    val res = engine.aggregate(rows.toDF("pid", "pk", "v"), params, roles,
+      publicPartitions = Some(Seq("pk1").toDF("pk")))
+    engine.accountant.computeBudgets()
+    RecordingNoiseStore.recorded.clear()
+    assert(res.dataframe.collect().length == 1)
+    val released = RecordingNoiseStore.recorded.size
+
+    val acct = new NaiveBudgetAccountant(1.0, 1e-6)
+    val plan = CompoundComputer.plan(params, acct)
+    acct.computeBudgets()
+    val tree = new QuantileTree(0.0, 10.0)
+    rows.foreach(r => tree.add(r._3))
+    RecordingNoiseStore.recorded.clear()
+    plan.buildQuantile().get.compute(tree.serialize(), noise)
+    val oneTree = RecordingNoiseStore.recorded.size
+    assert(oneTree > 0 && released == oneTree,
+      s"release made $released draws, one quantile tree makes $oneTree")
+  }
+
   test("dp aggregate plan shape: at most 3 shuffles, no cartesian products") {
     // scale-regression guard: the audited plan is Linf window (exchange 1) ->
     // (pid, pk) partial agg reusing that exchange -> L0 window (exchange 2)
