@@ -59,27 +59,300 @@ final case class RangeTreeDomain(lo: Double, hi: Double, bins: Int) {
   * enforced), the same bounded-collect class as the PLD math. */
 object RangeTree {
 
-  /** Bounded leaf counts per (unit, key, leaf cell) — the COUNT-tree
-    * family's ingest core, shared by [[rangeTreeIngestStep]],
-    * [[dpRangeCountTreePerKeyDomains]] and the 2-D store (r19
-    * optimization round, guide §2.3/§2.4).
+  // ---------------------------------------------------------------------
+  // THE TREE CORE. A range tree over value bins, a 2-D product tree and
+  // a continual counter over ticks are one mechanism: bounded leaf
+  // contributions roll up into dyadic node sums (the node store), and
+  // one driver-drawn release adds one noise draw per generated node.
+  // Every range-tree and continual entry point (here and in
+  // [[graft.streaming.StreamOps]]) is a thin caller of these parts.
+  // ---------------------------------------------------------------------
+
+  /** One dyadic axis: `bins` leaves (a power of two), node columns
+    * (`lvl`, `idx`) and the leaf column `leaf` the rollup shifts. Node
+    * (l, i) covers leaves [i * 2^l, (i+1) * 2^l). */
+  private[graft] final case class Axis(bins: Int, lvl: String, idx: String,
+      leaf: String) {
+    val levels: Int = 31 - Integer.numberOfLeadingZeros(bins)
+    def nodes: Long = 2L * bins - 1
+  }
+
+  /** A validated axis: `n` must be a power of two in [2, max]. */
+  private[graft] def axis(name: String, n: Int, max: Int = 4096,
+      lvl: String = "__lvl", idx: String = "__idx",
+      leaf: String = "__bin"): Axis = {
+    require(n >= 2 && (n & (n - 1)) == 0 && n <= max,
+      s"$name must be a power of two in [2, $max], got $n")
+    Axis(n, lvl, idx, leaf)
+  }
+
+  /** The 2-D product tree's axes; binsX * binsY <= 65536 keeps one
+    * tree's literal noise frame bounded. */
+  private def productAxes(binsX: Int, binsY: Int): Seq[Axis] = {
+    val axes = Seq(axis("binsX", binsX, lvl = "__lvx", idx = "__idxx",
+      leaf = "__bx"), axis("binsY", binsY, lvl = "__lvy", idx = "__idxy",
+      leaf = "__by"))
+    require(binsX.toLong * binsY <= 65536L,
+      s"binsX * binsY must be <= 65536 (got ${binsX.toLong * binsY}) — " +
+        "one product tree's literal noise frame is (2*binsX-1)*(2*binsY-1) " +
+        "driver rows; coarsen one axis or release two 1-D trees")
+    axes
+  }
+
+  /** A tree entry point's scope: its name (every fail-loud message
+    * carries it), key columns, the validated axes and the public key
+    * frame. Built by [[scope]], which pins the public keys once, so a
+    * nondeterministic key frame (a noisy partition selection) is read
+    * once by both the drop-before-bounding semi-join and the release's
+    * key universe. */
+  private[graft] final case class TreeScope(what: String,
+      keyCols: Seq[String], pub: Option[DataFrame], axes: Seq[Axis]) {
+    def nodes: Long = axes.map(_.nodes).product
+    /** Released nodes one bounded row touches. */
+    def touches: Int = axes.map(_.levels + 1).product
+    def scale(kind: graft.core.NoiseKind, epsilon: Double, delta: Double,
+        unitLinf: Double): Double = {
+      require(epsilon > 0, s"epsilon must be positive, got $epsilon")
+      scaleForTouches(kind, epsilon, delta, unitLinf, touches)
+    }
+    /** NULL keys fail loud: they would silently drop from the release
+      * joins (null never equi-joins). */
+    def keys(df: DataFrame): Seq[Column] = keyCols.map(n =>
+      when(col(n).isNull, raise_error(lit(
+        s"$what: NULL key '$n' — it would silently drop from the release " +
+          "joins; coalesce or filter upstream")).cast(df.schema(n).dataType))
+        .otherwise(col(n)).as(n))
+    /** With public keys, non-public rows drop before bounding, so
+      * nothing they carry can shape the release. */
+    def rows(df: DataFrame): DataFrame = pub.fold(df)(p =>
+      df.join(p, keyCols.map(n => df(n) === p(n)).reduce(_ && _),
+        "left_semi"))
+    /** Axis `i`'s clamped leaf bin of `value` over the public [lo, hi):
+      * values CLAMP into the domain (the clamp is part of the released
+      * statistic; dropping out-of-range rows would make presence-in-range
+      * data-dependent); NULL values fail loud. */
+    def bin(i: Int, value: Column, lo: Double, hi: Double,
+        label: String = "value"): Binned = {
+      require(lo < hi, s"empty $label domain [$lo, $hi)")
+      val v = orFail(value, s"$what: NULL $label for a privacy unit — " +
+        "nulls have no bin; filter or impute upstream")
+      Binned(v, binOf(v, lit(lo), lit((hi - lo) / axes(i).bins), axes(i).bins))
+    }
+  }
+
+  private[graft] def scope(what: String, keyCols: Seq[String],
+      publicKeys: Option[DataFrame], axes: Axis*): TreeScope = {
+    require(publicKeys.isEmpty || keyCols.nonEmpty,
+      "publicKeys given but keyCols is empty — nothing to make public")
+    TreeScope(what, keyCols, publicKeys.map(p => broadcast(
+      p.toDF(keyCols: _*).distinct().localCheckpoint(false))), axes)
+  }
+
+  /** A NULL-checked value column and its leaf bin. */
+  private[graft] final case class Binned(value: Column, bin: Column)
+
+  private def orFail(c: Column, msg: String): Column =
+    when(c.isNull, raise_error(lit(msg)).cast("double"))
+      .otherwise(c.cast("double"))
+
+  private def binOf(v: Column, lo: Column, width: Column, bins: Int): Column =
+    least(greatest(floor((v - lo) / width), lit(0.0)),
+      lit((bins - 1).toDouble)).cast("long")
+
+  /** The dyadic rollup: each leaf row explodes to its levels+1 covering
+    * nodes per axis and `value` sums to `__s` per (nodes..., keys...).
+    * With `store`, the result folds into an earlier node store (the
+    * ingest steps' micro-batch fold). Returns (lvl, idx per axis...,
+    * keys..., __s). */
+  private[graft] def dyadicRollup(leaves: DataFrame, sc: TreeScope,
+      value: String, store: Option[DataFrame] = None): DataFrame = {
+    val nodeCs = sc.axes.flatMap(a => Seq(col(a.lvl), col(a.idx))) ++
+      sc.keyCols.map(col)
+    val contrib = sc.axes.foldLeft(leaves)((d, a) => d
+        .withColumn(a.lvl, explode(sequence(lit(0), lit(a.levels))))
+        .withColumn(a.idx, expr(s"shiftright(${a.leaf}, ${a.lvl})")))
+      .groupBy(nodeCs: _*)
+      .agg(sum(col(value)).cast("double").as("__s"))
+    store.fold(contrib)(st => st.unionByName(contrib)
+      .groupBy(nodeCs: _*).agg(sum(col("__s")).as("__s")))
+  }
+
+  /** Pin a node store handed to a release unless it already is stored
+    * rows (a pinned frame, a local literal or a file scan, under
+    * projections and filters): the key universe and the release join
+    * both read it, and a store that still carries its ingest plan would
+    * run that ingest twice. One rule for every release entry point. */
+  private[graft] def materialized(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    def stored(p: logical.LogicalPlan): Boolean = p match {
+      case _: org.apache.spark.sql.execution.LogicalRDD |
+          _: logical.LocalRelation |
+          _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
+      case logical.Project(_, c) => stored(c)
+      case logical.Filter(_, c) => stored(c)
+      case logical.SubqueryAlias(_, c) => stored(c)
+      case _ => false
+    }
+    if (stored(df.queryExecution.analyzed)) df else df.localCheckpoint(false)
+  }
+
+  /** The key universe a release draws over: the public keys (cast to
+    * `keysFrom`'s key types — the literal noise frame claims that schema,
+    * so a mismatched user frame coerces or fails here; distinct AFTER the
+    * cast, so values colliding post-cast draw once) or the observed keys
+    * of `keysFrom`, a frame the caller has already materialized. One
+    * bounded collect: keys x nodes literal rows must fit the driver. */
+  private[graft] def releaseKeys(keysFrom: DataFrame,
+      sc: TreeScope): Seq[org.apache.spark.sql.Row] =
+    if (sc.keyCols.isEmpty) Seq(org.apache.spark.sql.Row.empty)
+    else {
+      val kd = sc.pub
+        .map(p => p.toDF(sc.keyCols: _*).select(sc.keyCols.map(n =>
+          col(n).cast(keysFrom.schema(n).dataType).as(n)): _*).distinct())
+        .getOrElse(keysFrom.select(sc.keyCols.map(col): _*).distinct())
+      boundedCollect(kd, sc.what, math.max(1L, MaxDriverRows / sc.nodes),
+        s"distinct keys (the release draws keys x ${sc.nodes} node noises " +
+          "driver-side)").toSeq
+    }
+
+  /** The one per-node draw: Laplace b or Gaussian sigma per `kind`. */
+  private[graft] def drawer(noise: graft.core.NoiseSource,
+      kind: graft.core.NoiseKind, scale: Double): () => Double = kind match {
+    case graft.core.NoiseKind.Laplace  => () => noise.laplace(scale)
+    case graft.core.NoiseKind.Gaussian => () => noise.gaussian(scale)
+  }
+
+  /** THE noisy release: the generated node universe x the key universe
+    * ([[releaseKeys]]), one draw per node, empty nodes included (a
+    * missing draw would disclose emptiness), left-joined to the node
+    * store `nodes`. Returns (lvl, idx per axis..., keys..., dp_count).
     *
-    * The r18 shape ranked EVERY ROW with one `row_number` window over
-    * (unit, keys) ordered by (cell, value) and then exploded every
-    * surviving row x (levels+1) before the node aggregation — a full
-    * shuffle+sort of the raw rows plus a (levels+1)x row multiplier
-    * through the aggregate (13x at the 4096-bin probe). This shape
-    * aggregates FIRST: per-(unit, key, cell) counts (map-side partial
-    * aggregation collapses the shuffle to the distinct-cell frame), then
-    * applies the SAME deterministic cap via the cell-ascending prefix —
-    * cell c of a unit contributes min(count_c, max(0, maxPerUnit -
-    * sum of counts before c)) — which keeps, cell by cell, EXACTLY the
-    * rows `row_number <= maxPerUnit` kept (within-cell order only breaks
-    * ties among interchangeable rows of one cell, and a count tree never
-    * reads which ones). The cap window now sorts bounded per-unit leaf
-    * rows, not the data, and the level explode runs over per-cell
-    * counts downstream. Returns (binCols..., keyCols..., __cb) with
-    * __cb = the capped leaf count, already summed across units. */
+    * DRAW-ONCE: node noise is drawn HERE, ON THE DRIVER, and enters the
+    * plan as a literal frame. A nondeterministic noise UDF would re-draw
+    * on every action and on every reference to the release inside one
+    * plan (a readout joining the tree twice), silently multiplying the
+    * epsilon spend; the literal frame makes the released plan
+    * deterministic, retry-proof, and read by any number of consumers
+    * and actions as one draw set. The universe is generated and
+    * bins-shaped, never data-shaped, so driver draws are cheap. Draw
+    * order is keys outer, then (lvl, idx) per axis in axis order —
+    * seeded releases depend on it (DrawOrderSpec pins it).
+    *
+    * The store side is BROADCAST: it is bounded by keys x nodes (the
+    * same driver budget as the literal frame) but a pinned plan carries
+    * no size statistics, and the planner would otherwise sort-merge two
+    * bounded frames. At the guard's limit (MaxDriverRows rows, ~50 B
+    * each) that is a ~100 MB broadcast — past autoBroadcastJoinThreshold
+    * on purpose; size the driver for it or shard by key range.
+    *
+    * Past the guard, keyed trees shard: they are PER-KEY releases, so
+    * disjoint key ranges release independently ([[shardedByKeyRange]])
+    * and compose in parallel — zero extra budget. */
+  private[graft] def release(nodes: DataFrame, keysFrom: DataFrame,
+      sc: TreeScope, scale: Double, noise: graft.core.NoiseSource,
+      kind: graft.core.NoiseKind): DataFrame = {
+    import org.apache.spark.sql.types._
+    val keyRows = releaseKeys(keysFrom, sc)
+    val draw = drawer(noise, kind, scale)
+    val coords = sc.axes.foldLeft(Seq(Seq.empty[Any])) { (cs, a) =>
+      for (c <- cs; l <- 0 to a.levels; i <- 0L until (a.bins.toLong >> l))
+        yield c :+ l :+ i
+    }
+    val rows = for (kr <- keyRows; c <- coords)
+      yield org.apache.spark.sql.Row.fromSeq((c ++ kr.toSeq) :+ draw())
+    val nodeCols = sc.axes.flatMap(a => Seq(a.lvl, a.idx))
+    val schema = StructType(sc.axes.flatMap(a => Seq(
+        StructField(a.lvl, IntegerType, nullable = false),
+        StructField(a.idx, LongType, nullable = false))) ++
+      sc.keyCols.map(keysFrom.schema(_)) :+
+      StructField("__noise", DoubleType, nullable = false))
+    nodes.sparkSession.createDataFrame(new java.util.ArrayList(rows.asJava),
+        schema)
+      .join(broadcast(nodes), nodeCols ++ sc.keyCols, "left")
+      .select((nodeCols ++ sc.keyCols).map(col) :+
+        (coalesce(col("__s"), lit(0.0)) + col("__noise")).as("dp_count"): _*)
+  }
+
+  /** [[release]] of a node store a caller hands in ([[materialized]]
+    * decides whether it needs a pin). */
+  private def releaseStore(store: DataFrame, sc: TreeScope, scale: Double,
+      noise: graft.core.NoiseSource, kind: graft.core.NoiseKind): DataFrame = {
+    val st = materialized(store)
+    release(st, st, sc, scale, noise, kind)
+  }
+
+  /** [[release]] sharded by key range ([[shardedByKeyRange]]). */
+  private def shardedRelease(store: DataFrame, sc: TreeScope, scale: Double,
+      noise: graft.core.NoiseSource, kind: graft.core.NoiseKind,
+      outDir: String, maxKeysPerShard: Long): DataFrame =
+    shardedByKeyRange(store, sc.keyCols, sc.pub, sc.nodes, maxKeysPerShard,
+      outDir) { (slice, shardKeys) =>
+      release(slice, slice, sc.copy(pub = Some(shardKeys)), scale, noise,
+        kind)
+    }
+
+  /** The COUNT trees' bounded node store: per-unit capped leaf counts
+    * ([[cappedLeafCounts]]) rolled up over `sc`'s axes, folded into
+    * `store` when given. */
+  private def countStore(df: DataFrame, pidCol: String, sc: TreeScope,
+      dims: Seq[Binned], maxPerUnit: Long,
+      store: Option[DataFrame] = None): DataFrame = {
+    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
+    val leaves = sc.axes.map(_.leaf)
+    val leafCounts = cappedLeafCounts(
+      sc.rows(df).select((col(pidCol) +: sc.keys(df)) ++
+        dims.zip(leaves).map { case (d, l) => d.bin.as(l) }: _*),
+      pidCol, sc.keyCols, leaves, maxPerUnit)
+    dyadicRollup(leafCounts, sc, "__cb", store)
+  }
+
+  /** The SUM trees' bounded node store (1-D and 2-D): each row's weight
+    * CLAMPS into [minW, maxW] (the order-free bounding — part of the
+    * released statistic, not a filter; NULL weights fail loud), each
+    * unit keeps its first `maxPerUnit` rows ranked by (bins..., weight,
+    * values...) — deterministic under task retries; a binding cap
+    * selects by weight, so sum trees rank rows where count trees
+    * aggregate first — then leaf sums roll up over `sc`'s axes. */
+  private def sumStore(df: DataFrame, pidCol: String, weightCol: Column,
+      minW: Double, maxW: Double, sc: TreeScope, dims: Seq[Binned],
+      maxPerUnit: Long): DataFrame = {
+    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
+    require(minW <= maxW, s"minW $minW > maxW $maxW")
+    val leaves = sc.axes.map(_.leaf)
+    val keyCs = sc.keyCols.map(col)
+    val w = least(greatest(orFail(weightCol, s"${sc.what}: NULL weight " +
+      "for a privacy unit — nulls have no clipping semantics; filter or " +
+      "impute upstream"), lit(minW)), lit(maxW))
+    val leafSums = dims.zip(leaves)
+      .foldLeft(sc.rows(df)) { case (d, (b, l)) => d.withColumn(l, b.bin) }
+      .withColumn("__w", w)
+      .withColumn("__rk", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col(pidCol) +: keyCs: _*)
+          .orderBy((leaves.map(col(_).asc) :+ col("__w").asc) ++
+            dims.map(_.value.asc): _*)))
+      .filter(col("__rk") <= maxPerUnit)
+      .select((leaves.map(col) :+ col("__w")) ++ sc.keys(df): _*)
+      // leaf sums BEFORE the level explode: the explode then multiplies
+      // <= bins x keys leaf rows, not every surviving row
+      .groupBy(leaves.map(col) ++ keyCs: _*)
+      .agg(sum(col("__w")).as("__wb"))
+    dyadicRollup(leafSums, sc, "__wb")
+  }
+
+  /** Bounded leaf counts per (unit, key, leaf cell) — the COUNT trees'
+    * bounding. It aggregates FIRST: per-(unit, key, cell) counts
+    * (map-side partial aggregation collapses the shuffle to the
+    * distinct-cell frame), then applies the deterministic cap via the
+    * cell-ascending prefix — cell c of a unit contributes min(count_c,
+    * max(0, maxPerUnit - sum of counts before c)) — which keeps, cell by
+    * cell, exactly the rows a `row_number <= maxPerUnit` rank over
+    * (cell, value) would keep (within-cell order only breaks ties among
+    * interchangeable rows of one cell, and a count tree never reads
+    * which ones). The cap window sorts bounded per-unit leaf rows, not
+    * the data, and the level explode runs over per-cell counts
+    * downstream. Returns (binCols..., keyCols..., __cb) with __cb = the
+    * capped leaf count, already summed across units. */
   private def cappedLeafCounts(
       projected: DataFrame, pidCol: String, keyCols: Seq[String],
       binCols: Seq[String], maxPerUnit: Long): DataFrame = {
@@ -257,7 +530,7 @@ object RangeTree {
       (loE + lit(bins.toDouble) * width).as("hi"): _*)
   }
 
-  /** The keyed tree release over PER-KEY domains (r15): each key's
+  /** The keyed tree release over PER-KEY domains: each key's
     * values bin against ITS OWN [lo, hi) from the `domains` frame
     * (keyCols..., lo, hi — one row per key, e.g. [[dpEstimatedDomains]]
     * output or a per-key schema contract), all trees sharing one `bins`
@@ -287,22 +560,18 @@ object RangeTree {
     require(keyCols.nonEmpty,
       "dpRangeCountTreePerKeyDomains needs keyCols — use dpRangeCountTree " +
         "with a global domain otherwise")
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
+    val ax = axis("bins", bins)
     require(epsilon > 0, s"epsilon must be positive, got $epsilon")
     require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
     val keyCs = keyCols.map(col)
     // NULL domain bounds fail loud: a null lo/hi would null every bin of
     // that key and the release join would silently drop its rows. The
     // bounds join back under internal names so a data frame that already
-    // carries a 'lo'/'hi' column cannot collide (ninth review pass)
-    def checkedBound(n: String) =
-      when(col(n).isNull, raise_error(lit(
-        s"dpRangeCountTreePerKeyDomains: NULL $n in the domains frame — " +
-          "every key needs a concrete [lo, hi); fix the domains upstream"))
-        .cast("double"))
-        .otherwise(col(n).cast("double")).as(s"__dom_$n")
+    // carries a 'lo'/'hi' column cannot collide
+    def checkedBound(n: String) = orFail(col(n),
+      s"dpRangeCountTreePerKeyDomains: NULL $n in the domains frame — " +
+        "every key needs a concrete [lo, hi); fix the domains upstream")
+      .as(s"__dom_$n")
     val dom = domains.select(keyCs :+ checkedBound("lo") :+
       checkedBound("hi"): _*).localCheckpoint(false)
     // one row per key — a conflicting duplicate would silently double
@@ -313,57 +582,40 @@ object RangeTree {
       s"dpRangeCountTreePerKeyDomains: ${chk.getLong(0)} domain rows for " +
         s"${chk.getLong(1)} distinct keys — the domains frame must have " +
         "exactly one row per key")
-    // the release guard's key budget, enforced HERE as well (r20): the
-    // domains frame is broadcast below, so an over-budget key set must
-    // fail with this shaped message at ingest, not as an opaque broadcast
-    // build OOM — and the release-time guard would only fire after the
-    // whole ingest ran
-    val maxDomKeys = math.max(1L, MaxDriverRows / (2L * bins - 1))
+    // the release guard's key budget, enforced HERE as well: the domains
+    // frame is broadcast below, so an over-budget key set must fail with
+    // this shaped message at ingest, not as an opaque broadcast build OOM
+    // after the whole ingest ran
+    val maxDomKeys = math.max(1L, MaxDriverRows / ax.nodes)
     require(chk.getLong(0) <= maxDomKeys,
       s"dpRangeCountTreePerKeyDomains: ${chk.getLong(0)} domain keys — over " +
         s"the $maxDomKeys-key budget for bins=$bins (the domains frame is " +
         "broadcast and the release draws keys x nodes noises driver-side); " +
         "shard the release by key range")
+    // the domains frame IS the public key set (no semi-join: rows without
+    // a domain drop at the domains join)
+    val sc = TreeScope("dpRangeCountTreePerKeyDomains", keyCols,
+      Some(dom.select(keyCs: _*)), Seq(ax))
     // NULL keys fail loud BEFORE the domains join would silently drop
-    // them (null never equi-joins) — the family's convention
-    val dfChecked = keyCols.foldLeft(df) { (d, n) =>
-      d.withColumn(n, when(col(n).isNull, raise_error(lit(
-        s"dpRangeCountTreePerKeyDomains: NULL key '$n' — it would " +
-          "silently drop from the domains join; coalesce or filter " +
-          "upstream")).cast(df.schema(n).dataType)).otherwise(col(n)))
-    }
-    // rows without a domain DROP. BROADCAST the domains side (r19): it is
-    // driver-bounded by the release guard (<= MaxDriverRows/nNodes keys),
-    // while its checkpointed plan carries no size stats — without the hint
-    // the planner sort-merge-joins, shuffling the whole data frame by key
-    val joined = dfChecked.join(broadcast(dom), keyCols)
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "dpRangeCountTreePerKeyDomains: NULL value for a privacy unit — " +
-          "nulls have no bin; filter or impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
+    // them. BROADCAST the domains side: it is driver-bounded by the guard
+    // above, while its pinned plan carries no size stats — without the
+    // hint the planner sort-merge-joins, shuffling the whole data frame
+    val joined = keyCols.zip(sc.keys(df))
+      .foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
+      .join(broadcast(dom), keyCols)
+    val v = orFail(valueCol, "dpRangeCountTreePerKeyDomains: NULL value " +
+      "for a privacy unit — nulls have no bin; filter or impute upstream")
     val loC = when(col("__dom_lo") >= col("__dom_hi"), raise_error(lit(
         "dpRangeCountTreePerKeyDomains: empty domain [lo, hi) for a key"))
         .cast("double"))
       .otherwise(col("__dom_lo"))
-    val widthC = (col("__dom_hi") - loC) / lit(bins.toDouble)
-    val binIdx = least(
-      greatest(floor((checked - loC) / widthC), lit(0.0)),
-      lit((bins - 1).toDouble)).cast("long")
-    // deterministic cap via the bin-ascending prefix over per-unit LEAF
-    // counts ([[cappedLeafCounts]] — identical kept counts to the r18
-    // row_number formulation; the cap window sorts bounded leaf rows, not
-    // the data, and the level explode runs over per-bin counts)
-    val store = cappedLeafCounts(
-        joined.select((col(pidCol) +: keyCs) :+ binIdx.as("__bin"): _*),
-        pidCol, keyCols, Seq("__bin"), maxPerUnit)
-      .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
-      .withColumn("__idx", expr("shiftright(__bin, __lvl)"))
-      .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-      .agg(sum(col("__cb")).cast("double").as("__s"))
-      .localCheckpoint(false) // key universe + release join share it
-    releaseWithScale(store, keyCols, bins, levels,
-      treeScale(noiseKind, epsilon, delta, maxPerUnit.toDouble, levels),
-      noise, noiseKind, publicKeys = Some(dom.select(keyCs: _*)))
+    val leafCounts = cappedLeafCounts(
+      joined.select((col(pidCol) +: keyCs) :+ binOf(v, loC,
+        (col("__dom_hi") - loC) / lit(bins.toDouble), bins).as("__bin"): _*),
+      pidCol, keyCols, Seq("__bin"), maxPerUnit)
+    releaseStore(dyadicRollup(leafCounts, sc, "__cb"), sc,
+      sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble), noise,
+      noiseKind)
   }
 
   /** Released noisy dyadic tree: (keyCols..., __lvl, __idx, dp_count)
@@ -399,18 +651,15 @@ object RangeTree {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    // one-shot = one ingest step + one release: ONE definition of the
-    // bounded binning (DETERMINISTIC per-unit cap: each unit's bins
-    // contribute, bin-ascending, until maxPerUnit rows are spent — the
-    // same kept counts as ranking rows by (bin, value), fully
-    // deterministic under task retries) and of the noisy release, shared
-    // with the streaming fold so they cannot drift
-    rangeTreeRelease(
-      rangeTreeIngestStep(df, None, pidCol, valueCol, keyCols, lo, hi,
-        bins, maxPerUnit, publicKeys)
-        .localCheckpoint(false), // key universe + release join share it
-      keyCols, bins, epsilon, maxPerUnit, noise, publicKeys, noiseKind,
-      delta)
+    // one-shot = the streaming fold's ingest + release over one batch:
+    // DETERMINISTIC per-unit cap (each unit's bins contribute,
+    // bin-ascending, until maxPerUnit rows are spent — the same kept
+    // counts as ranking rows by (bin, value), fully deterministic under
+    // task retries)
+    val sc = scope("dpRangeCountTree", keyCols, publicKeys, axis("bins", bins))
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble)
+    releaseStore(countStore(df, pidCol, sc, Seq(sc.bin(0, valueCol, lo, hi)),
+      maxPerUnit), sc, scale, noise, noiseKind)
   }
 
   /** The SUM analogue of [[dpRangeCountTree]]: each row carries a
@@ -443,77 +692,12 @@ object RangeTree {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    require(lo < hi, s"empty domain [$lo, $hi)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(minW <= maxW, s"minW $minW > maxW $maxW")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val contrib = sumTreeStore(df, pidCol, valueCol, weightCol, keyCols,
-      lo, hi, bins, maxPerUnit, minW, maxW, publicKeys)
-      .localCheckpoint(false) // key universe + release join share it
-    val scale = treeScale(noiseKind, epsilon, delta,
-      maxPerUnit.toDouble * math.max(math.abs(minW), math.abs(maxW)), levels)
-    releaseWithScale(contrib, keyCols, bins, levels, scale, noise,
-      noiseKind, publicKeys)
-  }
-
-  /** The SUM tree's bounded node-sum store (the [[rangeTreeIngestStep]]
-    * analogue with clamped weights) — ONE definition shared by
-    * [[dpRangeSumTree]] and [[dpRangeSumTreeSharded]] so the bounding
-    * cannot drift. */
-  private def sumTreeStore(
-      df: DataFrame, pidCol: String, valueCol: Column, weightCol: Column,
-      keyCols: Seq[String], lo: Double, hi: Double, bins: Int,
-      maxPerUnit: Long, minW: Double, maxW: Double,
-      publicKeys: Option[DataFrame]): DataFrame = {
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val keyCs = keyCols.map(col)
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "dpRangeSumTree: NULL value for a privacy unit — nulls have no " +
-          "bin; filter or impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val wChecked = when(weightCol.isNull, raise_error(lit(
-        "dpRangeSumTree: NULL weight for a privacy unit — nulls have no " +
-          "clipping semantics; filter or impute upstream")).cast("double"))
-      .otherwise(weightCol.cast("double"))
-    val wClamped = least(greatest(wChecked, lit(minW)), lit(maxW))
-    val binIdx = least(
-      greatest(floor((checked - lit(lo)) / lit((hi - lo) / bins)), lit(0.0)),
-      lit((bins - 1).toDouble)).cast("long")
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"dpRangeSumTree: NULL key '$n' — it would silently drop from " +
-          "the release joins; coalesce or filter upstream"))
-        .cast(df.schema(n).dataType))
-        .otherwise(c).as(n)
-    }
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val inScope = pub.fold(df)(p =>
-      df.join(p, keyCols.map(n => df(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    // deterministic cap: rank by (bin, weight, value) — stable under retry
-    inScope
-      .withColumn("__bin", binIdx)
-      .withColumn("__w", wClamped)
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy((col(pidCol) +: keyCs): _*)
-          .orderBy(col("__bin").asc, col("__w").asc, checked.asc)))
-      .filter(col("__rk") <= maxPerUnit)
-      .select(col("__bin") +: col("__w") +: keyChecked: _*)
-      // leaf sums BEFORE the level explode (r19 optimization): the explode
-      // then multiplies <= bins x keys leaf rows, not every surviving row
-      .groupBy(col("__bin") +: keyCs: _*)
-      .agg(sum(col("__w")).as("__wb"))
-      .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
-      .withColumn("__idx", expr("shiftright(__bin, __lvl)"))
-      .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-      .agg(sum(col("__wb")).as("__s"))
+    val sc = scope("dpRangeSumTree", keyCols, publicKeys, axis("bins", bins))
+    val scale = sc.scale(noiseKind, epsilon, delta,
+      maxPerUnit.toDouble * math.max(math.abs(minW), math.abs(maxW)))
+    releaseStore(sumStore(df, pidCol, weightCol, minW, maxW, sc,
+      Seq(sc.bin(0, valueCol, lo, hi)), maxPerUnit), sc, scale, noise,
+      noiseKind)
   }
 
   /** KEY-RANGE SHARDED sum tree — [[dpRangeSumTree]] at ANY key
@@ -539,22 +723,13 @@ object RangeTree {
       delta: Double = 0.0,
       maxKeysPerShard: Long = 0L
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
-    require(lo < hi, s"empty domain [$lo, $hi)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(minW <= maxW, s"minW $minW > maxW $maxW")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val scale = treeScale(noiseKind, epsilon, delta,
-      maxPerUnit.toDouble * math.max(math.abs(minW), math.abs(maxW)), levels)
-    val store = sumTreeStore(df, pidCol, valueCol, weightCol, keyCols,
-      lo, hi, bins, maxPerUnit, minW, maxW, publicKeys)
-    shardedByKeyRange(store, keyCols, publicKeys, 2L * bins - 1,
-      maxKeysPerShard, outDir) { (slice, shardKeys) =>
-      releaseWithScale(slice, keyCols, bins, levels, scale, noise,
-        noiseKind, publicKeys = Some(shardKeys))
-    }
+    val sc = scope("dpRangeSumTreeSharded", keyCols, publicKeys,
+      axis("bins", bins))
+    val scale = sc.scale(noiseKind, epsilon, delta,
+      maxPerUnit.toDouble * math.max(math.abs(minW), math.abs(maxW)))
+    shardedRelease(sumStore(df, pidCol, weightCol, minW, maxW, sc,
+      Seq(sc.bin(0, valueCol, lo, hi)), maxPerUnit), sc, scale, noise,
+      noiseKind, outDir, maxKeysPerShard)
   }
 
   /** Range queries answered from a released tree — PURE POST-PROCESSING
@@ -902,61 +1077,20 @@ object RangeTree {
       maxPerUnit: Long,
       publicKeys: Option[DataFrame] = None
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
-    require(lo < hi, s"empty domain [$lo, $hi)")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val keyCs = keyCols.map(col)
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "rangeTreeIngestStep: NULL value for a privacy unit — nulls have " +
-          "no bin; filter or impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val binIdx = least(
-      greatest(floor((checked - lit(lo)) / lit((hi - lo) / bins)), lit(0.0)),
-      lit((bins - 1).toDouble)).cast("long")
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"rangeTreeIngestStep: NULL key '$n' — it would silently drop " +
-          "from the release joins; coalesce or filter upstream"))
-        .cast(batch.schema(n).dataType))
-        .otherwise(c).as(n)
-    }
-    // with public keys, non-public rows DROP before bounding (the batch
-    // engine's public-partitions convention) so nothing they carry can
-    // shape the release
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val inScope = pub.fold(batch)(p =>
-      batch.join(p, keyCols.map(n => batch(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    // deterministic cap via the bin-ascending prefix over per-unit LEAF
-    // counts (see [[cappedLeafCounts]] — identical kept counts to the r18
-    // row_number formulation, without the all-rows sort or the raw-row
-    // level explode); the level rollup then runs over per-bin counts
-    val contrib = cappedLeafCounts(
-        inScope.select((col(pidCol) +: keyChecked) :+ binIdx.as("__bin"): _*),
-        pidCol, keyCols, Seq("__bin"), maxPerUnit)
-      .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
-      .withColumn("__idx", expr("shiftright(__bin, __lvl)"))
-      .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-      .agg(sum(col("__cb")).cast("double").as("__s"))
-    store match {
-      case None => contrib
-      case Some(st) => st.unionByName(contrib)
-        .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-        .agg(sum(col("__s")).as("__s"))
-    }
+    val sc = scope("rangeTreeIngestStep", keyCols, publicKeys,
+      axis("bins", bins))
+    countStore(batch, pidCol, sc, Seq(sc.bin(0, valueCol, lo, hi)),
+      maxPerUnit, store)
   }
 
   /** Publish a folded node-sum store as a noisy tree: the generated node
-    * universe x the store's observed keys, one draw per node (empty
-    * nodes too; Laplace or Gaussian per `noiseKind`, [[treeScale]])
-    * — the [[dpRangeCountTree]] release stage over an accumulated store.
-    * Same released schema, so [[rangeQueries]], [[quantilesFromTree]]
-    * and [[enforceConsistency]] consume it unchanged. */
+    * universe x the store's observed keys (or `publicKeys`), one draw per
+    * node (empty nodes too; Laplace or Gaussian per `noiseKind`,
+    * [[treeScale]]) — the [[dpRangeCountTree]] release over an
+    * accumulated store. The store is pinned unless it already is stored
+    * rows ([[materialized]]), so its ingest never runs twice. Same
+    * released schema, so [[rangeQueries]], [[quantilesFromTree]] and
+    * [[enforceConsistency]] consume it unchanged. */
   def rangeTreeRelease(
       store: DataFrame,
       keyCols: Seq[String],
@@ -968,18 +1102,15 @@ object RangeTree {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
     require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    releaseWithScale(store, keyCols, bins, levels,
-      treeScale(noiseKind, epsilon, delta, maxPerUnit.toDouble, levels),
-      noise, noiseKind, publicKeys)
+    val sc = scope("rangeTreeRelease", keyCols, publicKeys, axis("bins", bins))
+    releaseStore(store, sc,
+      sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble), noise,
+      noiseKind)
   }
 
   /** Publish a folded node-sum store at an EXPLICIT per-node noise scale
-    * — the accountant-driven face of [[rangeTreeRelease]] (r15): when a
+    * — the accountant-driven face of [[rangeTreeRelease]]: when a
     * [[graft.core.BudgetAccountant]] resolves a tree release via
     * `requestTreeRelease`, its `TreeReleaseHandle.perNodeScale` plugs in
     * here directly (the epsilon-parameterized entry points compute the
@@ -993,118 +1124,10 @@ object RangeTree {
       publicKeys: Option[DataFrame] = None,
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
     require(perNodeScale >= 0,
       s"perNodeScale must be >= 0, got $perNodeScale")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    releaseWithScale(store, keyCols, bins, levels, perNodeScale, noise,
-      noiseKind, publicKeys)
-  }
-
-  /** THE noisy release stage — one definition shared by the count tree,
-    * the sum tree, and the ingest fold (r13 self-review: the sum tree
-    * initially duplicated it), parameterized by the per-node noise scale
-    * (Laplace b or Gaussian sigma): generated node universe x the store's
-    * observed keys, one draw per node, empty nodes included.
-    *
-    * DRAW-ONCE (r14, the judge-found double-draw hole): node noise is
-    * drawn HERE, ON THE DRIVER, and enters the plan as a literal frame —
-    * the [[graft.streaming.StreamOps.onlineContinualStep]] design. The
-    * r13 version drew in a nondeterministic UDF with no checkpoint, so
-    * (a) a plan referencing the released tree twice (the quantile
-    * readout's root + prefix sides) evaluated TWO different draws of the
-    * same released node, and (b) every additional ACTION on a returned
-    * release re-drew all node noise — both silently multiplying the
-    * advertised epsilon spend while the docstrings promised "no new
-    * draws". The node universe is GENERATED and bins-shaped (2*bins-1
-    * nodes x keys), never data-shaped, so driver draws are cheap,
-    * retry-proof, and make the released plan fully deterministic: any
-    * number of consumers and actions read the same single draw set
-    * (spec-pinned with a counting source). The key universe collect is
-    * guarded so keys x nodes literal rows fit the driver — fail loud,
-    * not OOM.
-    *
-    * SHARDING past the guard (the 100 TB key-cardinality story): keyed
-    * trees are PER-KEY releases, so a key universe beyond the driver
-    * budget splits into disjoint key-range shards released independently
-    * — AUTOMATED since r15 by [[shardedRangeTreeRelease]] /
-    * [[dpRangeCountTreeSharded]] (one shard's literal frame on the
-    * driver at a time, written to storage before the next draws).
-    * Privacy composes in PARALLEL over disjoint keys (cross-key
-    * composition was always the caller's accounting — the family's cell
-    * contract), so sharding costs zero extra budget. */
-  private def releaseWithScale(
-      store: DataFrame,
-      keyCols: Seq[String],
-      bins: Int,
-      levels: Int,
-      scale: Double,
-      noise: graft.core.NoiseSource,
-      kind: graft.core.NoiseKind,
-      publicKeys: Option[DataFrame] = None
-  ): DataFrame = {
-    val keyCs = keyCols.map(col)
-    val spark0 = store.sparkSession
-    val nNodes = 2L * bins - 1
-    val keyRows: Seq[org.apache.spark.sql.Row] =
-      if (keyCols.isEmpty) Seq(org.apache.spark.sql.Row.fromSeq(Seq.empty))
-      else {
-        // public keys CAST to the store's key types before collecting:
-        // the literal noise frame claims the store's schema, and a
-        // mismatched user frame (Int keys vs Long store) must coerce or
-        // fail loud here, not corrupt rows at execution (r14 review)
-        val kd = publicKeys
-          .map(p => p.toDF(keyCols: _*)
-            .select(keyCols.map(n =>
-              col(n).cast(store.schema(n).dataType).as(n)): _*)
-            .distinct())
-          .getOrElse(store.select(keyCs: _*).distinct())
-        val maxKeys = math.max(1L, MaxDriverRows / nNodes)
-        // ONE bounded collect (r19): at most maxKeys+1 rows ever reach
-        // the driver — the maxKeys+1-th row IS the over-budget signal,
-        // so a high-cardinality keyed store fails loud instead of OOMing
-        // (the old limit-count + collect pair paid two jobs for this)
-        val rows = kd.limit((maxKeys + 1).toInt).collect()
-        require(rows.length <= maxKeys,
-          s"releaseWithScale: over $maxKeys distinct keys for bins=$bins " +
-            "(the guard stops collecting there) — the release draws keys x " +
-            s"$nNodes node noises driver-side; reduce the key cardinality " +
-            "or shard the release by key range " +
-            "(shardedRangeTreeRelease / dpRangeCountTreeSharded do this " +
-            "automatically)")
-        rows.toSeq
-      }
-    val draw: () => Double = kind match {
-      case graft.core.NoiseKind.Laplace  => () => noise.laplace(scale)
-      case graft.core.NoiseKind.Gaussian => () => noise.gaussian(scale)
-    }
-    val rows: Seq[org.apache.spark.sql.Row] = for {
-      kr <- keyRows
-      l <- 0 to levels
-      i <- 0L until (bins.toLong >> l)
-    } yield org.apache.spark.sql.Row.fromSeq(l +: i +: kr.toSeq :+ draw())
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__lvl",
-        org.apache.spark.sql.types.IntegerType, nullable = false) +:
-      org.apache.spark.sql.types.StructField("__idx",
-        org.apache.spark.sql.types.LongType, nullable = false) +:
-      keyCols.map(n => store.schema(n)) :+
-      org.apache.spark.sql.types.StructField("__noise",
-        org.apache.spark.sql.types.DoubleType, nullable = false))
-    val nodes = spark0.createDataFrame(
-      new java.util.ArrayList(rows.asJava), schema)
-    // BROADCAST the store side (r19): the aggregated node-sum store is
-    // bounded by keys x (2*bins-1) <= the same driver budget as the nodes
-    // literal, but its checkpointed plan has no size stats — the planner
-    // otherwise falls back to a sort-merge join of two bounded frames
-    nodes
-      .join(broadcast(store), Seq("__lvl", "__idx") ++ keyCols, "left")
-      .select(col("__lvl") +: col("__idx") +:
-        (keyCs :+ (coalesce(col("__s"), lit(0.0)) + col("__noise"))
-          .as("dp_count")): _*)
+    releaseStore(store, scope("rangeTreeReleaseWithScale", keyCols,
+      publicKeys, axis("bins", bins)), perNodeScale, noise, noiseKind)
   }
 
   /** Driver-row budget for the bounded tree-shaped collects (release
@@ -1120,29 +1143,26 @@ object RangeTree {
     * [[MaxDriverRows]]). */
   private[graft] val ShardConcurrency = 4
 
-  /** Guarded collect for the BOUNDED driver-math consumers: a
-    * limit-bounded count (stops scanning at the cap+1-th row) rejects an
-    * over-budget frame with a shaped message instead of OOMing the
-    * driver — the [[graft.streaming.StreamOps.onlineContinualStep]]
-    * guard convention. */
+  /** Guarded collect for the BOUNDED driver-side consumers (release key
+    * universes, SVT query lists): ONE action collects at most cap+1 rows
+    * — the cap+1-th row IS the over-budget signal, so an over-budget
+    * frame fails loud with a shaped message having held only cap+1 rows
+    * instead of OOMing the driver. `rows` names what is counted. */
   private[graft] def boundedCollect(
-      df: DataFrame, what: String,
-      cap: Long = MaxDriverRows): Array[org.apache.spark.sql.Row] = {
-    // ONE action (r19 optimization): collect at most cap+1 rows — the
-    // cap+1-th row's presence IS the over-budget signal, and the guard
-    // then fails loud having held only cap+1 rows (the same driver
-    // budget the old limit-count + collect pair enforced in two jobs)
-    val rows = df.limit((cap + 1).toInt).collect()
-    require(rows.length <= cap,
-      s"$what: over $cap released-tree rows (the guard stops collecting " +
-        "there) — this consumer's math is driver-side over the bounded " +
-        "tree; reduce the key cardinality or shard by key range")
-    rows
+      df: DataFrame, what: String, cap: Long = MaxDriverRows,
+      rows: String = "rows"): Array[org.apache.spark.sql.Row] = {
+    val out = df.limit((cap + 1).toInt).collect()
+    require(out.length <= cap,
+      s"$what: over $cap $rows (the guard stops collecting there) — the " +
+        "math on them is driver-side; reduce the key cardinality or shard " +
+        "the release by key range (the *Sharded entry points do this " +
+        "automatically)")
+    out
   }
 
   /** KEY-RANGE SHARDED release — the automatic form of the manual
-    * sharding pattern documented on [[releaseWithScale]] (r15, breaking
-    * the keyed driver cap): a key universe beyond the driver budget
+    * sharding pattern documented on [[release]]: a key universe beyond
+    * the driver budget
     * (keys x (2*bins-1) literal noise rows must fit the driver — ~244
     * keys at 4096 bins) splits into deterministic key-range shards, each
     * released independently with `publicKeys = <the shard's keys>` and
@@ -1156,8 +1176,8 @@ object RangeTree {
     * composition was always the caller's accounting — the family's cell
     * contract), so sharding costs zero extra budget. The read-back union
     * is a plain released tree: [[rangeQueries]], [[quantilesFromTree]],
-    * [[cdfFromTree]] and [[enforceConsistency]] (both distributed since
-    * r15) consume it unchanged at ANY key cardinality.
+    * [[cdfFromTree]] and [[enforceConsistency]] (both distributed)
+    * consume it unchanged at ANY key cardinality.
     *
     * `store` is a folded node-sum store ([[rangeTreeIngestStep]] output —
     * what [[dpRangeCountTreeSharded]] builds for the one-shot case).
@@ -1178,18 +1198,12 @@ object RangeTree {
       delta: Double = 0.0,
       maxKeysPerShard: Long = 0L
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
     require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val scale = treeScale(noiseKind, epsilon, delta, maxPerUnit.toDouble,
-      levels)
-    shardedByKeyRange(store, keyCols, publicKeys, 2L * bins - 1,
-      maxKeysPerShard, outDir) { (slice, shardKeys) =>
-      releaseWithScale(slice, keyCols, bins, levels, scale, noise,
-        noiseKind, publicKeys = Some(shardKeys))
-    }
+    val sc = scope("shardedRangeTreeRelease", keyCols, publicKeys,
+      axis("bins", bins))
+    shardedRelease(store, sc,
+      sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble), noise,
+      noiseKind, outDir, maxKeysPerShard)
   }
 
   /** One-shot sharded keyed tree: [[rangeTreeIngestStep]] (distributed,
@@ -1212,10 +1226,12 @@ object RangeTree {
       delta: Double = 0.0,
       maxKeysPerShard: Long = 0L
   ): DataFrame = {
-    val store = rangeTreeIngestStep(df, None, pidCol, valueCol, keyCols,
-      lo, hi, bins, maxPerUnit, publicKeys)
-    shardedRangeTreeRelease(store, keyCols, bins, epsilon, maxPerUnit,
-      noise, outDir, publicKeys, noiseKind, delta, maxKeysPerShard)
+    val sc = scope("dpRangeCountTreeSharded", keyCols, publicKeys,
+      axis("bins", bins))
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble)
+    shardedRelease(countStore(df, pidCol, sc,
+      Seq(sc.bin(0, valueCol, lo, hi)), maxPerUnit), sc, scale, noise,
+      noiseKind, outDir, maxKeysPerShard)
   }
 
   /** The sharding orchestrator shared by the range-tree and continual
@@ -1261,11 +1277,10 @@ object RangeTree {
     require(keyCols.nonEmpty,
       "sharded release needs keyCols — an unkeyed tree is one bounded " +
         "release; use the unsharded entry point")
-    // pin the store: the universe derivation and the partitioned write
-    // both consume it, and the callers hand in the RAW ingest plan — an
-    // unpinned store would run the bounded-cap window twice (r15
-    // self-review)
-    val store = store0.localCheckpoint(false)
+    // the universe derivation and the partitioned write both consume the
+    // store: a store still carrying its ingest plan would run the bounded
+    // cap twice
+    val store = materialized(store0)
     val spark0 = store.sparkSession
     val keyCs = keyCols.map(col)
     // the driver-footprint invariant: concurrency shards in flight x cap
@@ -1274,7 +1289,7 @@ object RangeTree {
     val cap0 = math.max(1L, MaxDriverRows / nNodes / ShardConcurrency)
     val cap = if (maxKeysPerShard > 0) math.min(maxKeysPerShard, cap0) else cap0
     // the shard universe: the PUBLIC key set (cast to the store's key
-    // types — the releaseWithScale coercion contract) or the observed one
+    // types — the [[releaseKeys]] coercion contract) or the observed one
     val universe = publicKeys
       .map(p => p.toDF(keyCols: _*)
         .select(keyCols.map(n =>
@@ -1433,7 +1448,7 @@ object RangeTree {
     * answers boxes from it; 1-D marginals are the (lx = levelsX) /
     * (ly = levelsY) slices — free post-processing. Draw-once: node noise
     * is drawn on the driver as a literal frame over the generated
-    * universe (the [[releaseWithScale]] design) — deterministic plans,
+    * universe (the [[release]] design) — deterministic plans,
     * any number of consumers/actions read one draw set. The universe is
     * (2*binsX-1)*(2*binsY-1) nodes per key, so the driver guard admits
     * ~MaxDriverRows / that many keys; binsX*binsY <= 65536 keeps one
@@ -1453,32 +1468,19 @@ object RangeTree {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(binsX >= 2 && (binsX & (binsX - 1)) == 0 && binsX <= 4096,
-      s"binsX must be a power of two in [2, 4096], got $binsX")
-    require(binsY >= 2 && (binsY & (binsY - 1)) == 0 && binsY <= 4096,
-      s"binsY must be a power of two in [2, 4096], got $binsY")
-    require(binsX.toLong * binsY <= 65536L,
-      s"binsX * binsY must be <= 65536 (got ${binsX.toLong * binsY}) — " +
-        "one product tree's literal noise frame is (2*binsX-1)*(2*binsY-1) " +
-        "driver rows; coarsen one axis or release two 1-D trees")
-    require(loX < hiX, s"empty x domain [$loX, $hiX)")
-    require(loY < hiY, s"empty y domain [$loY, $hiY)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val store = tree2DStore(df, pidCol, xCol, yCol, keyCols, loX, hiX,
-      binsX, loY, hiY, binsY, maxPerUnit, pub)
-      .localCheckpoint(false) // key universe + release join share it
-    val scale = scaleForTouches(noiseKind, epsilon, delta,
-      maxPerUnit.toDouble, (levelsX + 1) * (levelsY + 1))
-    release2DWithScale(store, keyCols, binsX, binsY, levelsX, levelsY,
-      scale, noise, noiseKind, pub)
+    val sc = scope("dpRange2DTree", keyCols, publicKeys,
+      productAxes(binsX, binsY): _*)
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble)
+    releaseStore(countStore(df, pidCol, sc,
+      bins2D(sc, xCol, loX, hiX, yCol, loY, hiY), maxPerUnit), sc, scale,
+      noise, noiseKind)
   }
+
+  /** The product tree's two binned dimensions. */
+  private def bins2D(sc: TreeScope, xCol: Column, loX: Double, hiX: Double,
+      yCol: Column, loY: Double, hiY: Double): Seq[Binned] =
+    Seq(sc.bin(0, xCol, loX, hiX, "x value"), sc.bin(1, yCol, loY, hiY,
+      "y value"))
 
   /** [[dpRange2DTree]] at an EXPLICIT per-node noise scale — the
     * accountant-driven face (feed
@@ -1500,84 +1502,13 @@ object RangeTree {
       publicKeys: Option[DataFrame] = None,
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace
   ): DataFrame = {
-    require(binsX >= 2 && (binsX & (binsX - 1)) == 0 && binsX <= 4096,
-      s"binsX must be a power of two in [2, 4096], got $binsX")
-    require(binsY >= 2 && (binsY & (binsY - 1)) == 0 && binsY <= 4096,
-      s"binsY must be a power of two in [2, 4096], got $binsY")
-    require(binsX.toLong * binsY <= 65536L,
-      s"binsX * binsY must be <= 65536 (got ${binsX.toLong * binsY}) — " +
-        "one product tree's literal noise frame is (2*binsX-1)*(2*binsY-1) " +
-        "driver rows; coarsen one axis or release two 1-D trees")
-    require(loX < hiX, s"empty x domain [$loX, $hiX)")
-    require(loY < hiY, s"empty y domain [$loY, $hiY)")
     require(perNodeScale >= 0,
       s"perNodeScale must be >= 0, got $perNodeScale")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val store = tree2DStore(df, pidCol, xCol, yCol, keyCols, loX, hiX,
-      binsX, loY, hiY, binsY, maxPerUnit, pub)
-      .localCheckpoint(false) // key universe + release join share it
-    release2DWithScale(store, keyCols, binsX, binsY, levelsX, levelsY,
-      perNodeScale, noise, noiseKind, pub)
-  }
-
-  /** The 2-D tree's bounded node-sum store — ONE definition shared by
-    * [[dpRange2DTree]] and [[dpRange2DTreeSharded]] so the bounding
-    * cannot drift (the sumTreeStore convention). */
-  private def tree2DStore(
-      df: DataFrame, pidCol: String, xCol: Column, yCol: Column,
-      keyCols: Seq[String],
-      loX: Double, hiX: Double, binsX: Int,
-      loY: Double, hiY: Double, binsY: Int,
-      maxPerUnit: Long, pub: Option[DataFrame]): DataFrame = {
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val keyCs = keyCols.map(col)
-    val xChecked = when(xCol.isNull, raise_error(lit(
-        "dpRange2DTree: NULL x value for a privacy unit — nulls have no " +
-          "bin; filter or impute upstream")).cast("double"))
-      .otherwise(xCol.cast("double"))
-    val yChecked = when(yCol.isNull, raise_error(lit(
-        "dpRange2DTree: NULL y value for a privacy unit — nulls have no " +
-          "bin; filter or impute upstream")).cast("double"))
-      .otherwise(yCol.cast("double"))
-    val bx = least(
-      greatest(floor((xChecked - lit(loX)) / lit((hiX - loX) / binsX)),
-        lit(0.0)), lit((binsX - 1).toDouble)).cast("long")
-    val by = least(
-      greatest(floor((yChecked - lit(loY)) / lit((hiY - loY) / binsY)),
-        lit(0.0)), lit((binsY - 1).toDouble)).cast("long")
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"dpRange2DTree: NULL key '$n' — it would silently drop from the " +
-          "release joins; coalesce or filter upstream"))
-        .cast(df.schema(n).dataType))
-        .otherwise(c).as(n)
-    }
-    val inScope = pub.fold(df)(p =>
-      df.join(p, keyCols.map(n => df(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    // deterministic cap via the (binX, binY)-ascending prefix over
-    // per-unit LEAF-CELL counts ([[cappedLeafCounts]] — identical kept
-    // counts to the r18 row_number formulation; the cap window sorts
-    // bounded leaf cells, not the data, and the (levelsX+1)*(levelsY+1)
-    // product explode runs over per-cell counts)
-    cappedLeafCounts(
-        inScope.select((col(pidCol) +: keyChecked) :+ bx.as("__bx") :+
-          by.as("__by"): _*),
-        pidCol, keyCols, Seq("__bx", "__by"), maxPerUnit)
-      .withColumn("__lvx", explode(sequence(lit(0), lit(levelsX))))
-      .withColumn("__idxx", expr("shiftright(__bx, __lvx)"))
-      .withColumn("__lvy", explode(sequence(lit(0), lit(levelsY))))
-      .withColumn("__idxy", expr("shiftright(__by, __lvy)"))
-      .groupBy(col("__lvx") +: col("__idxx") +: col("__lvy") +:
-        col("__idxy") +: keyCs: _*)
-      .agg(sum(col("__cb")).cast("double").as("__s"))
+    val sc = scope("dpRange2DTreeWithScale", keyCols, publicKeys,
+      productAxes(binsX, binsY): _*)
+    releaseStore(countStore(df, pidCol, sc,
+      bins2D(sc, xCol, loX, hiX, yCol, loY, hiY), maxPerUnit), sc,
+      perNodeScale, noise, noiseKind)
   }
 
   /** The SUM analogue of [[dpRange2DTree]] — clamped per-row weights on
@@ -1609,82 +1540,13 @@ object RangeTree {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(binsX >= 2 && (binsX & (binsX - 1)) == 0 && binsX <= 4096,
-      s"binsX must be a power of two in [2, 4096], got $binsX")
-    require(binsY >= 2 && (binsY & (binsY - 1)) == 0 && binsY <= 4096,
-      s"binsY must be a power of two in [2, 4096], got $binsY")
-    require(binsX.toLong * binsY <= 65536L,
-      s"binsX * binsY must be <= 65536 (got ${binsX.toLong * binsY})")
-    require(loX < hiX, s"empty x domain [$loX, $hiX)")
-    require(loY < hiY, s"empty y domain [$loY, $hiY)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(minW <= maxW, s"minW $minW > maxW $maxW")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val keyCs = keyCols.map(col)
-    val xChecked = when(xCol.isNull, raise_error(lit(
-        "dpRange2DSumTree: NULL x value for a privacy unit — nulls have " +
-          "no bin; filter or impute upstream")).cast("double"))
-      .otherwise(xCol.cast("double"))
-    val yChecked = when(yCol.isNull, raise_error(lit(
-        "dpRange2DSumTree: NULL y value for a privacy unit — nulls have " +
-          "no bin; filter or impute upstream")).cast("double"))
-      .otherwise(yCol.cast("double"))
-    val wChecked = when(weightCol.isNull, raise_error(lit(
-        "dpRange2DSumTree: NULL weight for a privacy unit — nulls have " +
-          "no clipping semantics; filter or impute upstream")).cast("double"))
-      .otherwise(weightCol.cast("double"))
-    val wClamped = least(greatest(wChecked, lit(minW)), lit(maxW))
-    val bx = least(
-      greatest(floor((xChecked - lit(loX)) / lit((hiX - loX) / binsX)),
-        lit(0.0)), lit((binsX - 1).toDouble)).cast("long")
-    val by = least(
-      greatest(floor((yChecked - lit(loY)) / lit((hiY - loY) / binsY)),
-        lit(0.0)), lit((binsY - 1).toDouble)).cast("long")
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"dpRange2DSumTree: NULL key '$n' — it would silently drop from " +
-          "the release joins; coalesce or filter upstream"))
-        .cast(df.schema(n).dataType))
-        .otherwise(c).as(n)
-    }
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val inScope = pub.fold(df)(p =>
-      df.join(p, keyCols.map(n => df(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    val store = inScope
-      .withColumn("__bx", bx)
-      .withColumn("__by", by)
-      .withColumn("__w", wClamped)
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy((col(pidCol) +: keyCs): _*)
-          .orderBy(col("__bx").asc, col("__by").asc, col("__w").asc,
-            xChecked.asc, yChecked.asc)))
-      .filter(col("__rk") <= maxPerUnit)
-      .select(col("__bx") +: col("__by") +: col("__w") +: keyChecked: _*)
-      // leaf-cell sums BEFORE the product explode (r19 optimization): the
-      // (levelsX+1)*(levelsY+1) multiplier then applies to <= binsX*binsY*
-      // keys leaf cells, not every surviving row
-      .groupBy(col("__bx") +: col("__by") +: keyCs: _*)
-      .agg(sum(col("__w")).as("__wb"))
-      .withColumn("__lvx", explode(sequence(lit(0), lit(levelsX))))
-      .withColumn("__idxx", expr("shiftright(__bx, __lvx)"))
-      .withColumn("__lvy", explode(sequence(lit(0), lit(levelsY))))
-      .withColumn("__idxy", expr("shiftright(__by, __lvy)"))
-      .groupBy(col("__lvx") +: col("__idxx") +: col("__lvy") +:
-        col("__idxy") +: keyCs: _*)
-      .agg(sum(col("__wb")).as("__s"))
-      .localCheckpoint(false) // key universe + release join share it
-    val scale = scaleForTouches(noiseKind, epsilon, delta,
-      maxPerUnit.toDouble * math.max(math.abs(minW), math.abs(maxW)),
-      (levelsX + 1) * (levelsY + 1))
-    release2DWithScale(store, keyCols, binsX, binsY, levelsX, levelsY,
-      scale, noise, noiseKind, pub)
+    val sc = scope("dpRange2DSumTree", keyCols, publicKeys,
+      productAxes(binsX, binsY): _*)
+    val scale = sc.scale(noiseKind, epsilon, delta,
+      maxPerUnit.toDouble * math.max(math.abs(minW), math.abs(maxW)))
+    releaseStore(sumStore(df, pidCol, weightCol, minW, maxW, sc,
+      bins2D(sc, xCol, loX, hiX, yCol, loY, hiY), maxPerUnit), sc, scale,
+      noise, noiseKind)
   }
 
   /** One ingest step of the 2-D tree's STREAMING face — the
@@ -1710,35 +1572,17 @@ object RangeTree {
       maxPerUnit: Long,
       publicKeys: Option[DataFrame] = None
   ): DataFrame = {
-    require(binsX >= 2 && (binsX & (binsX - 1)) == 0 && binsX <= 4096,
-      s"binsX must be a power of two in [2, 4096], got $binsX")
-    require(binsY >= 2 && (binsY & (binsY - 1)) == 0 && binsY <= 4096,
-      s"binsY must be a power of two in [2, 4096], got $binsY")
-    require(binsX.toLong * binsY <= 65536L,
-      s"binsX * binsY must be <= 65536 (got ${binsX.toLong * binsY})")
-    require(loX < hiX, s"empty x domain [$loX, $hiX)")
-    require(loY < hiY, s"empty y domain [$loY, $hiY)")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val keyCs = keyCols.map(col)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val contrib = tree2DStore(batch, pidCol, xCol, yCol, keyCols, loX,
-      hiX, binsX, loY, hiY, binsY, maxPerUnit, pub)
-    store match {
-      case None => contrib
-      case Some(st) => st.unionByName(contrib)
-        .groupBy(col("__lvx") +: col("__idxx") +: col("__lvy") +:
-          col("__idxy") +: keyCs: _*)
-        .agg(sum(col("__s")).as("__s"))
-    }
+    val sc = scope("range2DIngestStep", keyCols, publicKeys,
+      productAxes(binsX, binsY): _*)
+    countStore(batch, pidCol, sc, bins2D(sc, xCol, loX, hiX, yCol, loY, hiY),
+      maxPerUnit, store)
   }
 
   /** Publish a folded 2-D node-sum store as a noisy product tree — the
     * [[rangeTreeRelease]] analogue (one draw per node, empty nodes
-    * included, driver-drawn literal frame; same released schema as
-    * [[dpRange2DTree]], so [[range2DQueries]] consumes it unchanged). */
+    * included, driver-drawn literal frame, the store pinned unless it
+    * already is stored rows; same released schema as [[dpRange2DTree]],
+    * so [[range2DQueries]] consumes it unchanged). */
   def range2DTreeRelease(
       store: DataFrame,
       keyCols: Seq[String],
@@ -1751,22 +1595,12 @@ object RangeTree {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(binsX >= 2 && (binsX & (binsX - 1)) == 0 && binsX <= 4096,
-      s"binsX must be a power of two in [2, 4096], got $binsX")
-    require(binsY >= 2 && (binsY & (binsY - 1)) == 0 && binsY <= 4096,
-      s"binsY must be a power of two in [2, 4096], got $binsY")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
     require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val scale = scaleForTouches(noiseKind, epsilon, delta,
-      maxPerUnit.toDouble, (levelsX + 1) * (levelsY + 1))
-    release2DWithScale(store.localCheckpoint(false), keyCols, binsX,
-      binsY, levelsX, levelsY, scale, noise, noiseKind, pub)
+    val sc = scope("range2DTreeRelease", keyCols, publicKeys,
+      productAxes(binsX, binsY): _*)
+    releaseStore(store, sc,
+      sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble), noise,
+      noiseKind)
   }
 
   /** KEY-RANGE SHARDED 2-D tree — [[dpRange2DTree]] at ANY key
@@ -1793,106 +1627,12 @@ object RangeTree {
       delta: Double = 0.0,
       maxKeysPerShard: Long = 0L
   ): DataFrame = {
-    require(keyCols.nonEmpty,
-      "dpRange2DTreeSharded needs keyCols — an unkeyed tree is one " +
-        "bounded release; use dpRange2DTree")
-    require(binsX >= 2 && (binsX & (binsX - 1)) == 0 && binsX <= 4096,
-      s"binsX must be a power of two in [2, 4096], got $binsX")
-    require(binsY >= 2 && (binsY & (binsY - 1)) == 0 && binsY <= 4096,
-      s"binsY must be a power of two in [2, 4096], got $binsY")
-    require(binsX.toLong * binsY <= 65536L,
-      s"binsX * binsY must be <= 65536 (got ${binsX.toLong * binsY}) — " +
-        "one product tree's literal noise frame is (2*binsX-1)*(2*binsY-1) " +
-        "driver rows; coarsen one axis or release two 1-D trees")
-    require(loX < hiX, s"empty x domain [$loX, $hiX)")
-    require(loY < hiY, s"empty y domain [$loY, $hiY)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerUnit > 0, s"maxPerUnit must be positive, got $maxPerUnit")
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val store = tree2DStore(df, pidCol, xCol, yCol, keyCols, loX, hiX,
-      binsX, loY, hiY, binsY, maxPerUnit, pub)
-    val scale = scaleForTouches(noiseKind, epsilon, delta,
-      maxPerUnit.toDouble, (levelsX + 1) * (levelsY + 1))
-    shardedByKeyRange(store, keyCols, publicKeys,
-      (2L * binsX - 1) * (2L * binsY - 1), maxKeysPerShard, outDir) {
-      (slice, shardKeys) =>
-        release2DWithScale(slice, keyCols, binsX, binsY, levelsX, levelsY,
-          scale, noise, noiseKind, Some(shardKeys))
-    }
-  }
-
-  /** The 2-D release stage — [[releaseWithScale]] over the product node
-    * universe: one driver-drawn literal frame of (2*binsX-1)*(2*binsY-1)
-    * nodes x keys, one draw per node (empty nodes included), guarded so
-    * keys x nodes fits the driver. */
-  private def release2DWithScale(
-      store: DataFrame,
-      keyCols: Seq[String],
-      binsX: Int, binsY: Int,
-      levelsX: Int, levelsY: Int,
-      scale: Double,
-      noise: graft.core.NoiseSource,
-      kind: graft.core.NoiseKind,
-      publicKeys: Option[DataFrame]
-  ): DataFrame = {
-    val keyCs = keyCols.map(col)
-    val spark0 = store.sparkSession
-    val nNodes = (2L * binsX - 1) * (2L * binsY - 1)
-    val keyRows: Seq[org.apache.spark.sql.Row] =
-      if (keyCols.isEmpty) Seq(org.apache.spark.sql.Row.fromSeq(Seq.empty))
-      else {
-        val kd = publicKeys
-          .map(p => p.toDF(keyCols: _*)
-            .select(keyCols.map(n =>
-              col(n).cast(store.schema(n).dataType).as(n)): _*)
-            .distinct())
-          .getOrElse(store.select(keyCs: _*).distinct())
-        val maxKeys = math.max(1L, MaxDriverRows / nNodes)
-        // ONE bounded collect (r19): the maxKeys+1-th row IS the
-        // over-budget signal — same driver budget, one job not two
-        val rows0 = kd.limit((maxKeys + 1).toInt).collect()
-        require(rows0.length <= maxKeys,
-          s"dpRange2DTree: over $maxKeys distinct keys for binsX=$binsX x " +
-            s"binsY=$binsY (the guard stops collecting there) — the release " +
-            s"draws keys x $nNodes node noises driver-side; reduce the key " +
-            "cardinality, coarsen the grid, or shard by key range (the " +
-            "shardedByKeyRange loop applies verbatim)")
-        rows0.toSeq
-      }
-    val draw: () => Double = kind match {
-      case graft.core.NoiseKind.Laplace  => () => noise.laplace(scale)
-      case graft.core.NoiseKind.Gaussian => () => noise.gaussian(scale)
-    }
-    val rows: Seq[org.apache.spark.sql.Row] = for {
-      kr <- keyRows
-      lx <- 0 to levelsX
-      ix <- 0L until (binsX.toLong >> lx)
-      ly <- 0 to levelsY
-      iy <- 0L until (binsY.toLong >> ly)
-    } yield org.apache.spark.sql.Row.fromSeq(
-      lx +: ix +: ly +: iy +: kr.toSeq :+ draw())
-    val it = org.apache.spark.sql.types.IntegerType
-    val lt = org.apache.spark.sql.types.LongType
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__lvx", it, nullable = false) +:
-      org.apache.spark.sql.types.StructField("__idxx", lt, nullable = false) +:
-      org.apache.spark.sql.types.StructField("__lvy", it, nullable = false) +:
-      org.apache.spark.sql.types.StructField("__idxy", lt, nullable = false) +:
-      keyCols.map(n => store.schema(n)) :+
-      org.apache.spark.sql.types.StructField("__noise",
-        org.apache.spark.sql.types.DoubleType, nullable = false))
-    val nodes = spark0.createDataFrame(
-      new java.util.ArrayList(rows.asJava), schema)
-    nodes // broadcast: store bounded by keys x nNodes, no stats (r19)
-      .join(broadcast(store), Seq("__lvx", "__idxx", "__lvy", "__idxy") ++ keyCols,
-        "left")
-      .select(col("__lvx") +: col("__idxx") +: col("__lvy") +:
-        col("__idxy") +:
-        (keyCs :+ (coalesce(col("__s"), lit(0.0)) + col("__noise"))
-          .as("dp_count")): _*)
+    val sc = scope("dpRange2DTreeSharded", keyCols, publicKeys,
+      productAxes(binsX, binsY): _*)
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerUnit.toDouble)
+    shardedRelease(countStore(df, pidCol, sc,
+      bins2D(sc, xCol, loX, hiX, yCol, loY, hiY), maxPerUnit), sc, scale,
+      noise, noiseKind, outDir, maxKeysPerShard)
   }
 
   /** Axis-aligned BOX queries from a released 2-D tree — pure

@@ -571,10 +571,11 @@ object StreamOps {
     * [[graft.spark.RangeTree.dpRangeCountTree]] KEY-EXISTENCE note and
     * the `dp_range_selected` composition apply verbatim here.
     *
-    * Plan shape: one bounded-contribution aggregation, one node-sum
-    * aggregation (each tick explodes to its levels+1 covering nodes), a
-    * generated node/tick universe, and one decomposition join — every
-    * stage declarative, no driver loops. */
+    * Plan shape: the range tree's core over ticks — one bounded
+    * per-(unit, tick, key) cell aggregation ([[tickCells]]), the dyadic
+    * node rollup and driver-drawn release of
+    * [[graft.spark.RangeTree.release]], and one prefix-decomposition
+    * join ([[continualRelease]]). */
   def dpContinualCount(
       events: DataFrame,
       pidCol: String,
@@ -588,63 +589,69 @@ object StreamOps {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    require(horizon >= 2 && (horizon & (horizon - 1)) == 0,
-      s"horizon must be a power of two >= 2, got $horizon (the dyadic tree)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerTick > 0, s"maxPerTick must be positive, got $maxPerTick")
-    val levels = 31 - Integer.numberOfLeadingZeros(horizon) // log2(horizon)
-    // with public keys, non-public rows DROP before bounding (the batch
-    // engine's public-partitions convention) so nothing they carry can
-    // shape the release
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val perTick = continualPerTickCount(events, pidCol, tickCol, keyCols,
-      horizon, maxPerTick, pub, "dpContinualCount")
-      .localCheckpoint(false) // node sums + key universe share one result
-    val scale = graft.spark.RangeTree.treeScale(noiseKind, epsilon, delta,
-      maxPerTick.toDouble, levels)
-    continualTreeRelease(perTick, keyCols, pub, horizon, levels, scale,
-      noise, noiseKind, "dp_prefix_count")
+    val sc = graft.spark.RangeTree.scope("dpContinualCount", keyCols,
+      publicKeys, tickAxis(horizon))
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerTick.toDouble)
+    continualRelease(tickCells(events, pidCol, tickCol, sc, maxPerTick,
+      None), "__nc", sc, scale, noise, noiseKind, "dp_prefix_count")
   }
 
-  /** The bounded per-(tick, key) count cells of the continual counter —
-    * ONE definition shared by [[dpContinualCount]] and its sharded form
-    * so the bounding cannot drift: fail-loud ticks/keys, per-unit cap
-    * `least(count, maxPerTick)` within each cell. */
-  private def continualPerTickCount(events: DataFrame, pidCol: String,
-      tickCol: org.apache.spark.sql.Column, keyCols: Seq[String],
-      horizon: Int, maxPerTick: Long, pub: Option[DataFrame],
-      what: String): DataFrame = {
-    val keyCs = keyCols.map(col)
+  /** The continual family's tick axis: any power-of-two horizon. */
+  private def tickAxis(horizon: Int) =
+    graft.spark.RangeTree.axis("horizon", horizon, max = 1 << 30,
+      leaf = "__t")
+
+  /** The bounded per-(unit, tick, key) cells of the continual family —
+    * ONE definition for every continual entry point, so the bounding
+    * cannot drift: ticks fail loud outside [0, horizon) (and, for the streaming
+    * fold, at or below `frontier`), keys fail loud on NULL, public keys
+    * drop non-public rows before bounding, and each unit contributes
+    * least(count, maxPerTick) to a cell's count `__nc` and, with
+    * `value = (column, minValue, maxValue)`, its clamped per-cell sum —
+    * each value clamped into [minValue, maxValue], the cell's sum into
+    * [maxPerTick * minValue, maxPerTick * maxValue] — to `__ns`. Summed
+    * per (tick, key) and pinned: the node rollup and the key universe
+    * both read it. `counts = false` leaves `__nc` out. */
+  private def tickCells(events: DataFrame, pidCol: String,
+      tickCol: org.apache.spark.sql.Column,
+      sc: graft.spark.RangeTree.TreeScope, maxPerTick: Long,
+      value: Option[(String, Double, Double)],
+      counts: Boolean = true, frontier: Long = -1L): DataFrame = {
+    require(maxPerTick > 0, s"maxPerTick must be positive, got $maxPerTick")
+    val horizon = sc.axes.head.bins
     val u0 = tickCol.cast("long")
-    val u = when(u0.isNull || u0 < 0 || u0 >= horizon, raise_error(lit(
-        s"$what: tick outside [0, $horizon) — widen the horizon " +
-          "(power of two) or filter the input")).cast("long"))
+    val u = when(u0.isNull || u0 <= frontier || u0 >= horizon, raise_error(lit(
+        s"${sc.what}: tick outside [${frontier + 1}, $horizon) — ticks " +
+          "must fit the horizon (a power of two) and ascend past every " +
+          "tick already ingested or released (per-tick bounding is per " +
+          "step; released prefixes are final); widen the horizon, filter " +
+          "the input, or replay through the batch face")).cast("long"))
       .otherwise(u0)
-    // NULL keys fail loud: they would survive the grouping but silently
-    // vanish at the equality joins below (null != null), counting those
-    // events NOWHERE — the r11 NULL-join-conjunct lesson
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"$what: NULL key '$n' — it would silently drop from " +
-          "the release joins; coalesce or filter upstream"))
-        .cast(events.schema(n).dataType))
-        .otherwise(c).as(n)
+    val sums = value.toSeq.map { case (v, minV, maxV) =>
+      require(minV <= maxV, s"minValue $minV > maxValue $maxV")
+      // NULL values fail loud: least/greatest skip nulls, so an unguarded
+      // clamp would inject minValue silently
+      val checked = when(col(v).isNull, raise_error(lit(
+          s"${sc.what}: NULL value for a privacy unit — nulls have no " +
+            "clipping semantics; filter or impute upstream")).cast("double"))
+        .otherwise(col(v).cast("double"))
+      "__ns" -> least(greatest(sum(least(greatest(checked, lit(minV)),
+        lit(maxV))), lit(maxPerTick * minV)), lit(maxPerTick * maxV))
     }
-    val inScope = pub.fold(events)(p =>
-      events.join(p, keyCols.map(n => events(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    inScope
-      .groupBy(col(pidCol).as("__pid") +: u.as("__t") +: keyChecked: _*)
-      .agg(least(count(lit(1)), lit(maxPerTick)).cast("double").as("__n"))
-      .groupBy(col("__t") +: keyCs: _*)
-      .agg(sum(col("__n")).as("__nt"))
+    val perUnit = (if (counts) Seq("__nc" ->
+      least(count(lit(1)), lit(maxPerTick)).cast("double")) else Nil) ++ sums
+    val perCell = perUnit.map { case (n, _) => sum(col(n)).as(n) }
+    sc.rows(events)
+      .groupBy(col(pidCol).as("__pid") +: u.as("__t") +: sc.keys(events): _*)
+      .agg(perUnit.head._2.as(perUnit.head._1),
+        perUnit.tail.map { case (n, c) => c.as(n) }: _*)
+      .groupBy(col("__t") +: sc.keyCols.map(col): _*)
+      .agg(perCell.head, perCell.tail: _*)
+      .localCheckpoint(false)
   }
 
   /** KEY-RANGE SHARDED continual counter — [[dpContinualCount]] at ANY
-    * key cardinality (r15, breaking the keyed driver cap): the bounded
+    * key cardinality (past the keyed driver cap): the bounded
     * per-tick cells build in ONE distributed pass, then the key universe
     * splits into deterministic key-range shards
     * ([[graft.spark.RangeTree.shardedByKeyRange]]), each released
@@ -671,133 +678,58 @@ object StreamOps {
       delta: Double = 0.0,
       maxKeysPerShard: Long = 0L
   ): DataFrame = {
-    require(keyCols.nonEmpty,
-      "dpContinualCountSharded needs keyCols — an unkeyed release is one " +
-        "bounded tree; use dpContinualCount")
-    require(horizon >= 2 && (horizon & (horizon - 1)) == 0,
-      s"horizon must be a power of two >= 2, got $horizon (the dyadic tree)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerTick > 0, s"maxPerTick must be positive, got $maxPerTick")
-    val levels = 31 - Integer.numberOfLeadingZeros(horizon)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val perTick = continualPerTickCount(events, pidCol, tickCol, keyCols,
-      horizon, maxPerTick, pub, "dpContinualCountSharded")
-    val scale = graft.spark.RangeTree.treeScale(noiseKind, epsilon, delta,
-      maxPerTick.toDouble, levels)
-    graft.spark.RangeTree.shardedByKeyRange(perTick, keyCols, publicKeys,
-      2L * horizon - 1, maxKeysPerShard, outDir) { (slice, shardKeys) =>
-      continualTreeRelease(slice, keyCols, Some(shardKeys), horizon,
-        levels, scale, noise, noiseKind, "dp_prefix_count")
-    }
+    val sc = graft.spark.RangeTree.scope("dpContinualCountSharded", keyCols,
+      publicKeys, tickAxis(horizon))
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerTick.toDouble)
+    shardedContinual(tickCells(events, pidCol, tickCol, sc, maxPerTick,
+      None), "__nc", sc, scale, noise, noiseKind, "dp_prefix_count", outDir,
+      maxKeysPerShard)
   }
 
-  /** The shared dyadic-tree release of the continual family: per-tick true
-    * values -> node sums (each tick explodes to its levels+1 covering
-    * nodes) -> generated node/tick universes (empty nodes draw noise too)
-    * -> one decomposition join. One definition so [[dpContinualCount]] and
-    * [[dpContinualSum]] cannot drift.
-    *
-    * DRAW-ONCE (r14, the judge-found double-draw hole): node noise is
-    * drawn HERE, ON THE DRIVER, and enters the plan as a literal frame —
-    * the [[onlineContinualStep]] design. The r13 version drew in a
-    * nondeterministic UDF with no checkpoint, so every ACTION on a
-    * returned release (prefixes -> a dashboard AND
-    * [[continualWindowCounts]]) re-drew all node noise, silently
-    * multiplying the advertised epsilon spend while the docstrings
-    * promised "no new draws". The node universe is GENERATED and
-    * horizon-shaped (2*horizon-1 nodes x keys), never data-shaped, so
-    * driver draws are cheap, retry-proof, and make the released plan
-    * fully deterministic (spec-pinned with a counting source). The key
-    * universe collect is guarded — fail loud, not OOM. `scale` is the
-    * per-node Laplace b or Gaussian sigma per `kind`
-    * ([[graft.spark.RangeTree.treeScale]]). */
-  private def continualTreeRelease(perTick: DataFrame, keyCols: Seq[String],
-      pub: Option[DataFrame], horizon: Int, levels: Int, scale: Double,
+  /** The continual release: the cells' dyadic node store released by the
+    * tree core ([[graft.spark.RangeTree.release]] — one driver draw per
+    * node, empty nodes included, keys read from the pinned cells), then
+    * the PREFIX READOUT: tick t reads the nodes of its binary
+    * decomposition — level l is in the decomposition of [0, t] iff bit l
+    * of t+1 is set, at node index ((t+1) >> (l+1)) * 2 — so every prefix
+    * shares one draw per node. Returns (t, keys..., `outCol`). */
+  private def continualRelease(cells: DataFrame, value: String,
+      sc: graft.spark.RangeTree.TreeScope, scale: Double,
       noise: graft.core.NoiseSource, kind: graft.core.NoiseKind,
       outCol: String): DataFrame = {
-    val keyCs = keyCols.map(col)
-    // true node sums: tick t contributes to node (l, t >> l) per level
-    val contrib = perTick
-      .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
-      .withColumn("__idx", expr("shiftright(__t, __lvl)"))
-      .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-      .agg(sum(col("__nt")).as("__s"))
-    val spark0 = perTick.sparkSession
-    val nNodes = 2L * horizon - 1
-    val keyRows: Seq[org.apache.spark.sql.Row] =
-      if (keyCols.isEmpty) Seq(org.apache.spark.sql.Row.fromSeq(Seq.empty))
-      else {
-        // public keys CAST to perTick's key types before collecting: the
-        // literal noise frame claims perTick's schema, and a mismatched
-        // user frame must coerce or fail loud here, not corrupt rows
-        // (r14). distinct AFTER the cast — the callers' pre-cast distinct
-        // is not enough: a wider-typed frame whose values collide post-
-        // cast would otherwise yield duplicate (lvl, idx, key) noise rows
-        // with independent draws (r14 advice; releaseWithScale's order)
-        val kd = pub.map(_.select(keyCols.map(n =>
-            col(n).cast(perTick.schema(n).dataType).as(n)): _*)
-            .distinct())
-          .getOrElse(perTick.select(keyCs: _*).distinct())
-        val maxKeys = math.max(1L, graft.spark.RangeTree.MaxDriverRows / nNodes)
-        // ONE bounded collect (r19): the maxKeys+1-th row IS the
-        // over-budget signal — same driver budget, one job not two
-        val rows = kd.limit((maxKeys + 1).toInt).collect()
-        require(rows.length <= maxKeys,
-          s"continualTreeRelease: over $maxKeys distinct keys for " +
-            s"horizon=$horizon (the guard stops collecting there) — the " +
-            s"release draws keys x $nNodes node noises driver-side; " +
-            "reduce the key cardinality or shard the release by key " +
-            "range (dpContinualCountSharded does this automatically)")
-        rows.toSeq
-      }
-    val draw: () => Double = kind match {
-      case graft.core.NoiseKind.Laplace  => () => noise.laplace(scale)
-      case graft.core.NoiseKind.Gaussian => () => noise.gaussian(scale)
-    }
-    val noiseRows: Seq[org.apache.spark.sql.Row] = for {
-      kr <- keyRows
-      l <- 0 to levels
-      i <- 0L until (horizon.toLong >> l)
-    } yield org.apache.spark.sql.Row.fromSeq(l +: i +: kr.toSeq :+ draw())
-    val keyFields = keyCols.map(n => perTick.schema(n))
-    val noiseSchema = StructType(
-      StructField("__lvl", org.apache.spark.sql.types.IntegerType,
-        nullable = false) +:
-      StructField("__idx", org.apache.spark.sql.types.LongType,
-        nullable = false) +: keyFields :+
-      StructField("__noise", org.apache.spark.sql.types.DoubleType,
-        nullable = false))
-    val nodes = spark0.createDataFrame(
-      new java.util.ArrayList(noiseRows.asJava), noiseSchema)
-    // broadcast: contrib bounded by keys x (2*horizon-1), no stats (r19).
-    // Worst-case size note (r20, advice): the guard admits up to
-    // MaxDriverRows (2M) rows; at ~50 B/row ((lvl, idx, key, sum) + hash
-    // relation overhead) that is a ~100 MB broadcast at the limit —
-    // within a sane driver budget but deliberately past
-    // autoBroadcastJoinThreshold, which the explicit hint bypasses. Size
-    // the driver for MaxDriverRows-scale releases or shard by key range.
-    val noisyNodes = nodes
-      .join(broadcast(contrib), Seq("__lvl", "__idx") ++ keyCols, "left")
-      .select(col("__lvl") +: col("__idx") +:
-        (keyCs :+ (coalesce(col("__s"), lit(0.0)) + col("__noise"))
-          .as("__ns")): _*)
-    // every tick's prefix decomposition: level l is in the decomposition of
-    // [0, t] iff bit l of (t+1) is set; its node index is (t+1 >> l+1) * 2
-    val ticks0 = spark0.range(0, horizon.toLong).toDF("t")
-    val ticks =
-      if (keyCols.isEmpty) ticks0
-      else ticks0.crossJoin(broadcast(spark0.createDataFrame(
-        new java.util.ArrayList(keyRows.asJava), StructType(keyFields))))
-    val rel = ticks
+    val nodes = graft.spark.RangeTree.release(
+      graft.spark.RangeTree.dyadicRollup(cells, sc, value), cells, sc, scale,
+      noise, kind)
+    decompositions(cells.sparkSession, 0L, sc.axes.head.bins - 1L,
+        sc.axes.head.levels)
+      // broadcast: the noisy nodes are bounded by keys x (2*horizon-1)
+      .join(broadcast(nodes), Seq("__lvl", "__idx"))
+      .groupBy(col("t") +: sc.keyCols.map(col): _*)
+      .agg(sum(col("dp_count")).cast("double").as(outCol))
+  }
+
+  /** (t, __lvl, __idx): the dyadic decomposition nodes of every prefix
+    * [0, t] for t in [from, to] — pure arithmetic over the tick range. */
+  private def decompositions(spark: SparkSession, from: Long, to: Long,
+      levels: Int): DataFrame =
+    spark.range(from, to + 1).toDF("t")
       .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
       .filter(expr("(shiftright(t + 1, __lvl) & 1) = 1"))
       .withColumn("__idx", expr("shiftleft(shiftright(t + 1, __lvl + 1), 1)"))
-    // broadcast: noisyNodes bounded by the same keys x nodes budget (r19)
-    rel.join(broadcast(noisyNodes), Seq("__lvl", "__idx") ++ keyCols)
-      .groupBy(col("t") +: keyCs: _*)
-      .agg(sum(col("__ns")).cast("double").as(outCol))
-  }
+
+  /** [[continualRelease]] sharded by key range
+    * ([[graft.spark.RangeTree.shardedByKeyRange]]): each shard releases
+    * with its own keys as the public set and is written to `outDir`
+    * before the next draws. */
+  private def shardedContinual(cells: DataFrame, value: String,
+      sc: graft.spark.RangeTree.TreeScope, scale: Double,
+      noise: graft.core.NoiseSource, kind: graft.core.NoiseKind,
+      outCol: String, outDir: String, maxKeysPerShard: Long): DataFrame =
+    graft.spark.RangeTree.shardedByKeyRange(cells, sc.keyCols, sc.pub,
+      sc.nodes, maxKeysPerShard, outDir) { (slice, shardKeys) =>
+      continualRelease(slice, value, sc.copy(pub = Some(shardKeys)), scale,
+        noise, kind, outCol)
+    }
 
   /** The SUM analogue of [[dpContinualCount]] — running clamped-value sums
     * under the same binary-tree mechanism, mirroring [[dpWindowedSum]]'s
@@ -829,62 +761,13 @@ object StreamOps {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    require(horizon >= 2 && (horizon & (horizon - 1)) == 0,
-      s"horizon must be a power of two >= 2, got $horizon (the dyadic tree)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerTick > 0, s"maxPerTick must be positive, got $maxPerTick")
-    require(minValue <= maxValue, s"minValue $minValue > maxValue $maxValue")
-    val levels = 31 - Integer.numberOfLeadingZeros(horizon)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val perTick = continualPerTickSum(events, pidCol, tickCol, valueCol,
-      keyCols, horizon, maxPerTick, minValue, maxValue, pub,
-      "dpContinualSum").localCheckpoint(false)
-    val scale = graft.spark.RangeTree.treeScale(noiseKind, epsilon, delta,
-      maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)), levels)
-    continualTreeRelease(perTick, keyCols, pub, horizon, levels, scale,
-      noise, noiseKind, "dp_prefix_sum")
-  }
-
-  /** The bounded per-(tick, key) clamped-sum cells of the continual sum —
-    * ONE definition shared by [[dpContinualSum]] and its sharded form
-    * (the [[continualPerTickCount]] convention). */
-  private def continualPerTickSum(events: DataFrame, pidCol: String,
-      tickCol: org.apache.spark.sql.Column, valueCol: String,
-      keyCols: Seq[String], horizon: Int, maxPerTick: Long,
-      minValue: Double, maxValue: Double, pub: Option[DataFrame],
-      what: String): DataFrame = {
-    val keyCs = keyCols.map(col)
-    val u0 = tickCol.cast("long")
-    val u = when(u0.isNull || u0 < 0 || u0 >= horizon, raise_error(lit(
-        s"$what: tick outside [0, $horizon) — widen the horizon " +
-          "(power of two) or filter the input")).cast("long"))
-      .otherwise(u0)
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"$what: NULL key '$n' — it would silently drop from " +
-          "the release joins; coalesce or filter upstream"))
-        .cast(events.schema(n).dataType))
-        .otherwise(c).as(n)
-    }
-    // NULL values fail loud (the perUnitCells convention): least/greatest
-    // skip nulls, so an unguarded clamp would inject minValue silently
-    val checked = when(col(valueCol).isNull, raise_error(lit(
-        s"$what: NULL value for a privacy unit — nulls have no " +
-          "clipping semantics; filter or impute upstream")).cast("double"))
-      .otherwise(col(valueCol).cast("double"))
-    val clamped = least(greatest(checked, lit(minValue)), lit(maxValue))
-    val inScope = pub.fold(events)(p =>
-      events.join(p, keyCols.map(n => events(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    inScope
-      .groupBy(col(pidCol).as("__pid") +: u.as("__t") +: keyChecked: _*)
-      .agg(least(greatest(sum(clamped), lit(maxPerTick * minValue)),
-        lit(maxPerTick * maxValue)).as("__n"))
-      .groupBy(col("__t") +: keyCs: _*)
-      .agg(sum(col("__n")).as("__nt"))
+    val sc = graft.spark.RangeTree.scope("dpContinualSum", keyCols,
+      publicKeys, tickAxis(horizon))
+    val scale = sc.scale(noiseKind, epsilon, delta,
+      maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)))
+    continualRelease(tickCells(events, pidCol, tickCol, sc, maxPerTick,
+      Some((valueCol, minValue, maxValue)), counts = false), "__ns", sc,
+      scale, noise, noiseKind, "dp_prefix_sum")
   }
 
   /** KEY-RANGE SHARDED continual SUM — [[dpContinualSum]] at ANY key
@@ -912,27 +795,13 @@ object StreamOps {
       delta: Double = 0.0,
       maxKeysPerShard: Long = 0L
   ): DataFrame = {
-    require(keyCols.nonEmpty,
-      "dpContinualSumSharded needs keyCols — an unkeyed release is one " +
-        "bounded tree; use dpContinualSum")
-    require(horizon >= 2 && (horizon & (horizon - 1)) == 0,
-      s"horizon must be a power of two >= 2, got $horizon (the dyadic tree)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerTick > 0, s"maxPerTick must be positive, got $maxPerTick")
-    require(minValue <= maxValue, s"minValue $minValue > maxValue $maxValue")
-    val levels = 31 - Integer.numberOfLeadingZeros(horizon)
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val perTick = continualPerTickSum(events, pidCol, tickCol, valueCol,
-      keyCols, horizon, maxPerTick, minValue, maxValue, pub,
-      "dpContinualSumSharded")
-    val scale = graft.spark.RangeTree.treeScale(noiseKind, epsilon, delta,
-      maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)), levels)
-    graft.spark.RangeTree.shardedByKeyRange(perTick, keyCols, publicKeys,
-      2L * horizon - 1, maxKeysPerShard, outDir) { (slice, shardKeys) =>
-      continualTreeRelease(slice, keyCols, Some(shardKeys), horizon,
-        levels, scale, noise, noiseKind, "dp_prefix_sum")
-    }
+    val sc = graft.spark.RangeTree.scope("dpContinualSumSharded", keyCols,
+      publicKeys, tickAxis(horizon))
+    val scale = sc.scale(noiseKind, epsilon, delta,
+      maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)))
+    shardedContinual(tickCells(events, pidCol, tickCol, sc, maxPerTick,
+      Some((valueCol, minValue, maxValue)), counts = false), "__ns", sc,
+      scale, noise, noiseKind, "dp_prefix_sum", outDir, maxKeysPerShard)
   }
 
   /** Continual-observation DP MEAN — the [[dpWindowedMean]] recipe over
@@ -974,63 +843,22 @@ object StreamOps {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): DataFrame = {
-    require(publicKeys.isEmpty || keyCols.nonEmpty,
-      "publicKeys given but keyCols is empty — nothing to make public")
-    require(horizon >= 2 && (horizon & (horizon - 1)) == 0,
-      s"horizon must be a power of two >= 2, got $horizon (the dyadic tree)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(maxPerTick > 0, s"maxPerTick must be positive, got $maxPerTick")
-    require(minValue <= maxValue, s"minValue $minValue > maxValue $maxValue")
-    val levels = 31 - Integer.numberOfLeadingZeros(horizon)
-    val keyCs = keyCols.map(col)
-    val u0 = tickCol.cast("long")
-    val u = when(u0.isNull || u0 < 0 || u0 >= horizon, raise_error(lit(
-        s"dpContinualMean: tick outside [0, $horizon) — widen the horizon " +
-          "(power of two) or filter the input")).cast("long"))
-      .otherwise(u0)
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"dpContinualMean: NULL key '$n' — it would silently drop from " +
-          "the release joins; coalesce or filter upstream"))
-        .cast(events.schema(n).dataType))
-        .otherwise(c).as(n)
-    }
-    val checked = when(col(valueCol).isNull, raise_error(lit(
-        "dpContinualMean: NULL value for a privacy unit — nulls have no " +
-          "clipping semantics; filter or impute upstream")).cast("double"))
-      .otherwise(col(valueCol).cast("double"))
-    val clamped = least(greatest(checked, lit(minValue)), lit(maxValue))
-    val pub = publicKeys.map(p => broadcast(
-      p.toDF(keyCols: _*).distinct().localCheckpoint(false)))
-    val inScope = pub.fold(events)(p =>
-      events.join(p, keyCols.map(n => events(n) === p(n)).reduce(_ && _),
-        "left_semi"))
-    // ONE bounded-contribution pass feeds both trees
-    val perTick = inScope
-      .groupBy(col(pidCol).as("__pid") +: u.as("__t") +: keyChecked: _*)
-      .agg(least(count(lit(1)), lit(maxPerTick)).cast("double").as("__nc0"),
-        least(greatest(sum(clamped), lit(maxPerTick * minValue)),
-          lit(maxPerTick * maxValue)).as("__ns0"))
-      .groupBy(col("__t") +: keyCs: _*)
-      .agg(sum(col("__nc0")).as("__nc"), sum(col("__ns0")).as("__ns"))
-      .localCheckpoint(false) // both tree releases fold the same result
+    val sc = graft.spark.RangeTree.scope("dpContinualMean", keyCols,
+      publicKeys, tickAxis(horizon))
     // half the budget to each tree — epsilon/2 each by basic composition;
     // under Gaussian the caller's delta also splits in half per tree
-    val epsHalf = epsilon / 2.0
-    val deltaHalf = delta / 2.0
-    val bCount = graft.spark.RangeTree.treeScale(noiseKind, epsHalf,
-      deltaHalf, maxPerTick.toDouble, levels)
-    val bSum = graft.spark.RangeTree.treeScale(noiseKind, epsHalf, deltaHalf,
-      maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)), levels)
-    val cnt = continualTreeRelease(
-      perTick.select(col("__t") +: keyCs :+ col("__nc").as("__nt"): _*),
-      keyCols, pub, horizon, levels, bCount, noise, noiseKind,
+    val bCount = sc.scale(noiseKind, epsilon / 2.0, delta / 2.0,
+      maxPerTick.toDouble)
+    val bSum = sc.scale(noiseKind, epsilon / 2.0, delta / 2.0,
+      maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)))
+    // ONE bounded-contribution pass feeds both trees
+    val cells = tickCells(events, pidCol, tickCol, sc, maxPerTick,
+      Some((valueCol, minValue, maxValue)))
+    val cnt = continualRelease(cells, "__nc", sc, bCount, noise, noiseKind,
       "dp_prefix_count")
-    val sm = continualTreeRelease(
-      perTick.select(col("__t") +: keyCs :+ col("__ns").as("__nt"): _*),
-      keyCols, pub, horizon, levels, bSum, noise, noiseKind,
+    val sm = continualRelease(cells, "__ns", sc, bSum, noise, noiseKind,
       "dp_prefix_sum")
-    // broadcast: both releases are horizon x keys bounded, no stats (r19)
+    // broadcast: both releases are horizon x keys bounded, no stats
     cnt.join(broadcast(sm), Seq("t") ++ keyCols)
       .withColumn("dp_prefix_mean",
         col("dp_prefix_sum") / greatest(col("dp_prefix_count"), lit(1.0)))
@@ -1061,7 +889,7 @@ object StreamOps {
     * property via a counting noise source). */
   /** The persisted draws are CALIBRATION-SPECIFIC, so the store records
     * the noise kind and per-node scale they were drawn at and every
-    * subsequent step requires equality (r14 advice) — a mid-stream kind
+    * subsequent step requires equality — a mid-stream kind
     * or budget switch would silently mix draws at wrong scales and void
     * the advertised guarantee; "MUST be the same every step" is now
     * enforced, not a comment. */
@@ -1086,16 +914,13 @@ object StreamOps {
       noiseKind: graft.core.NoiseKind = graft.core.NoiseKind.Laplace,
       delta: Double = 0.0
   ): (DataFrame, ContinualStore) = {
-    require(horizon >= 2 && (horizon & (horizon - 1)) == 0,
-      s"horizon must be a power of two >= 2, got $horizon")
-    require(epsilon > 0 && maxPerTick > 0, "epsilon/maxPerTick must be positive")
     require(releaseThrough < horizon && releasedThrough <= releaseThrough,
       s"release range ($releasedThrough, $releaseThrough] invalid for horizon $horizon")
-    val levels = 31 - Integer.numberOfLeadingZeros(horizon)
+    val sc = graft.spark.RangeTree.scope("onlineContinualStep", keyCols, None,
+      tickAxis(horizon))
     // the calibration the store's persisted draws live at — computed up
     // front so BOTH the mismatch check and every draw below read one value
-    val scale = graft.spark.RangeTree.treeScale(noiseKind, epsilon, delta,
-      maxPerTick.toDouble, levels)
+    val scale = sc.scale(noiseKind, epsilon, delta, maxPerTick.toDouble)
     store.foreach { st =>
       require(st.noiseKind == noiseKind && st.scale == scale,
         s"onlineContinualStep: the store's persisted draws were made at " +
@@ -1111,110 +936,38 @@ object StreamOps {
     // (per-tick bounding is per step) and the last RELEASED tick (a
     // release reads final sums — late data for a released tick would
     // retroactively falsify it)
-    val frontier = math.max(prevMax, releasedThrough)
-    val u0 = tickCol.cast("long")
-    val u = when(u0.isNull || u0 < 0 || u0 >= horizon || u0 <= frontier,
-        raise_error(lit(
-          s"onlineContinualStep: tick outside ($frontier, $horizon) — ticks " +
-            "must ascend across batches (per-tick bounding is per step; " +
-            "released prefixes are final) and fit the horizon; " +
-            "replays/backfills use the batch face"))
-          .cast("long"))
-      .otherwise(u0)
-    val keyChecked = keyCs.zip(keyCols).map { case (c, n) =>
-      when(c.isNull, raise_error(lit(
-        s"onlineContinualStep: NULL key '$n' — it would silently drop " +
-          "from the release joins; coalesce or filter upstream"))
-        .cast(batch.schema(n).dataType)).otherwise(c).as(n)
-    }
-    val perTick = batch
-      .groupBy(col(pidCol).as("__pid") +: u.as("__t") +: keyChecked: _*)
-      .agg(least(count(lit(1)), lit(maxPerTick)).as("__n"))
-      .groupBy(col("__t") +: keyCs: _*)
-      .agg(sum(col("__n")).as("__nt"))
-      .localCheckpoint(false) // node contribs + max-tick agg share one result
-    val batchMax = perTick.agg(coalesce(max(col("__t")), lit(prevMax))).head().getLong(0)
-    val contrib = perTick
-      .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
-      .withColumn("__idx", expr("shiftright(__t, __lvl)"))
-      .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-      .agg(sum(col("__nt")).as("__s"))
-    val sums = (store.map(_.nodeSums) match {
-      case None => contrib
-      case Some(st) => st.unionByName(contrib)
-          .groupBy(col("__lvl") +: col("__idx") +: keyCs: _*)
-          .agg(sum(col("__s")).as("__s"))
-    }).localCheckpoint(false) // store outlives the batch; releases + next step
-    // releases for the newly completed ticks: decomposition nodes, noise
-    // drawn once per node (new draws persisted into the noise store)
+    val cells = tickCells(batch, pidCol, tickCol, sc, maxPerTick, None,
+      frontier = math.max(prevMax, releasedThrough))
+    val batchMax = cells.agg(coalesce(max(col("__t")), lit(prevMax))).head().getLong(0)
+    val sums = graft.spark.RangeTree.dyadicRollup(cells, sc, "__nc",
+        store.map(_.nodeSums))
+      .localCheckpoint(false) // store outlives the batch; releases + next step
     val spark0 = batch.sparkSession
-    val relTicks = spark0.range(releasedThrough + 1, releaseThrough + 1).toDF("t")
-    if (releaseThrough <= releasedThrough) {
-      val emptyRel = relTicks
-        .crossJoin(sums.select(keyCs: _*).limit(0))
-        .withColumn("dp_prefix_count", lit(0.0))
-      return (emptyRel, ContinualStore(sums,
-        store.map(_.nodeNoise).getOrElse(emptyNoiseFrame(spark0, sums, keyCols)),
-        batchMax, noiseKind, scale))
-    }
-    // DRIVER-SIDE draws (r13): the r12 version drew node noise in a
-    // nondeterministic UDF pinned by a lazy checkpoint — a task retry
-    // before (or during) the first materialization re-ran the UDF and
-    // handed DIFFERENT noise to the releases and the store, silently
-    // breaking draw-once; an eager checkpoint closed the hole but cost an
-    // extra traversal per step (+60% on the 3-batch fold). The node
-    // universe is GENERATED and horizon-shaped, never data-shaped, so the
-    // draws happen here in driver code — exactly once, unconditionally —
-    // and enter the plan as a local literal frame: the whole noise store
-    // is a deterministic union of literals, retry-proof with no
-    // checkpoint and no extra jobs. Driver cost is O(keys x wave nodes)
-    // plus one bounded collect of the store's coordinate set
-    // (O(keys x 2*horizon) rows) — the keys are low-cardinality and the
-    // horizon dashboard-scale by the family's documented contract.
-    val keyRows: Seq[org.apache.spark.sql.Row] =
-      if (keyCols.isEmpty) Seq(org.apache.spark.sql.Row.fromSeq(Seq.empty))
-      else {
-        // ENFORCE the documented low-cardinality contract before the
-        // collect (r13 self-review): the limit-bounded count stops
-        // scanning at the cap+1-th key, so a high-cardinality key stream
-        // fails loud instead of OOMing the driver. The cap scales with
-        // the horizon (r14 review: a flat 100k under-protected the
-        // noise-store collect below — keys x (2*horizon-1) persisted
-        // draws must fit the same driver budget as every other
-        // tree-shaped collect)
-        val maxKeys = math.max(1L,
-          graft.spark.RangeTree.MaxDriverRows / (2L * horizon - 1))
-        // ONE bounded collect (r19): the maxKeys+1-th row IS the
-        // over-budget signal — same driver budget, one job not two
-        val rows = sums.select(keyCs: _*).distinct()
-          .limit((maxKeys + 1).toInt).collect()
-        require(rows.length <= maxKeys,
-          s"onlineContinualStep: over $maxKeys distinct keys for " +
-            s"horizon=$horizon (the guard stops collecting there) — the " +
-            "continual family's universe crosses keys x 2*horizon nodes " +
-            "and its per-step draw bookkeeping is driver-side; reduce " +
-            "the key cardinality or shard the release by key range")
-        rows.toSeq
-      }
-    val keysDf =
-      if (keyCols.isEmpty) null
-      else spark0.createDataFrame(
-        new java.util.ArrayList(keyRows.asJava),
-        StructType(keyCols.map(n => sums.schema(n))))
-    val rel0 = (if (keyCols.isEmpty) relTicks else relTicks.crossJoin(broadcast(keysDf)))
-      .withColumn("__lvl", explode(sequence(lit(0), lit(levels))))
-      .filter(expr("(shiftright(t + 1, __lvl) & 1) = 1"))
-      .withColumn("__idx", expr("shiftleft(shiftright(t + 1, __lvl + 1), 1)"))
     val prevNoise = store.map(_.nodeNoise)
       .getOrElse(emptyNoiseFrame(spark0, sums, keyCols))
-    val draw: () => Double = noiseKind match {
-      case graft.core.NoiseKind.Laplace  => () => noise.laplace(scale)
-      case graft.core.NoiseKind.Gaussian => () => noise.gaussian(scale)
+    if (releaseThrough <= releasedThrough) {
+      val emptyRel = spark0.range(releasedThrough + 1, releaseThrough + 1)
+        .toDF("t").crossJoin(sums.select(keyCs: _*).limit(0))
+        .withColumn("dp_prefix_count", lit(0.0))
+      return (emptyRel,
+        ContinualStore(sums, prevNoise, batchMax, noiseKind, scale))
     }
+    // releases for the newly completed ticks: decomposition nodes, noise
+    // drawn once per node and persisted into the noise store. The draws
+    // happen in DRIVER code — exactly once, unconditionally — and enter
+    // the plan as a local literal frame: a nondeterministic noise UDF
+    // would re-run on a task retry and hand DIFFERENT noise to the
+    // releases and the store, and an eager checkpoint to stop that costs
+    // an extra traversal per step. The noise store is a deterministic
+    // union of literals. Driver cost is O(keys x wave nodes) plus one
+    // bounded collect of the store's coordinate set (keys x 2*horizon
+    // rows), under the core's key guard.
+    val keyRows = graft.spark.RangeTree.releaseKeys(sums, sc)
+    val draw = graft.spark.RangeTree.drawer(noise, noiseKind, scale)
     // decomposition nodes of this wave's ticks — pure arithmetic
     val waveNodes: Seq[(Int, Long)] =
       (releasedThrough + 1 to releaseThrough).flatMap { t =>
-        (0 to levels).collect {
+        (0 to sc.axes.head.levels).collect {
           case l if (((t + 1) >> l) & 1L) == 1L => (l, ((t + 1) >> (l + 1)) << 1)
         }
       }.distinct
@@ -1226,14 +979,18 @@ object StreamOps {
       (l, i) <- waveNodes
       if !drawnCoords((l, i, kr.toSeq))
     } yield org.apache.spark.sql.Row.fromSeq(l +: i +: kr.toSeq :+ draw())
-    val newDraws = spark0.createDataFrame(
-      new java.util.ArrayList(newRows.asJava), prevNoise.schema)
-    val allNoise = prevNoise.unionByName(newDraws)
-    val released = rel0
-      .join(sums, Seq("__lvl", "__idx") ++ keyCols, "left")
-      .join(allNoise, Seq("__lvl", "__idx") ++ keyCols)
+    val allNoise = prevNoise.unionByName(spark0.createDataFrame(
+      new java.util.ArrayList(newRows.asJava), prevNoise.schema))
+    // every key holds a draw for every wave node, so the decomposition
+    // joins the noise on the node alone and picks up each key's row.
+    // Both stores are broadcast (bounded by keys x nodes under the key
+    // guard): the tick side then streams without an exchange
+    val released = decompositions(spark0, releasedThrough + 1, releaseThrough,
+        sc.axes.head.levels)
+      .join(broadcast(allNoise), Seq("__lvl", "__idx"))
+      .join(broadcast(sums), Seq("__lvl", "__idx") ++ keyCols, "left")
       .groupBy(col("t") +: keyCs: _*)
-      .agg(sum(coalesce(col("__s"), lit(0L)) + col("__noise"))
+      .agg(sum(coalesce(col("__s"), lit(0.0)) + col("__noise"))
         .cast("double").as("dp_prefix_count"))
     (released, ContinualStore(sums, allNoise, batchMax, noiseKind, scale))
   }

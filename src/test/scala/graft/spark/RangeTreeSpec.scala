@@ -1352,4 +1352,38 @@ class RangeTreeSpec extends AnyFunSuite {
       t.filter(col("__lvx") === 0), Seq("key"), 4, 4).collect())
     assert(SparkTestSession.chainMsg(e).contains("FULL released"))
   }
+
+  test("rangeTreeRelease rejects a non-power-of-two bins") {
+    // a 48-bin release would publish a 94-node universe whose root covers
+    // only bins 0-31
+    val store = RangeTree.rangeTreeIngestStep(Seq((1L, 0.5)).toDF("uid", "v"),
+      None, "uid", col("v"), Nil, 0.0, 8.0, 64, 10L)
+    val e = intercept[IllegalArgumentException](RangeTree.rangeTreeRelease(
+      store, Nil, 48, 1.0, 10L, graft.core.NoiseSource.Zero))
+    assert(e.getMessage.contains("power of two"), e.getMessage)
+  }
+
+  test("range2DTreeRelease rejects binsX * binsY over 65536") {
+    val store = RangeTree.range2DIngestStep(
+      Seq((1L, 0.5, 0.5)).toDF("uid", "x", "y"), None, "uid", col("x"),
+      col("y"), Nil, 0.0, 1.0, 2, 0.0, 1.0, 2, 10L)
+    val e = intercept[IllegalArgumentException](RangeTree.range2DTreeRelease(
+      store, Nil, 4096, 32, 1.0, 10L, graft.core.NoiseSource.Zero))
+    assert(e.getMessage.contains("65536"), e.getMessage)
+  }
+
+  test("release entry points pin a store only while it carries its ingest plan") {
+    val df = Seq((1L, 0.5), (2L, 3.5)).toDF("uid", "v")
+    val raw = RangeTree.rangeTreeIngestStep(df, None, "uid", col("v"), Nil,
+      0.0, 8.0, 8, 10L)
+    assert(!(RangeTree.materialized(raw) eq raw))
+    val pinned = raw.localCheckpoint(false)
+    assert(RangeTree.materialized(pinned) eq pinned)
+    val view = pinned.filter(col("__lvl") > 0).select("__lvl", "__idx", "__s")
+    assert(RangeTree.materialized(view) eq view)
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_").toString
+    pinned.write.mode("overwrite").parquet(dir)
+    val read = spark.read.parquet(dir)
+    assert(RangeTree.materialized(read) eq read)
+  }
 }
