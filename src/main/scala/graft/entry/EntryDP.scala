@@ -202,15 +202,15 @@ private[graft] object EntryDP {
     }),
     "dp_count_skew_sharded" -> ((s, dir) => {
       // skew-hardening end-to-end: one hot privacy unit contributes 1e5
-      // rows to ONE partition — the Linf fan-in hazard where one bounding
-      // window would sort the whole cell in a single task. The plain plan
-      // already bounds it: Spark's Partial WindowGroupLimit keeps at most
-      // 100 rows of the cell per map task before the Linf exchange (and
-      // at most 5 partitions per unit before the L0 one), so the final
-      // window sorts a few hundred rows. Zero noise + CONSTANT hot values
-      // keep Count AND Sum deterministic (any kept 100-subset of the hot
-      // cell sums to 100), so the skew path is oracle-exact despite
-      // randomized sampling.
+      // rows to ONE partition — the Linf fan-in hazard where shipping the
+      // whole cell would funnel it through a single task. The plain plan
+      // already bounds it: the bounded sampler combines map-side, so each
+      // map task ships one row for the hot unit, holding at most 100 of
+      // the cell's rows (in at most 5 partitions), and the final sample
+      // merges one such row per upstream task. Zero noise + CONSTANT hot
+      // values keep Count AND Sum deterministic (any kept 100-subset of
+      // the hot cell sums to 100), so the skew path is oracle-exact
+      // despite randomized sampling.
       val skewed = events(s, dir)
         .select(col("user_id"), col("event_type"), col("value"))
         .unionByName(s.range(100000).select(lit(-1L).as("user_id"),

@@ -101,7 +101,7 @@ private[graft] object EntryDataflow {
     "a_sample_per_key" -> ((s, dir) => {
       // sample_fixed_per_key: uniform <=3 rows per key; the sampled rows are
       // random, the per-key counts are deterministic = least(n, 3)
-      DPEngine.sampleRowsPerKey(
+      Dataflow.sampleRowsPerKey(
         readParquet(s, s"$dir/orders.parquet").select("o_custkey", "o_orderkey"),
         Seq("o_custkey"), 3)
         .groupBy("o_custkey").agg(count(lit(1)).as("n_sampled"))

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.core._
+import graft.functions.BoundedSample
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,12 +44,13 @@ final class DPResult private[spark] (
   * every DP aggregate:
   *
   * {{{
-  * select(pid, pk..., value...)                     -- narrow, codegen
+  * select(pid, pk..., value..., rand)               -- narrow, codegen
   *   [left_semi join public partitions]             -- broadcast if small
-  *   window rn over (pid, pk) order rand, rn <= c   -- shuffle 1 (Linf bound)
-  *   groupBy(pid, pk).agg(per-unit accumulators)    -- no extra shuffle (same keys)
-  *   window rn over (pid) order rand, rn <= L0      -- shuffle 2 (L0 bound)
-  *   groupBy(pk).agg(merge accumulators)            -- shuffle 3, map-side combine
+  *   groupBy(pid).agg(bounded sample)               -- shuffle 1, map-side combine
+  *                                                  --   (L0 cells x Linf rows)
+  *   inline(sample)                                 -- one row per kept row
+  *   groupBy(pid, pk).agg(per-unit accumulators)    -- no shuffle (hash(pid) suffices)
+  *   groupBy(pk).agg(merge accumulators)            -- shuffle 2, map-side combine
   *   [outer join empty public partitions]
   *   [filter shouldKeep(pid_count)]                 -- nondeterministic UDF
   *   select(noised metrics)                         -- nondeterministic UDF
@@ -56,6 +58,9 @@ final class DPResult private[spark] (
   *
   * Everything up to the final two (per-partition-key, low-cardinality) UDFs is
   * native Catalyst — whole-stage codegen, partial aggregation, AQE all apply.
+  * The bounded sample is [[graft.functions.BoundedSample]]: it combines
+  * map-side, so each map task ships at most one row per unit, of at most
+  * L0 x Linf rows, whatever the caps and however skewed the cells.
   *
   * @param noise noise source; [[NoiseSource.Zero]] gives exact results for
   *              oracle tests (the reference's huge-epsilon trick, made exact).
@@ -297,10 +302,9 @@ final class DPEngine(
       val projected = df.select(
         columns.privacyUnit.as(PidCol) +:
           columns.partitionKeys.map { case (n, c) => c.as(n) }: _*)
-      // distinct (pid, pk), bound partitions per pid
-      val distinctPairs = projected.distinct()
-      val bounded = sampleRowsPerKey(distinctPairs, Seq(PidCol),
-        params.maxPartitionsContributed)
+      // at most l0 distinct partitions per unit
+      val sample = sampleUnits(projected, pkNames, None,
+        params.maxPartitionsContributed, 1)
       val noiseSrc = noise
       params.strategy match {
         case PartitionSelectionStrategyKind.WeightedGaussianThresholding =>
@@ -314,9 +318,9 @@ final class DPEngine(
               "use Laplace/Gaussian thresholding for preThreshold")
           val sel = WeightedGaussianSelection(spec.epsilon, spec.delta,
             params.maxPartitionsContributed)
-          val w = Window.partitionBy(col(PidCol))
-          val weighted = bounded
-            .withColumn("__graft_w", lit(1.0) / sqrt(count(lit(1)).over(w)))
+          val weighted = sample
+            .select((lit(1.0) / sqrt(size(col(SampleCol)))).as("__graft_w"),
+              inline(col(SampleCol)))
             .groupBy(pkNames.map(col): _*)
             .agg(sum(col("__graft_w")).as("__graft_wsum"))
           val keepUdf = udf((ws: Double) => sel.shouldKeep(ws, noiseSrc)).asNondeterministic()
@@ -324,7 +328,8 @@ final class DPEngine(
         case _ =>
           val selector = PartitionSelection.create(params.strategy, spec.epsilon,
             spec.delta, params.maxPartitionsContributed, params.preThreshold)
-          val counted = bounded.groupBy(pkNames.map(col): _*).agg(count(lit(1)).as(PidCntCol))
+          val counted = sample.select(inline(col(SampleCol)))
+            .groupBy(pkNames.map(col): _*).agg(count(lit(1)).as(PidCntCol))
           val keepUdf = udf((n: Long) => selector.shouldKeep(n, noiseSrc)).asNondeterministic()
           counted.filter(keepUdf(col(PidCntCol))).select(pkNames.map(col): _*)
       }
@@ -499,9 +504,8 @@ final class DPEngine(
       val projected = df.select(
         columns.privacyUnit.as(PidCol) +:
           columns.partitionKeys.map { case (n, c) => c.as(n) }: _*)
-      val distinctPairs = projected.distinct()
       def countBounded(pairs: DataFrame): DataFrame =
-        sampleRowsPerKey(pairs, Seq(PidCol), l0)
+        sampleUnits(pairs, pkNames, None, l0, 1).select(inline(col(SampleCol)))
           .groupBy(pkCols: _*).agg(count(lit(1)).as(PidCntCol))
       val noiseSrc = noise
       val scored = publicPartitions match {
@@ -511,7 +515,7 @@ final class DPEngine(
           // contribution budget must not be spent on partitions that can
           // never be released (same stage order as [[aggregate]])
           val counted = countBounded(
-            distinctPairs.join(pubKeys, pkNames, "left_semi"))
+            projected.join(pubKeys, pkNames, "left_semi"))
           val mech = Mechanisms.createAdditive(spec,
             Sensitivities(l1Given = Some(2.0 * params.k * l0)))
           val scoreUdf = udf((n: Long) =>
@@ -520,7 +524,7 @@ final class DPEngine(
             .withColumn(PidCntCol, coalesce(col(PidCntCol), lit(0L)))
             .withColumn("__graft_score", scoreUdf(col(PidCntCol)))
         case None =>
-          val counted = countBounded(distinctPairs)
+          val counted = countBounded(projected)
           val sel: ThresholdingSelection = spec.noiseStdDev match {
             case Some(nstd) => PartitionSelection.fromNoiseStd(
               PartitionSelectionStrategyKind.LaplaceThresholding,
@@ -577,7 +581,9 @@ object DPEngine {
   private[spark] val NSumCol = "__graft_nsum"
   private[spark] val NSqCol = "__graft_nsq"
   private[spark] val PidCntCol = "__graft_pidcnt"
-  private[spark] val RnCol = "__graft_rn"
+  private[spark] val SampleCol = "__graft_sample"
+  private[spark] val RowsCol = "__graft_rows"
+  private val RowPriorityCol = "__graft_rp"
   private[spark] val MetricsCol = "__graft_metrics"
   private[spark] val TreeCol = "__graft_qtree"
   private[spark] val QuantilesCol = "__graft_quantiles"
@@ -586,21 +592,26 @@ object DPEngine {
   /** The core's projected name of its `i`-th value column. */
   private[spark] def valueCol(i: Int): String = s"__graft_v$i"
 
-  /** Uniform without-replacement sample of at most `n` rows per key:
-    * `row_number() over (partition by keys order by rand())` — the window sort
-    * randomizes, the filter bounds. Uniformity holds exactly (a uniform random
-    * permutation prefix), unlike the reference's Spark path which documents
-    * non-uniformity (reference: spark_rdd_backend.py:121-124).
-    *
-    * A hot key (one unit's huge fan-out, or one huge (unit, partition)
-    * cell — the reference's documented hazard, dp_engine.py:270-271) never
-    * ships whole: for n below `spark.sql.optimizer.windowGroupLimitThreshold`
-    * (default 1000) Spark's InferWindowGroupLimit plants a Partial
-    * WindowGroupLimit before the exchange, so each map task sends at most n
-    * rows per key and the final window sorts at most n per upstream task. */
-  private[graft] def sampleRowsPerKey(df: DataFrame, keys: Seq[String], n: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(rand())
-    df.withColumn(RnCol, row_number().over(w)).filter(col(RnCol) <= n).drop(RnCol)
+  /** The bounded sample of each unit ([[graft.functions.BoundedSample]])
+    * of `df`'s rows, grouped by [[PidCol]]: the `l0` cells (distinct
+    * `keys`) of lowest priority xxhash64(unit, keys, seed), with the seed
+    * drawn here once per call — a uniform sample of the unit's cells —
+    * and in each the `c` rows of lowest `rand()` — a uniform sample of the
+    * cell's rows — carrying the `payload` columns. Without a payload the
+    * sample counts instead: each kept cell carries in [[RowsCol]] how many
+    * of its rows it kept (at most c). Returns (PidCol, SampleCol);
+    * `inline(SampleCol)` gives the kept rows (keys, payload) or cells
+    * (keys, RowsCol). */
+  private def sampleUnits(df: DataFrame, keys: Seq[String], payload: Option[Seq[String]],
+      l0: Int, c: Int): DataFrame = {
+    val seed = scala.util.Random.nextLong()
+    val cellPriority = xxhash64(col(PidCol) +: keys.map(col) :+ lit(seed): _*)
+    // the row priority is projected, not drawn in the aggregate, so
+    // Catalyst sees the nondeterminism
+    val in = if (payload.isDefined) df.withColumn(RowPriorityCol, rand()) else df
+    in.groupBy(col(PidCol)).agg(BoundedSample.column(cellPriority,
+      payload.map(_ => col(RowPriorityCol)), keys.map(k => k -> col(k)),
+      payload.getOrElse(Nil).map(k => k -> col(k)), l0, c, RowsCol).as(SampleCol))
   }
 
   /** Partitions one unit can influence: in maxContributions (L1) mode the
@@ -636,10 +647,12 @@ object DPEngine {
   }
 
   /** Sampling caps of [[boundedAggregate]], each None when not enforced:
-    * at most `rows` raw rows per (unit, partition) — per unit in total when
-    * `rowsPerUnit` (the L1 bound) — then at most `l0` partitions per unit. */
+    * at most `rows` rows per (unit, partition) — per unit in total when no
+    * `l0` bounds the partitions (the L1 bound) — and at most `l0`
+    * partitions per unit. `countRows`: the accumulators read no value, only
+    * how many rows a (unit, partition) kept ([[RowsCol]]). */
   private[spark] final case class Bounds(rows: Option[Int], l0: Option[Int],
-      rowsPerUnit: Boolean = false)
+      countRows: Boolean = false)
 
   /** One accumulator of [[boundedAggregate]]: `perUnit` aggregates one
     * (unit, partition) group of bounded rows into column `name`, `merge`
@@ -660,15 +673,21 @@ object DPEngine {
     *  1. project (pid, pk..., value...), failing loud on a NULL value;
     *  2. semi-join the public partitions (non-public rows drop before they
     *     can spend a unit's contribution budget);
-    *  3. sample the Linf or L1 bound;
+    *  3. bound each unit's contributions in one pass grouped by unit
+    *     ([[sampleUnits]]), by the mode `bounds` sets:
+    *     - Linf + L0: l0 partitions, c rows in each;
+    *     - L1 (no l0): one cell per unit, mc rows;
+    *     - `countRows`: l0 partitions, each with its kept-row count
+    *       (at most c) in [[RowsCol]] instead of its rows;
+    *     - no row cap: the per-(unit, partition) accumulators first, then
+    *       l0 of those per unit;
     *  4. aggregate each (unit, partition) into the accumulators — the
-    *     groupBy reuses the Linf window's (pid, pk) exchange;
-    *  5. sample the L0 bound;
-    *  6. merge per partition and count its units ([[PidCntCol]]: one row
+    *     groupBy reuses the sample's unit partitioning, no shuffle;
+    *  5. merge per partition and count its units ([[PidCntCol]]: one row
     *     per (pid, pk) survives, so the count is exact);
-    *  7. add missing public partitions at the accumulators' empty values,
+    *  6. add missing public partitions at the accumulators' empty values,
     *     when every accumulator has one;
-    *  8. run partition selection on the unit count.
+    *  7. run partition selection on the unit count.
     *
     * Returns the partition keys, the merged accumulators and PidCntCol.
     * A NULL value fails loud because it has no clipping semantics: Spark's
@@ -696,15 +715,26 @@ object DPEngine {
     var cur = df.select((pid.as(PidCol) +:
       partitionKeys.map { case (n, c) => c.as(n) }) ++ guarded: _*)
     publicPartitions.foreach { pub => cur = cur.join(pub, pkNames, "left_semi") }
-    bounds.rows.foreach { n =>
-      cur = sampleRowsPerKey(cur, if (bounds.rowsPerUnit) Seq(PidCol) else PidCol +: pkNames, n)
-    }
-    val grouped = cur.groupBy(col(PidCol) +: pkCols: _*)
-    val perUnit =
+    def perUnit(rows: DataFrame): DataFrame = {
+      val grouped = rows.groupBy(col(PidCol) +: pkCols: _*)
       if (accs.isEmpty) grouped.agg(Map.empty[String, String])
       else grouped.agg(accs.head.perUnit.as(accs.head.name),
         accs.tail.map(a => a.perUnit.as(a.name)): _*)
-    val bounded = bounds.l0.fold(perUnit)(sampleRowsPerKey(perUnit, Seq(PidCol), _))
+    }
+    def kept(sample: DataFrame): DataFrame =
+      sample.select(col(PidCol), inline(col(SampleCol)))
+    val valueNames = values.indices.map(valueCol)
+    val bounded = (bounds.rows, bounds.l0) match {
+      case (c, Some(l0)) if bounds.countRows =>
+        perUnit(kept(sampleUnits(cur, pkNames, None, l0, c.getOrElse(Int.MaxValue))))
+      case (Some(c), Some(l0)) =>
+        perUnit(kept(sampleUnits(cur, pkNames, Some(valueNames), l0, c)))
+      case (Some(mc), None) =>
+        perUnit(kept(sampleUnits(cur, Nil, Some(pkNames ++ valueNames), 1, mc)))
+      case (None, Some(l0)) =>
+        kept(sampleUnits(perUnit(cur), pkNames, Some(accs.map(_.name)), l0, 1))
+      case (None, None) => perUnit(cur)
+    }
     var agg = bounded.groupBy(pkCols: _*).agg(count(lit(1)).as(PidCntCol),
       accs.map(a => a.merge.as(a.name)): _*)
     if (accs.forall(_.empty.isDefined)) publicPartitions.foreach { pub =>
@@ -733,14 +763,14 @@ object DPEngine {
     * Accumulators no metric reads are not built: the centered moments feed
     * only Mean/Variance, and the plain sum only Sum without them.
     *
-    * COUNT-STYLE Linf fold: when no metric reads a row's value (only Count
-    * and PrivacyIdCount), the Linf sample's one observable is the kept-row
-    * count min(n, c) — a group's rows are interchangeable, so which c rows
-    * survive cannot reach the release. least(count, c) over the per-unit
-    * aggregate is therefore EXACTLY the sampled result (bit-identical for
-    * every rand draw) with no rand, no sort and no raw-row exchange. The L1
+    * COUNT-ONLY: when no metric reads a row's value (only Count and
+    * PrivacyIdCount), the Linf sample's one observable is the kept-row
+    * count min(n, c) — a cell's rows are interchangeable, so which c rows
+    * survive cannot reach the release. The sampler then keeps that count
+    * per cell instead of rows ([[Bounds]] `countRows`): exactly the
+    * sampled result, with no row priority and no rows shipped. The L1
     * (maxContributions) sample is NOT reducible this way — it splits one
-    * unit's budget ACROSS partitions — and keeps the window. */
+    * unit's budget ACROSS partitions — and keeps rows. */
   private[spark] def releaseMetrics(
       df: DataFrame,
       pid: Column,
@@ -767,16 +797,14 @@ object DPEngine {
     val bounds =
       if (p0.contributionBoundsAlreadyEnforced) Bounds(None, None)
       else p0.maxContributions match {
-        case Some(mc) => Bounds(Some(mc), None, rowsPerUnit = true)
-        case None => Bounds(linf.filter(_ => !countOnly), Some(p0.maxPartitionsContributed))
+        case Some(mc) => Bounds(Some(mc), None)
+        case None => Bounds(linf, Some(p0.maxPartitionsContributed), countRows = countOnly)
       }
-    // the Linf mode's cap, folded into the count when no row sample runs
-    val countCap = if (bounds.l0.isDefined) linf.filter(_ => countOnly) else None
 
     val accs = Seq.newBuilder[Acc]
     if (ps.exists(_.metrics.exists(m => m == Count || m == Mean || m == Variance)))
       accs += Acc.summed(CntCol,
-        countCap.fold(count(lit(1)))(c => least(count(lit(1)), lit(c.toLong))), 0L)
+        if (bounds.countRows) sum(col(RowsCol)) else count(lit(1)), 0L)
     built.zipWithIndex.foreach { case ((c, _, quantile, vector), i) =>
       val p = c.plan.params
       val v = col(valueCol(i))

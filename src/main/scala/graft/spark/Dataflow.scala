@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dataflow helpers that need more than a one-liner of native Spark
@@ -15,6 +16,21 @@ object Dataflow {
   private[spark] val bloomMd: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial[java.security.MessageDigest](() =>
       java.security.MessageDigest.getInstance("MD5"))
+
+  /** sample_fixed_per_key (SURVEY §2.A): a uniform sample without
+    * replacement of at most `n` rows per key,
+    * `row_number() over (partition by keys order by rand())` — the window
+    * sort randomizes, the filter bounds, and uniformity holds exactly (a
+    * uniform random permutation prefix). For n below
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000),
+    * Spark's InferWindowGroupLimit plants a Partial WindowGroupLimit before
+    * the exchange, so each map task ships at most n rows per key. */
+  def sampleRowsPerKey(df: DataFrame, keys: Seq[String], n: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(rand())
+    df.withColumn(RnCol, row_number().over(w)).filter(col(RnCol) <= n).drop(RnCol)
+  }
+
+  private val RnCol = "__graft_rn"
 
   /** Skew-resilient filter_by_key (reference: the sharded variant of
     * pipeline_dp's filter_by_key; SURVEY §2.B): a plain left-semi join

@@ -223,7 +223,8 @@ object RangeTree {
   }
 
   /** THE noisy release: the generated node universe x the key universe
-    * ([[releaseKeys]]), one draw per node, empty nodes included (a
+    * `keyRows` ([[releaseKeys]] of `keysFrom`, which also gives the key
+    * types), one draw per node, empty nodes included (a
     * missing draw would disclose emptiness), left-joined to the node
     * store `nodes`. Returns (lvl, idx per axis..., keys..., dp_count).
     *
@@ -249,10 +250,9 @@ object RangeTree {
     * disjoint key ranges release independently ([[shardedByKeyRange]])
     * and compose in parallel — zero extra budget. */
   private[graft] def release(nodes: DataFrame, keysFrom: DataFrame,
-      sc: TreeScope, scale: Double, noise: graft.core.NoiseSource,
-      kind: graft.core.NoiseKind): DataFrame = {
+      keyRows: Seq[org.apache.spark.sql.Row], sc: TreeScope, scale: Double,
+      noise: graft.core.NoiseSource, kind: graft.core.NoiseKind): DataFrame = {
     import org.apache.spark.sql.types._
-    val keyRows = releaseKeys(keysFrom, sc)
     val draw = drawer(noise, kind, scale)
     val coords = sc.axes.foldLeft(Seq(Seq.empty[Any])) { (cs, a) =>
       for (c <- cs; l <- 0 to a.levels; i <- 0L until (a.bins.toLong >> l))
@@ -278,7 +278,7 @@ object RangeTree {
   private def releaseStore(store: DataFrame, sc: TreeScope, scale: Double,
       noise: graft.core.NoiseSource, kind: graft.core.NoiseKind): DataFrame = {
     val st = materialized(store)
-    release(st, st, sc, scale, noise, kind)
+    release(st, st, releaseKeys(st, sc), sc, scale, noise, kind)
   }
 
   /** [[release]] sharded by key range ([[shardedByKeyRange]]). */
@@ -287,8 +287,8 @@ object RangeTree {
       outDir: String, maxKeysPerShard: Long): DataFrame =
     shardedByKeyRange(store, sc.keyCols, sc.pub, sc.nodes, maxKeysPerShard,
       outDir) { (slice, shardKeys) =>
-      release(slice, slice, sc.copy(pub = Some(shardKeys)), scale, noise,
-        kind)
+      val shard = sc.copy(pub = Some(shardKeys))
+      release(slice, slice, releaseKeys(slice, shard), shard, scale, noise, kind)
     }
 
   /** The COUNT trees' bounded node store: per-unit capped leaf counts

@@ -592,8 +592,9 @@ object StreamOps {
     val sc = graft.spark.RangeTree.scope("dpContinualCount", keyCols,
       publicKeys, tickAxis(horizon))
     val scale = sc.scale(noiseKind, epsilon, delta, maxPerTick.toDouble)
-    continualRelease(tickCells(events, pidCol, tickCol, sc, maxPerTick,
-      None), "__nc", sc, scale, noise, noiseKind, "dp_prefix_count")
+    val cells = tickCells(events, pidCol, tickCol, sc, maxPerTick, None)
+    continualRelease(cells, graft.spark.RangeTree.releaseKeys(cells, sc), "__nc",
+      sc, scale, noise, noiseKind, "dp_prefix_count")
   }
 
   /** The continual family's tick axis: any power-of-two horizon. */
@@ -688,18 +689,20 @@ object StreamOps {
 
   /** The continual release: the cells' dyadic node store released by the
     * tree core ([[graft.spark.RangeTree.release]] — one driver draw per
-    * node, empty nodes included, keys read from the pinned cells), then
+    * node, empty nodes included, over the key universe `keyRows` that
+    * [[graft.spark.RangeTree.releaseKeys]] read from the pinned cells), then
     * the PREFIX READOUT: tick t reads the nodes of its binary
     * decomposition — level l is in the decomposition of [0, t] iff bit l
     * of t+1 is set, at node index ((t+1) >> (l+1)) * 2 — so every prefix
     * shares one draw per node. Returns (t, keys..., `outCol`). */
-  private def continualRelease(cells: DataFrame, value: String,
+  private def continualRelease(cells: DataFrame,
+      keyRows: Seq[org.apache.spark.sql.Row], value: String,
       sc: graft.spark.RangeTree.TreeScope, scale: Double,
       noise: graft.core.NoiseSource, kind: graft.core.NoiseKind,
       outCol: String): DataFrame = {
     val nodes = graft.spark.RangeTree.release(
-      graft.spark.RangeTree.dyadicRollup(cells, sc, value), cells, sc, scale,
-      noise, kind)
+      graft.spark.RangeTree.dyadicRollup(cells, sc, value), cells, keyRows, sc,
+      scale, noise, kind)
     decompositions(cells.sparkSession, 0L, sc.axes.head.bins - 1L,
         sc.axes.head.levels)
       // broadcast: the noisy nodes are bounded by keys x (2*horizon-1)
@@ -727,8 +730,9 @@ object StreamOps {
       outCol: String, outDir: String, maxKeysPerShard: Long): DataFrame =
     graft.spark.RangeTree.shardedByKeyRange(cells, sc.keyCols, sc.pub,
       sc.nodes, maxKeysPerShard, outDir) { (slice, shardKeys) =>
-      continualRelease(slice, value, sc.copy(pub = Some(shardKeys)), scale,
-        noise, kind, outCol)
+      val shard = sc.copy(pub = Some(shardKeys))
+      continualRelease(slice, graft.spark.RangeTree.releaseKeys(slice, shard),
+        value, shard, scale, noise, kind, outCol)
     }
 
   /** The SUM analogue of [[dpContinualCount]] — running clamped-value sums
@@ -765,9 +769,10 @@ object StreamOps {
       publicKeys, tickAxis(horizon))
     val scale = sc.scale(noiseKind, epsilon, delta,
       maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)))
-    continualRelease(tickCells(events, pidCol, tickCol, sc, maxPerTick,
-      Some((valueCol, minValue, maxValue)), counts = false), "__ns", sc,
-      scale, noise, noiseKind, "dp_prefix_sum")
+    val cells = tickCells(events, pidCol, tickCol, sc, maxPerTick,
+      Some((valueCol, minValue, maxValue)), counts = false)
+    continualRelease(cells, graft.spark.RangeTree.releaseKeys(cells, sc), "__ns",
+      sc, scale, noise, noiseKind, "dp_prefix_sum")
   }
 
   /** KEY-RANGE SHARDED continual SUM — [[dpContinualSum]] at ANY key
@@ -851,13 +856,14 @@ object StreamOps {
       maxPerTick.toDouble)
     val bSum = sc.scale(noiseKind, epsilon / 2.0, delta / 2.0,
       maxPerTick * math.max(math.abs(minValue), math.abs(maxValue)))
-    // ONE bounded-contribution pass feeds both trees
+    // ONE bounded-contribution pass and one key universe feed both trees
     val cells = tickCells(events, pidCol, tickCol, sc, maxPerTick,
       Some((valueCol, minValue, maxValue)))
-    val cnt = continualRelease(cells, "__nc", sc, bCount, noise, noiseKind,
-      "dp_prefix_count")
-    val sm = continualRelease(cells, "__ns", sc, bSum, noise, noiseKind,
-      "dp_prefix_sum")
+    val keyRows = graft.spark.RangeTree.releaseKeys(cells, sc)
+    val cnt = continualRelease(cells, keyRows, "__nc", sc, bCount, noise,
+      noiseKind, "dp_prefix_count")
+    val sm = continualRelease(cells, keyRows, "__ns", sc, bSum, noise,
+      noiseKind, "dp_prefix_sum")
     // broadcast: both releases are horizon x keys bounded, no stats
     cnt.join(broadcast(sm), Seq("t") ++ keyCols)
       .withColumn("dp_prefix_mean",

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The contracts every caller of the bounded-aggregate core shares, checked
   * once per caller: a NULL value fails loud, a partition key named like an
   * emitted column fails loud, and a binding L0 cap keeps exactly l0
-  * partitions of a unit that contributes to more. */
+  * partitions of a unit that contributes to more. A binding L1 cap, which
+  * only [[DPEngine.aggregate]] takes, keeps exactly mc rows of a unit. */
 class BoundedAggregateSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -64,5 +65,19 @@ class BoundedAggregateSpec extends AnyFunSuite {
       assert(out.length == 6, out.toSeq)
       assert(out.map(_.getAs[Double](output)).sum == 2.0, out.toSeq)
     }
+  }
+
+  test("DPEngine.aggregate: a binding L1 cap keeps exactly mc rows of a unit") {
+    // the L0 fixture, but the value-1 unit has 3 rows in each of the six
+    // partitions: the values total the mc = 4 rows the L1 sample kept
+    val background = for (p <- 1 to 6; u <- 1 to 3) yield (s"b$p-$u", s"p$p", 0.0)
+    val hot = for (p <- 1 to 6; _ <- 1 to 3) yield ("hot", s"p$p", 1.0)
+    val out = release((e, df, pk, _) => e.aggregate(df,
+        AggregateParams(metrics = Seq(Metric.Sum), maxContributions = Some(4),
+          minValue = Some(0.0), maxValue = Some(1.0)),
+        DPColumns(col("pid"), Seq(pk -> col(pk)), Some(col("v")))),
+      (background ++ hot).toDF("pid", "pk", "v"), "pk", 1).collect()
+    assert(out.length == 6, out.toSeq)
+    assert(out.map(_.getAs[Double]("sum")).sum == 4.0, out.toSeq)
   }
 }

@@ -575,17 +575,20 @@ class DPEngineSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("partial WindowGroupLimit caps rows per key below each bounding exchange") {
+  test("the bounded sampler caps each unit map-side below the bounding exchange") {
     // the skew guarantee is a PLAN property: one unit's 20k-row cell (and
-    // its fan-out) must never ship whole to one task. Spark plants a
-    // Partial WindowGroupLimit before each bounding window's exchange, so
-    // each map task sends at most c rows per (unit, partition) and l0 per
-    // unit. A refactor that loses it (e.g. a window that is no longer a
-    // rank-limit filter) passes every value test — catch it here.
+    // its fan-out) must never ship whole to one task. The bounding
+    // exchange's map side is the sampler's partial aggregate, so each map
+    // task ships at most one row per unit — also for a cap above
+    // spark.sql.optimizer.windowGroupLimitThreshold (1000), where a
+    // rank-limit window would get no map-side limit. A refactor that loses
+    // it passes every value test — catch it here.
+    import graft.functions.BoundedSample
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
     import org.apache.spark.sql.functions.lit
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
@@ -593,37 +596,37 @@ class DPEngineSpec extends AnyFunSuite {
       case _ => p.children
     }
     def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
-    // nodes between p (exclusive) and the next exchange below it
-    def toExchange(p: SparkPlan): (Seq[SparkPlan], Option[ShuffleExchangeExec]) =
-      kids(p) match {
-        case Seq(e: ShuffleExchangeExec) => (Nil, Some(e))
-        case Seq(c) => val (ns, e) = toExchange(c); (c +: ns, e)
-        case _ => (Nil, None)
-      }
+    def partialSampler(p: SparkPlan): Boolean = p match {
+      case a: ObjectHashAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[BoundedSample])
+      case _ => false
+    }
     val hot = spark.range(20000)
       .select(lit("hot").as("pid"), lit("pk1").as("pk"), lit(1.0).as("v"))
       .unionByName(fixture)
-    val engine = zeroEngine()
-    val res = engine.aggregate(hot,
-      AggregateParams(metrics = Seq(Metric.Count, Metric.Sum),
-        maxPartitionsContributed = 2, maxContributionsPerPartition = Some(10),
-        minValue = Some(0.0), maxValue = Some(10.0)), roles)
-    engine.accountant.computeBudgets()
-    val out = res.dataframe
-    assert(out.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap ==
-      Map("pk1" -> 15.0, "pk2" -> 3.0)) // hot cell capped at c = 10
-    val plan = out.queryExecution.executedPlan
-    val windows = all(plan).collect { case w: WindowExec => w }
-    assert(windows.size == 2, s"expected the Linf and L0 windows:\n$plan")
-    windows.foreach { w =>
-      val exchange = toExchange(w)._2
-      assert(exchange.isDefined, s"no exchange below ${w.simpleString(200)}:\n$plan")
-      val mapSide = toExchange(exchange.get)._1
-      assert(mapSide.exists {
-        case g: WindowGroupLimitExec => g.mode == Partial
-        case _ => false
-      }, s"no Partial WindowGroupLimit below the exchange of " +
-        s"${w.simpleString(200)}:\n$plan")
+    val units = 4L // hot, u1, u2, u3
+    val mapTasks = hot.rdd.getNumPartitions
+    // hot cell capped at c; u1 and u2 add 5 rows to pk1, u1 and u3 3 to pk2
+    Seq(10 -> Map("pk1" -> 15.0, "pk2" -> 3.0),
+        2000 -> Map("pk1" -> 2005.0, "pk2" -> 3.0)).foreach { case (c, want) =>
+      val engine = zeroEngine()
+      val res = engine.aggregate(hot,
+        AggregateParams(metrics = Seq(Metric.Count, Metric.Sum),
+          maxPartitionsContributed = 2, maxContributionsPerPartition = Some(c),
+          minValue = Some(0.0), maxValue = Some(10.0)), roles)
+      engine.accountant.computeBudgets()
+      val out = res.dataframe
+      assert(out.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap == want)
+      val plan = out.queryExecution.executedPlan
+      val bounding = all(plan).collect {
+        case e: ShuffleExchangeExec if kids(e).exists(partialSampler) => e
+      }
+      assert(bounding.size == 1,
+        s"c = $c: expected one exchange fed by the sampler's partial aggregate:\n$plan")
+      val written = bounding.head.metrics("shuffleRecordsWritten").value
+      assert(written > 0 && written <= units * mapTasks,
+        s"c = $c: the bounding exchange wrote $written rows, more than one per unit " +
+          s"per map task ($units units x $mapTasks tasks):\n$plan")
     }
   }
 
@@ -898,11 +901,15 @@ class DPEngineSpec extends AnyFunSuite {
     // Count/PrivacyIdCount never read a row's value, so a BINDING Linf cap
     // must release exactly least(n, c) per (pid, pk) — deterministically,
     // independent of the sampling draw — and the plan must bound it with
-    // the map-side aggregate, not the row_number-over-rand window (r20).
+    // the sampler counting rows, not keeping them, and no window.
     def windows(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
       }.size
+    def samplers(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case s: graft.functions.BoundedSample => s.counting
+      }))
     val pub = Seq("pk1", "pk2").toDF("pk")
     val engine = zeroEngine()
     val params = AggregateParams(
@@ -916,9 +923,9 @@ class DPEngineSpec extends AnyFunSuite {
     // binding c = 2: pk1 = min(3,2) + min(2,2) = 4 rows over 2 units;
     //                pk2 = 1 + 2 = 3 rows over 2 units
     assert(got == Map("pk1" -> ((4.0, 2.0)), "pk2" -> ((3.0, 2.0))), s"got $got")
-    assert(windows(res.dataframe) == 1,
-      s"count-only metrics must plan ONE window (the L0 sample), " +
-        s"got ${windows(res.dataframe)}")
+    assert(windows(res.dataframe) == 0 && samplers(res.dataframe) == Seq(true),
+      s"count-only metrics must plan one counting sampler and no window:\n" +
+        res.dataframe.queryExecution.optimizedPlan)
     // a value-reading metric set must KEEP the Linf row sampler
     val e2 = zeroEngine()
     val res2 = e2.aggregate(fixture,
@@ -926,8 +933,9 @@ class DPEngineSpec extends AnyFunSuite {
         minValue = Some(0.0), maxValue = Some(100.0)),
       roles, publicPartitions = Some(pub))
     e2.accountant.computeBudgets()
-    assert(windows(res2.dataframe) == 2,
-      "a Sum metric reads sampled values and must keep the Linf row sampler")
+    assert(windows(res2.dataframe) == 0 && samplers(res2.dataframe) == Seq(false),
+      "a Sum metric reads sampled values and must keep the Linf row sampler:\n" +
+        res2.dataframe.queryExecution.optimizedPlan)
   }
 }
 
