@@ -582,7 +582,6 @@ object DPEngine {
   private[spark] val NSqCol = "__graft_nsq"
   private[spark] val PidCntCol = "__graft_pidcnt"
   private[spark] val SampleCol = "__graft_sample"
-  private[spark] val RowsCol = "__graft_rows"
   private val RowPriorityCol = "__graft_rp"
   private[spark] val MetricsCol = "__graft_metrics"
   private[spark] val TreeCol = "__graft_qtree"
@@ -598,10 +597,10 @@ object DPEngine {
     * drawn here once per call — a uniform sample of the unit's cells —
     * and in each the `c` rows of lowest `rand()` — a uniform sample of the
     * cell's rows — carrying the `payload` columns. Without a payload the
-    * sample counts instead: each kept cell carries in [[RowsCol]] how many
+    * sample counts instead: each kept cell carries in [[CntCol]] how many
     * of its rows it kept (at most c). Returns (PidCol, SampleCol);
     * `inline(SampleCol)` gives the kept rows (keys, payload) or cells
-    * (keys, RowsCol). */
+    * (keys, CntCol). */
   private def sampleUnits(df: DataFrame, keys: Seq[String], payload: Option[Seq[String]],
       l0: Int, c: Int): DataFrame = {
     val seed = scala.util.Random.nextLong()
@@ -611,7 +610,7 @@ object DPEngine {
     val in = if (payload.isDefined) df.withColumn(RowPriorityCol, rand()) else df
     in.groupBy(col(PidCol)).agg(BoundedSample.column(cellPriority,
       payload.map(_ => col(RowPriorityCol)), keys.map(k => k -> col(k)),
-      payload.getOrElse(Nil).map(k => k -> col(k)), l0, c, RowsCol).as(SampleCol))
+      payload.getOrElse(Nil).map(k => k -> col(k)), l0, c, CntCol).as(SampleCol))
   }
 
   /** Partitions one unit can influence: in maxContributions (L1) mode the
@@ -650,7 +649,8 @@ object DPEngine {
     * at most `rows` rows per (unit, partition) — per unit in total when no
     * `l0` bounds the partitions (the L1 bound) — and at most `l0`
     * partitions per unit. `countRows`: the accumulators read no value, only
-    * how many rows a (unit, partition) kept ([[RowsCol]]). */
+    * how many rows a (unit, partition) kept, which the sampler emits as
+    * [[CntCol]] and the merge sums directly. */
   private[spark] final case class Bounds(rows: Option[Int], l0: Option[Int],
       countRows: Boolean = false)
 
@@ -678,7 +678,8 @@ object DPEngine {
     *     - Linf + L0: l0 partitions, c rows in each;
     *     - L1 (no l0): one cell per unit, mc rows;
     *     - `countRows`: l0 partitions, each with its kept-row count
-    *       (at most c) in [[RowsCol]] instead of its rows;
+    *       (at most c) in [[CntCol]] instead of its rows — already one
+    *       row per (unit, partition), so step 4 is skipped;
     *     - no row cap: the per-(unit, partition) accumulators first, then
     *       l0 of those per unit;
     *  4. aggregate each (unit, partition) into the accumulators — the
@@ -726,7 +727,7 @@ object DPEngine {
     val valueNames = values.indices.map(valueCol)
     val bounded = (bounds.rows, bounds.l0) match {
       case (c, Some(l0)) if bounds.countRows =>
-        perUnit(kept(sampleUnits(cur, pkNames, None, l0, c.getOrElse(Int.MaxValue))))
+        kept(sampleUnits(cur, pkNames, None, l0, c.getOrElse(Int.MaxValue)))
       case (Some(c), Some(l0)) =>
         perUnit(kept(sampleUnits(cur, pkNames, Some(valueNames), l0, c)))
       case (Some(mc), None) =>
@@ -803,8 +804,7 @@ object DPEngine {
 
     val accs = Seq.newBuilder[Acc]
     if (ps.exists(_.metrics.exists(m => m == Count || m == Mean || m == Variance)))
-      accs += Acc.summed(CntCol,
-        if (bounds.countRows) sum(col(RowsCol)) else count(lit(1)), 0L)
+      accs += Acc.summed(CntCol, count(lit(1)), 0L)
     built.zipWithIndex.foreach { case ((c, _, quantile, vector), i) =>
       val p = c.plan.params
       val v = col(valueCol(i))

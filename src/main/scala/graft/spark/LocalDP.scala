@@ -1,7 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.NoiseSource
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** LOCAL differential privacy — the trust model the central engine
   * ([[DPEngine]]) cannot express: each privacy unit RANDOMIZES ITS OWN
@@ -105,6 +109,7 @@ object LocalDP {
           lit(p - q), 9).as("est_count"))
   }
 
+
   /** LOCAL-DP frequency over LARGE domains — OPTIMAL LOCAL HASHING
     * (Wang-Blocki-Li-Jha, USENIX Security 2017): where [[ldpFrequency]]'s
     * unary encoding sends k bits per unit (unusable at token/URL-scale
@@ -114,15 +119,15 @@ object LocalDP {
     * — the hash choice is public randomness, independent of the value,
     * so it carries no privacy budget and may be deterministic; the md5
     * derivation, NOT pid arithmetic, is the engine's portable
-    * public-randomness convention shared with [[ldpHeavyHitters]]:
+    * public-randomness convention shared by every OLH mechanism here:
     * pid % seedSpace correlates with any pid-derived value structure,
     * concentrating a value's holders on correlated seeds so the fixed
     * parameter table's deterministic collisions bias cross-value
     * estimates — exactly the hazard the heavy-hitter walk measured) and
-    * randomizes
-    * the bucket: truthful with p = e^eps / (e^eps + g - 1), else uniform
-    * over the other g - 1 buckets — eps-LDP by direct likelihood ratio
-    * (worst-case output probability ratio p / ((1-p)/(g-1)) = e^eps).
+    * randomizes the bucket: truthful with p = e^eps / (e^eps + g - 1),
+    * else uniform over the other g - 1 buckets — eps-LDP by direct
+    * likelihood ratio (worst-case output probability ratio
+    * p / ((1-p)/(g-1)) = e^eps).
     *
     * Estimation is support counting, debiased: C(v) = #reports whose
     * bucket equals H(seed, v); under a pairwise-uniform hash a non-true
@@ -149,14 +154,15 @@ object LocalDP {
     * Contracts (the [[ldpFrequency]] conventions): closed PUBLIC domain,
     * out-of-domain and NULL values fail loud, one report per unit (the
     * deterministic lowest value), pid must cast to BIGINT (the seed is
-    * replayed in SQL). Zero noise: uniform() = 0.5 < p whenever
-    * p > 1/2 (any eps with fractional e^eps, e.g. eps = 1 => p =
-    * e/(e+2) = 0.576), so every unit reports its TRUE bucket and the
-    * whole release — hash, supports (true hits PLUS deterministic
-    * cross-value hash collisions), debiasing — replays as a
-    * deterministic SQL derivation over the literal parameter table. The
-    * estimator's statistical behavior is spec-pinned under the real
-    * randomizer. Retry composition caveat: same as [[ldpFrequency]].
+    * replayed in SQL), and a release with no reports fails loud. Zero
+    * noise: uniform() = 0.5 < p whenever p > 1/2 (any eps with
+    * fractional e^eps, e.g. eps = 1 => p = e/(e+2) = 0.576), so every
+    * unit reports its TRUE bucket and the whole release — hash, supports
+    * (true hits PLUS deterministic cross-value hash collisions),
+    * debiasing — replays as a deterministic SQL derivation over the
+    * literal parameter table. The estimator's statistical behavior is
+    * spec-pinned under the real randomizer. Retry composition caveat:
+    * same as [[ldpFrequency]].
     *
     * Output: (value, n_reports, support, est_count) — one row per
     * domain value. */
@@ -166,13 +172,12 @@ object LocalDP {
       valueCol: Column,
       domain: Seq[String],
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
-  ): DataFrame =
-    olhEstimate(
-      olhReportCells(df, pidCol, valueCol, domain, epsilon, noise,
-        seedSpace).localCheckpoint(false), // draws final; read 3x below
-      domain, epsilon, seedSpace)
+  ): DataFrame = {
+    val (cal, dom) = (Olh(epsilon, seedSpace), Domain("ldpFrequencyOLH", domain))
+    frequencyEstimate(dom, cal, frequencyCells(dom, cal, df, pidCol, valueCol, noise))
+  }
 
   /** GROUPED LDP frequency — [[ldpFrequencyOLH]] per PUBLIC metadata key
     * (r17): the deployed-telemetry slice question ("value frequencies
@@ -200,106 +205,17 @@ object LocalDP {
       valueCol: Column,
       domain: Seq[String],
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
   ): DataFrame = {
-    require(domain.nonEmpty && domain.distinct.size == domain.size,
-      "ldpFrequencyOLHByKey: domain must be non-empty and duplicate-free")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val gi = g.toInt
-    val domainArr = domain.toArray
-    val domainIdx: Map[String, Int] = domainArr.zipWithIndex.toMap
-    val params = olhParams(seedSpace)
-    val spark0 = df.sparkSession
-    val checkedV = when(valueCol.isNull, raise_error(lit(
-        "ldpFrequencyOLHByKey: NULL value for a privacy unit — filter " +
-          "or impute upstream")).cast("string"))
-      .otherwise(valueCol.cast("string"))
-    val checkedK = when(keyCol.isNull, raise_error(lit(
-        "ldpFrequencyOLHByKey: NULL group key — the key is public " +
-          "collector metadata and every report must carry one; filter " +
-          "or impute upstream")).cast("string"))
-      .otherwise(keyCol.cast("string"))
-    val seedCol = when(col("__pidn").isNull, raise_error(lit(
-        "ldpFrequencyOLHByKey: pid does not cast to BIGINT — the public " +
-          "hash seed derives from it")).cast("long"))
-      .otherwise(pmod(expr(
-        "CAST(conv(substr(md5(CAST(__pidn AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"), lit(seedSpace.toLong)))
-    // ONE report per unit: the deterministic lowest (key, value) pair —
-    // a per-unit MIN over the lexicographic struct, so it aggregates
-    // map-side (r19: the row_number window sorted every row)
-    val perUnit = df
-      .select(col(pidCol).try_cast("bigint").as("__pidn"),
-        checkedK.as("__k"), checkedV.as("__v"))
-      .groupBy(col("__pidn"))
-      .agg(min(struct(col("__k"), col("__v"))).as("__kv"))
-      .select(col("__kv.__k").as("__k"), seedCol.as("__seed"),
-        col("__kv.__v").as("__v"))
-    val report = udf((seed: Long, v: String) => {
-      val idx = domainIdx.getOrElse(v, -1)
-      if (idx < 0) throw new IllegalArgumentException(
-        s"ldpFrequencyOLHByKey: value '$v' outside the public domain — " +
-          "the domain is closed; extend it or filter upstream")
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, idx.toLong, g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    val cells = perUnit
-      .select(col("__k"), col("__seed"),
-        report(col("__seed"), col("__v")).as("__y"))
-      .groupBy(col("__k"), col("__seed"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false) // draws final; n, seeds, grid read it
-    val nPerKey = cells.groupBy(col("__k")).agg(sum(col("__c")).as("__n"))
-    val domDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        domainArr.toIndexedSeq.zipWithIndex.map { case (v, i) =>
-          org.apache.spark.sql.Row(i.toLong, v) }, 8),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__i",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType, nullable = false))))
-    val paramsDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        params.indices.map(s => org.apache.spark.sql.Row(
-          s.toLong, params(s)._1, params(s)._2)), 4),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__seed",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // grid: observed (key, seed) pairs x the domain, hash codegen'd
-    val keySeeds = cells.select(col("__k"), col("__seed")).distinct()
-    val grid = domDf
-      .crossJoin(broadcast(keySeeds.join(paramsDf, "__seed")))
-      .withColumn("__h",
-        ((col("__a") * col("__i") + col("__b")) % lit(OlhPrime)) % lit(g))
-    val cellsR = cells.select(col("__k").as("__ck"),
-      col("__seed").as("__cseed"), col("__y"), col("__c"))
-    grid.join(broadcast(cellsR),
-        col("__k") === col("__ck") && col("__seed") === col("__cseed")
-          && col("__h") === col("__y"), "left")
-      .groupBy(col("__k"), col("value"))
-      .agg(coalesce(sum(col("__c")), lit(0L)).as("support"))
-      .join(broadcast(nPerKey), "__k")
-      .select(col("__k").as("key"), col("value"),
-        col("__n").as("n_reports"), col("support"),
-        round((col("support") - col("__n") * lit(invG)) / lit(p - invG), 9)
-          .as("est_count"))
+    val (cal, dom) = (Olh(epsilon, seedSpace), Domain("ldpFrequencyOLHByKey", domain))
+    val units = olhUnits(dom.what, df, pidCol,
+      Seq("__k" -> keyGuard(dom.what, keyCol), "__v" -> dom.guard(valueCol)), 1, cal)
+    supportEstimate(dom.what, cal,
+        olhCells(units, Seq("__k"), dom.index(col("__v")), cal, noise), Seq("__k"),
+        dom.frame(df.sparkSession), Seq("value"))
+      .select(col("__k").as("key"), col("value"), col("__n").as("n_reports"),
+        col("support"), col("est_count"))
   }
 
   /** One micro-batch step of STREAMING OLH frequency — the LDP family's
@@ -324,156 +240,39 @@ object LocalDP {
       valueCol: Column,
       domain: Seq[String],
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
   ): DataFrame = {
-    val cells = olhReportCells(batch, pidCol, valueCol, domain, epsilon,
-      noise, seedSpace)
-    store match {
-      case None => cells
-      case Some(st) => st.unionByName(cells)
-        .groupBy(col("__seed"), col("__y"))
-        .agg(sum(col("__c")).as("__c"))
-    }
+    val (cal, dom) = (Olh(epsilon, seedSpace), Domain("olhIngestStep", domain))
+    val cells = frequencyCells(dom, cal, batch, pidCol, valueCol, noise)
+    store.fold(cells)(st => st.unionByName(cells)
+      .groupBy(col("__seed"), col("__y")).agg(sum(col("__c")).as("__c")))
   }
 
-  /** The report-randomize-collapse stage shared by [[ldpFrequencyOLH]]
-    * and [[olhIngestStep]]: one report per unit, the eps-LDP bucket
-    * randomizer, collapsed to (seed, bucket) count cells. The caller
-    * pins the result (draws are final once materialized). */
-  private def olhReportCells(
-      df: DataFrame,
-      pidCol: String,
-      valueCol: Column,
-      domain: Seq[String],
-      epsilon: Double,
-      noise: graft.core.NoiseSource,
-      seedSpace: Int
-  ): DataFrame = {
-    require(domain.nonEmpty, "ldpFrequencyOLH: empty domain")
-    require(domain.distinct.size == domain.size,
-      s"ldpFrequencyOLH: duplicate domain values")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val domainArr = domain.toArray
-    val params = olhParams(seedSpace)
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpFrequencyOLH: NULL value for a privacy unit — nulls have no " +
-          "bucket; filter or impute upstream")).cast("string"))
-      .otherwise(valueCol.cast("string"))
-    // try_cast: a non-numeric pid flows to the shaped error instead of
-    // ANSI's CAST_INVALID_INPUT mid-task
-    // seed from the MD5 of the pid (the ldpHeavyHitters convention) —
-    // pid % seedSpace would correlate with pid-derived value structure
-    val seedCol = when(col("__pidn").isNull, raise_error(lit(
-        "ldpFrequencyOLH: pid does not cast to BIGINT — the public hash " +
-          "seed derives from it; map units to numeric ids upstream"))
-        .cast("long"))
-      .otherwise(pmod(expr(
-        "CAST(conv(substr(md5(CAST(__pidn AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"), lit(seedSpace.toLong)))
-    // one report per unit: the deterministic lowest value (L0 = 1) — a
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = df
-      .select(col(pidCol).try_cast("bigint").as("__pidn"), checked.as("__v"))
-      .groupBy(col("__pidn")).agg(min(col("__v")).as("__v"))
-      .select(seedCol.as("__seed"), col("__v"))
-    // the LOCAL randomizer (nondeterministic — the ldpFrequency
-    // conventions incl. the retry-composition caveat): true bucket via
-    // the public hash, kept w.p. p, else uniform over the OTHER g - 1
-    val gi = g.toInt
-    // O(1) lookup — indexOf's linear scan is an O(n*k) hot path at
-    // token-scale domains, the very regime this mechanism exists for
-    val domainIdx: Map[String, Int] = domainArr.zipWithIndex.toMap
-    val report = udf((seed: Long, v: String) => {
-      val idx = domainIdx.getOrElse(v, -1)
-      if (idx < 0) throw new IllegalArgumentException(
-        s"ldpFrequencyOLH: value '$v' outside the public domain — the " +
-          "domain is closed (an unlisted value would misstate n in the " +
-          "debiasing); extend the domain or filter upstream")
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, idx.toLong, g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    // reports collapse FIRST: <= seedSpace * g cells — everything
-    // downstream is data-size-independent
-    perUnit
-      .select(col("__seed"), report(col("__seed"), col("__v")).as("__y"))
-      .groupBy(col("__seed"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-  }
-
-  /** The debiased frequency readout over an OLH cells frame (a pinned
-    * [[olhReportCells]] result or an [[olhIngestStep]] store): support
-    * counting against the candidate grid, (C - n/g)/(p - 1/g) debias.
-    * Pure post-processing — reads the cells three times, so pass a
-    * checkpointed/stored frame. Output: (value, n_reports, support,
-    * est_count). */
+  /** The debiased frequency readout over an OLH cells frame (an
+    * [[olhIngestStep]] store): support counting against the candidate
+    * grid, (C - n/g)/(p - 1/g) debias. Pure post-processing; a store
+    * that is not already stored rows is pinned once, and an empty store
+    * fails loud. Output: (value, n_reports, support, est_count). */
   def olhEstimate(
       pinned: DataFrame,
       domain: Seq[String],
       epsilon: Double,
       seedSpace: Int = 1024
-  ): DataFrame = {
-    require(domain.nonEmpty && domain.distinct.size == domain.size,
-      "olhEstimate: domain must be non-empty and duplicate-free")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val domainArr = domain.toArray
-    val params = olhParams(seedSpace)
-    val spark0 = pinned.sparkSession
-    val nDf = pinned.agg(sum(col("__c")).as("__n"))
-    val seeds = pinned.select(col("__seed")).distinct()
-    val domDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        domainArr.toIndexedSeq.zipWithIndex.map { case (v, i) =>
-          org.apache.spark.sql.Row(i.toLong, v) }, 8),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__i",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType, nullable = false))))
-    val paramsDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        params.indices.map(s => org.apache.spark.sql.Row(
-          s.toLong, params(s)._1, params(s)._2)), 4),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__seed",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // candidate grid: domain x observed seeds (with their literal hash
-    // params), hash as a codegen'd integer EXPRESSION — mirrors olhHash
-    // exactly (same constants P and g, non-negative operands, every
-    // intermediate < 2^63, so Spark % == SQL % == Scala %)
-    val grid = domDf
-      .crossJoin(broadcast(seeds.join(paramsDf, "__seed")))
-      .withColumn("__h",
-        ((col("__a") * col("__i") + col("__b")) % lit(OlhPrime)) % lit(g))
-    val cellsR = pinned.withColumnRenamed("__seed", "__cseed")
-    grid.join(broadcast(cellsR),
-        col("__seed") === col("__cseed") && col("__h") === col("__y"),
-        "left")
-      .groupBy(col("value"))
-      .agg(coalesce(sum(col("__c")), lit(0L)).as("support"))
-      .crossJoin(broadcast(nDf))
+  ): DataFrame =
+    frequencyEstimate(Domain("olhEstimate", domain), Olh(epsilon, seedSpace), pinned)
+
+  /** The (seed, bucket) cells of [[ldpFrequencyOLH]] and its ingest step. */
+  private def frequencyCells(dom: Domain, cal: Olh, df: DataFrame, pidCol: String,
+      valueCol: Column, noise: NoiseSource): DataFrame =
+    olhCells(olhUnits(dom.what, df, pidCol, Seq("__v" -> dom.guard(valueCol)), 1, cal),
+      Nil, dom.index(col("__v")), cal, noise)
+
+  /** The frequency readout over (seed, bucket) cells. */
+  private def frequencyEstimate(dom: Domain, cal: Olh, cells: DataFrame): DataFrame =
+    supportEstimate(dom.what, cal, cells, Nil, dom.frame(cells.sparkSession), Seq("value"))
       .select(col("value"), col("__n").as("n_reports"), col("support"),
-        round((col("support") - col("__n") * lit(invG)) / lit(p - invG), 9)
-          .as("est_count"))
-  }
+        col("est_count"))
 
   /** LOCAL-DP HEAVY HITTERS — prefix-extension discovery (the PEM shape,
     * Wang-Li-Jha "Locally Differentially Private Heavy Hitter
@@ -518,11 +317,17 @@ object LocalDP {
       valueCol: Column,
       hexLen: Int,
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       k: Int = 8,
       rounds: Int = 2,
       seedSpace: Int = 1024
-  ): DataFrame = {
+  ): DataFrame = heavyHitters("ldpHeavyHitters", df, pidCol, valueCol, hexLen,
+    epsilon, noise, k, rounds, seedSpace)
+
+  /** [[ldpHeavyHitters]] with its errors naming `what`. */
+  private def heavyHitters(what: String, df: DataFrame, pidCol: String,
+      valueCol: Column, hexLen: Int, epsilon: Double, noise: NoiseSource, k: Int,
+      rounds: Int, seedSpace: Int): DataFrame = {
     // 10, not 15: olhHash multiplies A (< P ~ 1e6) by the prefix's
     // numeric value, so the product stays under 2^63 only while the
     // prefix is <= 16^10 - 1 ~ 1.1e12 (1e6 * 1.1e12 ~ 1.1e18 < 9.2e18);
@@ -536,115 +341,42 @@ object LocalDP {
     require(rounds >= 1 && hexLen % rounds == 0,
       s"rounds ($rounds) must divide hexLen ($hexLen) — equal prefix steps")
     require(k >= 1, s"k must be >= 1, got $k")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
+    val cal = Olh(epsilon, seedSpace)
     val step = hexLen / rounds
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val gi = g.toInt
-    val params = olhParams(seedSpace)
-    val spark0 = df.sparkSession
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpHeavyHitters: NULL value for a privacy unit — filter or " +
-          "impute upstream")).cast("string"))
-      .otherwise(when(valueCol.cast("string").rlike(s"^[0-9a-f]{$hexLen}$$"),
-        valueCol.cast("string"))
-        .otherwise(raise_error(lit(
-          s"ldpHeavyHitters: value is not a $hexLen-char lowercase-hex " +
-            "string — encode the open domain to fixed-length hex " +
-            "upstream (hash or pad)")).cast("string")))
-    val pidN = when(col("__pidn").isNull, raise_error(lit(
-        "ldpHeavyHitters: pid does not cast to BIGINT — group and seed " +
-          "derive from it")).cast("long"))
-      .otherwise(col("__pidn"))
-    // one report per unit: the deterministic lowest value — a per-unit
-    // MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = df
-      .select(col(pidCol).try_cast("bigint").as("__pidn"), checked.as("__v"))
-      .groupBy(col("__pidn")).agg(min(col("__v")).as("__v"))
-      .select(pidN.as("__pid"), col("__v"))
-      // group and seed from the MD5 of the pid (the engine's portable
-      // public-randomness convention), NOT pid arithmetic: pid % rounds
-      // correlates with any pid-linear value structure — measured: a
-      // fixture deriving values from user_id % 4 put each heavy value in
-      // ONLY ONE parity group, so the round estimating its prefix never
-      // saw its holders and discovery collapsed. The hash decorrelates
-      // group membership from every value pattern.
-      .withColumn("__h64", expr(
-        "CAST(conv(substr(md5(CAST(__pid AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"))
-      .withColumn("__grp", pmod(col("__h64"), lit(rounds.toLong)))
-      .withColumn("__seed",
-        pmod(expr(s"__h64 div $rounds"), lit(seedSpace.toLong)))
+    val v = nonNull(what, valueCol, "string")
+    val hex = when(!v.rlike(s"^[0-9a-f]{$hexLen}$$"), raise_error(lit(
+        s"$what: value is not a $hexLen-char lowercase-hex string — encode " +
+          "the open domain to fixed-length hex upstream (hash or pad)"))
+        .cast("string"))
+      .otherwise(v)
+    // group and seed from the MD5 of the pid, NOT pid arithmetic: pid %
+    // rounds correlates with any pid-linear value structure — measured: a
+    // fixture deriving values from user_id % 4 put each heavy value in
+    // ONLY ONE parity group, so the round estimating its prefix never saw
+    // its holders and discovery collapsed
+    val units = olhUnits(what, df, pidCol, Seq("__v" -> hex), rounds, cal)
       .localCheckpoint(false) // every round reads its group slice
-    val report = udf((seed: Long, prefix: String) => {
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, java.lang.Long.parseLong(prefix, 16), g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    val paramsDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        params.indices.map(s => org.apache.spark.sql.Row(
-          s.toLong, params(s)._1, params(s)._2)), 4),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__seed",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val hexDigits = spark0.range(0, 16).select(
+    val asIdx = (c: Column) => conv(c, 16, 10).cast("bigint")
+    val hexDigits = df.sparkSession.range(0, 16).select(
       lower(lpad(expr("hex(id)"), 1, "0")).as("__d"))
+    def extend(prefixes: DataFrame, steps: Int): DataFrame =
+      (0 until steps).foldLeft(prefixes)((acc, _) => acc.crossJoin(hexDigits)
+        .select(concat(col("value"), col("__d")).as("value")))
     // level-1 candidates: ALL step-length prefixes (16^step rows, public)
-    var cands = (1 until step).foldLeft(
-      hexDigits.select(col("__d").as("value"))) { (acc, _) =>
-      acc.crossJoin(hexDigits).select(concat(col("value"), col("__d"))
-        .as("value"))
-    }
+    var cands = extend(hexDigits.select(col("__d").as("value")), step - 1)
     var out: DataFrame = null
     for (r <- 0 until rounds) {
-      val pfxLen = step * (r + 1)
-      val grpReports = perUnit.filter(col("__grp") === r.toLong)
-        .select(col("__seed"),
-          report(col("__seed"), substring(col("__v"), 1, pfxLen)).as("__y"))
-      val cells = grpReports.groupBy(col("__seed"), col("__y"))
-        .agg(count(lit(1)).as("__c"))
-        .localCheckpoint(false) // draws final; n + seeds + grid read it
-      val nDf = cells.agg(coalesce(sum(col("__c")), lit(0L)).as("__n"))
-      val seeds = cells.select(col("__seed")).distinct()
-      val grid = cands
-        .crossJoin(broadcast(seeds.join(paramsDf, "__seed")))
-        .withColumn("__h",
-          ((col("__a") * expr("CAST(conv(value, 16, 10) AS BIGINT)") +
-            col("__b")) % lit(OlhPrime)) % lit(g))
-      val cellsR = cells.withColumnRenamed("__seed", "__cseed")
-      val est = grid.join(broadcast(cellsR),
-          col("__seed") === col("__cseed") && col("__h") === col("__y"),
-          "left")
-        .groupBy(col("value"))
-        .agg(coalesce(sum(col("__c")), lit(0L)).as("support"))
-        .crossJoin(broadcast(nDf))
+      val cells = olhCells(units.filter(col("__grp") === r), Nil,
+        asIdx(substring(col("__v"), 1, step * (r + 1))), cal, noise)
+      val top = supportEstimate(what, cal, cells, Nil,
+          cands.withColumn("__idx", asIdx(col("value"))), Seq("value"))
         .select(col("value"), col("__n").as("n_reports"), col("support"),
-          round((col("support") - col("__n") * lit(invG)) / lit(p - invG),
-            9).as("est_count"))
-      val top = est
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("est_count").desc, col("value").asc)).cast("long"))
+          col("est_count"))
+        .withColumn("rk", row_number().over(Window
+          .orderBy(col("est_count").desc, col("value").asc)).cast("long"))
         .filter(col("rk") <= k)
-        .localCheckpoint(false) // next round extends it; final round returns
-      if (r < rounds - 1)
-        cands = (0 until step).foldLeft(top.select(col("value"))) {
-          (acc, _) => acc.crossJoin(hexDigits)
-            .select(concat(col("value"), col("__d")).as("value"))
-        }.localCheckpoint(false)
+        .localCheckpoint(false) // the next round extends it; the last returns it
+      if (r < rounds - 1) cands = extend(top.select(col("value")), step)
       else out = top
     }
     out.select("value", "est_count", "support", "n_reports", "rk")
@@ -694,153 +426,13 @@ object LocalDP {
       hi: Double,
       bins: Int,
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
-  ): DataFrame =
-    ldpTreeEstimate(
-      ldpTreeReportCells(df, pidCol, valueCol, lo, hi, bins, epsilon,
-        noise, seedSpace)
-        .localCheckpoint(false), // draws final; n, seeds and grid read it
-      bins, epsilon, seedSpace)
-
-  /** The report-randomize-collapse stage of [[ldpRangeTree]] — one
-    * (__lvl, __seed, __y) -> count cells frame, <= (levels+1) *
-    * seedSpace * g rows of plain ADDITIVE state. Shared by the one-shot
-    * tree and the streaming fold so the randomizer cannot drift. */
-  private def ldpTreeReportCells(
-      df: DataFrame,
-      pidCol: String,
-      valueCol: Column,
-      lo: Double,
-      hi: Double,
-      bins: Int,
-      epsilon: Double,
-      noise: graft.core.NoiseSource,
-      seedSpace: Int
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
-    require(lo < hi, s"empty domain [$lo, $hi)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val nLevels = levels + 1
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val gi = g.toInt
-    val width = (hi - lo) / bins
-    val params = olhParams(seedSpace)
-    val spark0 = df.sparkSession
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpRangeTree: NULL value for a privacy unit — filter or impute " +
-          "upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val clamped = least(greatest(checked, lit(lo)),
-      lit(hi - width / 2)) // clamp INTO the top bin (the tree convention)
-    val pidN = when(col("__pidn").isNull, raise_error(lit(
-        "ldpRangeTree: pid does not cast to BIGINT — group and seed " +
-          "derive from it")).cast("long"))
-      .otherwise(col("__pidn"))
-    // one report per unit: the deterministic lowest clamped value — a
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = df
-      .select(col(pidCol).try_cast("bigint").as("__pidn"),
-        clamped.as("__val"))
-      .groupBy(col("__pidn")).agg(min(col("__val")).as("__val"))
-      .select(pidN.as("__pid"),
-        floor((col("__val") - lit(lo)) / lit(width)).cast("long")
-          .as("__bin"))
-      .withColumn("__h64", expr(
-        "CAST(conv(substr(md5(CAST(__pid AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"))
-      .withColumn("__lvl", pmod(col("__h64"), lit(nLevels.toLong))
-        .cast("int"))
-      .withColumn("__seed",
-        pmod(expr(s"__h64 div $nLevels"), lit(seedSpace.toLong)))
-      .withColumn("__idx", expr("shiftright(__bin, __lvl)"))
-    val report = udf((seed: Long, idx: Long) => {
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, idx, g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    // reports collapse FIRST: <= nLevels * seedSpace * g cells.
-    // The cells carry their CALIBRATION (__eps, __bins, __sspace — r19
-    // advice): a cells frame is only additive with, and only estimable
-    // under, the exact calibration it was drawn at (g buckets, levels+1
-    // groups, flip probability), so the fold and the readout
-    // require-match these tags instead of trusting a doc-only contract.
-    val cells = perUnit
-      .select(col("__lvl"), col("__seed"),
-        report(col("__seed"), col("__idx")).as("__y"))
-      .groupBy(col("__lvl"), col("__seed"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__eps", lit(epsilon))
-      .withColumn("__bins", lit(bins.toLong))
-      .withColumn("__sspace", lit(seedSpace.toLong))
-      .localCheckpoint(false) // draws final; n, seeds and grid read it
-    cells
-  }
-
-  /** Require a cells frame's calibration tags to match the caller's
-    * (epsilon, bins, seedSpace) — the [[ldpLongitudinalMeanStep]] ledger
-    * convention for the tree family. Fails loud on an untagged (pre-r19)
-    * store: folding or estimating at a silently different calibration
-    * yields meaningless numbers, which is strictly worse than asking the
-    * operator to restart the stream. */
-  /** Schema half of the calibration check — free, no Spark job. */
-  private def requireTreeTagColumns(cells: DataFrame, opName: String): Unit = {
-    val cols = cells.columns.toSet
-    require(Seq("__eps", "__bins", "__sspace").forall(cols.contains),
-      s"$opName: the cells store carries no calibration tags — it was " +
-        "built by a pre-tagging version; rebuild the store (the tags are " +
-        "what prevent folding across incompatible calibrations)")
-  }
-
-  /** Value half against the 6-slot min/max row produced by
-    * [[calibrationAggs]] at `offset` — shared by the fold's eager check
-    * and the readout's piggybacked check so the message cannot drift. */
-  private def requireTagRow(r: org.apache.spark.sql.Row, offset: Int,
-      opName: String, epsilon: Double, bins: Int, seedSpace: Int): Unit =
-    if (!r.isNullAt(offset)) { // empty store: nothing to contradict
-      require(
-        r.getDouble(offset) == epsilon && r.getDouble(offset + 1) == epsilon &&
-        r.getLong(offset + 2) == bins.toLong &&
-        r.getLong(offset + 3) == bins.toLong &&
-        r.getLong(offset + 4) == seedSpace.toLong &&
-        r.getLong(offset + 5) == seedSpace.toLong,
-        s"$opName: the cells store was drawn at eps in " +
-          s"[${r.getDouble(offset)}, ${r.getDouble(offset + 1)}], bins in " +
-          s"[${r.getLong(offset + 2)}, ${r.getLong(offset + 3)}], " +
-          s"seedSpace in [${r.getLong(offset + 4)}, ${r.getLong(offset + 5)}] " +
-          s"but this call passes (eps = $epsilon, bins = $bins, " +
-          s"seedSpace = $seedSpace) — calibration must stay fixed across " +
-          "a stream; start a new store to recalibrate")
-    }
-
-  private def calibrationAggs: Seq[Column] = Seq(
-    min(col("__eps")), max(col("__eps")),
-    min(col("__bins")), max(col("__bins")),
-    min(col("__sspace")), max(col("__sspace")))
-
-  /** Eager full calibration check, used by the FOLD (fail-fast at fold
-    * time, before incompatible counts could union; the store is
-    * calibration-bounded — <= nLevels * seedSpace * g rows, checkpointed
-    * per the step contract — so this one small aggregation per
-    * micro-batch is the cost of failing loud BEFORE state is written).
-    * The readout piggybacks the same check on its existing nTotal
-    * aggregation instead — zero extra scans there. */
-  private def requireTreeCalibration(cells: DataFrame, opName: String,
-      epsilon: Double, bins: Int, seedSpace: Int): Unit = {
-    requireTreeTagColumns(cells, opName)
-    val r = cells.agg(calibrationAggs.head, calibrationAggs.tail: _*).head()
-    requireTagRow(r, 0, opName, epsilon, bins, seedSpace)
+    val cal = Olh(epsilon, seedSpace)
+    treeEstimate("ldpRangeTree", cal,
+      treeCells("ldpRangeTree", df, pidCol, None, valueCol, lo, hi, bins, cal, noise),
+      None, bins)
   }
 
   /** One micro-batch step of the STREAMING LDP range tree (r18 — the
@@ -854,8 +446,8 @@ object LocalDP {
     * unit's rows through ONE batch or epsilon composes per batch.
     * Callers checkpoint the returned store between steps. Epsilon,
     * bins and seedSpace must stay fixed across a stream (cells are
-    * calibration-shaped: g buckets, levels+1 groups) — ENFORCED (r19):
-    * the store carries __eps/__bins/__sspace tags and both the fold and
+    * calibration-shaped: g buckets, levels+1 groups) — ENFORCED: the
+    * store carries __eps/__bins/__sspace tags and both the fold and
     * [[ldpTreeEstimate]] fail loud on a mismatch. */
   def ldpTreeIngestStep(
       batch: DataFrame,
@@ -866,103 +458,110 @@ object LocalDP {
       hi: Double,
       bins: Int,
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
   ): DataFrame = {
-    val cells = ldpTreeReportCells(batch, pidCol, valueCol, lo, hi, bins,
-      epsilon, noise, seedSpace)
-    store match {
-      case None => cells
-      case Some(st) =>
-        // calibration tags must match before the stores become additive
-        // (r19): a store drawn at another epsilon/bins/seedSpace has a
-        // different cell grid and flip probability — summing would yield
-        // meaningless estimates with no error anywhere downstream
-        requireTreeCalibration(st, "ldpTreeIngestStep", epsilon, bins,
-          seedSpace)
-        st.unionByName(cells)
-          .groupBy(col("__lvl"), col("__seed"), col("__y"),
-            col("__eps"), col("__bins"), col("__sspace"))
-          .agg(sum(col("__c")).as("__c"))
+    val what = "ldpTreeIngestStep"
+    val cal = Olh(epsilon, seedSpace)
+    val cells = treeCells(what, batch, pidCol, None, valueCol, lo, hi, bins, cal, noise)
+      .withColumn("__eps", lit(epsilon))
+      .withColumn("__bins", lit(bins.toLong))
+      .withColumn("__sspace", lit(seedSpace.toLong))
+    store.fold(cells) { st =>
+      requireTreeCalibration(st, what, epsilon, bins, seedSpace)
+      st.unionByName(cells)
+        .groupBy(Seq("__lvl", "__seed", "__y", "__eps", "__bins", "__sspace").map(col): _*)
+        .agg(sum(col("__c")).as("__c"))
     }
   }
 
-  /** The debiased whole-tree readout over an LDP tree cells frame (a
-    * pinned [[ldpTreeReportCells]] result or a [[ldpTreeIngestStep]]
-    * store): estimates every node of the dyadic universe and releases
+  /** The debiased whole-tree readout over an [[ldpTreeIngestStep]]
+    * store: estimates every node of the dyadic universe and releases
     * the (__lvl, __idx, dp_count) tree the central readouts consume.
-    * Pure post-processing — calling it never spends budget. */
+    * Pure post-processing — calling it never spends budget. The debias
+    * constants must be the ones the reports were drawn with, so a store
+    * tagged with another calibration (or untagged) fails loud, as does
+    * an empty one. */
   def ldpTreeEstimate(
       cells: DataFrame,
       bins: Int,
       epsilon: Double,
       seedSpace: Int = 1024
   ): DataFrame = {
+    val cal = Olh(epsilon, seedSpace)
+    treeLevels(bins)
+    requireTreeCalibration(cells, "ldpTreeEstimate", epsilon, bins, seedSpace)
+    treeEstimate("ldpTreeEstimate", cal, cells, None, bins)
+  }
+
+  /** log2(bins) of a 1-D LDP tree: bins a power of two in [2, 4096]. */
+  private def treeLevels(bins: Int): Int = {
     require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
       s"bins must be a power of two in [2, 4096], got $bins")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    // the debias constants below (g, p) must be the constants the reports
-    // were DRAWN with — the tags make a mismatch fail loud (r19). The
-    // value check rides the existing nTotal aggregation: zero extra scans
-    requireTreeTagColumns(cells, "ldpTreeEstimate")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val nLevels = levels + 1
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val params = olhParams(seedSpace)
-    val spark0 = cells.sparkSession
-    val nTotalRow = cells.agg(coalesce(sum(col("__c")), lit(0L)),
-      calibrationAggs: _*).head()
-    requireTagRow(nTotalRow, 1, "ldpTreeEstimate", epsilon, bins, seedSpace)
-    val nTotal = nTotalRow.getLong(0)
-    require(nTotal > 0, "ldpRangeTree: no reporting units")
-    val nPerLvl = cells.groupBy(col("__lvl"))
-      .agg(sum(col("__c")).as("__nl"))
-    // every level must have reporters — a zero-group level has no
-    // estimator and a silent zero would fabricate empty subtrees
-    val lvlCount = nPerLvl.count()
-    require(lvlCount == nLevels.toLong,
-      s"ldpRangeTree: only $lvlCount of $nLevels dyadic levels have " +
-        "reporting units — n too small to field levels+1 groups; " +
-        "collect more reports or coarsen bins")
-    val paramsDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        params.indices.map(s => org.apache.spark.sql.Row(
-          s.toLong, params(s)._1, params(s)._2)), 4),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__seed",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // the GENERATED node universe x each level's observed seeds
-    val nodes = spark0.range(0, nLevels.toLong).toDF("__lvl")
+    31 - Integer.numberOfLeadingZeros(bins)
+  }
+
+  /** The report stage of the 1-D trees: each unit's lowest (key, value)
+    * clamped INTO [lo, hi) (the tree convention: the top edge lands in the
+    * top bin), its md5 level __lvl and its node index bin >> __lvl.
+    * Returns (__k?, __lvl, __seed, __y, __c) cells. */
+  private def treeCells(what: String, df: DataFrame, pidCol: String,
+      keyCol: Option[Column], valueCol: Column, lo: Double, hi: Double, bins: Int,
+      cal: Olh, noise: NoiseSource): DataFrame = {
+    val nLevels = treeLevels(bins) + 1
+    require(lo < hi, s"empty domain [$lo, $hi)")
+    val width = (hi - lo) / bins
+    val keys = keyCol.map(k => "__k" -> keyGuard(what, k)).toSeq
+    val value = least(greatest(nonNull(what, valueCol, "double"), lit(lo)),
+      lit(hi - width / 2))
+    val units = olhUnits(what, df, pidCol, keys :+ ("__val" -> value), nLevels, cal)
+      .withColumnRenamed("__grp", "__lvl")
+      .withColumn("__bin", floor((col("__val") - lit(lo)) / lit(width)).cast("long"))
+    olhCells(units, keys.map(_._1) :+ "__lvl", expr("shiftright(__bin, __lvl)"), cal, noise)
+  }
+
+  /** The tree release over 1-D tree cells: the generated node universe
+    * ((__lvl, __idx), 2*bins-1 nodes), each level's estimate scaled to
+    * its population (all reports, or the key's). Returns
+    * (__k?, __lvl, __idx, dp_count). */
+  private def treeEstimate(what: String, cal: Olh, cells: DataFrame, key: Option[String],
+      bins: Int): DataFrame = {
+    val nLevels = treeLevels(bins) + 1
+    val spark = cells.sparkSession
+    val nodes = spark.range(0, nLevels.toLong).toDF("__lvl")
       .withColumn("__lvl", col("__lvl").cast("int"))
-      .join(spark0.range(0, bins.toLong).toDF("__idx"),
+      .join(spark.range(0, bins.toLong).toDF("__idx"),
         col("__idx") < expr(s"shiftright(${bins.toLong}, __lvl)"))
-    val seeds = cells.select(col("__lvl").as("__slvl"), col("__seed"))
-      .distinct()
-    val grid = nodes
-      .join(broadcast(seeds.join(paramsDf, "__seed")),
-        col("__lvl") === col("__slvl"))
-      .withColumn("__h",
-        ((col("__a") * col("__idx") + col("__b")) % lit(OlhPrime)) % lit(g))
-    val cellsR = cells.select(col("__lvl").as("__clvl"),
-      col("__seed").as("__cseed"), col("__y"), col("__c"))
-    grid.join(broadcast(cellsR),
-        col("__lvl") === col("__clvl") && col("__seed") === col("__cseed")
-          && col("__h") === col("__y"), "left")
-      .groupBy(col("__lvl"), col("__idx"))
-      .agg(coalesce(sum(col("__c")), lit(0L)).as("__sup"))
-      .join(broadcast(nPerLvl), "__lvl")
-      .select(col("__lvl"), col("__idx"),
-        round((col("__sup") - col("__nl") * lit(invG)) / lit(p - invG) *
-          (lit(nTotal.toDouble) / col("__nl")), 9).as("dp_count"))
+    val keys = key.toSeq
+    supportEstimate(what, cal, cells, keys :+ "__lvl", nodes, Seq("__idx"),
+        Some(Scale(keys, nLevels, "dyadic levels")))
+      .select((keys ++ Seq("__lvl", "__idx")).map(col) :+ col("est_count").as("dp_count"): _*)
+  }
+
+  /** Require a tree cells store's calibration tags (__eps, __bins,
+    * __sspace) to match the caller's: a store is only additive with, and
+    * only estimable under, the calibration it was drawn at (g buckets,
+    * levels+1 groups, flip probability), so the fold and the readout fail
+    * loud on a mismatch — and on an untagged store, which must be
+    * rebuilt. One small aggregation over the calibration-bounded store. */
+  private def requireTreeCalibration(cells: DataFrame, what: String,
+      epsilon: Double, bins: Int, seedSpace: Int): Unit = {
+    val tags = Seq[(String, Any)]("__eps" -> epsilon, "__bins" -> bins.toLong,
+      "__sspace" -> seedSpace.toLong)
+    require(tags.forall(t => cells.columns.contains(t._1)),
+      s"$what: the cells store carries no calibration tags — it was " +
+        "built by a pre-tagging version; rebuild the store (the tags are " +
+        "what prevent folding across incompatible calibrations)")
+    val aggs = tags.flatMap(t => Seq(min(col(t._1)), max(col(t._1))))
+    val r = cells.agg(aggs.head, aggs.tail: _*).head()
+    if (!r.isNullAt(0)) // empty store: nothing to contradict
+      require(tags.indices.forall(i =>
+          r.get(2 * i) == tags(i)._2 && r.get(2 * i + 1) == tags(i)._2),
+        s"$what: the cells store was drawn at eps in [${r.get(0)}, " +
+          s"${r.get(1)}], bins in [${r.get(2)}, ${r.get(3)}], seedSpace in " +
+          s"[${r.get(4)}, ${r.get(5)}] but this call passes (eps = $epsilon, " +
+          s"bins = $bins, seedSpace = $seedSpace) — calibration must stay " +
+          "fixed across a stream; start a new store to recalibrate")
   }
 
   /** GROUPED LOCAL-DP RANGE TREE (r18) — [[ldpRangeTree]] per PUBLIC
@@ -998,129 +597,15 @@ object LocalDP {
       hi: Double,
       bins: Int,
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
   ): DataFrame = {
-    require(bins >= 2 && (bins & (bins - 1)) == 0 && bins <= 4096,
-      s"bins must be a power of two in [2, 4096], got $bins")
-    require(lo < hi, s"empty domain [$lo, $hi)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    val levels = 31 - Integer.numberOfLeadingZeros(bins)
-    val nLevels = levels + 1
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val gi = g.toInt
-    val width = (hi - lo) / bins
-    val params = olhParams(seedSpace)
-    val spark0 = df.sparkSession
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpRangeTreeByKey: NULL value for a privacy unit — filter or " +
-          "impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val checkedK = when(keyCol.isNull, raise_error(lit(
-        "ldpRangeTreeByKey: NULL group key — the key is public " +
-          "collector metadata and every report must carry one")).cast("string"))
-      .otherwise(keyCol.cast("string"))
-    val clamped = least(greatest(checked, lit(lo)), lit(hi - width / 2))
-    val pidN = when(col("__pidn").isNull, raise_error(lit(
-        "ldpRangeTreeByKey: pid does not cast to BIGINT — group and " +
-          "seed derive from it")).cast("long"))
-      .otherwise(col("__pidn"))
-    // one report per unit across keys: the lowest (key, value) pair — a
-    // per-unit MIN over the lexicographic struct, aggregated map-side
-    // (r19: was a row_number window)
-    val perUnit = df
-      .select(col(pidCol).try_cast("bigint").as("__pidn"),
-        checkedK.as("__k"), clamped.as("__val"))
-      .groupBy(col("__pidn"))
-      .agg(min(struct(col("__k"), col("__val"))).as("__kv"))
-      .select(col("__pidn"), col("__kv.__k").as("__k"),
-        col("__kv.__val").as("__val"))
-      .select(pidN.as("__pid"), col("__k"),
-        floor((col("__val") - lit(lo)) / lit(width)).cast("long")
-          .as("__bin"))
-      .withColumn("__h64", expr(
-        "CAST(conv(substr(md5(CAST(__pid AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"))
-      .withColumn("__lvl", pmod(col("__h64"), lit(nLevels.toLong))
-        .cast("int"))
-      .withColumn("__seed",
-        pmod(expr(s"__h64 div $nLevels"), lit(seedSpace.toLong)))
-      .withColumn("__idx", expr("shiftright(__bin, __lvl)"))
-    val report = udf((seed: Long, idx: Long) => {
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, idx, g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    val cells = perUnit
-      .select(col("__k"), col("__lvl"), col("__seed"),
-        report(col("__seed"), col("__idx")).as("__y"))
-      .groupBy(col("__k"), col("__lvl"), col("__seed"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
-    val nPerKey = cells.groupBy(col("__k"))
-      .agg(sum(col("__c")).as("__nk"))
-    val nKeys = nPerKey.count()
-    require(nKeys > 0, "ldpRangeTreeByKey: no reporting units")
-    val nPerKeyLvl = cells.groupBy(col("__k"), col("__lvl"))
-      .agg(sum(col("__c")).as("__nkl"))
-    // every OBSERVED key must field all levels (a zero-group level
-    // would fabricate an empty subtree for that key); name the keys
-    val short = nPerKeyLvl.groupBy(col("__k"))
-      .agg(count(lit(1)).as("__nl"))
-      .filter(col("__nl") < nLevels.toLong)
-      .select(col("__k")).limit(20).collect().map(_.getString(0))
-    require(short.isEmpty,
-      s"ldpRangeTreeByKey: key(s) ${short.mkString(", ")} have " +
-        s"reporting units at fewer than $nLevels dyadic levels — their " +
-        "cohorts are too small to field the level split; collect more " +
-        "reports, coarsen bins, or merge keys")
-    val paramsDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        params.indices.map(s => org.apache.spark.sql.Row(
-          s.toLong, params(s)._1, params(s)._2)), 4),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__seed",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // the GENERATED node universe x each key-level's observed seeds
-    val nodes = spark0.range(0, nLevels.toLong).toDF("__lvl")
-      .withColumn("__lvl", col("__lvl").cast("int"))
-      .join(spark0.range(0, bins.toLong).toDF("__idx"),
-        col("__idx") < expr(s"shiftright(${bins.toLong}, __lvl)"))
-    val seeds = cells.select(col("__k").as("__sk"),
-      col("__lvl").as("__slvl"), col("__seed")).distinct()
-    val grid = nodes
-      .join(broadcast(seeds.join(paramsDf, "__seed")),
-        col("__lvl") === col("__slvl"))
-      .withColumn("__h",
-        ((col("__a") * col("__idx") + col("__b")) % lit(OlhPrime)) % lit(g))
-    val cellsR = cells.select(col("__k").as("__ck"),
-      col("__lvl").as("__clvl"), col("__seed").as("__cseed"),
-      col("__y"), col("__c"))
-    grid.join(broadcast(cellsR),
-        col("__sk") === col("__ck") && col("__lvl") === col("__clvl")
-          && col("__seed") === col("__cseed") && col("__h") === col("__y"),
-        "left")
-      .groupBy(col("__sk").as("key"), col("__lvl"), col("__idx"))
-      .agg(coalesce(sum(col("__c")), lit(0L)).as("__sup"))
-      .join(broadcast(nPerKeyLvl.withColumnRenamed("__k", "key")),
-        Seq("key", "__lvl"))
-      .join(broadcast(nPerKey.withColumnRenamed("__k", "key")), Seq("key"))
-      .select(col("key"), col("__lvl"), col("__idx"),
-        round((col("__sup") - col("__nkl") * lit(invG)) / lit(p - invG) *
-          (col("__nk").cast("double") / col("__nkl")), 9).as("dp_count"))
+    val what = "ldpRangeTreeByKey"
+    val cal = Olh(epsilon, seedSpace)
+    treeEstimate(what, cal,
+        treeCells(what, df, pidCol, Some(keyCol), valueCol, lo, hi, bins, cal, noise),
+        Some("__k"), bins)
+      .withColumnRenamed("__k", "key")
   }
 
   /** LOCAL-DP 2-D RANGE TREE — the dyadic PRODUCT mechanism under the
@@ -1166,9 +651,10 @@ object LocalDP {
       loX: Double, hiX: Double, binsX: Int,
       loY: Double, hiY: Double, binsY: Int,
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
   ): DataFrame = {
+    val what = "ldpRange2DTree"
     def ckBins(b: Int, n: String): Unit = require(
       b >= 2 && (b & (b - 1)) == 0 && b <= 256,
       s"$n must be a power of two in [2, 256] (the group count is " +
@@ -1177,131 +663,40 @@ object LocalDP {
     ckBins(binsX, "binsX"); ckBins(binsY, "binsY")
     require(loX < hiX, s"empty x domain [$loX, $hiX)")
     require(loY < hiY, s"empty y domain [$loY, $hiY)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    val levelsX = 31 - Integer.numberOfLeadingZeros(binsX)
-    val levelsY = 31 - Integer.numberOfLeadingZeros(binsY)
-    val nLvlX = levelsX + 1; val nLvlY = levelsY + 1
+    val cal = Olh(epsilon, seedSpace)
+    val nLvlX = 32 - Integer.numberOfLeadingZeros(binsX)
+    val nLvlY = 32 - Integer.numberOfLeadingZeros(binsY)
     val nGroups = nLvlX * nLvlY
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
-    val gi = g.toInt
-    val widthX = (hiX - loX) / binsX
-    val widthY = (hiY - loY) / binsY
-    val params = olhParams(seedSpace)
-    val spark0 = df.sparkSession
-    def checked(c: Column, n: String) = when(c.isNull, raise_error(lit(
-        s"ldpRange2DTree: NULL $n value for a privacy unit — filter or " +
-          "impute upstream")).cast("double"))
-      .otherwise(c.cast("double"))
-    val clampedX = least(greatest(checked(xCol, "x"), lit(loX)),
-      lit(hiX - widthX / 2))
-    val clampedY = least(greatest(checked(yCol, "y"), lit(loY)),
-      lit(hiY - widthY / 2))
-    val pidN = when(col("__pidn").isNull, raise_error(lit(
-        "ldpRange2DTree: pid does not cast to BIGINT — group and seed " +
-          "derive from it")).cast("long"))
-      .otherwise(col("__pidn"))
-    // one report per unit: the deterministic lowest (x, y) pair — a
-    // per-unit MIN over the lexicographic struct, aggregated map-side
-    // (r19: was a row_number window)
-    val perUnit = df
-      .select(col(pidCol).try_cast("bigint").as("__pidn"),
-        clampedX.as("__x"), clampedY.as("__y0"))
-      .groupBy(col("__pidn"))
-      .agg(min(struct(col("__x"), col("__y0"))).as("__xy"))
-      .select(col("__pidn"), col("__xy.__x").as("__x"),
-        col("__xy.__y0").as("__y0"))
-      .select(pidN.as("__pid"),
-        floor((col("__x") - lit(loX)) / lit(widthX)).cast("long")
-          .as("__bx"),
-        floor((col("__y0") - lit(loY)) / lit(widthY)).cast("long")
-          .as("__by"))
-      .withColumn("__h64", expr(
-        "CAST(conv(substr(md5(CAST(__pid AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"))
-      .withColumn("__grp", pmod(col("__h64"), lit(nGroups.toLong))
-        .cast("int"))
+    def clamped(c: Column, lo: Double, hi: Double, bins: Int, axis: String) =
+      least(greatest(nonNull(what, c, "double", s"$axis value"), lit(lo)),
+        lit(hi - (hi - lo) / bins / 2))
+    def bin(c: String, lo: Double, hi: Double, bins: Int) =
+      floor((col(c) - lit(lo)) / lit((hi - lo) / bins)).cast("long")
+    val units = olhUnits(what, df, pidCol, Seq(
+        "__x" -> clamped(xCol, loX, hiX, binsX, "x"),
+        "__y0" -> clamped(yCol, loY, hiY, binsY, "y")), nGroups, cal)
       .withColumn("__lvx", (col("__grp") % nLvlX).cast("int"))
       .withColumn("__lvy", (col("__grp") / nLvlX).cast("int"))
-      .withColumn("__seed",
-        pmod(expr(s"__h64 div $nGroups"), lit(seedSpace.toLong)))
-      // the product-node index inside group (lvx, lvy): row-major over
-      // (ix, iy) with iy's stride = this group's y-node count
-      .withColumn("__idx",
-        expr(s"shiftright(__bx, __lvx) * shiftright($binsY, __lvy) " +
-          "+ shiftright(__by, __lvy)"))
-    val report = udf((seed: Long, idx: Long) => {
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, idx, g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    // reports collapse FIRST: <= nGroups * seedSpace * g cells
-    val cells = perUnit
-      .select(col("__lvx"), col("__lvy"), col("__seed"),
-        report(col("__seed"), col("__idx")).as("__y"))
-      .groupBy(col("__lvx"), col("__lvy"), col("__seed"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false) // draws final; n, seeds and grid read it
-    val nTotal = cells.agg(coalesce(sum(col("__c")), lit(0L)))
-      .head().getLong(0)
-    require(nTotal > 0, "ldpRange2DTree: no reporting units")
-    val nPerGrp = cells.groupBy(col("__lvx"), col("__lvy"))
-      .agg(sum(col("__c")).as("__ng"))
-    val grpCount = nPerGrp.count()
-    require(grpCount == nGroups.toLong,
-      s"ldpRange2DTree: only $grpCount of $nGroups level-pair groups " +
-        "have reporting units — n too small to field the product " +
-        "split; collect more reports or coarsen bins")
-    val paramsDf = spark0.createDataFrame(
-      spark0.sparkContext.parallelize(
-        params.indices.map(s => org.apache.spark.sql.Row(
-          s.toLong, params(s)._1, params(s)._2)), 4),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__seed",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__a",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    // the GENERATED product-node universe x each group's observed seeds
-    val nodes = spark0.range(0, nLvlX.toLong).toDF("__lvx")
-      .withColumn("__lvx", col("__lvx").cast("int"))
-      .crossJoin(spark0.range(0, nLvlY.toLong).toDF("__lvy")
-        .withColumn("__lvy", col("__lvy").cast("int")))
-      .join(spark0.range(0, binsX.toLong).toDF("__idxx"),
+      .withColumn("__bx", bin("__x", loX, hiX, binsX))
+      .withColumn("__by", bin("__y0", loY, hiY, binsY))
+    // the product-node index inside group (lvx, lvy): row-major over
+    // (ix, iy) with iy's stride = this group's y-node count
+    val cells = olhCells(units, Seq("__lvx", "__lvy"),
+      expr(s"shiftright(__bx, __lvx) * shiftright($binsY, __lvy) + shiftright(__by, __lvy)"),
+      cal, noise)
+    val spark = df.sparkSession
+    def axis(lvl: String, n: Int) =
+      spark.range(0, n.toLong).toDF(lvl).withColumn(lvl, col(lvl).cast("int"))
+    val nodes = axis("__lvx", nLvlX).crossJoin(axis("__lvy", nLvlY))
+      .join(spark.range(0, binsX.toLong).toDF("__idxx"),
         col("__idxx") < expr(s"shiftright(${binsX.toLong}, __lvx)"))
-      .join(spark0.range(0, binsY.toLong).toDF("__idxy"),
+      .join(spark.range(0, binsY.toLong).toDF("__idxy"),
         col("__idxy") < expr(s"shiftright(${binsY.toLong}, __lvy)"))
-      .withColumn("__idx",
-        expr(s"__idxx * shiftright($binsY, __lvy) + __idxy"))
-    val seeds = cells.select(col("__lvx").as("__slx"),
-      col("__lvy").as("__sly"), col("__seed")).distinct()
-    val grid = nodes
-      .join(broadcast(seeds.join(paramsDf, "__seed")),
-        col("__lvx") === col("__slx") && col("__lvy") === col("__sly"))
-      .withColumn("__h",
-        ((col("__a") * col("__idx") + col("__b")) % lit(OlhPrime)) % lit(g))
-    val cellsR = cells.select(col("__lvx").as("__clx"),
-      col("__lvy").as("__cly"), col("__seed").as("__cseed"),
-      col("__y"), col("__c"))
-    grid.join(broadcast(cellsR),
-        col("__lvx") === col("__clx") && col("__lvy") === col("__cly")
-          && col("__seed") === col("__cseed") && col("__h") === col("__y"),
-        "left")
-      .groupBy(col("__lvx"), col("__idxx"), col("__lvy"), col("__idxy"))
-      .agg(coalesce(sum(col("__c")), lit(0L)).as("__sup"))
-      .join(broadcast(nPerGrp), Seq("__lvx", "__lvy"))
+      .withColumn("__idx", expr(s"__idxx * shiftright($binsY, __lvy) + __idxy"))
+    supportEstimate(what, cal, cells, Seq("__lvx", "__lvy"), nodes,
+        Seq("__idxx", "__idxy"), Some(Scale(Nil, nGroups, "level-pair groups")))
       .select(col("__lvx"), col("__idxx"), col("__lvy"), col("__idxy"),
-        round((col("__sup") - col("__ng") * lit(invG)) / lit(p - invG) *
-          (lit(nTotal.toDouble) / col("__ng")), 9).as("dp_count"))
+        col("est_count").as("dp_count"))
   }
 
   /** LONGITUDINAL LDP frequency — PERMANENT randomized response (the
@@ -1320,18 +715,17 @@ object LocalDP {
     *
     * Store: (__pid, __v, __y, __g) — one row per (unit, value) ever
     * reported; the per-unit seed re-derives from md5(pid), so it is not
-    * stored, but the BUCKET COUNT g IS (15th pass, r17): memoized
-    * reports are calibration-specific exactly like the continual
-    * store's persisted draws, and a mid-stream epsilon change would
+    * stored, but the BUCKET COUNT g IS: memoized reports are
+    * calibration-specific, and a mid-stream epsilon change would
     * silently reuse wrong-g buckets — the step requires the store's g
     * to equal this step's (fail-loud; start a new memo to rebudget).
-    * The closed-domain contract is enforced for EVERY per-unit value,
-    * memoized ones included (a reused report skips the drawing UDF, so
-    * the check cannot live only there). The step pins the grown store
-    * internally (the release and the returned store MUST read the same
-    * draws); callers checkpoint it between steps (the [[olhIngestStep]]
-    * convention — parquet round-trips make draws final across restarts,
-    * the [[graft.streaming.StreamOps.saveContinualStore]] pattern).
+    * The closed-domain contract is enforced on every input row, so a
+    * memoized value that left the domain fails as loudly as a fresh one.
+    * The step pins the grown store internally (the release and the
+    * returned store MUST read the same draws); callers checkpoint it
+    * between steps (the [[olhIngestStep]] convention — parquet
+    * round-trips make draws final across restarts, the
+    * [[graft.streaming.StreamOps.saveContinualStore]] pattern).
     *
     * Returns (estimate, grownStore): the estimate is this collection's
     * [[olhEstimate]] over the units' memoized reports. Zero noise:
@@ -1347,101 +741,18 @@ object LocalDP {
       valueCol: Column,
       domain: Seq[String],
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       seedSpace: Int = 1024
   ): (DataFrame, DataFrame) = {
-    require(domain.nonEmpty && domain.distinct.size == domain.size,
-      "ldpLongitudinalStep: domain must be non-empty and duplicate-free")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    require(seedSpace >= 2 && seedSpace <= 65536,
-      s"seedSpace must be in [2, 65536], got $seedSpace")
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val gi = g.toInt
-    val domainIdx: Map[String, Int] =
-      domain.toArray.zipWithIndex.toMap
-    val params = olhParams(seedSpace)
-    // closed-domain check HERE, not only in the drawing UDF: a memoized
-    // (unit, value) reuses its report without ever reaching the UDF, so
-    // a value that left the domain would otherwise silently distort n
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpLongitudinalStep: NULL value for a privacy unit — filter or " +
-          "impute upstream")).cast("string"))
-      .otherwise(when(!valueCol.cast("string").isin(domain: _*),
-        raise_error(concat(lit(
-          "ldpLongitudinalStep: value '"), valueCol.cast("string"), lit(
-          "' outside the public domain — the domain is closed AND must " +
-            "stay fixed across collections (memoized reports are " +
-            "domain-specific); extend it or filter upstream")))
-          .cast("string"))
-        .otherwise(valueCol.cast("string")))
-    val seedCol = when(col("__pid").isNull, raise_error(lit(
-        "ldpLongitudinalStep: pid does not cast to BIGINT — the public " +
-          "hash seed derives from it")).cast("long"))
-      .otherwise(pmod(expr(
-        "CAST(conv(substr(md5(CAST(__pid AS STRING)), 1, 15), 16, 10) " +
-          "AS BIGINT)"), lit(seedSpace.toLong)))
-    // one value per unit per collection: the deterministic lowest — a
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = batch
-      .select(col(pidCol).try_cast("bigint").as("__pid"), checked.as("__v"))
-      .groupBy(col("__pid")).agg(min(col("__v")).as("__v"))
-      .select(col("__pid"), col("__v"), seedCol.as("__seed"))
-    val spark0 = batch.sparkSession
-    val st = store.getOrElse(spark0.createDataFrame(
-      spark0.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__v",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("__y",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__g",
-          org.apache.spark.sql.types.LongType, nullable = false)))))
-    // memoized reports are CALIBRATION-specific (the continual-store
-    // lesson, enforced not commented): a store drawn at another epsilon's
-    // g must not be silently reused — its buckets live in [0, g') and
-    // the debias would be meaningless
-    store.foreach { s0 =>
-      val gs = s0.agg(min(col("__g")), max(col("__g"))).head()
-      if (!gs.isNullAt(0))
-        require(gs.getLong(0) == g && gs.getLong(1) == g,
-          s"ldpLongitudinalStep: the memo store's reports were drawn at " +
-            s"g in [${gs.getLong(0)}, ${gs.getLong(1)}] but this step's " +
-            s"epsilon gives g = $g — epsilon must stay fixed across a " +
-            "longitudinal stream (memoized reports are " +
-            "calibration-specific); start a new memo to rebudget")
-    }
-    val report = udf((seed: Long, v: String) => {
-      val idx = domainIdx.getOrElse(v, -1)
-      if (idx < 0) throw new IllegalArgumentException(
-        s"ldpLongitudinalStep: value '$v' outside the public domain — " +
-          "the domain is closed; extend it or filter upstream")
-      val (a, b) = params(seed.toInt)
-      val h = olhHash(a, b, idx.toLong, g)
-      if (noise.uniform() < p) h
-      else {
-        val j = math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)
-        (h + 1 + j) % g
-      }
-    }).asNondeterministic()
-    // memo lookup: units whose (pid, value) already reported REUSE the
-    // stored report; only genuinely new pairs draw
-    val joined = perUnit.join(st.drop("__g"), Seq("__pid", "__v"), "left")
-    val fresh = joined.filter(col("__y").isNull)
-      .select(col("__pid"), col("__v"),
-        report(col("__seed"), col("__v")).as("__y"), lit(g).as("__g"))
-    // pin the GROWN store before anything reads it: the estimate below
-    // and the returned store must see the same draws (fresh's UDF is
-    // nondeterministic — an unpinned union would re-draw per consumer)
-    val grown = st.unionByName(fresh).localCheckpoint(false)
-    val current = perUnit.join(grown, Seq("__pid", "__v"))
-    val cells = current.groupBy(col("__seed"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false) // olhEstimate reads the cells three times
-    (olhEstimate(cells, domain, epsilon, seedSpace), grown)
+    val (cal, dom) = (Olh(epsilon, seedSpace), Domain("ldpLongitudinalStep", domain))
+    val units = olhUnits(dom.what, batch, pidCol, Seq("__v" -> dom.guard(valueCol)), 1, cal)
+    val report = cal.randomizer(noise)
+    val grown = memoStep(dom.what, units, store,
+      Seq("__v" -> StringType, "__y" -> LongType, "__g" -> LongType), cal.g,
+      _.withColumn("__y", report(col("__seed"), dom.index(col("__v")))))
+    val cells = units.join(grown, Seq("__pid", "__v"))
+      .groupBy(col("__seed"), col("__y")).agg(count(lit(1)).as("__c"))
+    (frequencyEstimate(dom, cal, cells), grown)
   }
 
   /** The fixed-length hex encoding [[ldpHeavyHitters]]' domain contract
@@ -1489,15 +800,15 @@ object LocalDP {
       candidateCol: String,
       hexLen: Int,
       epsilon: Double,
-      noise: graft.core.NoiseSource,
+      noise: NoiseSource,
       k: Int = 8,
       rounds: Int = 2,
       seedSpace: Int = 1024
   ): DataFrame = {
     val encoded = df.select(col(pidCol).as(pidCol),
       hexEncodeValue(valueCol, hexLen).as("__hv"))
-    val hot = ldpHeavyHitters(encoded, pidCol, col("__hv"), hexLen,
-        epsilon, noise, k, rounds, seedSpace)
+    val hot = heavyHitters("ldpHeavyHittersE2e", encoded, pidCol, col("__hv"),
+        hexLen, epsilon, noise, k, rounds, seedSpace)
       .withColumnRenamed("value", "hash")
     val cand = candidates
       .select(col(candidateCol).cast("string").as("value")).distinct()
@@ -1517,20 +828,238 @@ object LocalDP {
     require(hexLen >= 1 && rounds >= 1 && hexLen % rounds == 0,
       "rounds must divide hexLen")
     require(nUnits >= rounds, s"need >= $rounds units, got $nUnits")
-    require(epsilon > 0, "epsilon must be positive")
+    val cal = Olh(epsilon, seedSpace)
     val step = hexLen / rounds
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
     val nGrp = nUnits / rounds
-    val std = math.sqrt(nGrp * invG * (1.0 - invG)) / (p - invG)
+    val std = math.sqrt(nGrp * cal.invG * (1.0 - cal.invG)) / (cal.p - cal.invG)
     val candPerLevel = k.toLong * (1L << (4 * step))
     s"""LocalDP heavy-hitter discovery (prefix extension over OLH)
        |  walk      : $rounds rounds x $step hex chars; md5-split groups of ~$nGrp units report ONE bucket each (eps = ${f"$epsilon%g"}-LDP total, open domain)
        |  candidates: level 1 = ${1L << (4 * step)} public prefixes, later levels = top-$k x 16^$step = $candPerLevel — never 16^$hexLen
-       |  floor     : per-candidate estimator stddev ~ ${f"$std%g"} at g = $g buckets; a heavy value must clear it EVERY round it is alive (small g — low eps — swamps discovery: at eps = 1, g = 3, the floor is ~7x worse)
+       |  floor     : per-candidate estimator stddev ~ ${f"$std%g"} at g = ${cal.g} buckets; a heavy value must clear it EVERY round it is alive (small g — low eps — swamps discovery: at eps = 1, g = 3, the floor is ~7x worse)
        |""".stripMargin
+  }
+
+  // ---- the OLH core: every OLH mechanism above is a thin caller -------
+
+  /** OLH calibration at (epsilon, seedSpace): g = floor(e^eps) + 1
+    * buckets, keep probability p = e^eps / (e^eps + g - 1), the 1/g
+    * support of a non-true value, and the public per-seed hash table. */
+  private final case class Olh(epsilon: Double, seedSpace: Int) {
+    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
+    require(seedSpace >= 2 && seedSpace <= 65536,
+      s"seedSpace must be in [2, 65536], got $seedSpace")
+    private val expEps = math.exp(epsilon)
+    val g: Long = math.floor(expEps).toLong + 1L
+    val p: Double = expEps / (expEps + g - 1)
+    val invG: Double = 1.0 / g
+    val params: IndexedSeq[(Long, Long)] = olhParams(seedSpace)
+
+    /** The LOCAL randomizer of node `idx` under public seed `seed`: the
+      * true bucket H(seed, idx) kept w.p. p (one uniform() draw), else
+      * uniform over the OTHER g - 1 (a second draw). Nondeterministic so
+      * Catalyst never collapses or re-orders draws; the retry caveat of
+      * [[ldpFrequency]] applies. */
+    def randomizer(noise: NoiseSource): UserDefinedFunction = {
+      val (table, g, p, gi) = (params, this.g, this.p, this.g.toInt)
+      udf((seed: Long, idx: Long) => {
+        val (a, b) = table(seed.toInt)
+        val h = olhHash(a, b, idx, g)
+        if (noise.uniform() < p) h
+        else (h + 1 + math.min((noise.uniform() * (gi - 1)).toInt, gi - 2)) % g
+      }).asNondeterministic()
+    }
+
+    /** The literal hash table (__seed, __a, __b). */
+    def paramsFrame(spark: SparkSession): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(params.indices.map(s =>
+        Row(s.toLong, params(s)._1, params(s)._2)), 4),
+      StructType(Seq("__seed", "__a", "__b").map(StructField(_, LongType, nullable = false))))
+  }
+
+  /** A closed PUBLIC domain: `guard` fails loud, naming `what`, on a
+    * NULL or unlisted value of any input row (an unlisted value would
+    * silently misstate n in the debiasing); `index` maps a guarded value
+    * to its position by an O(1) lookup (a linear scan would be an O(n*k)
+    * hot path at token-scale domains, the regime OLH exists for);
+    * `frame` is the (__idx, value) node frame. */
+  private final case class Domain(what: String, values: Seq[String]) {
+    require(values.nonEmpty && values.distinct.size == values.size,
+      s"$what: domain must be non-empty and duplicate-free")
+    def guard(v: Column): Column = {
+      val s = nonNull(what, v, "string")
+      when(!s.isin(values: _*), raise_error(concat(lit(s"$what: value '"), s,
+          lit("' outside the public domain — the domain is closed (an " +
+            "unlisted value would misstate n in the debiasing); extend it " +
+            "or filter upstream"))).cast("string"))
+        .otherwise(s)
+    }
+    def index(v: Column): Column = {
+      val at = values.zipWithIndex.map { case (x, i) => x -> i.toLong }.toMap
+      udf((x: String) => at(x)).apply(v)
+    }
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        values.zipWithIndex.map { case (x, i) => Row(i.toLong, x) }, 8),
+      StructType(Seq(StructField("__idx", LongType, nullable = false),
+        StructField("value", StringType, nullable = false))))
+  }
+
+  /** `v` cast to `as`, failing loud naming `what` when it is NULL. */
+  private def nonNull(what: String, v: Column, as: String,
+      label: String = "value"): Column =
+    when(v.isNull, raise_error(lit(s"$what: NULL $label for a privacy unit " +
+        "— filter or impute upstream")).cast(as))
+      .otherwise(v.cast(as))
+
+  /** A public grouping key, failing loud naming `what` when it is NULL. */
+  private def keyGuard(what: String, k: Column): Column =
+    when(k.isNull, raise_error(lit(s"$what: NULL group key — the key is " +
+        "public collector metadata and every report must carry one; filter " +
+        "or impute upstream")).cast("string"))
+      .otherwise(k.cast("string"))
+
+  /** The report stage's first half: ONE report per unit — the
+    * deterministic lowest `values` tuple (a per-unit MIN, aggregated
+    * map-side; the L0 = 1 bound) — keyed by the unit's BIGINT pid (a pid
+    * that does not cast fails loud naming `what`) with its public
+    * randomness: the md5 word h of the pid ([[md5Word]]), the report
+    * group h mod `groups` and the hash seed (h div groups) mod seedSpace.
+    * Returns (__pid, values..., __grp, __seed). */
+  private def olhUnits(what: String, df: DataFrame, pidCol: String,
+      values: Seq[(String, Column)], groups: Int, cal: Olh): DataFrame = {
+    val names = values.map(_._1)
+    // try_cast: a non-numeric pid flows to the shaped error instead of
+    // ANSI's CAST_INVALID_INPUT mid-task
+    val pid = when(col("__pidn").isNull, raise_error(lit(s"$what: pid does " +
+        "not cast to BIGINT — the public hash seed derives from it; map " +
+        "units to numeric ids upstream")).cast("long"))
+      .otherwise(col("__pidn"))
+    df.select(col(pidCol).try_cast("bigint").as("__pidn") +:
+        values.map { case (n, c) => c.as(n) }: _*)
+      .groupBy(col("__pidn")).agg(min(struct(names.map(col): _*)).as("__m"))
+      .select(pid.as("__pid") +: names.map(n => col(s"__m.$n").as(n)): _*)
+      .withColumn("__h64", expr("CAST(conv(substr(md5(CAST(__pid AS STRING)), " +
+        "1, 15), 16, 10) AS BIGINT)"))
+      .withColumn("__grp", pmod(col("__h64"), lit(groups.toLong)).cast("int"))
+      .withColumn("__seed", pmod(expr(s"__h64 div $groups"), lit(cal.seedSpace.toLong)))
+      .drop("__h64")
+  }
+
+  /** The report stage's second half: each unit's randomized bucket for
+    * node `idx`, collapsed FIRST to (strata..., __seed, __y) -> __c count
+    * cells — at most strata x seedSpace x g rows, so everything
+    * downstream is data-size-independent. */
+  private def olhCells(units: DataFrame, strata: Seq[String], idx: Column, cal: Olh,
+      noise: NoiseSource): DataFrame =
+    units.select(strata.map(col) ++ Seq(col("__seed"),
+        cal.randomizer(noise)(col("__seed"), idx).as("__y")): _*)
+      .groupBy((strata ++ Seq("__seed", "__y")).map(col): _*)
+      .agg(count(lit(1)).as("__c"))
+
+  /** The population scale of a stratified estimate: each stratum's
+    * estimate scales by (reports of its `pop` stratum) / (its reports),
+    * and every `pop` stratum must field all `groups` report groups (a
+    * group with no reporters has no estimator) — `noun` names them. */
+  private final case class Scale(pop: Seq[String], groups: Long, noun: String)
+
+  /** The OLH estimator: crosses the caller's node frame (__idx, the
+    * `keep` columns, and any strata the node universe depends on) with
+    * the observed (strata..., __seed) pairs and their hash parameters,
+    * counts each node's support — the reports whose bucket equals the
+    * node's hash under their seed — and debiases (support - n/g)/(p - 1/g)
+    * per stratum of n reports, times the population scale. Reads the
+    * cells several times, so pins them once ([[RangeTree.materialized]]);
+    * with no reports it fails loud naming `what`. Returns (strata...,
+    * keep..., __n, support, est_count). */
+  private def supportEstimate(what: String, cal: Olh, cells0: DataFrame,
+      strata: Seq[String], nodes: DataFrame, keep: Seq[String],
+      scale: Option[Scale] = None): DataFrame = {
+    val cells = RangeTree.materialized(cells0)
+    val nAgg = cells.groupBy(strata.map(col): _*).agg(sum(col("__c")).as("__n"))
+    val n = scale.fold(nAgg)(scaledCounts(what, nAgg, strata, _))
+    val seeds = cells.select((strata :+ "__seed").map(col): _*).distinct()
+      .join(cal.paramsFrame(cells.sparkSession), "__seed")
+    // the hash as a codegen'd integer EXPRESSION — mirrors olhHash exactly
+    // (same constants P and g, non-negative operands, every intermediate
+    // < 2^63, so Spark % == SQL % == Scala %)
+    val on = strata.filter(nodes.columns.contains)
+    val grid = (if (on.isEmpty) nodes.join(broadcast(seeds), lit(true), "left")
+        else nodes.join(broadcast(seeds), on))
+      .withColumn("__h", ((col("__a") * col("__idx") + col("__b")) % lit(OlhPrime)) %
+        lit(cal.g))
+    val cellCols = strata ++ Seq("__seed", "__y")
+    val hit = cellCols.map(c => col(if (c == "__y") "__h" else c) === col(s"__c$c"))
+      .reduce(_ && _)
+    val support = grid
+      .join(broadcast(cells.select(cellCols.map(c => col(c).as(s"__c$c")) :+ col("__c"): _*)),
+        hit, "left")
+      .groupBy((strata ++ keep).map(col): _*)
+      .agg(coalesce(sum(col("__c")), lit(0L)).as("support"))
+    val est = (col("support") - col("__n") * lit(cal.invG)) / lit(cal.p - cal.invG)
+    (if (strata.isEmpty) support.crossJoin(broadcast(n)) else support.join(broadcast(n), strata))
+      .withColumn("est_count", when(col("__n").isNull, raise_error(lit(
+          s"$what: no reporting units")).cast("double"))
+        .otherwise(round(scale.fold(est)(_ => est * (col("__pop") / col("__n"))), 9)))
+  }
+
+  /** The per-stratum report counts of a population-scaled estimate,
+    * collected (strata are bounded: keys x groups) and checked against
+    * `s`: there are reports, and every population stratum fields all its
+    * groups (failing keys are named). Returns them as a literal frame
+    * (strata..., __n, __pop) — broadcast without another job. */
+  private def scaledCounts(what: String, nAgg: DataFrame, strata: Seq[String],
+      s: Scale): DataFrame = {
+    val rows = RangeTree.boundedCollect(nAgg.filter(col("__n") > 0), what,
+      rows = "report strata")
+    require(rows.nonEmpty, s"$what: no reporting units")
+    val popOf = (r: Row) => s.pop.map(c => r.get(strata.indexOf(c)))
+    val byPop = rows.groupBy(popOf)
+    val short = byPop.collect { case (k, rs) if rs.length < s.groups => k.mkString("/") }
+    require(short.isEmpty,
+      if (s.pop.isEmpty) s"$what: only ${rows.length} of ${s.groups} ${s.noun} " +
+        "have reporting units — n too small to field the split; collect more " +
+        "reports or coarsen bins"
+      else s"$what: key(s) ${short.take(20).mkString(", ")} have reporting " +
+        s"units at fewer than ${s.groups} ${s.noun} — their cohorts are too " +
+        "small to field the level split; collect more reports, coarsen bins, " +
+        "or merge keys")
+    val pop = byPop.map { case (k, rs) => k -> rs.map(_.getLong(strata.size)).sum.toDouble }
+    nAgg.sparkSession.createDataFrame(
+      rows.map(r => Row.fromSeq(r.toSeq :+ pop(popOf(r)))).toSeq.asJava,
+      nAgg.schema.add(StructField("__pop", DoubleType, nullable = false)))
+  }
+
+  /** The longitudinal memo step of the three ledger steps: each
+    * (unit, value) draws its report ONCE and reuses it while the unit
+    * holds the value. `units` carries (__pid, __v, ...); the store is
+    * (__pid, `memo`...) — __v, the drawn columns, and last the tag that
+    * records the calibration the reports were drawn at, which must equal
+    * `tag` (fail loud: memoized reports are calibration-specific). `draw`
+    * adds the drawn columns to the units without a memoized report.
+    * Returns the grown store, pinned: the release and the returned store
+    * must read the same draws (an unpinned union would re-draw per
+    * consumer). */
+  private def memoStep(what: String, units: DataFrame, store: Option[DataFrame],
+      memo: Seq[(String, DataType)], tag: Any, draw: DataFrame => DataFrame): DataFrame = {
+    val tagCol = memo.last._1
+    store.foreach { s0 =>
+      val r = s0.agg(min(col(tagCol)), max(col(tagCol))).head()
+      if (!r.isNullAt(0))
+        require(r.get(0) == tag && r.get(1) == tag,
+          s"$what: the memo store was drawn at $tagCol in [${r.get(0)}, " +
+            s"${r.get(1)}] but this step draws at $tagCol = $tag — epsilon " +
+            "must stay fixed across a longitudinal stream (memoized reports " +
+            "are calibration-specific); start a new memo to rebudget")
+    }
+    val schema = StructType((("__pid" -> LongType) +: memo).map { case (n, t) =>
+      StructField(n, t, nullable = false) })
+    val st = store.getOrElse(units.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[Row](), schema))
+    val fresh = draw(units.join(st.drop(tagCol), Seq("__pid", "__v"), "left")
+        .filter(col(memo(1)._1).isNull))
+      .select(schema.fieldNames.init.map(col) :+ lit(tag).as(tagCol): _*)
+    st.unionByName(fresh).localCheckpoint(false)
   }
 
   /** The Carter-Wegman modulus: a prime far above any domain index the
@@ -1590,12 +1119,9 @@ object LocalDP {
   def explainFrequencyOLH(k: Long, epsilon: Double, nReports: Long,
       seedSpace: Int = 1024): String = {
     require(k >= 2, s"domain size must be >= 2, got $k")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
     require(nReports >= 1, s"nReports must be >= 1, got $nReports")
-    val expEps = math.exp(epsilon)
-    val g = math.floor(expEps).toLong + 1L
-    val p = expEps / (expEps + g - 1)
-    val invG = 1.0 / g
+    val cal = Olh(epsilon, seedSpace)
+    import cal.{g, invG, p}
     val std = math.sqrt(nReports * invG * (1.0 - invG)) / (p - invG)
     s"""LocalDP frequency release (optimal local hashing)
        |  domain    : $k public values; ONE bucket in [0, $g) per unit (vs $k bits under unary encoding — the large-domain mechanism), public hash seed = md5(pid) mod $seedSpace
@@ -1649,63 +1175,9 @@ object LocalDP {
       lo: Double,
       hi: Double,
       epsilon: Double,
-      noise: graft.core.NoiseSource
-  ): DataFrame = {
-    require(lo >= 0 && lo < hi,
-      s"ldpVariance needs 0 <= lo < hi (v^2 normalization is monotone " +
-        s"only for non-negative domains), got [$lo, $hi]")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    val t = (math.exp(epsilon / 2) - 1.0) / (math.exp(epsilon / 2) + 1.0)
-    val mid = (lo + hi) / 2.0
-    val half = (hi - lo) / 2.0
-    val lo2 = lo * lo; val hi2 = hi * hi
-    val mid2 = (lo2 + hi2) / 2.0
-    val half2 = (hi2 - lo2) / 2.0
-    val varCap = (hi - lo) * (hi - lo) / 4.0
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpVariance: NULL value for a privacy unit — filter or impute " +
-          "upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val clamped = least(greatest(checked, lit(lo)), lit(hi))
-    // NULL pids would all land in ONE window partition and silently merge
-    // distinct units into a single report (under-counting n, skewing both
-    // moments) — fail loud like the OLH family instead.
-    val checkedPid = when(col(pidCol).isNull, raise_error(lit(
-        "ldpVariance: NULL privacy-unit id — distinct units would merge " +
-          "into one report; filter or key upstream")).cast("string"))
-      .otherwise(col(pidCol).cast("string"))
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = df
-      .select(checkedPid.as("__pid"), clamped.as("__v"))
-      .groupBy(col("__pid")).agg(min(col("__v")).as("__v"))
-    // two INDEPENDENT eps/2 bits per unit (L1 composition — the
-    // ldpFrequency retry caveat applies to each)
-    val report = udf((v: Double) => {
-      val x1 = (v - mid) / half
-      val b1 = if (noise.uniform() < 0.5 + x1 * t / 2.0) 1 else -1
-      val x2 = (v * v - mid2) / half2
-      val b2 = if (noise.uniform() < 0.5 + x2 * t / 2.0) 1 else -1
-      Array(b1, b2)
-    }).asNondeterministic()
-    perUnit
-      .select(report(col("__v")).as("__b"))
-      .agg(count(lit(1)).as("n_reports"),
-        sum(element_at(col("__b"), 1)).cast("double").as("__s1"),
-        sum(element_at(col("__b"), 2)).cast("double").as("__s2"))
-      .select(col("n_reports"),
-        when(col("n_reports") === 0, raise_error(lit(
-            "ldpVariance: zero privacy units — an empty cohort has no " +
-              "variance to release")).cast("double"))
-          .otherwise(round(least(greatest(
-            lit(mid) + (col("__s1") / col("n_reports").cast("double")) /
-              lit(t) * lit(half), lit(lo)), lit(hi)), 9)).as("est_mean"),
-        round(least(greatest(
-          lit(mid2) + (col("__s2") / col("n_reports").cast("double")) /
-            lit(t) * lit(half2), lit(lo2)), lit(hi2)), 9).as("est_m2"))
-      .withColumn("est_variance", round(least(greatest(
-        col("est_m2") - col("est_mean") * col("est_mean"), lit(0.0)),
-        lit(varCap)), 9))
-  }
+      noise: NoiseSource
+  ): DataFrame = duchiRelease(Duchi("ldpVariance", lo, hi, epsilon, 2), df, pidCol,
+    valueCol, noise)
 
   /** AMPLIFICATION BY SHUFFLING — the accounting bridge from this file's
     * LOCAL trust model to the central accountant: when n users each run
@@ -1801,53 +1273,9 @@ object LocalDP {
       lo: Double,
       hi: Double,
       epsilon: Double,
-      noise: graft.core.NoiseSource
-  ): DataFrame = {
-    require(lo < hi, s"empty domain [$lo, $hi]")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    val t = (math.exp(epsilon) - 1.0) / (math.exp(epsilon) + 1.0)
-    val mid = (lo + hi) / 2.0
-    val half = (hi - lo) / 2.0
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpMean: NULL value for a privacy unit — nulls have no " +
-          "normalization; filter or impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val clamped = least(greatest(checked, lit(lo)), lit(hi))
-    // NULL pids collapse into one window partition → distinct units merge
-    // into one report; fail loud (the OLH-family convention).
-    val checkedPid = when(col(pidCol).isNull, raise_error(lit(
-        "ldpMean: NULL privacy-unit id — distinct units would merge " +
-          "into one report; filter or key upstream")).cast("string"))
-      .otherwise(col(pidCol).cast("string"))
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = df
-      .select(checkedPid.as("__pid"), clamped.as("__v"))
-      .groupBy(col("__pid")).agg(min(col("__v")).as("__v"))
-    // the local randomizer: x normalized, one {-1, +1} report. Marked
-    // nondeterministic (the ldpFrequency rationale, incl. the retry
-    // composition caveat documented there).
-    val report = udf((v: Double) => {
-      val x = (v - mid) / half
-      val pPlus = 0.5 + x * t / 2.0
-      if (noise.uniform() < pPlus) 1 else -1
-    }).asNondeterministic()
-    perUnit
-      .select(report(col("__v")).as("__b"))
-      .agg(count(lit(1)).as("n_reports"),
-        sum(when(col("__b") === 1, 1L).otherwise(0L))
-          .as("reported_plus_ones"),
-        sum(col("__b")).cast("double").as("__sb"))
-      .select(col("n_reports"), col("reported_plus_ones"),
-        // fail-loud on an empty cohort (the engine convention): without
-        // the guard the 0/0 division would silently release one row with
-        // est_mean = NULL
-        when(col("n_reports") === 0, raise_error(lit(
-            "ldpMean: zero privacy units — an empty cohort has no mean " +
-              "to release; check the input frame")).cast("double"))
-          .otherwise(round(least(greatest(
-            lit(mid) + (col("__sb") / col("n_reports").cast("double")) /
-              lit(t) * lit(half), lit(lo)), lit(hi)), 9)).as("est_mean"))
-  }
+      noise: NoiseSource
+  ): DataFrame = duchiRelease(Duchi("ldpMean", lo, hi, epsilon, 1), df, pidCol,
+    valueCol, noise)
 
   /** LONGITUDINAL LDP NUMERIC collection — the [[ldpLongitudinalStep]]
     * permanent-response ledger applied to the Duchi 1-bit mean
@@ -1886,91 +1314,21 @@ object LocalDP {
       lo: Double,
       hi: Double,
       epsilon: Double,
-      noise: graft.core.NoiseSource
-  ): (DataFrame, DataFrame) = {
-    require(lo < hi, s"empty domain [$lo, $hi)")
-    require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    val t = (math.exp(epsilon) - 1.0) / (math.exp(epsilon) + 1.0)
-    val mid = (lo + hi) / 2.0
-    val half = (hi - lo) / 2.0
-    val spark0 = batch.sparkSession
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpLongitudinalMeanStep: NULL value for a privacy unit — " +
-          "filter or impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val clamped = least(greatest(checked, lit(lo)), lit(hi))
-    val checkedPid = when(col("__pidn").isNull, raise_error(lit(
-        "ldpLongitudinalMeanStep: pid does not cast to BIGINT — the " +
-          "ledger keys on it")).cast("long"))
-      .otherwise(col("__pidn"))
-    // one value per unit per collection: the deterministic lowest — a
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = batch
-      .select(col(pidCol).try_cast("bigint").as("__pidn"),
-        clamped.as("__v"))
-      .groupBy(col("__pidn")).agg(min(col("__v")).as("__v"))
-      .select(checkedPid.as("__pid"), col("__v"))
-    val st = store.getOrElse(spark0.createDataFrame(
-      spark0.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__v",
-          org.apache.spark.sql.types.DoubleType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("__eps",
-          org.apache.spark.sql.types.DoubleType, nullable = false)))))
-    // memoized bits are calibration-specific: a store drawn at another
-    // epsilon has a different flip probability and the debias would be
-    // meaningless — fail loud (the ldpLongitudinalStep g-check)
-    store.foreach { s0 =>
-      val es = s0.agg(min(col("__eps")), max(col("__eps"))).head()
-      if (!es.isNullAt(0))
-        require(es.getDouble(0) == epsilon && es.getDouble(1) == epsilon,
-          s"ldpLongitudinalMeanStep: the memo store's bits were drawn " +
-            s"at eps in [${es.getDouble(0)}, ${es.getDouble(1)}] but " +
-            s"this step's epsilon is $epsilon — epsilon must stay fixed " +
-            "across a longitudinal stream; start a new memo to rebudget")
-    }
-    val draw = udf((v: Double) => {
-      val x = (v - mid) / half
-      if (noise.uniform() < 0.5 + x * t / 2.0) 1 else -1
-    }).asNondeterministic()
-    // ledger lookup: (pid, value) pairs already reported REUSE the
-    // stored bit; only genuinely new pairs draw
-    val joined = perUnit.join(st.drop("__eps"), Seq("__pid", "__v"), "left")
-    val fresh = joined.filter(col("__b").isNull)
-      .select(col("__pid"), col("__v"), draw(col("__v")).as("__b"),
-        lit(epsilon).as("__eps"))
-    // pin the GROWN store before anything reads it (nondeterministic
-    // draws: an unpinned union would re-draw per consumer)
-    val grown = st.unionByName(fresh).localCheckpoint(false)
-    val est = perUnit.join(grown, Seq("__pid", "__v"))
-      .agg(count(lit(1)).as("n_reports"),
-        sum(when(col("__b") === 1, 1L).otherwise(0L))
-          .as("reported_plus_ones"),
-        sum(col("__b")).cast("double").as("__sb"))
-      .select(col("n_reports"), col("reported_plus_ones"),
-        when(col("n_reports") === 0, raise_error(lit(
-            "ldpLongitudinalMeanStep: zero privacy units — an empty " +
-              "cohort has no mean to release")).cast("double"))
-          .otherwise(round(least(greatest(
-            lit(mid) + (col("__sb") / col("n_reports").cast("double")) /
-              lit(t) * lit(half), lit(lo)), lit(hi)), 9)).as("est_mean"))
-    (est, grown)
-  }
+      noise: NoiseSource
+  ): (DataFrame, DataFrame) = duchiMemoStep(
+    Duchi("ldpLongitudinalMeanStep", lo, hi, epsilon, 1), batch, store, pidCol,
+    valueCol, noise)
 
   /** The VARIANCE arm of the longitudinal numeric ledger — the
     * [[ldpLongitudinalMeanStep]] permanent-response memoization over
     * [[ldpVariance]]'s TWO eps/2 sign bits (first and second moment,
     * L1 composition): both bits for a (unit, value) draw once and are
     * reused while the value is unchanged. Same store conventions
-    * (per-(unit, value) ledger, eps + domain fixed across collections,
-    * fail-loud), same release schema as [[ldpVariance]]
-    * (n_reports, est_mean, est_m2, est_variance); zero noise makes
-    * every collection over unchanged values equal the one-shot
-    * [[ldpVariance]] release. */
+    * (per-(unit, value) ledger (__pid, __v, __b1, __b2, __eps), eps +
+    * domain fixed across collections, fail-loud), same release schema as
+    * [[ldpVariance]] (n_reports, est_mean, est_m2, est_variance); zero
+    * noise makes every collection over unchanged values equal the
+    * one-shot [[ldpVariance]] release. */
   def ldpLongitudinalVarianceStep(
       batch: DataFrame,
       store: Option[DataFrame],
@@ -1979,89 +1337,104 @@ object LocalDP {
       lo: Double,
       hi: Double,
       epsilon: Double,
-      noise: graft.core.NoiseSource
-  ): (DataFrame, DataFrame) = {
-    require(lo >= 0 && lo < hi,
-      s"ldpLongitudinalVarianceStep needs 0 <= lo < hi (v^2 " +
-        s"normalization is monotone only for non-negative domains), " +
-        s"got [$lo, $hi]")
+      noise: NoiseSource
+  ): (DataFrame, DataFrame) = duchiMemoStep(
+    Duchi("ldpLongitudinalVarianceStep", lo, hi, epsilon, 2), batch, store, pidCol,
+    valueCol, noise)
+
+  // ---- the Duchi core: ldpMean, ldpVariance and their ledger steps ----
+
+  /** Duchi 1-bit calibration over the PUBLIC [lo, hi]: `moments` sign bits
+    * per unit (v, and v^2 for the variance — which needs lo >= 0 so the
+    * v^2 normalization is monotone), each at eps/moments (L1
+    * composition): P(b = +1) = 1/2 + x t / 2, x the moment normalized to
+    * [-1, 1], t = (e^(eps/m) - 1)/(e^(eps/m) + 1). */
+  private final case class Duchi(what: String, lo: Double, hi: Double,
+      epsilon: Double, moments: Int) {
+    if (moments == 1) require(lo < hi, s"empty domain [$lo, $hi]")
+    else require(lo >= 0 && lo < hi,
+      s"$what needs 0 <= lo < hi (v^2 normalization is monotone only for " +
+        s"non-negative domains), got [$lo, $hi]")
     require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    val t = (math.exp(epsilon / 2) - 1.0) / (math.exp(epsilon / 2) + 1.0)
-    val mid = (lo + hi) / 2.0
-    val half = (hi - lo) / 2.0
-    val lo2 = lo * lo; val hi2 = hi * hi
-    val mid2 = (lo2 + hi2) / 2.0
-    val half2 = (hi2 - lo2) / 2.0
-    val varCap = (hi - lo) * (hi - lo) / 4.0
-    val spark0 = batch.sparkSession
-    val checked = when(valueCol.isNull, raise_error(lit(
-        "ldpLongitudinalVarianceStep: NULL value for a privacy unit — " +
-          "filter or impute upstream")).cast("double"))
-      .otherwise(valueCol.cast("double"))
-    val clamped = least(greatest(checked, lit(lo)), lit(hi))
-    val checkedPid = when(col("__pidn").isNull, raise_error(lit(
-        "ldpLongitudinalVarianceStep: pid does not cast to BIGINT — " +
-          "the ledger keys on it")).cast("long"))
-      .otherwise(col("__pidn"))
-    // per-unit MIN, aggregated map-side (r19: was a row_number window)
-    val perUnit = batch
-      .select(col(pidCol).try_cast("bigint").as("__pidn"),
-        clamped.as("__v"))
-      .groupBy(col("__pidn")).agg(min(col("__v")).as("__v"))
-      .select(checkedPid.as("__pid"), col("__v"))
-    val st = store.getOrElse(spark0.createDataFrame(
-      spark0.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__pid",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__v",
-          org.apache.spark.sql.types.DoubleType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b1",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("__b2",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("__eps",
-          org.apache.spark.sql.types.DoubleType, nullable = false)))))
-    store.foreach { s0 =>
-      val es = s0.agg(min(col("__eps")), max(col("__eps"))).head()
-      if (!es.isNullAt(0))
-        require(es.getDouble(0) == epsilon && es.getDouble(1) == epsilon,
-          s"ldpLongitudinalVarianceStep: the memo store's bits were " +
-            s"drawn at eps in [${es.getDouble(0)}, ${es.getDouble(1)}] " +
-            s"but this step's epsilon is $epsilon — epsilon must stay " +
-            "fixed across a longitudinal stream; start a new memo")
+    val t: Double = (math.exp(epsilon / moments) - 1.0) / (math.exp(epsilon / moments) + 1.0)
+    /** each moment's public range: [lo, hi] for v, [lo^2, hi^2] for v^2 */
+    val ranges: Seq[(Double, Double)] = Seq((lo, hi), (lo * lo, hi * hi)).take(moments)
+    /** the bit columns, named as the ledger stores them */
+    val bits: Seq[String] = if (moments == 1) Seq("__b") else Seq("__b1", "__b2")
+
+    /** One report per unit: the deterministic lowest value clamped into
+      * [lo, hi] (a per-unit MIN, aggregated map-side) of each (already
+      * guarded) `pid`. Returns (__pid, __v). */
+    def units(df: DataFrame, pid: Column, valueCol: Column): DataFrame =
+      df.select(pid.as("__pid"),
+          least(greatest(nonNull(what, valueCol, "double"), lit(lo)), lit(hi)).as("__v"))
+        .groupBy(col("__pid")).agg(min(col("__v")).as("__v"))
+
+    /** Adds each unit's sign bits, drawn in moment order by ONE
+      * nondeterministic UDF (the [[ldpFrequency]] retry caveat applies to
+      * each bit). */
+    def withBits(noise: NoiseSource)(df: DataFrame): DataFrame = {
+      val (tt, axes) = (t, ranges.map { case (a, b) => ((a + b) / 2.0, (b - a) / 2.0) })
+      val draw = udf((v: Double) => Array.tabulate(axes.size) { k =>
+        val x = ((if (k == 0) v else v * v) - axes(k)._1) / axes(k)._2
+        if (noise.uniform() < 0.5 + x * tt / 2.0) 1 else -1
+      }).asNondeterministic()
+      bits.zipWithIndex.foldLeft(df.withColumn("__bb", draw(col("__v")))) {
+        case (d, (b, k)) => d.withColumn(b, element_at(col("__bb"), k + 1))
+      }.drop("__bb")
     }
-    val draw = udf((v: Double) => {
-      val x1 = (v - mid) / half
-      val b1 = if (noise.uniform() < 0.5 + x1 * t / 2.0) 1 else -1
-      val x2 = (v * v - mid2) / half2
-      val b2 = if (noise.uniform() < 0.5 + x2 * t / 2.0) 1 else -1
-      Array(b1, b2)
-    }).asNondeterministic()
-    val joined = perUnit.join(st.drop("__eps"), Seq("__pid", "__v"), "left")
-    val fresh = joined.filter(col("__b1").isNull)
-      .withColumn("__bb", draw(col("__v")))
-      .select(col("__pid"), col("__v"),
-        element_at(col("__bb"), 1).as("__b1"),
-        element_at(col("__bb"), 2).as("__b2"), lit(epsilon).as("__eps"))
-    val grown = st.unionByName(fresh).localCheckpoint(false)
-    val est = perUnit.join(grown, Seq("__pid", "__v"))
-      .agg(count(lit(1)).as("n_reports"),
-        sum(col("__b1")).cast("double").as("__s1"),
-        sum(col("__b2")).cast("double").as("__s2"))
-      .select(col("n_reports"),
-        when(col("n_reports") === 0, raise_error(lit(
-            "ldpLongitudinalVarianceStep: zero privacy units — an " +
-              "empty cohort has no variance to release")).cast("double"))
-          .otherwise(round(least(greatest(
-            lit(mid) + (col("__s1") / col("n_reports").cast("double")) /
-              lit(t) * lit(half), lit(lo)), lit(hi)), 9)).as("est_mean"),
-        round(least(greatest(
-          lit(mid2) + (col("__s2") / col("n_reports").cast("double")) /
-            lit(t) * lit(half2), lit(lo2)), lit(hi2)), 9).as("est_m2"))
-      .withColumn("est_variance", round(least(greatest(
-        col("est_m2") - col("est_mean") * col("est_mean"), lit(0.0)),
-        lit(varCap)), 9))
-    (est, grown)
+
+    /** The release over one row of `bits` per unit: n_reports and per
+      * moment mid + (sum b / n) / t * half clamped into the moment's range
+      * — the mean with its +1 count, the variance with E[v^2] and the
+      * plug-in E[v^2] - E[v]^2 clamped into [0, (hi-lo)^2/4]. An empty
+      * cohort fails loud (a 0/0 would release NULL). */
+    def readout(bitRows: DataFrame): DataFrame = {
+      def est(k: Int): Column = {
+        val (a, b) = ranges(k)
+        round(least(greatest(lit((a + b) / 2.0) + (col(s"__s$k") /
+          col("n_reports").cast("double")) / lit(t) * lit((b - a) / 2.0), lit(a)),
+          lit(b)), 9)
+      }
+      val agg = bitRows.agg(count(lit(1)).as("n_reports"),
+        sum(when(col(bits.head) === 1, 1L).otherwise(0L)).as("reported_plus_ones") +:
+          bits.indices.map(k => sum(col(bits(k))).cast("double").as(s"__s$k")): _*)
+      val mean = when(col("n_reports") === 0, raise_error(lit(s"$what: zero " +
+          s"privacy units — an empty cohort has no ${if (moments == 1) "mean"
+            else "variance"} to release")).cast("double"))
+        .otherwise(est(0)).as("est_mean")
+      if (moments == 1) agg.select(col("n_reports"), col("reported_plus_ones"), mean)
+      else agg.select(col("n_reports"), mean, est(1).as("est_m2"))
+        .withColumn("est_variance", round(least(greatest(
+          col("est_m2") - col("est_mean") * col("est_mean"), lit(0.0)),
+          lit((hi - lo) * (hi - lo) / 4.0)), 9))
+    }
+  }
+
+  /** The one-shot Duchi release: a NULL pid fails loud (null pids would
+    * merge distinct units into one report). */
+  private def duchiRelease(d: Duchi, df: DataFrame, pidCol: String, valueCol: Column,
+      noise: NoiseSource): DataFrame = {
+    val pid = when(col(pidCol).isNull, raise_error(lit(s"${d.what}: NULL " +
+        "privacy-unit id — distinct units would merge into one report; filter " +
+        "or key upstream")).cast("string"))
+      .otherwise(col(pidCol).cast("string"))
+    d.readout(d.withBits(noise)(d.units(df, pid, valueCol)))
+  }
+
+  /** The Duchi ledger step: the memo step over (unit, clamped value),
+    * keyed by a BIGINT pid, and this collection's release over the units'
+    * memoized bits. */
+  private def duchiMemoStep(d: Duchi, batch: DataFrame, store: Option[DataFrame],
+      pidCol: String, valueCol: Column, noise: NoiseSource): (DataFrame, DataFrame) = {
+    val pidN = col(pidCol).try_cast("bigint")
+    val pid = when(pidN.isNull, raise_error(lit(s"${d.what}: pid does not cast " +
+        "to BIGINT — the ledger keys on it")).cast("long"))
+      .otherwise(pidN)
+    val units = d.units(batch, pid, valueCol)
+    val grown = memoStep(d.what, units, store,
+      ("__v" -> DoubleType) +: d.bits.map(_ -> IntegerType) :+ ("__eps" -> DoubleType),
+      d.epsilon, d.withBits(noise))
+    (d.readout(units.join(grown, Seq("__pid", "__v"))), grown)
   }
 }
