@@ -214,8 +214,8 @@ object LocalDP {
     supportEstimate(dom.what, cal,
         olhCells(units, Seq("__k"), dom.index(col("__v")), cal, noise), Seq("__k"),
         dom.frame(df.sparkSession), Seq("value"))
-      .select(col("__k").as("key"), col("value"), col("__n").as("n_reports"),
-        col("support"), col("est_count"))
+      .select(col("__k").as("key"), col("value"), col("n_reports"), col("support"),
+        col("est_count"))
   }
 
   /** One micro-batch step of STREAMING OLH frequency — the LDP family's
@@ -271,8 +271,7 @@ object LocalDP {
   /** The frequency readout over (seed, bucket) cells. */
   private def frequencyEstimate(dom: Domain, cal: Olh, cells: DataFrame): DataFrame =
     supportEstimate(dom.what, cal, cells, Nil, dom.frame(cells.sparkSession), Seq("value"))
-      .select(col("value"), col("__n").as("n_reports"), col("support"),
-        col("est_count"))
+      .select("value", "n_reports", "support", "est_count")
 
   /** LOCAL-DP HEAVY HITTERS — prefix-extension discovery (the PEM shape,
     * Wang-Li-Jha "Locally Differentially Private Heavy Hitter
@@ -370,8 +369,7 @@ object LocalDP {
         asIdx(substring(col("__v"), 1, step * (r + 1))), cal, noise)
       val top = supportEstimate(what, cal, cells, Nil,
           cands.withColumn("__idx", asIdx(col("value"))), Seq("value"))
-        .select(col("value"), col("__n").as("n_reports"), col("support"),
-          col("est_count"))
+        .select("value", "n_reports", "support", "est_count")
         .withColumn("rk", row_number().over(Window
           .orderBy(col("est_count").desc, col("value").asc)).cast("long"))
         .filter(col("rk") <= k)
@@ -971,18 +969,20 @@ object LocalDP {
     * per stratum of n reports, times the population scale. Reads the
     * cells several times, so pins them once ([[RangeTree.materialized]]);
     * with no reports it fails loud naming `what`. Returns (strata...,
-    * keep..., __n, support, est_count). */
+    * keep..., n_reports, support, est_count). */
   private def supportEstimate(what: String, cal: Olh, cells0: DataFrame,
       strata: Seq[String], nodes: DataFrame, keep: Seq[String],
       scale: Option[Scale] = None): DataFrame = {
     val cells = RangeTree.materialized(cells0)
-    val nAgg = cells.groupBy(strata.map(col): _*).agg(sum(col("__c")).as("__n"))
-    val n = scale.fold(nAgg)(scaledCounts(what, nAgg, strata, _))
+    val nAgg = cells.groupBy(strata.map(col): _*).agg(sum(col("__c")).as("n_reports"))
+    val counts = scale.fold(nAgg)(scaledCounts(what, nAgg, strata, _))
     val seeds = cells.select((strata :+ "__seed").map(col): _*).distinct()
       .join(cal.paramsFrame(cells.sparkSession), "__seed")
     // the hash as a codegen'd integer EXPRESSION — mirrors olhHash exactly
     // (same constants P and g, non-negative operands, every intermediate
     // < 2^63, so Spark % == SQL % == Scala %)
+    // a LEFT join when no stratum shapes the nodes: with no reports the
+    // nodes still reach the readout, whose NULL n_reports then fails loud
     val on = strata.filter(nodes.columns.contains)
     val grid = (if (on.isEmpty) nodes.join(broadcast(seeds), lit(true), "left")
         else nodes.join(broadcast(seeds), on))
@@ -996,21 +996,23 @@ object LocalDP {
         hit, "left")
       .groupBy((strata ++ keep).map(col): _*)
       .agg(coalesce(sum(col("__c")), lit(0L)).as("support"))
-    val est = (col("support") - col("__n") * lit(cal.invG)) / lit(cal.p - cal.invG)
-    (if (strata.isEmpty) support.crossJoin(broadcast(n)) else support.join(broadcast(n), strata))
-      .withColumn("est_count", when(col("__n").isNull, raise_error(lit(
+    val n = col("n_reports")
+    val est = (col("support") - n * lit(cal.invG)) / lit(cal.p - cal.invG)
+    (if (strata.isEmpty) support.crossJoin(broadcast(counts))
+     else support.join(broadcast(counts), strata))
+      .withColumn("est_count", when(n.isNull, raise_error(lit(
           s"$what: no reporting units")).cast("double"))
-        .otherwise(round(scale.fold(est)(_ => est * (col("__pop") / col("__n"))), 9)))
+        .otherwise(round(scale.fold(est)(_ => est * (col("__pop") / n)), 9)))
   }
 
   /** The per-stratum report counts of a population-scaled estimate,
     * collected (strata are bounded: keys x groups) and checked against
     * `s`: there are reports, and every population stratum fields all its
     * groups (failing keys are named). Returns them as a literal frame
-    * (strata..., __n, __pop) — broadcast without another job. */
+    * (strata..., n_reports, __pop) — broadcast without another job. */
   private def scaledCounts(what: String, nAgg: DataFrame, strata: Seq[String],
       s: Scale): DataFrame = {
-    val rows = RangeTree.boundedCollect(nAgg.filter(col("__n") > 0), what,
+    val rows = RangeTree.boundedCollect(nAgg.filter(col("n_reports") > 0), what,
       rows = "report strata")
     require(rows.nonEmpty, s"$what: no reporting units")
     val popOf = (r: Row) => s.pop.map(c => r.get(strata.indexOf(c)))
