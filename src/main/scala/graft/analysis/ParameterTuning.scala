@@ -66,9 +66,9 @@ final class DPStrategySelector(
     * (reference: dp_strategy_selector.py:141-152). */
   def selectNoiseKind(eps: Double, del: Double, s: Sensitivities): NoiseKind = {
     if (del == 0) return NoiseKind.Laplace
-    val laplaceStd = math.sqrt(2.0) * DpNoise.laplaceB(eps, s.l1.get)
-    val gaussianStd = DpNoise.gaussianSigma(eps, del, s.l2.get)
-    if (gaussianStd < laplaceStd) NoiseKind.Gaussian else NoiseKind.Laplace
+    def std(kind: NoiseKind): Double = UtilityAnalysis.noiseStd(kind, eps, del, s)
+    if (std(NoiseKind.Gaussian) < std(NoiseKind.Laplace)) NoiseKind.Gaussian
+    else NoiseKind.Laplace
   }
 
   /** Compares thresholding strategies by release threshold; when Laplace wins,

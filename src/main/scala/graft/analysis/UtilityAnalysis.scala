@@ -192,30 +192,13 @@ object UtilityAnalysis {
       df: DataFrame,
       columns: DPColumns,
       partitionsSamplingProb: Double = 1.0
-  ): DataFrame = {
-    val pkNames = columns.partitionKeys.map(_._1)
-    val value = columns.value.getOrElse(lit(1.0)).cast("double")
-    val base = df.select(
-      (columns.privacyUnit.as(Pid) +:
-        columns.partitionKeys.map { case (n, c) => c.as(n) }) :+ value.as(Val): _*)
-    val perPair = base
-      .groupBy(col(Pid) +: pkNames.map(col): _*)
-      .agg(count(lit(1)).as(Cnt), sum(col(Val)).as(Sm))
-    // partition count per unit BEFORE sampling (reference:
-    // contribution_bounders.py:61-76 — num_partitions over the full data)
-    val withNp = perPair.withColumn(NPart, count(lit(1)).over(Window.partitionBy(col(Pid))))
-    val sampled =
-      if (partitionsSamplingProb < 1.0)
-        withNp.filter(ValueSampler.keepExpr(
-          struct(pkNames.map(col): _*), partitionsSamplingProb))
-      else withNp
-    sampled.drop(Pid)
-  }
+  ): DataFrame =
+    preAggregateCore(df, columns.privacyUnit, columns.partitionKeys,
+      Seq(Sm -> columns.value.getOrElse(lit(1.0))), partitionsSamplingProb)
 
   /** Per-contributor error-moment columns for one metric — the clipped
     * contribution, clipping errors, and the L0-dropping error moments
-    * (reference: per_partition_combiners.py:247-282). ONE definition
-    * shared by the single- and multi-column per-partition paths. */
+    * (reference: per_partition_combiners.py:247-282). */
   private def errMomentCols(
       value: Column, lo: Column, hi: Column, m: String): Seq[Column] = {
     val clipped = least(greatest(value, lo), hi)
@@ -229,12 +212,10 @@ object UtilityAnalysis {
       (clipped * clipped * p * (lit(1.0) - p)).as(s"__${m}_vl0"))
   }
 
-  /** Shared tail of [[perPartitionMetrics]] / [[perPartitionMetricsMultiSum]]
-    * downstream of the bound per-row metric columns: aggregate the error
-    * moments per (partition, configuration), apply the keep-probability
-    * aggregate, zero-fill absent public partitions, and project the
-    * released schema. Extracted so a fix applied to one entry point
-    * reaches the other by construction. */
+  /** Tail of [[perPartitionCore]] downstream of the bound per-row metric
+    * columns: aggregate the error moments per (partition, configuration),
+    * apply the keep-probability aggregate, zero-fill absent public
+    * partitions, and project the released schema. */
   private def assemblePerPartition(
       cur: DataFrame,
       pkNames: Seq[String],
@@ -289,49 +270,18 @@ object UtilityAnalysis {
     * (reference: per_partition_combiners.py SumCombiner/CountCombiner/
     * PrivacyIdCountCombiner/PartitionSelectionCombiner/RawStatisticsCombiner,
     * assembled like CompoundCombiner). `pre` must be the output of
-    * [[preAggregate]]. */
+    * [[preAggregate]]. SUM is clamped to each configuration's
+    * [minSumPerPartition, maxSumPerPartition]. */
   def perPartitionMetrics(
       pre: DataFrame,
       pkNames: Seq[String],
       options: UtilityAnalysisOptions,
       publicPartitions: Option[DataFrame] = None
-  ): DataFrame = {
-    require(options.publicPartitions == publicPartitions.isDefined,
-      "publicPartitions option and argument must agree")
-    val mechs = configMechanisms(options)
-    val cfgArr = configArray(options, mechs)
-
-    var cur = pre.withColumn(Cfg, explode(cfgArr))
-    cur = cur.withColumn(Prob,
-      when(col(NPart) > 0,
-        least(lit(1.0), col(s"$Cfg.l0") / col(NPart))).otherwise(lit(0.0)))
-
-    val metricRowCols = options.metrics.flatMap {
-      case Count =>
-        errMomentCols(col(Cnt).cast("double"), lit(0.0), col(s"$Cfg.linf"), Count.name)
-      case Sum =>
-        errMomentCols(col(Sm), col(s"$Cfg.mins"), col(s"$Cfg.maxs"), Sum.name)
-      case PrivacyIdCount =>
-        errMomentCols(when(col(Cnt) > 0, 1.0).otherwise(0.0), lit(0.0), lit(1.0),
-          PrivacyIdCount.name)
-      case m => throw new IllegalArgumentException(s"unsupported metric $m")
-    }
-    cur = cur.select(
-      pkNames.map(col) ++ Seq(col(Cfg), col(Prob), col(Cnt)) ++ metricRowCols: _*)
-
-    val keepAgg =
-      if (options.publicPartitions) lit(1.0).as(KeepProb)
-      else {
-        val strategies = mechs.map(_.selection.get).toArray
-        udaf(new KeepProbAggregator(strategies), Encoders.product[PSIn])
-          .apply(col(s"$Cfg.i"), col(Prob)).as(KeepProb)
-      }
-    val noiseStdCols = options.metrics.map { m =>
-      col(s"$Cfg.${stdField(m)}").as(s"${m.name}_noise_std")
-    }
-    assemblePerPartition(cur, pkNames, options.metrics.map(_.name),
-      keepAgg, cfgArr, publicPartitions, noiseStdCols)
-  }
+  ): DataFrame =
+    perPartitionCore(pre, pkNames, options,
+      Seq(ValueColumn("value", Sum.name, Sm,
+        options.configs.map(c => (c.minSumPerPartition, c.maxSumPerPartition)))),
+      publicPartitions)
 
   /** Cross-partition utility report: per (configuration, partition-size
     * bucket) averages of the per-partition error metrics, weighted by the
@@ -351,7 +301,7 @@ object UtilityAnalysis {
       options: UtilityAnalysisOptions,
       valueNames: Seq[String]): DataFrame =
     reportForPrefixes(perPartition, options.metrics.flatMap {
-      case Sum => valueNames.map(n => s"sum_$n")
+      case Sum => valueNames.map(multiPrefix)
       case m => Seq(m.name)
     })
 
@@ -491,24 +441,9 @@ object UtilityAnalysis {
       df: DataFrame,
       columns: graft.spark.MultiValueColumns,
       partitionsSamplingProb: Double = 1.0
-  ): DataFrame = {
-    val pkNames = columns.partitionKeys.map(_._1)
-    val base = df.select(
-      (columns.privacyUnit.as(Pid) +:
-        columns.partitionKeys.map { case (n, c) => c.as(n) }) ++
-        columns.values.map { case (n, c) => c.cast("double").as(s"__v_$n") }: _*)
-    val perPair = base
-      .groupBy(col(Pid) +: pkNames.map(col): _*)
-      .agg(count(lit(1)).as(Cnt),
-        columns.values.map { case (n, _) => sum(col(s"__v_$n")).as(s"__sum_$n") }: _*)
-    val withNp = perPair.withColumn(NPart, count(lit(1)).over(Window.partitionBy(col(Pid))))
-    val sampled =
-      if (partitionsSamplingProb < 1.0)
-        withNp.filter(ValueSampler.keepExpr(
-          struct(pkNames.map(col): _*), partitionsSamplingProb))
-      else withNp
-    sampled.drop(Pid)
-  }
+  ): DataFrame =
+    preAggregateCore(df, columns.privacyUnit, columns.partitionKeys,
+      columns.values.map { case (n, c) => s"__sum_$n" -> c }, partitionsSamplingProb)
 
   /** Per-(partition, configuration) error moments for SUM over SEVERAL value
     * columns (plus optionally COUNT / PRIVACY_ID_COUNT) in one pass — the
@@ -530,103 +465,11 @@ object UtilityAnalysis {
       "one bounds list per configuration required")
     require(sumBoundsPerConfig.forall(_.length == valueNames.length),
       "one (min,max) per value column required in every configuration")
-    val nMech = (if (options.publicPartitions) 0 else 1) +
-      (if (options.metrics.contains(Sum)) valueNames.length else 0) +
-      options.metrics.count(m => m == Count || m == PrivacyIdCount)
-    // per-config mechanisms: selection, then one SUM per column, then COUNT,
-    // then PRIVACY_ID_COUNT (reference budget order)
-    val mechs = options.configs.zipWithIndex.map { case (c, ci) =>
-      val split = Mechanisms.equallySplitBudget(options.epsilon, options.delta, nMech)
-      var idx = 0
-      def take(): (Double, Double) = { val s = split(idx); idx += 1; s }
-      val selection =
-        if (options.publicPartitions) None
-        else {
-          val (e, d) = take()
-          Some(PartitionSelection.create(c.partitionSelectionStrategy, e, d,
-            c.maxPartitionsContributed, c.preThreshold))
-        }
-      def std(sens: Sensitivities): Double = {
-        val (e, d) = take()
-        c.noiseKind match {
-          case NoiseKind.Laplace => math.sqrt(2.0) * DpNoise.laplaceB(e, sens.l1.get)
-          case NoiseKind.Gaussian => DpNoise.gaussianSigma(e, d, sens.l2.get)
-        }
-      }
-      val l0 = c.maxPartitionsContributed
-      val sumStds =
-        if (options.metrics.contains(Sum))
-          sumBoundsPerConfig(ci).map { case (lo, hi) =>
-            std(Sensitivities(l0 = Some(l0),
-              linf = Some(math.max(math.abs(lo), math.abs(hi)))))
-          }
-        else valueNames.map(_ => 0.0)
-      val countStd =
-        if (options.metrics.contains(Count))
-          std(Sensitivities(l0 = Some(l0), linf = Some(c.maxContributionsPerPartition.toDouble)))
-        else 0.0
-      val pidStd =
-        if (options.metrics.contains(PrivacyIdCount))
-          std(Sensitivities(l0 = Some(l0), linf = Some(1.0)))
-        else 0.0
-      (selection, sumStds, countStd, pidStd)
-    }
-
-    val cfgArr = array(options.configs.zipWithIndex.map { case (c, i) =>
-      val (_, sumStds, countStd, pidStd) = mechs(i)
-      struct(Seq(
-        lit(i).as("i"),
-        lit(c.maxPartitionsContributed.toDouble).as("l0"),
-        lit(c.maxContributionsPerPartition.toDouble).as("linf"),
-        lit(countStd).as("count_std"),
-        lit(pidStd).as("pid_std")) ++
-        valueNames.indices.flatMap { vi =>
-          val (lo, hi) = sumBoundsPerConfig(i)(vi)
-          Seq(lit(lo).as(s"mins_$vi"), lit(hi).as(s"maxs_$vi"),
-            lit(sumStds(vi)).as(s"sum_std_$vi"))
-        }: _*)
-    }: _*)
-
-    var cur = pre.withColumn(Cfg, explode(cfgArr))
-    cur = cur.withColumn(Prob,
-      when(col(NPart) > 0,
-        least(lit(1.0), col(s"$Cfg.l0") / col(NPart))).otherwise(lit(0.0)))
-
-    val metricRowCols = options.metrics.flatMap {
-      case Sum => valueNames.zipWithIndex.flatMap { case (n, vi) =>
-        errMomentCols(col(s"__sum_$n"), col(s"$Cfg.mins_$vi"), col(s"$Cfg.maxs_$vi"), s"sum_$n")
-      }
-      case Count =>
-        errMomentCols(col(Cnt).cast("double"), lit(0.0), col(s"$Cfg.linf"), Count.name)
-      case PrivacyIdCount =>
-        errMomentCols(when(col(Cnt) > 0, 1.0).otherwise(0.0), lit(0.0), lit(1.0),
-          PrivacyIdCount.name)
-      case m => throw new IllegalArgumentException(s"unsupported metric $m")
-    }
-    cur = cur.select(
-      pkNames.map(col) ++ Seq(col(Cfg), col(Prob), col(Cnt)) ++ metricRowCols: _*)
-
-    val metricPrefixes = options.metrics.flatMap {
-      case Sum => valueNames.map(n => s"sum_$n")
-      case m => Seq(m.name)
-    }
-    val keepAgg =
-      if (options.publicPartitions) lit(1.0).as(KeepProb)
-      else {
-        val strategies = mechs.map(_._1.get).toArray
-        udaf(new KeepProbAggregator(strategies), Encoders.product[PSIn])
-          .apply(col(s"$Cfg.i"), col(Prob)).as(KeepProb)
-      }
-    val noiseStdCols = options.metrics.flatMap {
-      case Sum => valueNames.zipWithIndex.map { case (n, vi) =>
-        col(s"$Cfg.sum_std_$vi").as(s"sum_${n}_noise_std")
-      }
-      case Count => Seq(col(s"$Cfg.count_std").as(s"${Count.name}_noise_std"))
-      case PrivacyIdCount => Seq(col(s"$Cfg.pid_std").as(s"${PrivacyIdCount.name}_noise_std"))
-      case _ => Nil
-    }
-    assemblePerPartition(cur, pkNames, metricPrefixes,
-      keepAgg, cfgArr, publicPartitions, noiseStdCols)
+    perPartitionCore(pre, pkNames, options,
+      valueNames.zipWithIndex.map { case (n, vi) =>
+        ValueColumn(n, multiPrefix(n), s"__sum_$n", sumBoundsPerConfig.map(_(vi)))
+      },
+      publicPartitions)
   }
 
   /** Classifies partitions against a public-partition list: how many dataset
@@ -656,7 +499,6 @@ object UtilityAnalysis {
   // ---- internals ----
 
   private val Pid = "__ua_pid"
-  private val Val = "__ua_v"
   private val Cnt = "__cnt"
   private val Sm = "__sum"
   private val NPart = "__n_partitions"
@@ -664,35 +506,68 @@ object UtilityAnalysis {
   private val Prob = "__p"
   private val KeepProb = "__keep_prob"
 
-  private def stdField(m: Metric): String = m match {
-    case Count => "count_std"
-    case Sum => "sum_std"
-    case PrivacyIdCount => "pid_std"
-    case other => throw new IllegalArgumentException(s"unsupported metric $other")
+  private def multiPrefix(valueName: String): String = s"sum_$valueName"
+
+  /** One value column of the analysis: `prefix` names its output columns,
+    * `sumCol` is its pre-aggregated per-(unit, partition) sum, and
+    * `bounds(c)` its (lo, hi) per-partition sum bounds under
+    * configuration c. `name` identifies it in error messages. */
+  private final case class ValueColumn(
+      name: String, prefix: String, sumCol: String, bounds: Seq[(Double, Double)])
+
+  /** One released metric: its output prefix, its per-row value, and the
+    * (lo, hi) bounds it is clamped to under each configuration. */
+  private final case class MetricLine(
+      metric: Metric, prefix: String, value: Column, bounds: Seq[(Double, Double)])
+
+  /** Standard deviation of the additive noise of `kind` calibrated to
+    * (eps, delta) and `sens`. */
+  private[analysis] def noiseStd(
+      kind: NoiseKind, eps: Double, delta: Double, sens: Sensitivities): Double =
+    kind match {
+      case NoiseKind.Laplace => LaplaceMechanism.fromEpsilon(eps, sens.l1.get).stdDev
+      case NoiseKind.Gaussian => GaussianMechanism.fromEpsilonDelta(eps, delta, sens.l2.get).stdDev
+    }
+
+  /** The one pre-aggregate: per (unit, partition) the contribution count
+    * and one sum per `sums` entry (output name -> value), the unit's
+    * partition count, then the partition sample. */
+  private def preAggregateCore(
+      df: DataFrame,
+      privacyUnit: Column,
+      partitionKeys: Seq[(String, Column)],
+      sums: Seq[(String, Column)],
+      partitionsSamplingProb: Double
+  ): DataFrame = {
+    val pkNames = partitionKeys.map(_._1)
+    val base = df.select(
+      (privacyUnit.as(Pid) +: partitionKeys.map { case (n, c) => c.as(n) }) ++
+        sums.map { case (n, c) => c.cast("double").as(n) }: _*)
+    val perPair = base
+      .groupBy(col(Pid) +: pkNames.map(col): _*)
+      .agg(count(lit(1)).as(Cnt), sums.map { case (n, _) => sum(col(n)).as(n) }: _*)
+    // partition count per unit BEFORE sampling (reference:
+    // contribution_bounders.py:61-76 — num_partitions over the full data)
+    val withNp = perPair.withColumn(NPart, count(lit(1)).over(Window.partitionBy(col(Pid))))
+    val sampled =
+      if (partitionsSamplingProb < 1.0)
+        withNp.filter(ValueSampler.keepExpr(
+          struct(pkNames.map(col): _*), partitionsSamplingProb))
+      else withNp
+    sampled.drop(Pid)
   }
 
-  private[analysis] final case class ConfigMechanisms(
-      countStd: Double, sumStd: Double, pidStd: Double,
-      selection: Option[PartitionSelection])
-
-  /** Per-configuration noise scales + selection strategy. Budget split order
-    * mirrors the reference: partition selection, SUM, COUNT, PRIVACY_ID_COUNT
+  /** Per-configuration calibration: the partition-selection strategy
+    * (None for public partitions) and one noise std per metric line. The
+    * budget is split equally, in the reference's order: partition
+    * selection, the SUMs in column order, COUNT, then PRIVACY_ID_COUNT
     * (reference: utility_analysis_engine.py:126-155). */
-  private[analysis] def configMechanisms(
-      options: UtilityAnalysisOptions): Seq[ConfigMechanisms] = {
-    // loud, option-level: the single-column SUM path reads the config's
-    // min/maxSumPerPartition — the default (0, 0) clamps every value to 0
-    // and would only fail deep in Sensitivities as 'Linf must be
-    // positive'. (The multi-column path supplies its bounds via
-    // sumBoundsPerConfig and never reaches this.)
-    require(!options.metrics.contains(Sum) || options.configs.forall(c =>
-        math.max(math.abs(c.minSumPerPartition),
-          math.abs(c.maxSumPerPartition)) > 0),
-      "SUM analysis needs per-partition sum bounds on every " +
-        "configuration: set minSumPerPartition/maxSumPerPartition " +
-        "(the default (0, 0) clamps every value to 0)")
-    val nMech = (if (options.publicPartitions) 0 else 1) + options.metrics.size
-    options.configs.map { c =>
+  private def calibrate(options: UtilityAnalysisOptions, lines: Seq[MetricLine])
+      : Seq[(Option[PartitionSelection], Seq[Double])] = {
+    val nMech = (if (options.publicPartitions) 0 else 1) + lines.length
+    val budgetOrder = lines.indices.sortBy(li =>
+      Seq(Sum, Count, PrivacyIdCount).indexOf(lines(li).metric))
+    options.configs.zipWithIndex.map { case (c, ci) =>
       val split = Mechanisms.equallySplitBudget(options.epsilon, options.delta, nMech)
       var idx = 0
       def take(): (Double, Double) = { val s = split(idx); idx += 1; s }
@@ -703,48 +578,85 @@ object UtilityAnalysis {
           Some(PartitionSelection.create(c.partitionSelectionStrategy, e, d,
             c.maxPartitionsContributed, c.preThreshold))
         }
-      def std(sens: Sensitivities): Double = {
+      val stds = budgetOrder.map { li =>
+        val (lo, hi) = lines(li).bounds(ci)
         val (e, d) = take()
-        c.noiseKind match {
-          case NoiseKind.Laplace => math.sqrt(2.0) * DpNoise.laplaceB(e, sens.l1.get)
-          case NoiseKind.Gaussian => DpNoise.gaussianSigma(e, d, sens.l2.get)
-        }
-      }
-      val l0 = c.maxPartitionsContributed
-      // reference order: SUM budget first, then COUNT, then PRIVACY_ID_COUNT
-      val sumStd =
-        if (options.metrics.contains(Sum)) {
-          val linf = math.max(math.abs(c.minSumPerPartition), math.abs(c.maxSumPerPartition))
-          std(Sensitivities(l0 = Some(l0), linf = Some(linf)))
-        } else 0.0
-      val countStd =
-        if (options.metrics.contains(Count))
-          std(Sensitivities(l0 = Some(l0), linf = Some(c.maxContributionsPerPartition.toDouble)))
-        else 0.0
-      val pidStd =
-        if (options.metrics.contains(PrivacyIdCount))
-          std(Sensitivities(l0 = Some(l0), linf = Some(1.0)))
-        else 0.0
-      ConfigMechanisms(countStd, sumStd, pidStd, selection)
+        li -> noiseStd(c.noiseKind, e, d, Sensitivities(
+          l0 = Some(c.maxPartitionsContributed), linf = Some(math.max(math.abs(lo), math.abs(hi)))))
+      }.toMap
+      (selection, lines.indices.map(stds))
     }
   }
 
   /** The configurations as a literal array of structs — exploding it fans each
     * pre-aggregated row out to all configurations inside whole-stage codegen
     * (no join, no second read of the input). */
-  private def configArray(
-      options: UtilityAnalysisOptions, mechs: Seq[ConfigMechanisms]): Column =
-    array(options.configs.zipWithIndex.map { case (c, i) =>
-      struct(
-        lit(i).as("i"),
-        lit(c.maxPartitionsContributed.toDouble).as("l0"),
-        lit(c.maxContributionsPerPartition.toDouble).as("linf"),
-        lit(c.minSumPerPartition).as("mins"),
-        lit(c.maxSumPerPartition).as("maxs"),
-        lit(mechs(i).countStd).as("count_std"),
-        lit(mechs(i).sumStd).as("sum_std"),
-        lit(mechs(i).pidStd).as("pid_std"))
+  private def configArray(options: UtilityAnalysisOptions, lines: Seq[MetricLine],
+      stds: Seq[Seq[Double]]): Column =
+    array(options.configs.zipWithIndex.map { case (c, ci) =>
+      struct(Seq(lit(ci).as("i"), lit(c.maxPartitionsContributed.toDouble).as("l0")) ++
+        lines.zipWithIndex.flatMap { case (l, li) =>
+          val (lo, hi) = l.bounds(ci)
+          Seq(lit(lo).as(s"lo_$li"), lit(hi).as(s"hi_$li"), lit(stds(ci)(li)).as(s"std_$li"))
+        }: _*)
     }: _*)
+
+  /** The one per-partition analysis over `values`: guards, calibration,
+    * config fan-out, per-row error moments, then [[assemblePerPartition]]. */
+  private def perPartitionCore(
+      pre: DataFrame,
+      pkNames: Seq[String],
+      options: UtilityAnalysisOptions,
+      values: Seq[ValueColumn],
+      publicPartitions: Option[DataFrame]
+  ): DataFrame = {
+    require(options.publicPartitions == publicPartitions.isDefined,
+      "publicPartitions option and argument must agree")
+    val hasSum = options.metrics.contains(Sum)
+    for (v <- values; ((lo, hi), ci) <- v.bounds.zipWithIndex) {
+      require(lo <= hi, s"sum bounds of value column '${v.name}' under configuration " +
+        s"$ci must satisfy min <= max, got ($lo, $hi)")
+      // loud, option-level: bounds (0, 0) clamp every value to 0 and would
+      // only fail deep in Sensitivities as 'Linf must be positive'
+      require(!hasSum || math.max(math.abs(lo), math.abs(hi)) > 0,
+        "SUM analysis needs per-partition sum bounds on every configuration: " +
+          s"value column '${v.name}' has (0, 0) under configuration $ci; set " +
+          "minSumPerPartition/maxSumPerPartition (the default (0, 0) clamps " +
+          "every value to 0)")
+    }
+    val lines = options.metrics.flatMap {
+      case Sum => values.map(v => MetricLine(Sum, v.prefix, col(v.sumCol), v.bounds))
+      case Count => Seq(MetricLine(Count, Count.name, col(Cnt).cast("double"),
+        options.configs.map(c => (0.0, c.maxContributionsPerPartition.toDouble))))
+      case PrivacyIdCount => Seq(MetricLine(PrivacyIdCount, PrivacyIdCount.name,
+        when(col(Cnt) > 0, 1.0).otherwise(0.0), options.configs.map(_ => (0.0, 1.0))))
+      case m => throw new IllegalArgumentException(s"unsupported metric $m")
+    }
+    val cals = calibrate(options, lines)
+    val cfgArr = configArray(options, lines, cals.map(_._2))
+
+    var cur = pre.withColumn(Cfg, explode(cfgArr))
+    cur = cur.withColumn(Prob,
+      when(col(NPart) > 0,
+        least(lit(1.0), col(s"$Cfg.l0") / col(NPart))).otherwise(lit(0.0)))
+    cur = cur.select(pkNames.map(col) ++ Seq(col(Cfg), col(Prob), col(Cnt)) ++
+      lines.zipWithIndex.flatMap { case (l, li) =>
+        errMomentCols(l.value, col(s"$Cfg.lo_$li"), col(s"$Cfg.hi_$li"), l.prefix)
+      }: _*)
+
+    val keepAgg =
+      if (options.publicPartitions) lit(1.0).as(KeepProb)
+      else {
+        val strategies = cals.map(_._1.get).toArray
+        udaf(new KeepProbAggregator(strategies), Encoders.product[PSIn])
+          .apply(col(s"$Cfg.i"), col(Prob)).as(KeepProb)
+      }
+    val noiseStdCols = lines.zipWithIndex.map { case (l, li) =>
+      col(s"$Cfg.std_$li").as(s"${l.prefix}_noise_std")
+    }
+    assemblePerPartition(cur, pkNames, lines.map(_.prefix),
+      keepAgg, cfgArr, publicPartitions, noiseStdCols)
+  }
 }
 
 /** Deterministic value-keyed Bernoulli sampling (reference:

@@ -48,7 +48,9 @@ object ProfileQuery {
       catalystS: Seq[(String, Double)],
       actS: Double,
       jobs: Seq[Job],
-      /** RDDs the call left persisted (released after they are counted). */
+      /** Distinct RDDs the call persisted (pins), read from the storage
+        * levels its jobs' stages report; whatever is still persisted after
+        * the call is released. */
       pins: Int,
       planFile: Option[String]) {
     def jobsIn(phase: String): Seq[Job] = jobs.filter(_.phase == phase)
@@ -59,7 +61,10 @@ object ProfileQuery {
 
   /** Attributes jobs, by the phase local property Spark copies into every
     * job the thread (or a thread it starts) submits; untagged jobs are
-    * ignored. */
+    * ignored. Also records the persisted RDDs the tagged jobs' stages
+    * read or write: `SparkContext.getPersistentRDDs` holds its RDDs by weak
+    * reference, so a pin superseded within the call can be collected
+    * before it is counted there. */
   private final class JobListener extends SparkListener {
     private final class Rec(val id: Int, val phase: String, val start: Long,
         val description: String) {
@@ -69,6 +74,7 @@ object ProfileQuery {
     }
     private val jobs = mutable.LinkedHashMap.empty[Int, Rec]
     private val stageJob = mutable.Map.empty[Int, Int]
+    private val persisted = mutable.Set.empty[Int]
     private var drained = false
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
@@ -77,6 +83,7 @@ object ProfileQuery {
           .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)).getOrElse("")
         jobs(e.jobId) = new Rec(e.jobId, ph, e.time, desc)
         e.stageIds.foreach(stageJob(_) = e.jobId)
+        persisted ++= e.stageInfos.flatMap(_.rddInfos).filter(_.storageLevel.isValid).map(_.id)
       }
     }
 
@@ -103,8 +110,8 @@ object ProfileQuery {
 
     /** Blocks until the bus has delivered the drain job's end — events
       * reach a listener in order, so every earlier job's are in — then
-      * returns and forgets the recorded jobs. */
-    def take(): Seq[Job] = synchronized {
+      * returns and forgets the recorded jobs and persisted RDD ids. */
+    def take(): (Seq[Job], Set[Int]) = synchronized {
       val deadline = System.currentTimeMillis() + 60000L
       while (!drained && System.currentTimeMillis() < deadline) wait(100L)
       require(drained, "ProfileQuery: the listener bus did not deliver the drain job")
@@ -112,10 +119,12 @@ object ProfileQuery {
         Job(j.id, j.phase, (j.end - j.start) / 1e3, j.stages, j.tasks, j.cpuNs / 1e9,
           j.input, j.shufW, j.shufR, j.spill, j.description)
       }.toList
+      val pinned = persisted.toSet
       jobs.clear()
       stageJob.clear()
+      persisted.clear()
       drained = false
-      out
+      (out, pinned)
     }
   }
 
@@ -128,11 +137,10 @@ object ProfileQuery {
     val listener = new JobListener
     sc.addSparkListener(listener)
     planDir.foreach(d => new java.io.File(d).mkdirs())
-    def releasePins(before: collection.Set[Int]): Int = {
-      val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-      added.values.foreach(_.unpersist(blocking = true))
-      added.size
-    }
+    def releasePins(before: collection.Set[Int]): Unit =
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = true)
+      }
     try queries.map { name =>
       val fn = graft.SparkEntry.queries(name)
       val warmPins = sc.getPersistentRDDs.keySet
@@ -151,7 +159,7 @@ object ProfileQuery {
         sc.setLocalProperty(PhaseKey, Drain)
         sc.parallelize(Seq(0), 1).count()
         sc.setLocalProperty(PhaseKey, null)
-        val jobs = listener.take()
+        val (jobs, pinned) = listener.take()
         val catalyst = qe.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
           .map { case (p, s) => p -> s.durationMs / 1e3 }
         val planFile = planDir.map { d =>
@@ -161,8 +169,9 @@ object ProfileQuery {
           finally pw.close()
           f.getPath
         }
+        releasePins(pinsBefore)
         QueryProfile(name, (t1 - t0) / 1e9, catalyst, (t2 - t1) / 1e9, jobs,
-          releasePins(pinsBefore), planFile)
+          (pinned -- pinsBefore).size, planFile)
       } finally sc.setLocalProperty(PhaseKey, null)
     } finally sc.removeSparkListener(listener)
   }

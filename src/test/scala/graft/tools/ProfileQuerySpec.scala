@@ -25,4 +25,12 @@ class ProfileQuerySpec extends AnyFunSuite {
     // the shared session stays usable
     assert(!spark.sparkContext.isStopped && spark.range(3).count() == 3)
   }
+
+  test("pin counts repeat across profiled calls of a query that pins twice") {
+    // dp_range_estimated pins its cell store and then its released tree; the
+    // first pin is superseded within the call
+    val ps = ProfileQuery.profile(spark, "/root/testdata/sf0.01",
+      Seq("dp_range_estimated", "dp_range_estimated"), None)
+    assert(ps.map(_.pins).distinct.size == 1 && ps.head.pins >= 2, ps.map(_.pins))
+  }
 }
