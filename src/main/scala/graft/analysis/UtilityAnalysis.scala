@@ -232,8 +232,11 @@ object UtilityAnalysis {
         sum(col(s"__${n}_el0")).as(s"${n}_exp_l0_err"),
         sqrt(sum(col(s"__${n}_vl0"))).as(s"${n}_std_l0_err"))
     }
+    // grouped by the configuration's index, not its struct: one int key
+    // instead of every normalized config field; the struct is rebuilt
+    // from `cfgArr` for the output
     var grouped = cur
-      .groupBy(pkNames.map(col) :+ col(Cfg): _*)
+      .groupBy(pkNames.map(col) :+ col(s"$Cfg.i").as(CfgIdx): _*)
       .agg(count(lit(1)).as("raw_privacy_id_count"),
         (sum(col(Cnt)).as("raw_count") +: keepAgg +: metricAggs): _*)
 
@@ -241,7 +244,7 @@ object UtilityAnalysis {
     // keys absent from the data get empty (all-zero) metrics
     // (reference: cross_partition_combiners.py:121-131 empty partitions)
     publicPartitions.foreach { pub =>
-      val pubCfg = broadcast(pub.distinct().withColumn(Cfg, explode(cfgArr)))
+      val pubCfg = broadcast(pub.distinct().withColumn(CfgIdx, explode(cfgArr.getField("i"))))
       val zeroed: Seq[Column] =
         Seq(coalesce(col("raw_privacy_id_count"), lit(0L)).as("raw_privacy_id_count"),
           coalesce(col("raw_count"), lit(0L)).as("raw_count"),
@@ -251,13 +254,13 @@ object UtilityAnalysis {
             s"${n}_exp_l0_err", s"${n}_std_l0_err")
             .map(c => coalesce(col(c), lit(0.0)).as(c))
         }
-      grouped = pubCfg.join(grouped, pkNames :+ Cfg, "left_outer")
-        .select(pkNames.map(col) ++ Seq(col(Cfg)) ++ zeroed: _*)
+      grouped = pubCfg.join(grouped, pkNames :+ CfgIdx, "left_outer")
+        .select(pkNames.map(col) ++ Seq(col(CfgIdx)) ++ zeroed: _*)
     }
 
-    grouped.select(
+    grouped.withColumn(Cfg, element_at(cfgArr, col(CfgIdx) + 1)).select(
       pkNames.map(col) ++
-        Seq(col(s"$Cfg.i").as("config_index"), col(KeepProb).as("keep_prob"),
+        Seq(col(CfgIdx).as("config_index"), col(KeepProb).as("keep_prob"),
           col("raw_privacy_id_count"), col("raw_count")) ++
         metricPrefixes.flatMap { n =>
           Seq(col(s"${n}_sum"), col(s"${n}_clip_min_err"), col(s"${n}_clip_max_err"),
@@ -503,6 +506,7 @@ object UtilityAnalysis {
   private val Sm = "__sum"
   private val NPart = "__n_partitions"
   private val Cfg = "__cfg"
+  private val CfgIdx = "__cfg_i"
   private val Prob = "__p"
   private val KeepProb = "__keep_prob"
 

@@ -1,7 +1,7 @@
 package graft.spark
 
 import graft.core._
-import graft.functions.BoundedSample
+import graft.functions.{BoundedSample, QuantileTreeAggregate}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -825,8 +825,8 @@ object DPEngine {
         accs += Acc.summed(NSqCol + i, sum(centered * centered), 0.0)
       }
       quantile.foreach { q =>
-        accs += Acc(TreeCol + i, QuantileAgg.buildTree(q.lower, q.upper)(clipped),
-          QuantileAgg.mergeTrees(q.lower, q.upper)(col(TreeCol + i)),
+        val tree = QuantileTreeAggregate.column(q.lower, q.upper) _
+        accs += Acc(TreeCol + i, tree(clipped), tree(col(TreeCol + i)),
           Some(lit(null).cast("binary"))) // a null tree reads as empty
       }
       // the norm clip applies per (unit, partition) as the merge's input:

@@ -1,50 +1,15 @@
 package graft.spark
 
 import graft.core._
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
-/** Quantile-tree aggregation (reference: combiners.py:629-719). Two typed
-  * Aggregators: one builds a tree from raw values per (pid, pk) group, one
-  * merges serialized trees per partition key. Buffers live as objects under
-  * ObjectHashAggregate; serialization only crosses shuffle boundaries —
-  * the same "serialized tree rides the shuffle" design the reference uses
-  * (reference: combiners.py:647-665). Buffer encoder is kryo, not
-  * javaSerialization: measured at sf0.1 the percentile query family drops
-  * 6.3 -> 5.0 s total, with the tree-traffic-heaviest query
-  * (ss_dp_percentile, 3600 cells of per-unit trees) going 2.1 -> 0.9 s.
-  */
-final case class QuantileTreeBuildAgg(lower: Double, upper: Double)
-    extends Aggregator[Double, QuantileTree, Array[Byte]] {
-  def zero: QuantileTree = new QuantileTree(lower, upper)
-  def reduce(t: QuantileTree, v: Double): QuantileTree = { t.add(v); t }
-  def merge(a: QuantileTree, b: QuantileTree): QuantileTree = a.merge(b)
-  def finish(t: QuantileTree): Array[Byte] = t.serialize()
-  def bufferEncoder: Encoder[QuantileTree] = Encoders.kryo[QuantileTree]
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-final case class QuantileTreeMergeAgg(lower: Double, upper: Double)
-    extends Aggregator[Array[Byte], QuantileTree, Array[Byte]] {
-  def zero: QuantileTree = new QuantileTree(lower, upper)
-  def reduce(t: QuantileTree, bytes: Array[Byte]): QuantileTree =
-    if (bytes == null || bytes.isEmpty) t else t.merge(QuantileTree.deserialize(bytes))
-  def merge(a: QuantileTree, b: QuantileTree): QuantileTree = a.merge(b)
-  def finish(t: QuantileTree): Array[Byte] = t.serialize()
-  def bufferEncoder: Encoder[QuantileTree] = Encoders.kryo[QuantileTree]
-  def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-object QuantileAgg {
-  def buildTree(lower: Double, upper: Double)(c: Column): Column =
-    udaf(QuantileTreeBuildAgg(lower, upper)).apply(c)
-  def mergeTrees(lower: Double, upper: Double)(c: Column): Column =
-    udaf(QuantileTreeMergeAgg(lower, upper)).apply(c)
-}
-
-/** Worker-side percentile computation from a merged tree; all DP parameters
-  * resolved driver-side. */
+/** The quantile-tree release's readout (reference: combiners.py:629-719).
+  * The trees are built and merged by one native aggregate,
+  * [[graft.functions.QuantileTreeAggregate]]: a double input builds the
+  * per-(unit, partition) tree, a binary input merges trees per partition,
+  * and what crosses each shuffle is the tree in [[QuantileTree]]'s one byte
+  * format, a sparse leaf histogram. The readout below runs only for the
+  * partitions selection kept; it derives each node's count from the leaves.
+  * All DP parameters are resolved driver-side. */
 final case class QuantileComputer(
     percentiles: Seq[Double], // in [0, 100]
     spec: MechanismSpec,

@@ -1413,19 +1413,19 @@ object StreamOps {
       s"percentiles must be in [0, 100], got $percentiles")
     val base = watermark.map(w => events.withWatermark(tsCol, w)).getOrElse(events)
     val keyCs = keyCols.map(col)
-    // fail loud on NULL values — the perUnitCells convention: the typed
-    // tree Aggregator's primitive-Double encoder COERCES null to 0.0
-    // (measured: a [5.0, NULL, 7.0] group builds a 3-count tree), which is
-    // an in-range value silently polluting every released quantile
+    // fail loud on NULL values — the perUnitCells convention: the tree
+    // aggregate skips a NULL as SQL's aggregates do, while `__n` still
+    // counts its row, so a NULL would silently leave the release and still
+    // spend the unit's Linf cap
     val checked = when(col(valueCol).isNull, raise_error(lit(
         "StreamOps DP release: NULL value for a privacy unit — the " +
-          "quantile tree would silently absorb it as 0.0; filter or " +
+          "quantile tree would silently skip it; filter or " +
           "impute upstream")).cast("double"))
       .otherwise(col(valueCol).cast("double"))
+    val tree = graft.functions.QuantileTreeAggregate.column(lower, upper) _
     val perUnit = base
       .groupBy(window(col(tsCol), windowLength) +: col(pidCol) +: keyCs: _*)
-      .agg(graft.spark.QuantileAgg.buildTree(lower, upper)(checked).as("__t"),
-        count(lit(1)).as("__n"))
+      .agg(tree(checked).as("__t"), count(lit(1)).as("__n"))
     val (qs, eps, del, cap, kind, src) =
       (percentiles.map(_ / 100.0), epsilon, delta, maxPerCell.toInt, noiseKind, noise)
     val walk = udf((bytes: Array[Byte]) => {
@@ -1435,7 +1435,7 @@ object StreamOps {
     val out = perUnit
       .filter(col("__n") <= maxPerCell) // drop-not-sample Linf bound
       .groupBy(col("window") +: keyCs: _*)
-      .agg(graft.spark.QuantileAgg.mergeTrees(lower, upper)(col("__t")).as("__m"))
+      .agg(tree(col("__t")).as("__m"))
       .select(col("window.start").as("window_start") +: keyCs :+
         walk(col("__m")).as("__p"): _*)
       .select((Seq(col("window_start")) ++ keyCs ++
